@@ -80,30 +80,17 @@ def main(argv: list[str] | None = None, spark: SparkSession | None = None) -> in
         spark = get_spark("neo-olap-cli", cpus=args.cpus)
     try:
         if args.cmd == "walk":
-            if args.ckpt_dir:
-                from neo_olap_spark.operators.graph_algos import (
-                    resumable_random_walk_counts,
-                )
-
-                counts = resumable_random_walk_counts(
-                    spark, args.sf_dir, args.ckpt_dir,
-                    n_walkers=args.walkers, n_steps=args.steps, seed=args.seed,
-                )
-            else:
-                from neo_olap_spark.operators.graph_algos import random_walk_counts
-
-                counts = random_walk_counts(
-                    spark, args.sf_dir,
-                    n_walkers=args.walkers, n_steps=args.steps, seed=args.seed,
-                )
             from pyspark.sql import functions as F
 
-            # one-shot walk emits (node_id, cnt); the resumable round
-            # loop emits (node_id, visits) — order by whichever count
-            # column this run produced
-            count_col = counts.columns[1]
+            from neo_olap_spark.operators.graph_algos import random_walk_counts
+
+            counts = random_walk_counts(
+                spark, args.sf_dir,
+                n_walkers=args.walkers, n_steps=args.steps, seed=args.seed,
+                ckpt_dir=args.ckpt_dir,
+            )
             _print_top(
-                counts.orderBy(F.col(count_col).desc(), F.col("node_id")), args.top
+                counts.orderBy(F.col("visits").desc(), F.col("node_id")), args.top
             )
         elif args.cmd == "betweenness":
             from neo_olap_spark.operators.graph_algos import betweenness_sample

@@ -8,6 +8,12 @@ parquet snapshots under ``<base>/round=<step>/`` — the directory name
 carries the loop state exactly like the reference's filename — with
 delete-previous retention, so disk stays bounded at one round.
 
+These are the storage primitives of the graph-loop driver's
+``ckpt_dir`` policy (operators.graph_algos._iterate): a loop given a
+``ckpt_dir`` (``pagerank``, ``random_walk_counts``, the CLI's
+``walk --ckpt-dir``) snapshots its whole state after every round and
+resumes from the latest intact round on the next call.
+
 Parquet replaces the length-prefixed binary int format (ArrayStore
 .java:13-80): columnar, compressed, splittable, schema-carrying.
 """
@@ -50,9 +56,9 @@ def write_round(dfs: dict[str, DataFrame], base: str, step: int) -> None:
     base_p = Path(base)
     if base_p.is_dir():
         # drop ALL stale staging dirs, not just this step's: a crash
-        # mid-snapshot followed by a resume with different
-        # steps_per_round would otherwise orphan its _tmp_round=<n>
-        # forever (no later write ever targets that exact step)
+        # mid-snapshot followed by a resume from an earlier round
+        # would otherwise orphan its _tmp_round=<n> when the resumed
+        # run stops short of round n
         for d in base_p.iterdir():
             if _TMP_ROUND_RE.match(d.name):
                 shutil.rmtree(d, ignore_errors=True)

@@ -141,18 +141,23 @@ RELIABLE_CKPT_DIR_CONF = "spark.neo_olap.checkpointDir"
 def loop_checkpoint(df, eager: bool = True):
     """Checkpoint for ITERATIVE-LOOP state (r14, VERDICT r13 item 7).
 
-    Default: ``localCheckpoint`` — executor-local blocks, cheap, the
-    right local/bench trade. localCheckpoint is NON-replicated: at
-    cluster scale an executor loss makes the lineage-truncated state
-    unrecoverable (full job re-run). Setting the session conf
-    ``spark.neo_olap.reliableLoopCheckpoint=true`` switches every loop
-    state checkpoint to a reliable ``checkpoint()`` backed by
-    ``spark.neo_olap.checkpointDir`` (or the context's already-set
-    checkpoint dir) — slower per round (a filesystem write), but an
-    executor loss then recovers from storage instead of recomputing
-    the whole loop. Values are identical in both modes (pinned in
-    tests/test_graph_algos.py); the default leaves every plan
-    byte-identical to pre-r14."""
+    Every graph-loop state frame goes through here: the round driver
+    (operators.graph_algos._iterate) checkpoints each round's frames
+    lazily, and the loops checkpoint their initial state and outputs
+    with it too. Default: ``localCheckpoint`` — executor-local blocks,
+    cheap, the right local/bench trade. localCheckpoint is
+    NON-replicated: at cluster scale an executor loss makes the
+    lineage-truncated state unrecoverable (full job re-run). Setting
+    the session conf ``spark.neo_olap.reliableLoopCheckpoint=true``
+    switches every loop-state checkpoint to a reliable
+    ``checkpoint()`` backed by ``spark.neo_olap.checkpointDir`` (or
+    the context's already-set checkpoint dir) — slower per round (a
+    filesystem write), but an executor loss then recovers from
+    storage instead of recomputing the whole loop. Values are
+    identical in both modes, and no loop bypasses the switch (both
+    pinned in tests/test_graph_algos.py). Parquet round snapshots for
+    resume are a separate, opt-in policy (the driver's ``ckpt_dir``,
+    neo_olap_spark.checkpoints)."""
     spark = df.sparkSession
     if (
         spark.conf.get(RELIABLE_CKPT_CONF, "false").lower() == "true"
@@ -182,7 +187,7 @@ def scaled_parts(
     count — never a hardcoded constant (VERDICT r13 item 3: a fixed 32
     re-creates the bounded-parallelism problem the distributed passes
     exist to kill, just 32× later). Capped at 10k like
-    graph_algos._loop_shuffle_partitions."""
+    graph_algos._graph_loop."""
     base = max(floor or 0, spark.sparkContext.defaultParallelism)
     if n_rows is not None:
         base = max(base, (n_rows + rows_per_part - 1) // rows_per_part)

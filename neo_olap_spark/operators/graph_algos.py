@@ -2,11 +2,17 @@
 
 The reference runs two whole-graph analytics on an embedded Neo4j from
 many threads (SURVEY.md §2.1 R1/R2). Here they are iterative DataFrame
-programs: a driver-side Python loop builds per-step plans, Catalyst
-optimizes each, and ``localCheckpoint()`` truncates lineage every few
-steps (the Spark analog of the reference's round checkpointing,
-Runner.java:67-88). All randomness is ``xxhash64(…, seed)`` on stable
-keys, so runs are deterministic and retry-stable (SURVEY.md §7.3).
+programs: a driver-side Python loop builds per-step plans and Catalyst
+optimizes each. Every loop — BFS, the streamed walk, PageRank, CC,
+LPA, k-core, sssp and HITS — runs on one round driver, ``_iterate``
+(the analog of the reference's round loop, Runner.java:67-88,107-129):
+it lazily checkpoints each round's state through ``loop_checkpoint``,
+runs the convergence action every ``check_every`` rounds (or one
+materializing count for fixed-round loops), and, given a
+``ckpt_dir``, snapshots every round to parquet and resumes from it.
+``_graph_loop`` sets each loop's shuffle width and AQE. All randomness
+is ``xxhash64(…, seed)`` on stable keys, so runs are deterministic
+and retry-stable (SURVEY.md §7.3).
 
 Scale notes: each BFS/walk step is one shuffle keyed on node/walker id;
 the edge list is persisted once and reused; visited/frontier sets stay
@@ -21,6 +27,7 @@ from pyspark.sql.window import Window as W
 
 from contextlib import contextmanager
 
+from neo_olap_spark.checkpoints import latest_round, read_round, write_round
 from neo_olap_spark.functions import local_rows_frame, loop_checkpoint
 from neo_olap_spark.functions import numbered_sample as _numbered_sample
 from neo_olap_spark.graph import edges, symmetrize
@@ -29,71 +36,145 @@ from neo_olap_spark.tables import load
 
 
 @contextmanager
-def _loop_shuffle_partitions(
-    spark: SparkSession, n_rows: int, rows_per_partition: int = 2_000_000
+def _graph_loop(
+    spark: SparkSession,
+    n_edges: int | None,
+    edge_frame: DataFrame | None = None,
+    *,
+    aqe: bool,
 ):
-    """Size per-iteration shuffles to the loop's ACTUAL data volume.
+    """Session settings and edge-count hint for one graph loop.
 
-    Iterative loops shuffle the same (known-size) tables dozens of
-    times; the session-wide shuffle.partitions (sized for arbitrary
-    queries) makes every micro-iteration pay full task-scheduling
-    overhead — measured 1.6× on PageRank/CC at sf0.1 (32 partitions
-    for a 2M-row edge list). The rule scales both ways: ~2M rows per
-    partition keeps partitions ∝ data, so a 1e12-edge graph still
-    fans out to thousands of reducers."""
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    n = max(8, min(10_000, (n_rows + rows_per_partition - 1) // rows_per_partition))
-    spark.conf.set("spark.sql.shuffle.partitions", str(n))
-    try:
-        yield
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    Shuffle partitions are sized to the loop's ACTUAL data volume:
+    iterative loops shuffle the same (known-size) tables dozens of
+    times, and the session-wide shuffle.partitions (sized for
+    arbitrary queries) makes every micro-iteration pay full
+    task-scheduling overhead — measured 1.6× on PageRank/CC at sf0.1.
+    ~2M rows per partition keeps partitions ∝ data, so a 1e12-edge
+    graph still fans out to thousands of reducers.
 
-
-@contextmanager
-def _no_aqe(spark: SparkSession):
-    """Disable AQE for a micro-iteration loop. AQE's per-stage re-plan
+    ``aqe=False`` disables AQE for the loop: its per-stage re-plan
     round-trips dominate when each step touches a few hundred rows
-    (measured 3× on the 16-step walk); the step plans here are
-    broadcast joins whose shape AQE could never improve. Restored after
-    — large one-shot queries keep AQE's skew/coalesce benefits."""
-    prev = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try:
-        yield
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", prev)
+    (measured 3× on the 16-step walk), and the step plans are joins
+    whose shape AQE could never improve. BFS-shaped loops (BFS,
+    betweenness, k-core) pass ``aqe=True`` and keep the session's
+    setting: with AQE off, ``q_shortest_path_len`` ran fewer jobs but
+    2.4× the tasks and was slower warm. Both settings are restored on
+    exit, so large one-shot queries keep AQE's skew/coalesce benefits.
 
-
-@contextmanager
-def _edge_count_hint(edge_frame: DataFrame, n_edges: int | None):
-    """Resolve the edge-count hint that sizes loop shuffles.
-
-    Callers normally pass the cheap metadata estimate
-    (graph.edge_count_estimate) — every registered query key does. The
-    None fallback persists the edge frame BEFORE counting so the
-    count's materialization is reused by the loop's own first action
-    instead of rebuilding the upstream edge shuffle twice (the r7
-    double-build class; fixed for hits() per round-8 ADVICE, unified
-    here for pagerank/connected_components/label_propagation/sssp per
-    round-9 VERDICT item 4). The persisted frame is released in a
-    finally even if the loop body raises (round-9 ADVICE: the old
-    hits() shape pinned the cache on a pre-loop failure). Trade-off,
-    stated: on the fallback path the pre-repartition edge frame stays
-    cached alongside the loop's repartitioned copy for the loop's
-    duration — a bounded double-cache on a path no registered key
-    takes; latency-sensitive callers pass n_edges.
+    ``n_edges`` is normally the cheap metadata estimate
+    (graph.edge_count_estimate) — every registered query key passes
+    it. The None fallback persists ``edge_frame`` BEFORE counting, so
+    the loop's own first action reuses the count's materialization
+    instead of rebuilding the upstream edge shuffle twice; the cache
+    is released on exit even if the loop body raises. On that path the
+    pre-repartition edge frame stays cached beside the loop's
+    repartitioned copy — a bounded double-cache no registered key
+    takes.
 
     Yields (edge_frame, n_edges) with the count resolved.
     """
-    if n_edges is not None:
-        yield edge_frame, n_edges
-        return
-    cached = edge_frame.persist()
+    cached = None
+    if n_edges is None:
+        cached = edge_frame = edge_frame.persist()
+        n_edges = cached.count()
+    confs = {
+        "spark.sql.shuffle.partitions": str(
+            max(8, min(10_000, (n_edges + 2_000_000 - 1) // 2_000_000))
+        )
+    }
+    if not aqe:
+        confs["spark.sql.adaptive.enabled"] = "false"
+    prev = {k: spark.conf.get(k) for k in confs}
+    for k, v in confs.items():
+        spark.conf.set(k, v)
     try:
-        yield cached, cached.count()
+        yield edge_frame, n_edges
     finally:
-        cached.unpersist()
+        for k, v in prev.items():
+            spark.conf.set(k, v)
+        if cached is not None:
+            cached.unpersist()
+
+
+# Relaxations chained per convergence action in the min-label (CC) and
+# Bellman-Ford (sssp) loops. Propagation is idempotent past the
+# fixpoint, so checking every k-th round's improvement set detects
+# convergence exactly (an empty set at round r means empty forever),
+# at the cost of up to k-1 relaxations over an already-empty frontier
+# (near-free: every operator sees 0 rows). Halves the driver actions;
+# the state trajectory is bit-identical. Measured at sf0.1: two-hop
+# sssp 7.78 s vs one-hop 8.07 s median; four-hop was no better.
+HOPS_PER_CHECK = 2
+
+
+def _iterate(
+    state: dict[str, DataFrame],
+    step,
+    n: int,
+    *,
+    check_every: int = 1,
+    done=None,
+    ckpt_dir: str | None = None,
+) -> tuple[dict[str, DataFrame], int, bool]:
+    """The one round loop every iterative graph algorithm runs on —
+    the Spark analog of the reference's round loop with checkpoint and
+    resume (Runner.java:67-88,107-129).
+
+    ``step(state, r)`` builds round ``r`` (1-based) as a generator of
+    ``(name, frame)`` pairs. Each yielded frame is lazily checkpointed
+    (``loop_checkpoint(eager=False)``, so the reliable mode covers it)
+    and stored in ``state`` before the generator resumes, so a later
+    frame of the same round reads the checkpointed one. A lazy
+    checkpoint cuts lineage and caches its RDD on first compute: every
+    in-plan reference reads one materialization, and a whole chain of
+    rounds computes inside a single action.
+
+    Actions: with ``done``, ``done(state, r)`` runs after every
+    ``check_every``-th round and after round ``n``; it runs the
+    convergence action, may replace frames in ``state`` (sssp drops
+    finished sources) and returns True when the loop has converged.
+    Without ``done``, ONE ``count()`` of the round's last-yielded frame
+    materializes the chain when the loop ends — before the caller
+    unpersists the caches the chain reads.
+
+    ``ckpt_dir`` snapshots every frame to parquet after every round
+    (checkpoints.write_round: crash-safe, delete-previous retention)
+    and continues from the snapshot; a call whose ``ckpt_dir`` holds a
+    snapshot resumes from it instead of from ``state``. A snapshot past
+    ``n`` raises ValueError rather than returning a later round's
+    state.
+
+    Returns (state, rounds run including resumed ones, converged)."""
+
+    def reload(r: int) -> dict[str, DataFrame]:
+        spark = next(iter(state.values())).sparkSession
+        return {k: read_round(spark, ckpt_dir, r, k) for k in state}
+
+    rounds = 0
+    if ckpt_dir is not None and (last := latest_round(ckpt_dir)) is not None:
+        if last > n:
+            raise ValueError(
+                f"{ckpt_dir} holds round {last}, past the {n} rounds "
+                "requested — clear it or request at least that many"
+            )
+        state, rounds = reload(last), last
+    converged, name = False, None
+    for r in range(rounds + 1, n + 1):
+        for name, frame in step(state, r):
+            state[name] = loop_checkpoint(frame, eager=False)
+        rounds = r
+        if ckpt_dir is not None:
+            write_round(state, ckpt_dir, r)
+            state = reload(r)
+        if done is not None and (r % check_every == 0 or r == n):
+            if done(state, r):
+                converged = True
+                break
+    if done is None and name is not None:
+        state[name].count()
+    return state, rounds, converged
+
 
 # ---------------------------------------------------------------------------
 # BFS shortest-path distances (deterministic core of R2)
@@ -118,39 +199,45 @@ def bfs_distances(
     per-level expansion is frontier ⋈ edges; the "visited" set is a
     left-anti join instead of Neo4j's traversal state.
     """
-    frontier = sources.select(
+    frontier = loop_checkpoint(sources.select(
         "tag", "node", F.lit(0).alias("dist"), F.lit(1).cast("long").alias("npaths")
-    ).localCheckpoint()
-    visited = frontier
+    ))
 
-    for depth in range(1, max_depth + 1):
+    def level(s, depth):
+        # `visited` lags one level: level d first folds level d-1's
+        # (non-empty, counted) frontier into it, so the union is built
+        # only after the emptiness check proved it is needed
+        if depth > 1:
+            yield "visited", s["visited"].unionByName(s["frontier"])
         # shuffle_hash on the frontier side: build the hash table on the
         # (smaller) frontier and stream the co-partitioned edge list —
         # avoids re-sorting the edges every level (SMJ would)
+        f = s["frontier"]
         expanded = (
-            frontier.hint("shuffle_hash")
-            .join(sym_edges, frontier.node == sym_edges.src)
+            f.hint("shuffle_hash")
+            .join(sym_edges, f.node == sym_edges.src)
             .groupBy("tag", F.col("dst").alias("node"))
             .agg(F.sum("npaths").alias("npaths"))
             .withColumn("dist", F.lit(depth))
         )
-        seen = visited.select(F.col("tag").alias("vtag"), F.col("node").alias("vnode"))
-        frontier = expanded.join(
+        seen = s["visited"].select(F.col("tag").alias("vtag"), F.col("node").alias("vnode"))
+        yield "frontier", expanded.join(
             seen,
             (expanded.tag == seen.vtag) & (expanded.node == seen.vnode),
             "left_anti",
         ).select("tag", "node", "dist", "npaths")
-        # Lineage is cut per level (localCheckpoint → LogicalRDD) but
-        # materialization is FUSED into the emptiness check: the lazy
-        # checkpoint persists when the count computes it, so a level
-        # runs ONE job, not three (frontier materialize + isEmpty +
-        # visited materialize). `visited` stays lazy too — its RDD
-        # persists inside the NEXT level's count job (the anti-join
-        # consumes it), and the final action covers the last union.
-        frontier = frontier.transform(lambda d: loop_checkpoint(d, eager=False))
-        if frontier.count() == 0:
-            break
-        visited = visited.unionByName(frontier).transform(lambda d: loop_checkpoint(d, eager=False))
+
+    # The emptiness count is the level's ONE job: it materializes the
+    # level's lazily checkpointed frontier, and the previous `visited`
+    # persists inside it too (the anti-join consumes it); the final
+    # action covers the last union.
+    state, rounds, converged = _iterate(
+        {"frontier": frontier, "visited": frontier}, level, max_depth,
+        done=lambda s, _: s["frontier"].count() == 0,
+    )
+    visited = state["visited"]
+    if rounds and not converged:
+        visited = loop_checkpoint(visited.unionByName(state["frontier"]), eager=False)
 
     if count_paths:
         return visited
@@ -190,7 +277,7 @@ def q_shortest_path_len(spark: SparkSession, sf_dir: str) -> DataFrame:
     from neo_olap_spark.graph import edge_count_estimate
 
     sym0 = symmetrize(edges(spark, sf_dir))
-    with _loop_shuffle_partitions(spark, edge_count_estimate(spark, sf_dir)):
+    with _graph_loop(spark, edge_count_estimate(spark, sf_dir), aqe=True):
         sym = sym0.repartition("src").persist()
         sources = (
             load(spark, sf_dir, "customer")
@@ -202,7 +289,7 @@ def q_shortest_path_len(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("node").alias("node_id"),
             F.col("dist").cast("long").alias("dist"),
         )
-        # BFS levels are localCheckpointed — the edge cache is dead weight
+        # BFS levels are checkpointed — the edge cache is dead weight
         sym.unpersist()
         return out
 
@@ -352,7 +439,7 @@ def _walk_setup(spark: SparkSession, sf_dir: str, n_walkers: int, seed: int):
             "walker_id",
         )
         .select("walker_id", "node", F.lit(0).alias("step"))
-        .localCheckpoint()
+        .transform(loop_checkpoint)
     )
     return adj, (tele_nodes, node_of_idx), n_nodes, walkers
 
@@ -452,12 +539,19 @@ def _advance_walkers_bcast(
     )
 
 
+def _visit_counts(walkers: DataFrame) -> DataFrame:
+    return walkers.groupBy(F.col("node").alias("node_id")).agg(
+        F.count("*").alias("visits")
+    )
+
+
 def random_walk_counts(
     spark: SparkSession,
     sf_dir: str,
     n_walkers: int = 256,
     n_steps: int = 16,
     seed: int = 42,
+    ckpt_dir: str | None = None,
 ) -> DataFrame:
     """Degree-biased random-walk visit counting (RandomWalkingRunner
     .java:16-35), Spark-first.
@@ -475,14 +569,25 @@ def random_walk_counts(
     Scale: state is one row per walker; each step is a join keyed on
     the walker's node + a per-walker top-1 (no global sort). The
     visit log grows n_walkers × n_steps rows — negligible vs data.
+
+    ``ckpt_dir`` snapshots the walker frontier and the running visit
+    counts to parquet after every step and resumes from the latest
+    snapshot there (the reference's round checkpoint, Runner.java
+    :67-88, via _iterate). The step kernel depends only on (walker,
+    step, seed), so an interrupted-and-resumed walk is bit-identical
+    to an uninterrupted one. Returns (node_id, visits).
     """
     from neo_olap_spark.graph import edge_count_estimate
 
     n_edges = edge_count_estimate(spark, sf_dir)
-    with _no_aqe(spark), _loop_shuffle_partitions(spark, n_edges):
+    with _graph_loop(spark, n_edges, aqe=False):
         adj, tele, n_nodes, walkers = _walk_setup(spark, sf_dir, n_walkers, seed)
 
-        if tele[1] is not None and _adj_fits_broadcast(spark, n_edges, n_nodes):
+        if (
+            ckpt_dir is None
+            and tele[1] is not None
+            and _adj_fits_broadcast(spark, n_edges, n_nodes)
+        ):
             # r14 (guide §3.1/§2.4): the walker state is n_walkers rows
             # — a query parameter, not data — while the adjacency table
             # grows with the graph. When the WHOLE adjacency fits the
@@ -493,124 +598,43 @@ def random_walk_counts(
             # explode + count executes as ONE job with ONE adjacency
             # broadcast (exchange reuse) — no per-step checkpoint
             # actions, no per-step scans of the cached adjacency.
-            # Above the threshold (or with non-dense keys) the
-            # streamed-adjacency loop below is the scale shape:
-            # walker state broadcasts, adjacency stays distributed.
-            # Identical picks/teleports — value-pinned in tests.
+            # Above the threshold (or with non-dense keys, or
+            # snapshots to take) the streamed-adjacency loop below is
+            # the scale shape: walker state broadcasts, adjacency stays
+            # distributed. Identical picks/teleports — value-pinned in
+            # tests.
             adj.unpersist()  # built once inside the broadcast exchange
             frontier = walkers.withColumn("path", F.array("node"))
             for _ in range(n_steps):
                 frontier = _advance_walkers_bcast(
                     frontier, adj, tele[1], n_nodes, seed
                 )
-            return (
-                frontier.select(F.explode("path").alias("node"))
-                .groupBy(F.col("node").alias("node_id"))
-                .agg(F.count("*").alias("visits"))
-            )
+            return _visit_counts(frontier.select(F.explode("path").alias("node")))
 
-        visit_logs: list[DataFrame] = [walkers.select("node")]
-        frontier = walkers
-        for _ in range(n_steps):
-            # per-step localCheckpoint is load-bearing: _advance_walkers
-            # references the frontier twice (step + dead-end anti-join),
-            # so an unmaterialized chain recomputes exponentially.
+        def walk(s, _):
+            # the per-step checkpoint is load-bearing: _advance_walkers
+            # references the frontier twice (step + dead-end join), so
+            # an uncheckpointed chain recomputes exponentially.
             # coalesce(4): a 256-row frontier checkpointed as ~35
-            # micro-partitions per step would hand the final count job
+            # micro-partitions per step would hand the final job
             # n_steps×35 near-empty tasks
-            frontier = loop_checkpoint(_advance_walkers(
-                frontier, adj, tele, n_nodes, seed
-            ).coalesce(4))
-            visit_logs.append(frontier.select("node"))
-
-        # the visit logs are localCheckpointed: the adjacency/node caches
-        # are dead weight for the final count job (and for later queries)
-        adj.unpersist()
-        if tele[0] is not None:
-            tele[0].unpersist()
-        visits = visit_logs[0]
-        for v in visit_logs[1:]:
-            visits = visits.unionAll(v)
-        return visits.groupBy(F.col("node").alias("node_id")).agg(
-            F.count("*").alias("visits")
-        )
-
-
-def resumable_random_walk_counts(
-    spark: SparkSession,
-    sf_dir: str,
-    ckpt_dir: str,
-    n_walkers: int = 256,
-    n_steps: int = 16,
-    steps_per_round: int = 4,
-    seed: int = 42,
-    max_rounds: int | None = None,
-) -> DataFrame:
-    """Round-checkpointed walk (Runner.java:107-129 round loop + R10).
-
-    Every ``steps_per_round`` steps the walker frontier and the partial
-    visit counts snapshot to parquet under ``round=<step>`` and the
-    previous round is deleted; a fresh call with the same ckpt_dir
-    resumes from the latest snapshot (loop state parsed from the
-    directory name, as the reference parses its filename). Because the
-    step kernel is hash-deterministic, interrupted-and-resumed runs are
-    bit-identical to uninterrupted ones (asserted in tests).
-
-    ``max_rounds`` bounds the rounds this call executes (simulating the
-    reference's wall-clock cutoff, Runner.java:126); None = run to
-    completion. Returns the final (node_id, visits) counts.
-    """
-    from neo_olap_spark.checkpoints import latest_round, read_round, write_round
-    from neo_olap_spark.graph import edge_count_estimate
-
-    with _no_aqe(spark), _loop_shuffle_partitions(
-        spark, edge_count_estimate(spark, sf_dir)
-    ):
-        adj, tele, n_nodes, walkers = _walk_setup(spark, sf_dir, n_walkers, seed)
-
-        last = latest_round(ckpt_dir)
-        if last is None:
-            frontier = walkers
-            counts = walkers.groupBy(F.col("node").alias("node_id")).agg(
-                F.count("*").alias("visits")
-            )
-            start_step = 0
-        else:
-            frontier = read_round(spark, ckpt_dir, last, "frontier")
-            counts = read_round(spark, ckpt_dir, last, "counts")
-            start_step = last
-
-        rounds_done = 0
-        while start_step < n_steps and (max_rounds is None or rounds_done < max_rounds):
-            end = min(start_step + steps_per_round, n_steps)
-            visit_logs = []
-            for _ in range(start_step + 1, end + 1):
-                frontier = _advance_walkers(
-                    frontier, adj, tele, n_nodes, seed
-                ).coalesce(4).localCheckpoint()
-                visit_logs.append(frontier.select("node"))
-            delta = visit_logs[0]
-            for v in visit_logs[1:]:
-                delta = delta.unionAll(v)
-            counts = (
-                counts.unionByName(
-                    delta.groupBy(F.col("node").alias("node_id")).agg(
-                        F.count("*").alias("visits")
-                    )
-                )
+            yield "frontier", _advance_walkers(
+                s["frontier"], adj, tele, n_nodes, seed
+            ).coalesce(4)
+            yield "counts", (
+                s["counts"].unionByName(_visit_counts(s["frontier"]))
                 .groupBy("node_id")
                 .agg(F.sum("visits").alias("visits"))
             )
-            write_round({"frontier": frontier, "counts": counts}, ckpt_dir, end)
-            # continue from the snapshot: truncated lineage, exact state
-            frontier = read_round(spark, ckpt_dir, end, "frontier")
-            counts = read_round(spark, ckpt_dir, end, "counts")
-            start_step = end
-            rounds_done += 1
+
+        state, _, _ = _iterate(
+            {"frontier": walkers, "counts": _visit_counts(walkers)},
+            walk, n_steps, ckpt_dir=ckpt_dir,
+        )
         adj.unpersist()
         if tele[0] is not None:
             tele[0].unpersist()
-        return counts
+        return state["counts"]
 
 
 def _random_walk_oracle(n_walkers: int, n_steps: int, seed: int) -> str:
@@ -743,7 +767,7 @@ def betweenness_sample(
     from neo_olap_spark.graph import edge_count_estimate
 
     sym0 = symmetrize(edges(spark, sf_dir))
-    with _loop_shuffle_partitions(spark, edge_count_estimate(spark, sf_dir)):
+    with _graph_loop(spark, edge_count_estimate(spark, sf_dir), aqe=True):
         sym = sym0.repartition("src").persist()
         nodes = all_nodes(spark, sf_dir).distinct()
 
@@ -775,7 +799,7 @@ def betweenness_sample(
         )
 
         result = betweenness_pair_counts(sym, pairs, max_depth)
-        # fwd/bwd BFS outputs are localCheckpointed; drop the edge cache
+        # fwd/bwd BFS outputs are checkpointed; drop the edge cache
         sym.unpersist()
         return result
 
@@ -950,6 +974,7 @@ def pagerank(
     n_edges: int | None = None,
     seeds: list[int] | None = None,
     n_nodes: int | None = None,
+    ckpt_dir: str | None = None,
 ) -> DataFrame:
     """True PageRank by power iteration — the quantity the reference's
     degree-biased walk approximates (its output file is literally
@@ -974,13 +999,17 @@ def pagerank(
     is exactly ONE shuffle (the contribution groupBy); the join back to
     the co-partitioned state adds no exchange. Total rank is exactly
     n_nodes every iteration (asserted in tests).
+
+    ``ckpt_dir`` snapshots the rank state (teleport column included)
+    after every iteration and resumes from the latest snapshot there —
+    the reference's checkpoint payload is literally this array
+    (page_rank_<min>_<n>.int, Runner.java:64,67-88). Power iteration
+    is a pure function of the snapshotted state, so an
+    interrupted-and-resumed run is bit-identical to an uninterrupted
+    one.
     """
     spark = sym_edges.sparkSession
-    # the edge-count hint sizes loop shuffles; callers pass the cheap
-    # metadata estimate (edge_count_estimate) — the fallback persists
-    # before counting (see _edge_count_hint)
-    with _edge_count_hint(sym_edges, n_edges) as (sym_edges, n_edges), \
-            _no_aqe(spark), _loop_shuffle_partitions(spark, n_edges):
+    with _graph_loop(spark, n_edges, sym_edges, aqe=False) as (sym_edges, n_edges):
         deg0 = sym_edges.groupBy("src").agg(F.count("*").alias("deg"))
         base = (
             nodes.join(deg0, nodes.node == deg0.src, "left")
@@ -1013,30 +1042,21 @@ def pagerank(
             F.greatest("deg", F.lit(1)).alias("deg"),
             tele.alias("tele"),
             tele.alias("rank"),
-        ).localCheckpoint()
+        ).transform(loop_checkpoint)
 
-        for _ in range(n_iters):
+        def power_step(s, _):
             # shuffle_hash: build on the small state side — SMJ would
             # re-sort the 1.6M-row edge cache every iteration
+            st = s["state"]
             contrib = (
-                state.hint("shuffle_hash")
-                .join(edges_p, state.node == edges_p.src)
+                st.hint("shuffle_hash")
+                .join(edges_p, st.node == edges_p.src)
                 .select(F.col("dst").alias("node"), (F.col("rank") / F.col("deg")).alias("c"))
                 .groupBy("node")
                 .agg(F.sum("c").alias("in_mass"))
             )
-            # LAZY checkpoint (r14, VERDICT r13 item 1: fewer driver
-            # actions per iteration): power iteration has NO per-round
-            # convergence check — n_iters is fixed — so nothing needs
-            # a driver action between iterations. Each lazy
-            # localCheckpoint still pins the state RDD (it caches on
-            # first compute, so the two in-plan references — next
-            # iteration's push and its own join back — read one
-            # materialization, the sssp multi-hop mechanism), but ALL
-            # n_iters states now materialize inside the single count
-            # below: 8 checkpoint jobs become 1.
-            state = (
-                state.select("node", "deg", "tele")
+            yield "state", (
+                st.select("node", "deg", "tele")
                 .join(contrib.hint("shuffle_hash"), "node", "left")
                 .select(
                     "node",
@@ -1047,96 +1067,13 @@ def pagerank(
                         + F.lit(damping) * F.coalesce("in_mass", F.lit(0.0))
                     ).alias("rank"),
                 )
-                .transform(lambda d: loop_checkpoint(d, eager=False))
             )
-        # ONE materializing action for the whole chain — it must run
-        # BEFORE the unpersists (the chain reads the cached base/edge
-        # frames; dropping them first would rebuild the edge shuffle
-        # once per iteration inside the caller's action)
-        state.count()
-        base.unpersist()
-        edges_p.unpersist()
-        return state.select(F.col("node").alias("node_id"), F.round("rank", 6).alias("rank"))
 
-
-def resumable_pagerank(
-    spark: SparkSession,
-    sf_dir: str,
-    ckpt_dir: str,
-    n_iters: int = 8,
-    iters_per_round: int = 2,
-    damping: float = 0.85,
-    max_rounds: int | None = None,
-) -> DataFrame:
-    """Round-checkpointed PageRank — the closest analog of the
-    reference's checkpoint loop, whose snapshot file is literally the
-    pagerank array (page_rank_<min>_<n>.int, Runner.java:64,67-88).
-    Every ``iters_per_round`` power iterations the rank state
-    snapshots to parquet under round=<iter> (delete-previous
-    retention, crash-safe staging rename); a fresh call with the same
-    ckpt_dir resumes from the latest snapshot. Power iteration is a
-    pure function of the snapshotted state, so interrupted-and-resumed
-    runs are bit-identical to uninterrupted ones (asserted in tests).
-    """
-    from neo_olap_spark.checkpoints import latest_round, read_round, write_round
-    from neo_olap_spark.graph import edge_count_estimate
-
-    sym_edges = symmetrize(edges(spark, sf_dir))
-    nodes = all_nodes(spark, sf_dir)
-    n_edges = edge_count_estimate(spark, sf_dir)
-    with _no_aqe(spark), _loop_shuffle_partitions(spark, n_edges):
-        deg0 = sym_edges.groupBy("src").agg(F.count("*").alias("deg"))
-        base = (
-            nodes.join(deg0, nodes.node == deg0.src, "left")
-            .select("node", F.coalesce("deg", F.lit(0)).alias("deg"))
-            .repartition("node")
-            .persist()
-        )
-        self_loops = base.where(F.col("deg") == 0).select(
-            F.col("node").alias("src"), F.col("node").alias("dst")
-        )
-        edges_p = sym_edges.unionByName(self_loops).repartition("src").persist()
-
-        last = latest_round(ckpt_dir)
-        if last is None:
-            state = base.select(
-                "node", F.greatest("deg", F.lit(1)).alias("deg"), F.lit(1.0).alias("rank")
-            ).localCheckpoint()
-            start = 0
-        else:
-            state = read_round(spark, ckpt_dir, last, "state")
-            start = last
-
-        rounds_done = 0
-        while start < n_iters and (max_rounds is None or rounds_done < max_rounds):
-            end = min(start + iters_per_round, n_iters)
-            for _ in range(start, end):
-                contrib = (
-                    state.hint("shuffle_hash")
-                    .join(edges_p, state.node == edges_p.src)
-                    .select(
-                        F.col("dst").alias("node"), (F.col("rank") / F.col("deg")).alias("c")
-                    )
-                    .groupBy("node")
-                    .agg(F.sum("c").alias("in_mass"))
-                )
-                state = (
-                    state.select("node", "deg")
-                    .join(contrib.hint("shuffle_hash"), "node", "left")
-                    .select(
-                        "node",
-                        "deg",
-                        (
-                            F.lit(1.0 - damping)
-                            + F.lit(damping) * F.coalesce("in_mass", F.lit(0.0))
-                        ).alias("rank"),
-                    )
-                    .localCheckpoint()
-                )
-            write_round({"state": state}, ckpt_dir, end)
-            state = read_round(spark, ckpt_dir, end, "state")
-            start = end
-            rounds_done += 1
+        # power iteration has no convergence test (n_iters is fixed),
+        # so all n_iters states materialize inside _iterate's single
+        # count — run before the unpersists below, since the chain
+        # reads the cached base/edge frames
+        state = _iterate({"state": state}, power_step, n_iters, ckpt_dir=ckpt_dir)[0]["state"]
         base.unpersist()
         edges_p.unpersist()
         return state.select(F.col("node").alias("node_id"), F.round("rank", 6).alias("rank"))
@@ -1274,16 +1211,6 @@ def q_pagerank_personalized(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Min-label relaxations chained per convergence count (r14, the sssp
-# hops_per_round precedent): propagation is idempotent past the
-# fixpoint, so counting every k-th round's improvement set detects
-# convergence exactly (an empty set at round r means empty forever),
-# at the cost of up to k-1 relaxations over an already-empty frontier
-# (near-free: every operator sees 0 rows). Halves the driver-action
-# count of the loop; state trajectory is bit-identical.
-CC_HOPS_PER_CHECK = 2
-
-
 def connected_components(
     sym_edges: DataFrame,
     nodes: DataFrame,
@@ -1296,57 +1223,47 @@ def connected_components(
     label CHANGED last round push it to their neighbors (the frontier
     shrinks geometrically on most graphs, so late rounds touch almost
     nothing); a label adopts any smaller incoming label. Terminates
-    when the frontier empties — O(diameter) rounds.
+    when the frontier empties — O(diameter) rounds, with convergence
+    counted every HOPS_PER_CHECK rounds.
     """
     spark = sym_edges.sparkSession
-    with _edge_count_hint(sym_edges, n_edges) as (sym_edges, n_edges), \
-            _no_aqe(spark), _loop_shuffle_partitions(spark, n_edges):
+    with _graph_loop(spark, n_edges, sym_edges, aqe=False) as (sym_edges, n_edges):
         edges_p = sym_edges.repartition("src").persist()
-        labels = nodes.select("node", F.col("node").alias("label")).localCheckpoint()
-        frontier = labels  # round 0: everyone announces
-        converged = False
-        rounds = 0
-        while rounds < max_iters and not converged:
-            # Chain CC_HOPS_PER_CHECK relaxations LAZILY, then run ONE
-            # count job (r14; was one count per round). Lazy
-            # checkpoints still fuse each round's materialization into
-            # that count (one job, was three per round pre-r12), and
-            # labels stays lazy — its RDD persists inside the next
-            # count when the improvement join consumes it; the final
-            # action covers the last union (its inputs are cached).
-            improved = None
-            while True:
-                rounds += 1
-                pushed = (
-                    frontier.hint("shuffle_hash")
-                    .join(edges_p, frontier.node == edges_p.src)
-                    .groupBy(F.col("dst").alias("node"))
-                    .agg(F.min("label").alias("cand"))
-                )
-                improved = (
-                    labels.join(pushed.hint("shuffle_hash"), "node")
-                    .where(F.col("cand") < F.col("label"))
-                    .select("node", F.col("cand").alias("label"))
-                    .transform(lambda d: loop_checkpoint(d, eager=False))
-                )
-                # merge improvements via union + groupBy-min: one
-                # shuffle keyed on node, where the anti-join + union
-                # alternative shuffles twice (measured 2× cold at
-                # sf0.1). min() is the merge because improvements are
-                # strictly smaller labels. Merging an EMPTY improvement
-                # set is the identity, so chaining past the fixpoint
-                # cannot change a label.
-                labels = (
-                    labels.unionByName(improved)
-                    .groupBy("node")
-                    .agg(F.min("label").alias("label"))
-                    .transform(lambda d: loop_checkpoint(d, eager=False))
-                )
-                frontier = improved
-                if rounds >= max_iters or rounds % CC_HOPS_PER_CHECK == 0:
-                    break
-            if improved.count() == 0:
-                converged = True
+        labels = nodes.select("node", F.col("node").alias("label")).transform(
+            loop_checkpoint
+        )
+
+        def relax(s, _):
+            # `improved` is the frontier: round 0 has everyone announce
+            f = s["improved"]
+            pushed = (
+                f.hint("shuffle_hash")
+                .join(edges_p, f.node == edges_p.src)
+                .groupBy(F.col("dst").alias("node"))
+                .agg(F.min("label").alias("cand"))
+            )
+            yield "improved", (
+                s["labels"].join(pushed.hint("shuffle_hash"), "node")
+                .where(F.col("cand") < F.col("label"))
+                .select("node", F.col("cand").alias("label"))
+            )
+            # merge improvements via union + groupBy-min: one shuffle
+            # keyed on node, where the anti-join + union alternative
+            # shuffles twice (measured 2× cold at sf0.1). min() is the
+            # merge because improvements are strictly smaller labels.
+            # Merging an EMPTY improvement set is the identity, so
+            # chaining past the fixpoint cannot change a label.
+            yield "labels", (
+                s["labels"].unionByName(s["improved"])
+                .groupBy("node")
+                .agg(F.min("label").alias("label"))
+            )
+
+        state, rounds, converged = _iterate(
+            {"labels": labels, "improved": labels}, relax, max_iters,
+            check_every=HOPS_PER_CHECK,
+            done=lambda s, _: s["improved"].count() == 0,
+        )
         edges_p.unpersist()
         if stats is not None:
             stats["rounds"] = rounds
@@ -1356,7 +1273,9 @@ def connected_components(
                 "(component diameter exceeds max_iters) — raise max_iters; "
                 "returning partial labels would be silently wrong"
             )
-        return labels.select(F.col("node").alias("node_id"), F.col("label").alias("component"))
+        return state["labels"].select(
+            F.col("node").alias("node_id"), F.col("label").alias("component")
+        )
 
 
 def _cc_oracle(n_rounds: int) -> str:
@@ -1444,14 +1363,17 @@ def label_propagation(
     synchronous updates + total-ordered tie-break (count DESC, label
     ASC via max_by on a (cnt, -label) struct)."""
     spark = sym_edges.sparkSession
-    with _edge_count_hint(sym_edges, n_edges) as (sym_edges, n_edges), \
-            _no_aqe(spark), _loop_shuffle_partitions(spark, n_edges):
+    with _graph_loop(spark, n_edges, sym_edges, aqe=False) as (sym_edges, n_edges):
         edges_p = sym_edges.repartition("src").persist()
-        labels = nodes.select("node", F.col("node").alias("label")).localCheckpoint()
-        for _ in range(n_rounds):
+        labels = nodes.select("node", F.col("node").alias("label")).transform(
+            loop_checkpoint
+        )
+
+        def vote(s, _):
+            lb = s["labels"]
             votes = (
-                labels.hint("shuffle_hash")
-                .join(edges_p, labels.node == edges_p.src)
+                lb.hint("shuffle_hash")
+                .join(edges_p, lb.node == edges_p.src)
                 .groupBy(F.col("dst").alias("node"), "label")
                 .agg(F.count("*").alias("cnt"))
             )
@@ -1460,22 +1382,17 @@ def label_propagation(
                     "label", F.struct(F.col("cnt"), (-F.col("label")).alias("nl"))
                 ).alias("new_label")
             )
-            # LAZY checkpoint (r14): fixed round count — no mid-loop
-            # driver action needed; each round's labels still cache on
-            # first compute (both references — next round's vote push
-            # and its own left join — read one materialization), and
-            # the single count below runs all n_rounds in ONE job
-            # instead of one checkpoint job per round.
-            labels = (
-                labels.join(picked.hint("shuffle_hash"), "node", "left")
+            yield "labels", (
+                lb.join(picked.hint("shuffle_hash"), "node", "left")
                 .select(
                     "node",
                     F.coalesce(F.col("new_label"), F.col("label")).alias("label"),
                 )
-                .transform(lambda d: loop_checkpoint(d, eager=False))
             )
-        # materialize the chain while the edge cache is alive
-        labels.count()
+
+        # fixed round count: no mid-loop action; the chain materializes
+        # in _iterate's one count while the edge cache is alive
+        labels = _iterate({"labels": labels}, vote, n_rounds)[0]["labels"]
         edges_p.unpersist()
         return labels.select(
             F.col("node").alias("node_id"), F.col("label").alias("community")
@@ -1852,7 +1769,7 @@ def _kcore_round(
     survivors via two semi joins (broadcast-hinted only when the byte
     gate says the survivor set fits), recompute degrees, keep nodes
     with deg >= k. Split out so the plan shape is testable — k_core's
-    per-round localCheckpoint erases the lineage the plan test needs."""
+    per-round checkpoint erases the lineage the plan test needs."""
     alive = edges_p.join(
         survivors.hint("broadcast") if do_bcast else survivors,
         edges_p.src == survivors.node,
@@ -1880,8 +1797,8 @@ def k_core(
 
     ``sym_edges`` must be symmetrized (src, dst). Each round is two
     bounded shuffles (a semi join filtering edges to survivors and a
-    degree groupBy), both keyed on node ids; survivors localCheckpoint
-    per round so plans stay flat. Rounds are bounded by the
+    degree groupBy), both keyed on node ids; survivors are
+    checkpointed per round so plans stay flat. Rounds are bounded by the
     degeneracy-peeling depth (tiny in practice — degree distributions
     collapse geometrically), with max_iters as the safety rail.
     Returns (node_id,). Raises instead of returning a partial answer
@@ -1890,35 +1807,31 @@ def k_core(
     """
     spark = sym_edges.sparkSession
     edges_p = sym_edges.persist()
-    survivors = (
-        edges_p.select(F.col("src").alias("node")).distinct().localCheckpoint()
-    )
-    n_prev = survivors.count()
+    survivors = loop_checkpoint(edges_p.select(F.col("src").alias("node")).distinct())
     # Broadcast the survivor set only while its estimated BYTES fit the
     # session's autoBroadcastJoinThreshold (one long + row overhead per
     # survivor) — a row-count gate ages badly if the schema widens, and
     # the byte gate keeps the decision consistent with what AQE would
     # pick for a statistics-visible relation.
     bcast_limit = _broadcast_threshold_bytes(spark)
-    converged = False
-    rounds = 0
-    for _ in range(max_iters):
-        rounds += 1
-        do_bcast = _fits_broadcast(n_prev, bcast_limit)
-        # lazy checkpoint: the survivor count (needed anyway for the
-        # fixpoint test) is the job that materializes the round
-        nxt = _kcore_round(edges_p, survivors, k, do_bcast).localCheckpoint(
-            eager=False
+    n_prev = survivors.count()
+
+    def peel(s, _):
+        yield "survivors", _kcore_round(
+            edges_p, s["survivors"], k, _fits_broadcast(n_prev, bcast_limit)
         )
-        n_next = nxt.count()
-        if n_next == n_prev:
-            converged = True
-            survivors = nxt
-            break
-        survivors, n_prev = nxt, n_next
-        if n_next == 0:
-            converged = True
-            break
+
+    def fixpoint(s, _) -> bool:
+        # the survivor count is the job that materializes the round
+        nonlocal n_prev
+        n_next = s["survivors"].count()
+        stable = n_next in (n_prev, 0)
+        n_prev = n_next
+        return stable
+
+    state, rounds, converged = _iterate(
+        {"survivors": survivors}, peel, max_iters, done=fixpoint
+    )
     edges_p.unpersist()
     if stats is not None:
         stats["rounds"] = rounds
@@ -1926,7 +1839,7 @@ def k_core(
         raise RuntimeError(
             f"k_core({k}) did not reach a fixpoint in {max_iters} rounds"
         )
-    return survivors.select(F.col("node").alias("node_id"))
+    return state["survivors"].select(F.col("node").alias("node_id"))
 
 
 def _kcore_oracle(k: int, n_rounds: int) -> str:
@@ -1982,7 +1895,7 @@ def q_graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     from neo_olap_spark.graph import edge_count_estimate
 
     sym = symmetrize(edges(spark, sf_dir))
-    with _loop_shuffle_partitions(spark, edge_count_estimate(spark, sf_dir)):
+    with _graph_loop(spark, edge_count_estimate(spark, sf_dir), aqe=True):
         return k_core(sym, k=2)
 
 
@@ -2339,7 +2252,6 @@ def sssp(
     n_edges: int | None = None,
     stats: dict | None = None,
     union_merge: bool | None = None,
-    hops_per_round: int = 2,
 ) -> DataFrame:
     """Distributed multi-source Bellman-Ford with frontier relaxation,
     keyed on (source, node): only entries whose distance IMPROVED last
@@ -2374,46 +2286,32 @@ def sssp(
     strategies are exact — the choice is purely a shuffle-volume
     trade, pinned equivalent in tests/test_graph_algos.py.
 
+    Convergence is checked every HOPS_PER_CHECK relaxations: each
+    hop's lazy checkpoint makes the one check job compute every hop's
+    state exactly once. Convergence after the LAST hop of a check is
+    exact regardless of earlier hops: hop k+1 pushes from exactly hop
+    k's improved set. The ceiling stays a count of RELAXATIONS (the
+    last one forces a check, so the raise contract is unchanged), and
+    ``stats["rounds"]`` includes up to HOPS_PER_CHECK-1 idempotent
+    relaxations past the fixpoint. ≥95% of wall is the per-relaxation
+    stage execution (exchange + aggregate + checkpoint of the state),
+    not driver scheduling.
 
-    ``hops_per_round`` chains that many relaxations per convergence
-    count (VERDICT r6 item 3): each hop ends in a LAZY localCheckpoint,
-    so when the single count job materializes the chain every hop's
-    state computes exactly once (both downstream references — next
-    hop's merge input and its frontier — read the same cached RDD; the
-    identical mechanism the one-hop loop already relies on across
-    rounds). Same total edge work, half the driver actions/jobs.
-    Convergence after the LAST hop of a round is exact regardless of
-    earlier hops' improvements: hop k+1 pushes from exactly hop k's
-    improved set, so an empty improvement set means no further
-    relaxation anywhere can improve. The round CEILING stays a count
-    of RELAXATIONS (max_rounds — the boundary forces a count, so the
-    raise contract is unchanged), and the state trajectory is
-    bit-identical to one-hop: only the convergence-check cadence
-    changes. Same-session interleaved A/B at sf0.1 (tools/sssp_ab.py,
-    3 reps, VERDICT r6 item 3): one-hop 8.07 s median / two-hop
-    7.78 s; crossed with the merge gate, union×2hop 7.55 s (best 7.07)
-    vs union×1hop 8.21 s — a consistent ~0.5-0.7 s win locally, and
-    HALF the driver actions/job barriers, which is what matters on a
-    real cluster. Four-hop measured no better (7%-slower median with a
-    20 s outlier — deeper lazy chains risk cache-pressure recompute),
-    so 2 is the default. The same A/B is the measured re-baseline of
-    the r5 "≤ ~6 s" ask: ≥95% of wall is the per-relaxation stage
-    execution (~0.30 s × 26 relaxations — exchange + aggregate +
-    checkpoint of the full state), NOT driver scheduling, so at
-    local[32] the floor for this 26-deep weighted graph is ~7.5 s."""
+    r14 note: running multi-source batches as CONCURRENT
+    single-source loops was A/B'd and REJECTED: each relaxation's
+    dominant cost is streaming the full edge cache through the
+    shuffle_hash probe, which the batched loop amortizes across all
+    sources — k concurrent loops paid it k times (closeness warm
+    13.8 → 18.4 s, jobs 29 → 71)."""
     spark = wsym.sparkSession
-    with _edge_count_hint(wsym, n_edges) as (wsym, n_edges), \
-            _no_aqe(spark), _loop_shuffle_partitions(spark, n_edges):
+    with _graph_loop(spark, n_edges, wsym, aqe=False) as (wsym, n_edges):
         if union_merge is None:
             union_merge = (
                 len(sources) * n_edges <= SSSP_UNION_MERGE_MAX_UNITS
             )
         edges_p = wsym.repartition("src").persist()
         try:
-            return _sssp_loop(
-                edges_p, sources, max_rounds, union_merge,
-                hops_per_round, stats,
-            )
+            return _sssp_loop(edges_p, sources, max_rounds, union_merge, stats)
         finally:
             edges_p.unpersist()
 
@@ -2423,32 +2321,24 @@ def _sssp_loop(
     sources: list[int],
     max_rounds: int,
     union_merge: bool,
-    hops_per_round: int,
     stats: dict | None,
 ) -> DataFrame:
     """The sssp() relaxation loop over an already-persisted,
-    src-partitioned edge frame. Session configs (AQE off, loop
-    shuffle partitions) and the edge cache lifecycle are the CALLER's
-    job; this function only builds frames and runs actions.
-
-    r14 note: an A/B'd variant ran multi-source batches as CONCURRENT
-    single-source loops (guide §2.6). REJECTED on measurement: each
-    relaxation's dominant cost is streaming the full edge cache
-    through the shuffle_hash probe (~18 MB in / ~1 s task time per
-    round at sf0.1), which the batched loop amortizes across all
-    sources — k concurrent loops paid it k times (closeness warm
-    13.8 → 18.4 s, jobs 29 → 71). The batched (source, node) loop is
-    the right shape at every scale."""
-    spark = edges_p.sparkSession
-    dist = local_rows_frame(
-        spark, [(s, s, 0) for s in sources], "source long, node long, dist long"
-    ).localCheckpoint()
-    frontier = dist
-    converged = False
-    rounds = 0
+    src-partitioned edge frame; the caller owns session settings and
+    the edge cache. State is the last relaxation's ``merged`` frame
+    (source, node, dist, old): dist and the improved frontier are
+    views of it."""
     improved = F.col("dist") < F.coalesce("old", F.lit(_SSSP_INF))
+    merged = loop_checkpoint(local_rows_frame(
+        edges_p.sparkSession,
+        [(s, s, 0, None) for s in sources],
+        "source long, node long, dist long, old long",
+    ))
 
-    def relax(dist: DataFrame, frontier: DataFrame) -> DataFrame:
+    def relax(s, _):
+        m = s["merged"]
+        frontier = m.where(improved).select("source", "node", "dist")
+        dist = m.select("source", "node", "dist")
         pushed_raw = (
             frontier.hint("shuffle_hash")
             .join(edges_p, frontier.node == edges_p.src)
@@ -2461,12 +2351,12 @@ def _sssp_loop(
         if union_merge:
             # Small state: ONE union+groupBy merge (the CC-merge
             # shape) — candidate pushes and the standing distances
-            # union into a single min aggregate; partial
-            # aggregation combines duplicates map-side and the
-            # round runs TWO exchanges. `old` (the standing
-            # distance, for the improvement test) rides along as a
-            # conditional min in the same aggregate.
-            merged = (
+            # union into a single min aggregate; partial aggregation
+            # combines duplicates map-side and the round runs TWO
+            # exchanges. `old` (the standing distance, for the
+            # improvement test) rides along as a conditional min in
+            # the same aggregate.
+            yield "merged", (
                 dist.select(
                     "source", "node",
                     F.col("dist").alias("val"),
@@ -2476,112 +2366,84 @@ def _sssp_loop(
                 .groupBy("source", "node")
                 .agg(
                     F.min("val").alias("dist"),
-                    F.min(
-                        F.when(F.col("is_old"), F.col("val"))
-                    ).alias("old"),
+                    F.min(F.when(F.col("is_old"), F.col("val"))).alias("old"),
                 )
-                .transform(lambda d: loop_checkpoint(d, eager=False))
             )
-        else:
-            # Large state: aggregate only the (frontier-sized)
-            # pushes, then FULL-OUTER against the standing
-            # distances — dist is already hash-partitioned on
-            # (source, node) from last round's merge (preserved
-            # through the LogicalRDD checkpoint), so only the
-            # pushes shuffle; the state never re-moves. This is
-            # what keeps k-source closeness linear at 10×.
-            pushed = pushed_raw.groupBy("source", "node").agg(
-                F.min("val").alias("cand")
+            return
+        # Large state: aggregate only the (frontier-sized) pushes,
+        # then FULL-OUTER against the standing distances — dist is
+        # already hash-partitioned on (source, node) from last
+        # round's merge (preserved through the LogicalRDD
+        # checkpoint), so only the pushes shuffle; the state never
+        # re-moves. This is what keeps k-source closeness linear at
+        # 10×.
+        pushed = pushed_raw.groupBy("source", "node").agg(
+            F.min("val").alias("cand")
+        )
+        yield "merged", (
+            dist.withColumnRenamed("dist", "old")
+            .join(pushed, ["source", "node"], "full_outer")
+            .select(
+                "source",
+                "node",
+                F.least(
+                    F.coalesce("old", F.lit(_SSSP_INF)),
+                    F.coalesce("cand", F.lit(_SSSP_INF)),
+                ).alias("dist"),
+                "old",
             )
-            merged = (
-                dist.withColumnRenamed("dist", "old")
-                .join(pushed, ["source", "node"], "full_outer")
-                .select(
-                    "source",
-                    "node",
-                    F.least(
-                        F.coalesce("old", F.lit(_SSSP_INF)),
-                        F.coalesce("cand", F.lit(_SSSP_INF)),
-                    ).alias("dist"),
-                    "old",
-                )
-                .transform(lambda d: loop_checkpoint(d, eager=False))
-            )
-        return merged
+        )
 
     frozen: list[DataFrame] = []
     active: set[int] = set(sources)
-    while rounds < max_rounds:
-        # Chain hops_per_round relaxations LAZILY, then run ONE
-        # count job: the lazy localCheckpoint at each hop makes the
-        # job materialize every hop's state exactly once (VERDICT
-        # r5 item 4 fused materialize+converge; r6 item 3 fuses
-        # multiple hops into that one action).
-        merged = relax(dist, frontier)
-        rounds += 1
-        while rounds < max_rounds and (rounds % hops_per_round) != 0:
-            frontier = merged.where(improved).select("source", "node", "dist")
-            dist = merged.select("source", "node", "dist")
-            merged = relax(dist, frontier)
-            rounds += 1
+
+    def drop_finished(s, r) -> bool:
         # Per-source convergence check (VERDICT r11 item 2). The
-        # (source, node) states never interact across sources —
-        # pushes carry their source key through the join, so a
-        # source whose frontier emptied can never improve again
-        # and is FINAL. Its rows leave the live state immediately
-        # (frozen for the final union), so every later round's
-        # merge aggregate / checkpoint write touches only the
-        # still-active sources' shrinking state instead of all
-        # k × |nodes| rows. The distinct() replaces the old global
-        # count() as the materializing action: partial aggregation
-        # collapses it to ≤ k rows map-side, same one-job cadence.
+        # (source, node) states never interact across sources — pushes
+        # carry their source key through the join, so a source whose
+        # frontier emptied can never improve again and is FINAL. Its
+        # rows leave the live state immediately (frozen for the final
+        # union), so every later round's merge aggregate / checkpoint
+        # touches only the still-active sources' shrinking state. The
+        # distinct() is the materializing action: partial aggregation
+        # collapses it to ≤ k rows map-side.
+        nonlocal frozen, active
+        m = s["merged"]
         still = {
-            int(r[0])
-            for r in merged.where(improved)
-            .select("source").distinct().collect()
+            int(row[0])
+            for row in m.where(improved).select("source").distinct().collect()
         }
-        done = active - still
-        if done:
+        finished = active - still
+        if finished:
             if stats is not None:
                 stats.setdefault("source_exit_rounds", {}).update(
-                    {int(s): rounds for s in sorted(done)}
+                    {int(src): r for src in sorted(finished)}
                 )
-            done_col = F.col("source").isin([int(s) for s in done])
-            frozen.append(
-                merged.where(done_col).select("source", "node", "dist")
-            )
-            merged = merged.where(~done_col)
-            active -= done
+            done_col = F.col("source").isin([int(src) for src in finished])
+            frozen.append(m.where(done_col).select("source", "node", "dist"))
+            s["merged"] = m.where(~done_col)
+            active -= finished
             if len(frozen) >= SSSP_FROZEN_COALESCE_CAP:
-                # Bound plan depth + retained checkpoints (ADVICE
-                # r12 #2): collapse the chained frozen frames into
-                # one EAGER checkpoint so the per-round states they
-                # pinned become collectable and the final union
-                # stays shallow. Eager is load-bearing — a lazy
-                # checkpoint would keep every upstream frame
-                # referenced until the caller's action, defeating
-                # the bound.
+                # Bound plan depth + retained checkpoints (ADVICE r12
+                # #2): collapse the chained frozen frames into one
+                # EAGER checkpoint so the per-round states they pinned
+                # become collectable and the final union stays shallow.
+                # Eager is load-bearing — a lazy checkpoint would keep
+                # every upstream frame referenced until the caller's
+                # action, defeating the bound.
                 combined = frozen[0]
                 for fz in frozen[1:]:
                     combined = combined.unionByName(fz)
                 frozen = [loop_checkpoint(combined)]
                 if stats is not None:
-                    stats["frozen_coalesces"] = (
-                        stats.get("frozen_coalesces", 0) + 1
-                    )
-        frontier = merged.where(improved).select("source", "node", "dist")
-        dist = merged.select("source", "node", "dist")
-        if not active:
-            converged = True
-            break
+                    stats["frozen_coalesces"] = stats.get("frozen_coalesces", 0) + 1
+        return not active
+
+    state, rounds, converged = _iterate(
+        {"merged": merged}, relax, max_rounds,
+        check_every=HOPS_PER_CHECK, done=drop_finished,
+    )
     if stats is not None:
-        # NOTE (ADVICE r7): with hops_per_round>1, convergence on a
-        # non-boundary hop is only DETECTED at the next boundary
-        # count, so `rounds` includes up to hops_per_round-1 extra
-        # relaxations past the fixpoint (results unchanged —
-        # relaxation is idempotent there). tools/sssp_ab.py's
-        # sec-per-relaxation denominator inherits this over-count
-        # for multi-hop variants.
         stats["rounds"] = rounds
     if not converged:
         raise RuntimeError(
@@ -2589,7 +2451,7 @@ def _sssp_loop(
             "SSSP_MAX_ROUNDS; returning partial distances would be "
             "silently wrong"
         )
-    out = dist
+    out = state["merged"].select("source", "node", "dist")
     for fz in frozen:
         out = out.unionByName(fz)
     return out
@@ -2665,7 +2527,7 @@ def q_graph_sssp(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: per round ONE edge-keyed shuffle join + one
     node-keyed min — identical accounting to connected_components
     (VERDICT r2: "the 100×-scale plan"); frontier shrinkage makes
-    late rounds near-free; per-round localCheckpoint keeps step plans
+    late rounds near-free; per-round checkpoints keep step plans
     flat. Reference analog: PathFinderNodeCountingRunner's
     shortest-path queries (reference computes hop paths; this is the
     weighted generalization)."""
@@ -2756,7 +2618,7 @@ def q_graph_closeness(spark: SparkSession, sf_dir: str) -> DataFrame:
     (source, node) key multiplies state, not rounds — at 100 TB,
     sources batch in groups sized to executor memory. (r14 A/B:
     running the sources as concurrent single-source loops was tried
-    and REJECTED — see _sssp_loop's docstring — the batched loop's
+    and REJECTED — see sssp's docstring — the batched loop's
     one-edge-scan-per-round amortization wins at every tested
     volume.)"""
     srcs = [
@@ -2870,7 +2732,6 @@ def hits(
     nodes: DataFrame,
     n_iters: int = HITS_ITERS,
     n_edges: int | None = None,
-    checkpoint_raw: bool = True,
 ) -> DataFrame:
     """Reusable HITS core: fixed-iteration hubs & authorities over a
     DIRECTED (src, dst) edge list and a (node) frame, L1-normalized to
@@ -2881,39 +2742,23 @@ def hits(
     production loop; the query key is a thin wrapper over the derived
     customer→order→part graph.
 
-    ``checkpoint_raw`` (default on): each half-step's raw push
-    aggregate feeds TWO consumers — the L1 normalizer sum and the
-    state join — so without a checkpoint the edge join + aggregate
-    executes TWICE per half-step (landmine 4's double-reference rule;
-    found in round 8's plan audit: 32 edge joins per run instead of
-    16). Checkpointing the node-sized raw frame costs one extra
-    materialization and halves the edge work — same-session A/B in
-    SCALING.md; values agree within one 1e-5 output quantum either way
-    (pinned by test_hits_checkpoint_raw_agrees — the normalizer is an
-    order-dependent double sum, so exact bit-identity across two
-    independent executions is not guaranteed)."""
+    Each half-step's raw push aggregate feeds TWO consumers — the L1
+    normalizer sum and the state join — so it is checkpointed like
+    the states: without it the edge join + aggregate executes TWICE
+    per half-step (landmine 4's double-reference rule; round 8's plan
+    audit found 32 edge joins per run instead of 16)."""
     spark = directed_edges.sparkSession
-    # _edge_count_hint persists before counting (the r7 double-build
-    # class) and releases the cache in a finally even when building
-    # e_src fails (round-9 ADVICE: the previous shape pinned it)
-    with _edge_count_hint(directed_edges, n_edges) as (directed_edges, n_edges), \
-            _no_aqe(spark), _loop_shuffle_partitions(spark, n_edges):
+    with _graph_loop(spark, n_edges, directed_edges, aqe=False) as (directed_edges, n_edges):
         e_src = directed_edges.repartition("src").persist()
         try:
-            return _hits_loop(e_src, nodes, n_iters, checkpoint_raw)
+            return _hits_loop(e_src, nodes, n_iters)
         finally:
             # unpersist on ALL paths: a mid-loop failure must not pin
             # the largest cached frames for the session lifetime
-            # (self-review r9; _hits_loop unpersists its own frames)
             e_src.unpersist()
 
 
-def _hits_loop(
-    e_src: DataFrame,
-    nodes: DataFrame,
-    n_iters: int,
-    checkpoint_raw: bool,
-) -> DataFrame:
+def _hits_loop(e_src: DataFrame, nodes: DataFrame, n_iters: int) -> DataFrame:
     """The hits() iteration body, with exception-safe cache cleanup."""
     # derive the dst-partitioned copy FROM the persisted src copy:
     # the upstream edge build (a full fact shuffle) runs once,
@@ -2922,78 +2767,54 @@ def _hits_loop(
     base = nodes.repartition("node").persist()
     try:
         n_nodes = float(base.count())
-        # r14 (VERDICT r13 item 1: fewer driver actions per iteration):
-        # every per-half-step checkpoint below is LAZY. HITS runs a
-        # FIXED iteration count — no convergence check needs a driver
-        # action mid-loop — so the states materialize inside (a) the
-        # per-half-step normalizer broadcast, which executes at frame-
-        # construction time and caches that half-step's raw aggregate
-        # as a side effect, and (b) the single eager checkpoint of the
-        # OUTPUT join, which computes the remaining chain in one job.
-        # Each lazy localCheckpoint still pins its RDD (caches on
-        # first compute), so the double references — normalizer sum +
-        # state join for raws, next push + output for states — read
-        # ONE materialization each, exactly the landmine-4 accounting
-        # the old eager checkpoints enforced. Driver actions per
-        # iteration: 6 → 2 (the two unavoidable broadcast builds).
-        hub = base.select("node", F.lit(1.0).alias("hub")).localCheckpoint(
-            eager=False
+
+        def push(score: DataFrame, col: str, e: DataFrame, frm: str, to: str) -> DataFrame:
+            return (
+                score.hint("shuffle_hash")
+                .join(e, score.node == e[frm])
+                .groupBy(to)
+                .agg(F.sum(col).alias("raw"))
+                .withColumnRenamed(to, "node")
+            )
+
+        def normalize(raw: DataFrame, name: str) -> DataFrame:
+            total = raw.agg(F.sum("raw").alias("s"))
+            return (
+                base.join(raw, "node", "left")
+                .crossJoin(F.broadcast(total))
+                .select(
+                    "node",
+                    (
+                        F.coalesce("raw", F.lit(0.0))
+                        * (F.lit(n_nodes) / F.col("s"))
+                    ).alias(name),
+                )
+            )
+
+        def half_steps(s, _):
+            yield "a_raw", push(s["hub"], "hub", e_src, "src", "dst")
+            yield "auth", normalize(s["a_raw"], "auth")
+            yield "h_raw", push(s["auth"], "auth", e_dst, "dst", "src")
+            yield "hub", normalize(s["h_raw"], "hub")
+
+        # HITS runs a FIXED iteration count, so no convergence action is
+        # needed mid-loop: the states materialize inside (a) each
+        # half-step's normalizer broadcast, which executes when its
+        # lazily checkpointed frame is built and caches that half-step's
+        # raw aggregate as a side effect, and (b) _iterate's one count,
+        # which computes the rest of the chain while the e_src/e_dst/
+        # base caches are alive. The output join reads the cached
+        # states; it is checkpointed before the finally unpersists them.
+        hub = loop_checkpoint(base.select("node", F.lit(1.0).alias("hub")), eager=False)
+        state = _iterate({"hub": hub}, half_steps, n_iters)[0]
+        return loop_checkpoint(
+            state["hub"].join(state["auth"], "node").select(
+                F.col("node").alias("node_id"),
+                F.expr("FLOOR(hub * 100000 + 0.5) / 100000").alias("hub"),
+                F.expr("FLOOR(auth * 100000 + 0.5) / 100000").alias("auth"),
+            ),
+            eager=False,
         )
-        auth = None
-        for _ in range(n_iters):
-            a_raw = (
-                hub.hint("shuffle_hash")
-                .join(e_src, hub.node == e_src.src)
-                .groupBy("dst")
-                .agg(F.sum("hub").alias("raw"))
-                .withColumnRenamed("dst", "node")
-            )
-            if checkpoint_raw:
-                a_raw = a_raw.transform(lambda d: loop_checkpoint(d, eager=False))
-            sa = a_raw.agg(F.sum("raw").alias("s"))
-            auth = (
-                base.join(a_raw, "node", "left")
-                .crossJoin(F.broadcast(sa))
-                .select(
-                    "node",
-                    (
-                        F.coalesce("raw", F.lit(0.0))
-                        * (F.lit(n_nodes) / F.col("s"))
-                    ).alias("auth"),
-                )
-                .transform(lambda d: loop_checkpoint(d, eager=False))
-            )
-            h_raw = (
-                auth.hint("shuffle_hash")
-                .join(e_dst, auth.node == e_dst.dst)
-                .groupBy("src")
-                .agg(F.sum("auth").alias("raw"))
-                .withColumnRenamed("src", "node")
-            )
-            if checkpoint_raw:
-                h_raw = h_raw.transform(lambda d: loop_checkpoint(d, eager=False))
-            sh = h_raw.agg(F.sum("raw").alias("s"))
-            hub = (
-                base.join(h_raw, "node", "left")
-                .crossJoin(F.broadcast(sh))
-                .select(
-                    "node",
-                    (
-                        F.coalesce("raw", F.lit(0.0))
-                        * (F.lit(n_nodes) / F.col("s"))
-                    ).alias("hub"),
-                )
-                .transform(lambda d: loop_checkpoint(d, eager=False))
-            )
-        # EAGER output checkpoint: materializes the whole lazy chain in
-        # one job while the e_src/e_dst/base caches are still alive —
-        # the finally below would otherwise force the caller's first
-        # action to rebuild the edge shuffles from scratch
-        return hub.join(auth, "node").select(
-            F.col("node").alias("node_id"),
-            F.expr("FLOOR(hub * 100000 + 0.5) / 100000").alias("hub"),
-            F.expr("FLOOR(auth * 100000 + 0.5) / 100000").alias("auth"),
-        ).localCheckpoint()
     finally:
         e_dst.unpersist()
         base.unpersist()
@@ -3019,10 +2840,10 @@ def q_graph_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
     the RECEIVING node (dst for authorities, src for hubs — the edge
     list is persisted twice, partitioned each way, so only the
     node-sized state moves), one aggregate-sized L1 sum broadcast back
-    via a 1-row crossJoin (no per-iteration driver scalar), and an
-    eager localCheckpoint per half-step (each state is referenced
-    twice — next half-step's push + the carried output — landmine 4,
-    exactly the pagerank rule)."""
+    via a 1-row crossJoin (no per-iteration driver scalar), and a
+    lazy checkpoint per half-step (each state is referenced twice —
+    next half-step's push + the carried output — landmine 4, exactly
+    the pagerank rule)."""
     from neo_olap_spark.graph import edge_count_estimate
 
     return hits(

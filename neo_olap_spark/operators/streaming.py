@@ -365,7 +365,7 @@ def _replay_state_partitions(
     at first start, which is why this must be decided before .start()
     and why each invocation uses a fresh checkpoint generation.
 
-    Same principle as graph_algos._loop_shuffle_partitions: shuffle
+    Same principle as graph_algos._graph_loop: shuffle
     width should track data volume, not a global constant."""
     key = "spark.sql.shuffle.partitions"
     prev = spark.conf.get(key)

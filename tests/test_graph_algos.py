@@ -400,9 +400,7 @@ def test_sssp_per_source_early_exit(spark):
     stats: dict = {}
     multi = {
         (r.source, r.node): r.dist
-        for r in sssp(
-            sym, [0, 100], max_rounds=20, hops_per_round=1, stats=stats
-        ).collect()
+        for r in sssp(sym, [0, 100], max_rounds=20, stats=stats).collect()
     }
     exits = stats["source_exit_rounds"]
     assert set(exits) == {0, 100}
@@ -425,39 +423,42 @@ def test_sssp_frozen_coalesce_bounds_plan_depth(spark, monkeypatch):
     at toy scale."""
     import neo_olap_spark.operators.graph_algos as ga
 
-    # six chains of depths 1..6 rooted at 100, 200, ..., 600: source
-    # s exits at its own depth, giving six distinct exit rounds
+    # six chains of depths 1, 3, ..., 11 rooted at 100, 200, ..., 600:
+    # source s goes quiet at relaxation depth+1, and the depths are
+    # spread HOPS_PER_CHECK apart, so each exit lands on its own check
     edges = []
-    roots = [100 * (d + 1) for d in range(6)]
-    for d, root in enumerate(roots, start=1):
+    depths = [1 + ga.HOPS_PER_CHECK * i for i in range(6)]
+    roots = [100 * (i + 1) for i in range(6)]
+    for d, root in zip(depths, roots):
         edges += [(root + i, root + i + 1, 1) for i in range(d)]
     sym_edges = spark.createDataFrame(edges, "src long, dst long, w long")
     sym = sym_edges.unionAll(
         sym_edges.selectExpr("dst as src", "src as dst", "w")
     )
+    stats: dict = {}
     baseline = {
         (r.source, r.node): r.dist
-        for r in ga.sssp(sym, roots, max_rounds=20, hops_per_round=1).collect()
+        for r in ga.sssp(sym, roots, max_rounds=20, stats=stats).collect()
     }
+    assert len(set(stats["source_exit_rounds"].values())) == 6, stats
     monkeypatch.setattr(ga, "SSSP_FROZEN_COALESCE_CAP", 2)
-    stats: dict = {}
+    stats = {}
     coalesced = {
         (r.source, r.node): r.dist
-        for r in ga.sssp(
-            sym, roots, max_rounds=20, hops_per_round=1, stats=stats
-        ).collect()
+        for r in ga.sssp(sym, roots, max_rounds=20, stats=stats).collect()
     }
     assert stats.get("frozen_coalesces", 0) >= 2, stats
     assert coalesced == baseline
 
 
-def test_reliable_loop_checkpoint_mode_matches_default(spark, tmp_path):
+def test_reliable_loop_checkpoint_mode_matches_default(spark, tmp_path, monkeypatch):
     """r14 (VERDICT r13 item 7): with
     spark.neo_olap.reliableLoopCheckpoint=true every loop-state
     checkpoint goes through a reliable checkpoint() into the
     configured dir instead of a non-replicated localCheckpoint —
-    values must be identical, and the checkpoint dir must actually
-    receive files (proving the reliable path ran)."""
+    values must be identical for every loop family, no loop may call
+    localCheckpoint directly (it raises here while reliable mode is
+    on), and the checkpoint dir must actually receive files."""
     import os
 
     from neo_olap_spark.functions import (
@@ -465,74 +466,64 @@ def test_reliable_loop_checkpoint_mode_matches_default(spark, tmp_path):
         RELIABLE_CKPT_DIR_CONF,
     )
     from neo_olap_spark.operators.graph_algos import (
+        bfs_distances,
         connected_components,
+        hits,
+        k_core,
+        label_propagation,
+        pagerank,
         sssp,
     )
 
-    chain = spark.createDataFrame(
-        [(i, i + 1, 1) for i in range(6)], "src long, dst long, w long"
+    # a 7-node chain bridged to a triangle: the triangle is the 2-core
+    directed = spark.createDataFrame(
+        [(i, i + 1, 1) for i in range(7)] + [(7, 8, 1), (8, 9, 1), (9, 7, 1)],
+        "src long, dst long, w long",
     )
-    sym = chain.unionAll(chain.selectExpr("dst as src", "src as dst", "w"))
-    nodes = spark.createDataFrame([(i,) for i in range(7)], "node long")
+    sym = directed.unionAll(directed.selectExpr("dst as src", "src as dst", "w"))
+    sym2 = sym.select("src", "dst")
+    nodes = spark.createDataFrame([(i,) for i in range(10)], "node long")
+    sources = spark.createDataFrame([(0, 0), (1, 9)], "tag long, node long")
 
-    base_sssp = {
-        (r.source, r.node): r.dist
-        for r in sssp(sym, [0], max_rounds=12).collect()
-    }
-    base_cc = {
-        r.node_id: r.component
-        for r in connected_components(sym.select("src", "dst"), nodes).collect()
-    }
+    def run_all():
+        return {
+            "sssp": sorted(map(tuple, sssp(sym, [0], max_rounds=12).collect())),
+            "cc": sorted(map(tuple, connected_components(sym2, nodes).collect())),
+            "bfs": sorted(map(tuple, bfs_distances(
+                sym2, sources, max_depth=10, count_paths=True).collect())),
+            "pagerank": sorted(map(tuple, pagerank(sym2, nodes, n_iters=4).collect())),
+            "lpa": sorted(map(tuple, label_propagation(sym2, nodes, n_rounds=3).collect())),
+            "kcore": sorted(map(tuple, k_core(sym2, 2).collect())),
+            "hits": sorted(map(tuple, hits(
+                directed.select("src", "dst"), nodes, n_iters=3).collect())),
+        }
+
+    base = run_all()
+    assert base["kcore"] == [(7,), (8,), (9,)]
     ckpt_dir = str(tmp_path / "reliable_ckpt")
+
+    def no_local_checkpoint(*_a, **_k):
+        raise AssertionError("loop state bypassed loop_checkpoint")
+
     spark.conf.set(RELIABLE_CKPT_CONF, "true")
     spark.conf.set(RELIABLE_CKPT_DIR_CONF, ckpt_dir)
     try:
-        rel_sssp = {
-            (r.source, r.node): r.dist
-            for r in sssp(sym, [0], max_rounds=12).collect()
-        }
-        rel_cc = {
-            r.node_id: r.component
-            for r in connected_components(
-                sym.select("src", "dst"), nodes
-            ).collect()
-        }
+        with monkeypatch.context() as m:
+            m.setattr(type(sym), "localCheckpoint", no_local_checkpoint)
+            reliable = run_all()
     finally:
         spark.conf.set(RELIABLE_CKPT_CONF, "false")
-    assert rel_sssp == base_sssp
-    assert rel_cc == base_cc
+    assert reliable == base
     # the reliable path must have written checkpoint files
     found = any(files for _, _, files in os.walk(ckpt_dir))
     assert found, f"no checkpoint files under {ckpt_dir}"
 
 
-def test_sssp_hops_per_round_agree(spark, sf_dir):
-    """hops_per_round changes only the convergence-check cadence (how
-    many lazily-checkpointed relaxations share one count job), never
-    the state trajectory: distances must be identical for 1, 2, and 3
-    hops per round, including an odd hop count that exercises the
-    max_rounds boundary count."""
-    from neo_olap_spark.operators.graph_algos import _weighted_sym_edges, sssp
-    from neo_olap_spark.tables import load
-
-    wsym = _weighted_sym_edges(spark, sf_dir).localCheckpoint()
-    src = [
-        int(
-            load(spark, sf_dir, "customer").agg(F.min("c_custkey")).collect()[0][0]
-        )
-    ]
-    got = [
-        {(r.source, r.node): r.dist for r in sssp(wsym, src, hops_per_round=h).collect()}
-        for h in (1, 2, 3)
-    ]
-    assert got[0] == got[1] == got[2]
-
-
 def test_sssp_two_hop_raises_when_ceiling_too_low(spark):
-    """The raise contract holds under multi-hop rounds: the ceiling is
-    a RELAXATION count, and the boundary forces a convergence check,
-    so a too-short ceiling raises exactly as with one-hop — even when
-    max_rounds is odd and not a multiple of hops_per_round."""
+    """The raise contract holds under multi-hop checks: the ceiling is
+    a RELAXATION count, and the last relaxation forces a convergence
+    check, so a too-short ceiling raises even when max_rounds is odd
+    and not a multiple of HOPS_PER_CHECK."""
     import pytest as _pytest
 
     from neo_olap_spark.operators.graph_algos import sssp
@@ -542,7 +533,7 @@ def test_sssp_two_hop_raises_when_ceiling_too_low(spark):
     )
     sym = chain.unionAll(chain.selectExpr("dst as src", "src as dst", "w"))
     with _pytest.raises(RuntimeError, match="did not converge"):
-        sssp(sym, [0], max_rounds=3, hops_per_round=2)
+        sssp(sym, [0], max_rounds=3)
 
 
 def test_hits_role_separation(spark, sf_dir):
@@ -604,53 +595,29 @@ def test_hits_planted_numpy_pinned(spark):
         assert abs(got[node][1] - a) <= 1e-5, (node, got[node])
 
 
-def test_hits_checkpoint_raw_agrees(spark, sf_dir):
-    """The raw-push checkpoint (round-8 plan-audit fix: a_raw/h_raw
-    feed two consumers, so the un-checkpointed shape executes every
-    edge join twice) must be a pure execution-strategy change.
-    Compared within ONE 1e-5 output quantum, not exactly: the L1
-    normalizer is an order-dependent double sum across two independent
-    executions, so a score within an ulp of a quantizer boundary can
-    legitimately flip its last digit between runs (the
-    test_hits_planted_numpy_pinned tolerance rationale)."""
-    from neo_olap_spark.graph import edge_count_estimate
-    from neo_olap_spark.operators.graph_algos import all_nodes, edges, hits
-
-    de = edges(spark, sf_dir)
-    nodes = all_nodes(spark, sf_dir)
-    n_edges = edge_count_estimate(spark, sf_dir)
-    a = {
-        r.node_id: (r.hub, r.auth)
-        for r in hits(de, nodes, n_iters=3, n_edges=n_edges,
-                      checkpoint_raw=True).collect()
-    }
-    b = {
-        r.node_id: (r.hub, r.auth)
-        for r in hits(de, nodes, n_iters=3, n_edges=n_edges,
-                      checkpoint_raw=False).collect()
-    }
-    assert a.keys() == b.keys()
-    for node in a:
-        assert abs(a[node][0] - b[node][0]) <= 1e-5, (node, a[node], b[node])
-        assert abs(a[node][1] - b[node][1]) <= 1e-5, (node, a[node], b[node])
-
-
 def test_edge_count_hint_releases_cache_on_failure(spark):
     """The n_edges=None fallback must unpersist its edge cache even
     when the loop body raises (round-9 ADVICE: the old hits() shape
-    pinned the cache for the session on a pre-loop failure)."""
+    pinned the cache for the session on a pre-loop failure), and the
+    loop's session settings must be restored on that path too."""
     import pytest
 
-    from neo_olap_spark.operators.graph_algos import _edge_count_hint
+    from neo_olap_spark.operators.graph_algos import _graph_loop
 
+    aqe = "spark.sql.adaptive.enabled"
+    before = spark.conf.get(aqe)
     df = spark.range(100).selectExpr("id AS src", "id + 1 AS dst")
     with pytest.raises(RuntimeError, match="boom"):
-        with _edge_count_hint(df, None) as (cached, n):
+        with _graph_loop(spark, None, df, aqe=False) as (cached, n):
             assert n == 100
             assert cached.storageLevel.useMemory  # persisted for reuse
+            assert spark.conf.get(aqe) == "false"
             raise RuntimeError("boom")
     assert not cached.storageLevel.useMemory  # released on the error path
-    # the n_edges-provided path must not persist anything
-    with _edge_count_hint(df, 42) as (same, n):
+    assert spark.conf.get(aqe) == before
+    # the n_edges-provided path must not persist anything, and
+    # aqe=True leaves the session's setting alone
+    with _graph_loop(spark, 42, df, aqe=True) as (same, n):
         assert same is df and n == 42
         assert not df.storageLevel.useMemory
+        assert spark.conf.get(aqe) == before
