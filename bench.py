@@ -207,344 +207,315 @@ def _warm_python_workers(spark, cpus: int) -> None:
     )
 
 
-HEADLINE = [
-    "q_scan_lineitem",
-    "q_agg_groupby",
-    "q_agg_distinct",
-    "q_join_inner",
-    "q_join_outer",
-    "q_join_asof",
-    "q_join_range_binned",
-    "q_two_hop",
-    "q_window_rank",
-    "q_window_running_sum",
-    "q_degree",
-    "q_topn",
-    "q_topk_per_group",
-    "q_star_join",
-    "q_pivot",
-    "q_time_rollup",
-    "q_agg_salted",
-    "q_udf_pandas",
-    "q_dedup_exact",
-    "q_dedup_near",
-    "q_sim_search",
-    "q_dedup_embed",
-    "q_text_tokens",
-    "q_text_tfidf",
-    "q_stream_tumbling",
-    "q_shortest_path_len",
-    "q_random_walk_counts",
-    "q_pagerank",
-    "q_connected_components",
-]
-
-# Second-wave set: keys added in round 2+ get their own total so the
-# frozen HEADLINE list stays comparable round over round (r1 == r2 ==
-# r3 key-for-key) while new operators still get perf tracking.
-HEADLINE2 = [
-    "q_sessionize",
-    "q_time_gap_fill",
-    "q_triangle_count",
-    "q_graph_clustering",
-    "q_text_bigram_lm",
-    "q_text_decontaminate",
-    "q_funnel",
-    "q_join_asof_nearest",
-    "q_graph_kcore",
-    "q_betweenness_sample",
-    "q_grouping_sets",
-    "q_pack_sequences",
-    # round-3 third-wave keys
-    "q_dq_audit",
-    "q_skew_profile",
-    "q_dedup_incremental",
-    "q_text_entropy",
-    "q_zorder_layout",
-    "q_text_chunk",
-    "q_embed_pca",
-    "q_text_keywords",
-    "q_snapshot_diff",
-    "q_window_distinct_running",
-    "q_agg_histogram_eqdepth",
-    "q_multimodal_motion",
-    "q_time_ewma",
-    "q_graph_sssp",
-]
-
-
-# Round-4 wave: keys added in round 4 (same frozen-list protocol —
-# HEADLINE/HEADLINE2 stay key-for-key comparable with earlier rounds).
-HEADLINE3 = [
-    "q_udf_udtf",
-    "q_time_ohlc",
-    "q_privacy_mask",
-    "q_sink_partitioned",
-    "q_stream_join",
-    "q_schema_evolution",
-    "q_incremental_join_view",
-    "q_multimodal_phash",
-    "q_stream_ohlc",
-]
-
-
-# Round-5 wave: keys registered or re-shaped in round 5 (frozen-list
-# protocol — earlier waves stay key-for-key comparable; q_embed_pca
-# stays in HEADLINE2 under its new verdict shape with a NEXT.md note).
-HEADLINE4 = [
-    "q_stream_transform_state",
-    "q_sim_ann_ivf",
-    "q_sim_ann_lsh",
-    "q_multimodal_resize",
-    "q_multimodal_frames",
-    "q_multimodal_audio",
-    "q_multimodal_audio_resample",
-]
-
-
-# Round-6 wave: keys registered in round 6 (frozen-list protocol).
-HEADLINE5 = [
-    "q_sample_bernoulli",
-    "q_window_rolling_median",
-    "q_text_postings",
-    "q_pipeline_dataset_card",
-    "q_agg_winsorize",
-    "q_scd2_join",
-    "q_multimodal_scenes",
-]
-
-
-# Round-7 wave: keys registered or re-shaped in round 7 (frozen-list
-# protocol). q_stream_join_outer appears here for the first time —
-# it was rows-only (never benched) through round 6 and now runs the
-# sentinel-flush replay, so there is no earlier number to compare.
-HEADLINE6 = [
-    "q_stream_join_outer",
-    "q_sample_verdict",
-    "q_sample_stratified_verdict",
-    "q_text_containment",
-    "q_embed_knn_graph",
-    "q_stream_cdc_apply",
-    "q_pagerank_personalized",
-    "q_anomaly_mad",
-    "q_agg_skew_kurtosis",
-    "q_graph_hits",
-    "q_agg_bitmap_distinct",
-    "q_quality_psi",
-]
-
-
-# Round-8 wave: keys registered in round 8 (frozen-list protocol).
-HEADLINE7 = [
-    "q_quality_ks",
-    "q_agg_corr_matrix",
-    "q_scalar_variant",
-    "q_events_attribution",
-    "q_agg_mutual_info",
-    "q_stream_dedup_state",
-]
-
-# Round-9 additions (frozen-list protocol: earlier waves untouched).
-HEADLINE8 = [
-    "q_join_interval_overlap",
-    "q_events_sequence_match",
-    "q_quality_benford",
-    "q_layout_compaction",
-    "q_text_readability",
-    "q_agg_bloom_filter",
-    "q_agg_regression",
-    "q_agg_gini",
-    "q_graph_assortativity",
-    "q_agg_pareto",
-]
-
-
-# Round-10 additions (frozen-list protocol: earlier waves untouched).
-HEADLINE9 = [
-    "q_text_bm25",
-    "q_scalar_variant_store",
-    "q_window_cume",
-    "q_privacy_ldiversity",
-    "q_feature_hashing",
-    "q_sql_recursive",
-    "q_text_collocations",
-    "q_sim_centroid_assign",
-    "q_sql_pipe",
-    "q_sim_outliers",
-    "q_sim_kmeans_update",
-    "q_time_seasonal",
-    "q_quality_freshness",
-    "q_anomaly_cusum",
-    "q_events_rfm",
-    "q_basket_lift",
-    "q_privacy_tcloseness",
-    "q_time_acf",
-    "q_text_zipf",
-    "q_feature_woe",
-    "q_quality_abtest",
-    "q_agg_hhi",
-    "q_sim_silhouette",
-    "q_join_dpp",
-    "q_sql_lateral",
-    "q_events_funnel_time",
-    "q_events_journeys",
-    "q_mix_temperature",
-    "q_set_ops_all",
-    "q_agg_spearman",
-    "q_profile_entropy",
-]
-
-
-# Round-11 BACKFILL wave (VERDICT r10 item 4): not new keys — the
-# machinery-heaviest keys that had NEVER appeared in any bench wave
-# (115 of 274 as of r10), so a perf regression on them would go
-# unnoticed. Composition: the full "What's missing #2" list from
-# VERDICT r10, then the remaining never-benched keys that build a
-# join/window/loop/stream, dedup-and-graph-first. Frozen-list
-# protocol applies from here on: earlier waves untouched, this wave
-# stays key-for-key comparable in r12+.
-HEADLINE10 = [
-    "q_dedup_ngram",
-    "q_dedup_near_clusters",
-    "q_dedup_simhash",
-    "q_dedup_clusters",
-    "q_graph_lpa",
-    "q_graph_closeness",
-    "q_graph_modularity",
-    "q_graph_jaccard",
-    "q_graph_degree_hist",
-    "q_pipeline_pretrain",
-    "q_pipeline_filter",
-    "q_pipeline_split",
-    "q_merge_upsert",
-    "q_scd2_build",
-    "q_scd2_asof",
-    "q_feature_target_enc",
-    "q_cohort_retention",
-    "q_events_transitions",
-    "q_stream_dedup",
-    "q_stream_late",
-    "q_stream_sliding",
-    "q_stream_session",
-    "q_stream_enrich",
-    "q_stream_stateful",
-    "q_stream_quality",
-    "q_multimodal_dedup",
-    "q_multimodal_decode",
-    "q_udf_grouped_ols",
-    "q_join_salted",
-    "q_join_bucketed",
-    "q_vocab_build",
-    "q_text_winnow",
-]
-
-
-# Round-11 COMPLETION wave: the remaining 83 never-benched keys —
-# with HEADLINE10 this takes bench coverage to 274/274, so every
-# registered operator has a recorded cold+warm number and no perf
-# regression anywhere can go unnoticed. Mostly scalars / windows /
-# single-aggregates plus the source readers, samplers and subqueries;
-# one-shot probe total 141 s cold at sf0.1 (q_time_interpolate 38 s
-# is the only heavy key). The two rows-only sampling keys are
-# included for PERF records; their correctness evidence lives in the
-# driver-green *_verdict twins (HEADLINE6). Frozen-list protocol
-# applies from here on.
-HEADLINE11 = [
-    "q_agg_argmax",
-    "q_agg_bool",
-    "q_agg_collect_sorted",
-    "q_agg_cube",
-    "q_agg_histogram",
-    "q_agg_median",
-    "q_agg_mode",
-    "q_agg_percentile_exact",
-    "q_agg_stats",
-    "q_anomaly_zscore",
-    "q_events_json",
-    "q_profile_stats",
-    "q_sql_params",
-    "q_time_calendar",
-    "q_time_downsample",
-    "q_unpivot",
-    "q_window_range_frame",
-    "q_agg_approx_quantile",
-    "q_agg_hll",
-    "q_agg_hll_union",
-    "q_agg_heavy_hitters",
-    "q_time_interpolate",
-    "q_window_streak",
-    "q_agg_countmin",
-    "q_agg_freq_approx",
-    "q_window_rolling_corr",
-    "q_agg_weighted_median",
-    "q_events_active_users",
-    "q_source_csv",
-    "q_source_json",
-    "q_source_orc",
-    "q_mix_sample",
-    "q_embed_quantize",
-    "q_embed_stats",
-    "q_text_quality",
-    "q_text_langid",
-    "q_text_fingerprint",
-    "q_text_pii",
-    "q_text_repetition",
-    "q_text_levenshtein",
-    "q_text_ngram_stats",
-    "q_text_encode",
-    "q_multimodal_meta",
-    "q_join_cardinality",
-    "q_privacy_kanon",
-    "q_privacy_erase",
-    "q_time_backfill_gaps",
-    "q_sink_roundtrip",
-    "q_project",
-    "q_filter_range",
-    "q_filter_disjunctive",
-    "q_join_anti",
-    "q_semi_join_neighbors",
-    "q_join_range",
-    "q_agg_sum",
-    "q_agg_rollup",
-    "q_window_lag",
-    "q_window_ntile",
-    "q_window_first_last",
-    "q_sort",
-    "q_union",
-    "q_set_ops",
-    "q_sample",
-    "q_sample_stratified",
-    "q_sample_hash",
-    "q_window_ratio",
-    "q_sample_exact_stratified",
-    "q_join_null_safe",
-    "q_scalar_string",
-    "q_scalar_date",
-    "q_scalar_math",
-    "q_scalar_array",
-    "q_scalar_map",
-    "q_scalar_json",
-    "q_scalar_bitwise",
-    "q_scalar_posexplode",
-    "q_scalar_struct",
-    "q_scalar_cond",
-    "q_scalar_url",
-    "q_scalar_trycast",
-    "q_subquery_scalar",
-    "q_subquery_correlated",
-    "q_incremental_agg",
-]
-
-
-# Full TPC-H 22 (schema-adapted; tpch.py + analytics.py): reported as
-# its own total — the one number warehouse engines are compared by.
-TPCH = [
-    "q_sql_tpch_q1", "q_sql_tpch_q2", "q_sql_surface", "q_sql_tpch_q4",
-    "q_join_multiway", "q_sql_tpch_q6", "q_sql_tpch_q7", "q_sql_tpch_q8",
-    "q_sql_tpch_q9", "q_sql_tpch_q10", "q_sql_tpch_q11", "q_sql_tpch_q12",
-    "q_sql_tpch_q13", "q_sql_tpch_q14", "q_sql_tpch_q15", "q_sql_tpch_q16",
-    "q_sql_tpch_q17", "q_sql_tpch_q18", "q_sql_tpch_q19", "q_sql_tpch_q20",
-    "q_sql_tpch_q21", "q_sql_tpch_q22",
+# Every bench wave in run order: (name, keys). Frozen-list protocol:
+# a wave's keys never change once it has been benched, so each wave's
+# totals stay key-for-key comparable round over round; new keys get a
+# new wave. Every registry key is in exactly one wave
+# (tests/test_docs_inventory.py).
+WAVES: list[tuple[str, list[str]]] = [
+    # r1: the frozen headline set; its cold total is the record's `value`.
+    ("headline", [
+        "q_scan_lineitem",
+        "q_agg_groupby",
+        "q_agg_distinct",
+        "q_join_inner",
+        "q_join_outer",
+        "q_join_asof",
+        "q_join_range_binned",
+        "q_two_hop",
+        "q_window_rank",
+        "q_window_running_sum",
+        "q_degree",
+        "q_topn",
+        "q_topk_per_group",
+        "q_star_join",
+        "q_pivot",
+        "q_time_rollup",
+        "q_agg_salted",
+        "q_udf_pandas",
+        "q_dedup_exact",
+        "q_dedup_near",
+        "q_sim_search",
+        "q_dedup_embed",
+        "q_text_tokens",
+        "q_text_tfidf",
+        "q_stream_tumbling",
+        "q_shortest_path_len",
+        "q_random_walk_counts",
+        "q_pagerank",
+        "q_connected_components",
+    ]),
+    # r2-r3 additions.
+    ("headline2", [
+        "q_sessionize",
+        "q_time_gap_fill",
+        "q_triangle_count",
+        "q_graph_clustering",
+        "q_text_bigram_lm",
+        "q_text_decontaminate",
+        "q_funnel",
+        "q_join_asof_nearest",
+        "q_graph_kcore",
+        "q_betweenness_sample",
+        "q_grouping_sets",
+        "q_pack_sequences",
+        "q_dq_audit",
+        "q_skew_profile",
+        "q_dedup_incremental",
+        "q_text_entropy",
+        "q_zorder_layout",
+        "q_text_chunk",
+        "q_embed_pca",
+        "q_text_keywords",
+        "q_snapshot_diff",
+        "q_window_distinct_running",
+        "q_agg_histogram_eqdepth",
+        "q_multimodal_motion",
+        "q_time_ewma",
+        "q_graph_sssp",
+    ]),
+    # r4 additions.
+    ("headline3", [
+        "q_udf_udtf",
+        "q_time_ohlc",
+        "q_privacy_mask",
+        "q_sink_partitioned",
+        "q_stream_join",
+        "q_schema_evolution",
+        "q_incremental_join_view",
+        "q_multimodal_phash",
+        "q_stream_ohlc",
+    ]),
+    # r5 additions (q_embed_pca stays in headline2 under its new verdict
+    # shape).
+    ("headline4", [
+        "q_stream_transform_state",
+        "q_sim_ann_ivf",
+        "q_sim_ann_lsh",
+        "q_multimodal_resize",
+        "q_multimodal_frames",
+        "q_multimodal_audio",
+        "q_multimodal_audio_resample",
+    ]),
+    # r6 additions.
+    ("headline5", [
+        "q_sample_bernoulli",
+        "q_window_rolling_median",
+        "q_text_postings",
+        "q_pipeline_dataset_card",
+        "q_agg_winsorize",
+        "q_scd2_join",
+        "q_multimodal_scenes",
+    ]),
+    # r7 additions; q_stream_join_outer is benched here for the first time
+    # (rows-only through r6).
+    ("headline6", [
+        "q_stream_join_outer",
+        "q_sample_verdict",
+        "q_sample_stratified_verdict",
+        "q_text_containment",
+        "q_embed_knn_graph",
+        "q_stream_cdc_apply",
+        "q_pagerank_personalized",
+        "q_anomaly_mad",
+        "q_agg_skew_kurtosis",
+        "q_graph_hits",
+        "q_agg_bitmap_distinct",
+        "q_quality_psi",
+    ]),
+    # r8 additions.
+    ("headline7", [
+        "q_quality_ks",
+        "q_agg_corr_matrix",
+        "q_scalar_variant",
+        "q_events_attribution",
+        "q_agg_mutual_info",
+        "q_stream_dedup_state",
+    ]),
+    # r9 additions.
+    ("headline8", [
+        "q_join_interval_overlap",
+        "q_events_sequence_match",
+        "q_quality_benford",
+        "q_layout_compaction",
+        "q_text_readability",
+        "q_agg_bloom_filter",
+        "q_agg_regression",
+        "q_agg_gini",
+        "q_graph_assortativity",
+        "q_agg_pareto",
+    ]),
+    # r10 additions.
+    ("headline9", [
+        "q_text_bm25",
+        "q_scalar_variant_store",
+        "q_window_cume",
+        "q_privacy_ldiversity",
+        "q_feature_hashing",
+        "q_sql_recursive",
+        "q_text_collocations",
+        "q_sim_centroid_assign",
+        "q_sql_pipe",
+        "q_sim_outliers",
+        "q_sim_kmeans_update",
+        "q_time_seasonal",
+        "q_quality_freshness",
+        "q_anomaly_cusum",
+        "q_events_rfm",
+        "q_basket_lift",
+        "q_privacy_tcloseness",
+        "q_time_acf",
+        "q_text_zipf",
+        "q_feature_woe",
+        "q_quality_abtest",
+        "q_agg_hhi",
+        "q_sim_silhouette",
+        "q_join_dpp",
+        "q_sql_lateral",
+        "q_events_funnel_time",
+        "q_events_journeys",
+        "q_mix_temperature",
+        "q_set_ops_all",
+        "q_agg_spearman",
+        "q_profile_entropy",
+    ]),
+    # r11 BACKFILL (VERDICT r10 item 4): no new keys. The machinery-
+    # heaviest keys that had never been benched: the VERDICT r10 "What's
+    # missing #2" list, then the remaining never-benched keys that build a
+    # join/window/loop/stream, dedup-and-graph first.
+    ("headline10", [
+        "q_dedup_ngram",
+        "q_dedup_near_clusters",
+        "q_dedup_simhash",
+        "q_dedup_clusters",
+        "q_graph_lpa",
+        "q_graph_closeness",
+        "q_graph_modularity",
+        "q_graph_jaccard",
+        "q_graph_degree_hist",
+        "q_pipeline_pretrain",
+        "q_pipeline_filter",
+        "q_pipeline_split",
+        "q_merge_upsert",
+        "q_scd2_build",
+        "q_scd2_asof",
+        "q_feature_target_enc",
+        "q_cohort_retention",
+        "q_events_transitions",
+        "q_stream_dedup",
+        "q_stream_late",
+        "q_stream_sliding",
+        "q_stream_session",
+        "q_stream_enrich",
+        "q_stream_stateful",
+        "q_stream_quality",
+        "q_multimodal_dedup",
+        "q_multimodal_decode",
+        "q_udf_grouped_ols",
+        "q_join_salted",
+        "q_join_bucketed",
+        "q_vocab_build",
+        "q_text_winnow",
+    ]),
+    # r11 COMPLETION: the remaining 83 never-benched keys, taking bench
+    # coverage to the whole registry. The two rows-only sampling keys are
+    # here for their times; their correctness evidence is the driver-green
+    # *_verdict twins in headline6.
+    ("headline11", [
+        "q_agg_argmax",
+        "q_agg_bool",
+        "q_agg_collect_sorted",
+        "q_agg_cube",
+        "q_agg_histogram",
+        "q_agg_median",
+        "q_agg_mode",
+        "q_agg_percentile_exact",
+        "q_agg_stats",
+        "q_anomaly_zscore",
+        "q_events_json",
+        "q_profile_stats",
+        "q_sql_params",
+        "q_time_calendar",
+        "q_time_downsample",
+        "q_unpivot",
+        "q_window_range_frame",
+        "q_agg_approx_quantile",
+        "q_agg_hll",
+        "q_agg_hll_union",
+        "q_agg_heavy_hitters",
+        "q_time_interpolate",
+        "q_window_streak",
+        "q_agg_countmin",
+        "q_agg_freq_approx",
+        "q_window_rolling_corr",
+        "q_agg_weighted_median",
+        "q_events_active_users",
+        "q_source_csv",
+        "q_source_json",
+        "q_source_orc",
+        "q_mix_sample",
+        "q_embed_quantize",
+        "q_embed_stats",
+        "q_text_quality",
+        "q_text_langid",
+        "q_text_fingerprint",
+        "q_text_pii",
+        "q_text_repetition",
+        "q_text_levenshtein",
+        "q_text_ngram_stats",
+        "q_text_encode",
+        "q_multimodal_meta",
+        "q_join_cardinality",
+        "q_privacy_kanon",
+        "q_privacy_erase",
+        "q_time_backfill_gaps",
+        "q_sink_roundtrip",
+        "q_project",
+        "q_filter_range",
+        "q_filter_disjunctive",
+        "q_join_anti",
+        "q_semi_join_neighbors",
+        "q_join_range",
+        "q_agg_sum",
+        "q_agg_rollup",
+        "q_window_lag",
+        "q_window_ntile",
+        "q_window_first_last",
+        "q_sort",
+        "q_union",
+        "q_set_ops",
+        "q_sample",
+        "q_sample_stratified",
+        "q_sample_hash",
+        "q_window_ratio",
+        "q_sample_exact_stratified",
+        "q_join_null_safe",
+        "q_scalar_string",
+        "q_scalar_date",
+        "q_scalar_math",
+        "q_scalar_array",
+        "q_scalar_map",
+        "q_scalar_json",
+        "q_scalar_bitwise",
+        "q_scalar_posexplode",
+        "q_scalar_struct",
+        "q_scalar_cond",
+        "q_scalar_url",
+        "q_scalar_trycast",
+        "q_subquery_scalar",
+        "q_subquery_correlated",
+        "q_incremental_agg",
+    ]),
+    # Full TPC-H 22 (schema-adapted; tpch.py + analytics.py): the one
+    # number warehouse engines are compared by.
+    ("tpch", [
+        "q_sql_tpch_q1", "q_sql_tpch_q2", "q_sql_surface", "q_sql_tpch_q4",
+        "q_join_multiway", "q_sql_tpch_q6", "q_sql_tpch_q7", "q_sql_tpch_q8",
+        "q_sql_tpch_q9", "q_sql_tpch_q10", "q_sql_tpch_q11", "q_sql_tpch_q12",
+        "q_sql_tpch_q13", "q_sql_tpch_q14", "q_sql_tpch_q15", "q_sql_tpch_q16",
+        "q_sql_tpch_q17", "q_sql_tpch_q18", "q_sql_tpch_q19", "q_sql_tpch_q20",
+        "q_sql_tpch_q21", "q_sql_tpch_q22",
+    ]),
 ]
 
 
@@ -568,184 +539,21 @@ def main() -> None:
     # "cold spike" artifacts on q_stream_transform_state /
     # q_text_entropy class keys). Workers are reused across jobs, so
     # one pass here makes every per-key number reflect the operator,
-    # not pool-spawn luck. Methodology per key is UNCHANGED (same
-    # queries, same noop sink, same timing points); this extends the
-    # existing session warmup only.
+    # not pool-spawn luck.
     _warm_python_workers(spark, cpus)
 
     errors: dict[str, str] = {}
-    warm_incomplete: list[str] = []
     key_probes: dict[str, dict] = {}
-
-    def run_once(key: str, phase: str) -> float | None:
-        """One timed end-to-end run; a failing key records its error
-        (tagged cold/warm so the artifact says WHICH run died) and
-        returns None instead of killing the whole record — one bad
-        key must not cost the round its entire bench artifact."""
-        t0 = time.perf_counter()
-        try:
-            df = qs[key](spark, sf_dir)
-            df.write.format("noop").mode("overwrite").save()
-            return round(time.perf_counter() - t0, 3)
-        except Exception as e:  # noqa: BLE001 — report, don't die
-            errors[f"{key}:{phase}"] = f"{type(e).__name__}: {e}"[:200]
-            return None
-        finally:
-            # queries are independent: drop any caches a query persisted
-            # so later queries aren't taxed by earlier queries' storage —
-            # on the ERROR path too, else one failure skews every
-            # subsequent key's memory budget and timing
-            spark.catalog.clearCache()
-
-    def run_set(keys: list[str]) -> tuple[dict[str, float], dict[str, float]]:
-        """Each query runs twice back-to-back: the FIRST time includes
-        whole-stage-codegen JIT of its expression tree (cold), the
-        SECOND reuses the compiled classes (warm). Cold is what a
-        one-shot ad-hoc query pays; warm is the steady-state cost a
-        recurring pipeline pays — reporting both stops round-over-round
-        deltas from chasing JIT noise (VERDICT r3 item 8: q_text_entropy
-        measured 2.4 s cold vs ~1 s warm on an unchanged plan)."""
-        cold: dict[str, float] = {}
-        warm: dict[str, float] = {}
-        for key in keys:
-            if key not in qs:
-                continue
-            # Per-key contention bracket (VERDICT r13 item 1): the
-            # start/end host probes can't see a mid-run noisy
-            # neighbor, so each key's cold+warm window records how
-            # much host CPU went to steal / processes OUTSIDE this
-            # bench's tree. Additions-only: timing points unchanged,
-            # ~2 ms of /proc reads per bracket end.
-            kp = key_contention_probe_start()
-            c = run_once(key, "cold")
-            if c is None:
-                key_contention_probe_end(kp)
-                continue  # error recorded; skip the warm run too
-            cold[key] = c
-            w = run_once(key, "warm")
-            probe = key_contention_probe_end(kp)
-            if probe is not None:
-                key_probes[key] = probe
-            if w is not None:
-                warm[key] = w
-            else:
-                # cold succeeded but warm died: keep the per-key cold
-                # time visible in `queries`, but flag the key so the
-                # totals can stay key-for-key comparable (a warm-vs-
-                # cold delta must reflect JIT effects, not a missing
-                # key) — see warm_incomplete_keys in the output
-                warm_incomplete.append(key)
-        return cold, warm
-
-    def set_totals(cold: dict[str, float], warm: dict[str, float]) -> tuple[float, float]:
-        """Totals over the keys present in BOTH runs, so cold and warm
-        totals always cover the same key set (per-key cold times for
-        warm-incomplete keys remain in `queries`)."""
-        common = [k for k in cold if k in warm]
-        return (
-            round(sum(cold[k] for k in common), 3),
-            round(sum(warm[k] for k in common), 3),
-        )
-
     probe_start = host_load_probe()
-    results, warm1 = run_set(HEADLINE)
-    results2, warm2 = run_set(HEADLINE2)
-    results4, warm4 = run_set(HEADLINE3)
-    results5, warm5 = run_set(HEADLINE4)
-    results6, warm6 = run_set(HEADLINE5)
-    results7, warm7 = run_set(HEADLINE6)
-    results8, warm8 = run_set(HEADLINE7)
-    results9, warm9 = run_set(HEADLINE8)
-    results10, warm10 = run_set(HEADLINE9)
-    results11, warm11 = run_set(HEADLINE10)
-    results12, warm12 = run_set(HEADLINE11)
-    results3, warm3 = run_set(TPCH)
+    runs = [
+        (name, *run_set(spark, qs, sf_dir, keys, errors, key_probes))
+        for name, keys in WAVES
+    ]
     probe_end = host_load_probe()
+    record, totals_only = build_record(
+        sf, runs, errors, key_probes, probe_start, probe_end
+    )
 
-    total, warm_total1 = set_totals(results, warm1)
-    total2, warm_total2 = set_totals(results2, warm2)
-    total4, warm_total4 = set_totals(results4, warm4)
-    total5, warm_total5 = set_totals(results5, warm5)
-    total6, warm_total6 = set_totals(results6, warm6)
-    total7, warm_total7 = set_totals(results7, warm7)
-    total8, warm_total8 = set_totals(results8, warm8)
-    total9, warm_total9 = set_totals(results9, warm9)
-    total10, warm_total10 = set_totals(results10, warm10)
-    total11, warm_total11 = set_totals(results11, warm11)
-    total12, warm_total12 = set_totals(results12, warm12)
-    total3, warm_total3 = set_totals(results3, warm3)
-    # Key order is TRUNCATION-PROOF (VERDICT r5 item 7): the driver
-    # captures the stdout TAIL, so anything early in this single line
-    # can scroll off. Totals and errors go first (cheap to lose last),
-    # per-key dicts go last in REVERSE-chronological wave order so the
-    # r1-comparable HEADLINE per-key numbers sit at the very end of the
-    # line and always survive. A full sidecar copy is also written to
-    # BENCH_local_full.json (committed per round) as a belt-and-braces
-    # record the judge can read regardless of driver capture limits.
-    record = {
-        # headline metric stays COLD-run total for key-for-key
-        # comparability with BENCH_r01..r03 (also cold; when no
-        # warm run fails — the normal case — the intersection
-        # totals equal the plain cold sums those rounds used)
-        "metric": "headline_total",
-        "value": total,
-        "unit": "sec",
-        "sf": sf,
-        "headline_warm_total": warm_total1,
-        "headline2_total": total2,
-        "headline2_warm_total": warm_total2,
-        "headline3_total": total4,
-        "headline3_warm_total": warm_total4,
-        "headline4_total": total5,
-        "headline4_warm_total": warm_total5,
-        "headline5_total": total6,
-        "headline5_warm_total": warm_total6,
-        "headline6_total": total7,
-        "headline6_warm_total": warm_total7,
-        "headline7_total": total8,
-        "headline7_warm_total": warm_total8,
-        "headline8_total": total9,
-        "headline8_warm_total": warm_total9,
-        "headline9_total": total10,
-        "headline9_warm_total": warm_total10,
-        "headline10_total": total11,
-        "headline10_warm_total": warm_total11,
-        "headline11_total": total12,
-        "headline11_warm_total": warm_total12,
-        "tpch_total": total3,
-        "tpch_warm_total": warm_total3,
-        "errors": errors,
-        "warm_incomplete_keys": warm_incomplete,
-        # Host contention tags (VERDICT r11 item 4): probe at run
-        # start and end — a rep is only trustworthy as a baseline
-        # comparison when BOTH say "quiet" (the host can degrade
-        # mid-run; r11's round-close rep did exactly that).
-        "host_probe_start": probe_start,
-        "host_probe_end": probe_end,
-        # Methodology flag (ADVICE r13 #4): the r13+ session warmup
-        # includes a python-worker-pool pass — per-key numbers for
-        # Python-boundary keys are not directly comparable with
-        # pre-r13 artifacts, and this flag marks the boundary.
-        "py_worker_warmup": True,
-        # Per-key contention summary (VERDICT r13 item 1): keys whose
-        # cold+warm window saw steal ≥ 2% or ≥ 10% of host CPU going
-        # to processes outside this bench. Empty list = the whole rep
-        # ran uncontended, even if a neighbor spiked BETWEEN probes.
-        "contended_keys": sorted(
-            k for k, p in key_probes.items() if p.get("contended")
-        ),
-        # newest wave first … r1-comparable HEADLINE cold per-key LAST
-        "queries_probe": key_probes,
-        "queries_warm": {
-            **warm3, **warm12, **warm11, **warm10, **warm9, **warm8, **warm7,
-            **warm6, **warm5, **warm4, **warm2, **warm1
-        },
-        "queries": {
-            **results3, **results12, **results11, **results10, **results9,
-            **results8, **results7, **results6, **results5, **results4,
-            **results2, **results,
-        },
-    }
     here = os.path.dirname(os.path.abspath(__file__))
     # Sidecar name is overridable so off-default-SF runs (e.g. the
     # r13 sf0.2 graduation sweep) record their own artifact instead
@@ -793,18 +601,146 @@ def main() -> None:
         print(f"bench.py: sidecar write failed ({exc}); "
               f"BENCH_local_full.json may be stale", file=sys.stderr)
     print(json.dumps(record))
+    print(json.dumps(totals_only))
+
+
+def run_once(spark, qs, sf_dir: str, key: str, phase: str,
+             errors: dict[str, str]) -> float | None:
+    """One timed end-to-end run; a failing key records its error
+    (tagged cold/warm so the artifact says WHICH run died) and
+    returns None instead of killing the whole record — one bad
+    key must not cost the round its entire bench artifact."""
+    t0 = time.perf_counter()
+    try:
+        df = qs[key](spark, sf_dir)
+        df.write.format("noop").mode("overwrite").save()
+        return round(time.perf_counter() - t0, 3)
+    except Exception as e:  # noqa: BLE001 — report, don't die
+        errors[f"{key}:{phase}"] = f"{type(e).__name__}: {e}"[:200]
+        return None
+    finally:
+        # queries are independent: drop any caches a query persisted
+        # so later queries aren't taxed by earlier queries' storage —
+        # on the ERROR path too, else one failure skews every
+        # subsequent key's memory budget and timing
+        spark.catalog.clearCache()
+
+
+def run_set(spark, qs, sf_dir: str, keys: list[str], errors: dict[str, str],
+            key_probes: dict[str, dict]) -> tuple[dict[str, float], dict[str, float]]:
+    """Each query runs twice back-to-back: the FIRST time includes
+    whole-stage-codegen JIT of its expression tree (cold), the
+    SECOND reuses the compiled classes (warm). Cold is what a
+    one-shot ad-hoc query pays; warm is the steady-state cost a
+    recurring pipeline pays — reporting both stops round-over-round
+    deltas from chasing JIT noise (VERDICT r3 item 8: q_text_entropy
+    measured 2.4 s cold vs ~1 s warm on an unchanged plan).
+
+    A key whose cold run fails gets no warm run; a key whose warm run
+    fails keeps its cold time and is absent from ``warm``."""
+    cold: dict[str, float] = {}
+    warm: dict[str, float] = {}
+    for key in keys:
+        if key not in qs:
+            continue
+        # Per-key contention bracket (VERDICT r13 item 1): the
+        # start/end host probes can't see a mid-run noisy
+        # neighbor, so each key's cold+warm window records how
+        # much host CPU went to steal / processes OUTSIDE this
+        # bench's tree. Timing points unchanged, ~2 ms of /proc
+        # reads per bracket end.
+        kp = key_contention_probe_start()
+        c = run_once(spark, qs, sf_dir, key, "cold", errors)
+        if c is None:
+            key_contention_probe_end(kp)
+            continue
+        cold[key] = c
+        w = run_once(spark, qs, sf_dir, key, "warm", errors)
+        probe = key_contention_probe_end(kp)
+        if probe is not None:
+            key_probes[key] = probe
+        if w is not None:
+            warm[key] = w
+    return cold, warm
+
+
+def build_record(
+    sf: float,
+    runs: list[tuple[str, dict[str, float], dict[str, float]]],
+    errors: dict[str, str],
+    key_probes: dict[str, dict],
+    probe_start: dict,
+    probe_end: dict,
+) -> tuple[dict, dict]:
+    """The bench record and the compact last stdout line, from the
+    (wave name, cold, warm) results in WAVES order.
+
+    Wave totals cover the keys present in BOTH runs, so cold and warm
+    totals always cover the same key set. Keys whose cold run succeeded
+    but whose warm run died stay in `queries` and are listed in
+    `warm_incomplete_keys`, so a warm-vs-cold delta reflects JIT
+    effects, not a missing key."""
+    totals: dict[str, float] = {}
+    for name, cold, warm in runs:
+        common = [k for k in cold if k in warm]
+        totals[f"{name}_total"] = round(sum(cold[k] for k in common), 3)
+        totals[f"{name}_warm_total"] = round(sum(warm[k] for k in common), 3)
+    # Key order is TRUNCATION-PROOF (VERDICT r5 item 7): the driver
+    # captures the stdout TAIL, so anything early in this single line
+    # can scroll off. Totals and errors go first (cheap to lose last),
+    # per-key dicts go last in REVERSE wave order so the r1-comparable
+    # headline per-key numbers sit at the very end of the line and
+    # always survive. A full sidecar copy is also written to
+    # BENCH_local_full.json (committed per round) as a belt-and-braces
+    # record the judge can read regardless of driver capture limits.
+    record = {
+        # headline metric stays COLD-run total for key-for-key
+        # comparability with BENCH_r01..r03 (also cold; when no
+        # warm run fails — the normal case — the intersection
+        # totals equal the plain cold sums those rounds used)
+        "metric": "headline_total",
+        "value": totals.pop("headline_total"),
+        "unit": "sec",
+        "sf": sf,
+        **totals,
+        "errors": errors,
+        "warm_incomplete_keys": [
+            k for _, cold, warm in runs for k in cold if k not in warm
+        ],
+        # Host contention tags (VERDICT r11 item 4): probe at run
+        # start and end — a rep is only trustworthy as a baseline
+        # comparison when BOTH say "quiet" (the host can degrade
+        # mid-run; r11's round-close rep did exactly that).
+        "host_probe_start": probe_start,
+        "host_probe_end": probe_end,
+        # Methodology flag (ADVICE r13 #4): the r13+ session warmup
+        # includes a python-worker-pool pass — per-key numbers for
+        # Python-boundary keys are not directly comparable with
+        # pre-r13 artifacts, and this flag marks the boundary.
+        "py_worker_warmup": True,
+        # Per-key contention summary (VERDICT r13 item 1): keys whose
+        # cold+warm window saw steal ≥ 2% or ≥ 10% of host CPU going
+        # to processes outside this bench. Empty list = the whole rep
+        # ran uncontended, even if a neighbor spiked BETWEEN probes.
+        "contended_keys": sorted(
+            k for k, p in key_probes.items() if p.get("contended")
+        ),
+        "queries_probe": key_probes,
+        "queries_warm": {k: v for _, _, warm in reversed(runs) for k, v in warm.items()},
+        "queries": {k: v for _, cold, _ in reversed(runs) for k, v in cold.items()},
+    }
     # The driver records the stdout TAIL (~2000 chars): BENCH_r06's
     # tail was all per-key numbers with every *_total truncated OUT
     # (VERDICT r6 defect 1). The LAST stdout line is therefore a
     # compact totals-only JSON — small enough to survive any tail
-    # capture whole; per-key numbers live in the full record above and
-    # in the committed sidecar.
+    # capture whole; per-key numbers live in the full record and in
+    # the committed sidecar.
     totals_only = {
         k: v for k, v in record.items()
         if k not in ("queries", "queries_warm", "queries_probe")
     }
     totals_only["per_key_in"] = "BENCH_local_full.json"
-    print(json.dumps(totals_only))
+    return record, totals_only
 
 
 if __name__ == "__main__":

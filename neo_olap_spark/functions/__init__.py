@@ -201,8 +201,7 @@ def distributed_row_number(
     range-partition on the order columns, rank within each partition,
     add per-partition offsets (n_parts scalars to the driver). The
     naive global row_number window funnels every row through one task
-    — fine at 300k rows, fatal at 1e9 (same argument as
-    graph_algos.dense_index, which is the distinct-values variant).
+    — fine at 300k rows, fatal at 1e9.
     ``n_parts=None`` derives the width from the cluster
     (scaled_parts) instead of any fixed constant. Returns
     (df columns..., idx_name, _total) where _total is the row count

@@ -3033,7 +3033,7 @@ def _grouped_cumsum_distributed(
     order, DISTRIBUTED: range-partition on the full sort key, partial
     running sums within each partition, then add per-(partition,
     group) offsets (n_parts × n_groups scalars to the driver — the
-    dense_index/distributed_row_number offset pattern, extended with
+    distributed_row_number offset pattern, extended with
     the group key because a range partition may span a group
     boundary). No single task ever sorts more than ~rows/n_parts rows,
     vs the window form's one-task-per-group funnel. Integer sums, so

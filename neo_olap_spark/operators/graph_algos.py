@@ -28,7 +28,11 @@ from pyspark.sql.window import Window as W
 from contextlib import contextmanager
 
 from neo_olap_spark.checkpoints import latest_round, read_round, write_round
-from neo_olap_spark.functions import local_rows_frame, loop_checkpoint
+from neo_olap_spark.functions import (
+    distributed_row_number,
+    local_rows_frame,
+    loop_checkpoint,
+)
 from neo_olap_spark.functions import numbered_sample as _numbered_sample
 from neo_olap_spark.graph import edges, symmetrize
 from neo_olap_spark.registry import query
@@ -313,44 +317,6 @@ def all_nodes(spark: SparkSession, sf_dir: str) -> DataFrame:
     return c.unionAll(o).unionAll(p)
 
 
-def dense_index(df: DataFrame, col_name: str, n_parts: int | None = None) -> DataFrame:
-    """0-based dense index over distinct values in sort order,
-    DISTRIBUTED: range-partition by value, rank within each partition,
-    then add per-partition offsets (n_parts scalars collected to the
-    driver). The naive global row_number window funnels every row
-    through one task — fine at 300k rows, fatal at 1e9 (SCALING.md).
-    ``n_parts=None`` derives the width from the cluster instead of a
-    hardcoded 32 (VERDICT r13 item 3). Returns (col_name, idx)."""
-    from neo_olap_spark.functions import scaled_parts
-
-    spark = df.sparkSession
-    if n_parts is None:
-        n_parts = scaled_parts(spark, floor=32)
-    parts = (
-        df.repartitionByRange(n_parts, col_name)
-        .sortWithinPartitions(col_name)
-        .withColumn("_pid", F.spark_partition_id())
-        .localCheckpoint()  # pin partitioning: the count pass and the
-        # rank pass must see identical partition ids
-    )
-    counts = {
-        r["_pid"]: r["cnt"]
-        for r in parts.groupBy("_pid").agg(F.count("*").alias("cnt")).collect()
-    }
-    offsets, acc = [], 0
-    for pid in sorted(counts):
-        offsets.append((pid, acc))
-        acc += counts[pid]
-    off_df = local_rows_frame(spark, offsets, "_pid int, _off long")
-    w = W.partitionBy("_pid").orderBy(col_name)
-    return (
-        parts.join(F.broadcast(off_df), "_pid")
-        .withColumn("idx", F.col("_off") + F.row_number().over(w) - 1)
-        .select(col_name, "idx")
-    )
-
-
-
 def _teleport_address_space(spark: SparkSession, sf_dir: str):
     """The teleport address map idx ∈ [0, n_nodes) → node id.
 
@@ -359,8 +325,8 @@ def _teleport_address_space(spark: SparkSession, sf_dir: str):
     when it rejection-samples node ids (OlapRunner.java:60-69). One
     metadata-cheap aggregate verifies it, and the map becomes a CLOSED-
     FORM expression: no node table, no join, no cache. If a table ever
-    arrives non-dense, callers fall back to dense_index() (the
-    distributed rank path).
+    arrives non-dense, callers fall back to
+    functions.distributed_row_number (the distributed rank path).
 
     Returns (n_nodes, node_of_idx: Column -> Column) or (None, None)
     when the density check fails."""
@@ -427,7 +393,11 @@ def _walk_setup(spark: SparkSession, sf_dir: str, n_walkers: int, seed: int):
     n_nodes, node_of_idx = _teleport_address_space(spark, sf_dir)
     if n_nodes is None:
         # non-dense keys: distributed-rank index, join-backed teleport
-        tele_nodes = dense_index(nodes_all, "node").persist()
+        tele_nodes = (
+            distributed_row_number(nodes_all, ["node"], idx_name="idx")
+            .select("node", "idx")
+            .persist()
+        )
         n_nodes = tele_nodes.count()
     else:
         tele_nodes = None

@@ -172,9 +172,7 @@ def capped_postings(
     window counts (shuffling on the same keys the downstream join and
     pair-aggregation shuffle on anyway), stop-shingles (df > max_df)
     dropped. ONE definition shared by the exact-dedup tier
-    (jaccard/containment/ngram/clusters) AND tools/containment_ab.py,
-    so the A/B tool can never silently measure a stale shape
-    (round-9 ADVICE).
+    (jaccard/containment/ngram/clusters).
 
     ``ckpt=True`` (the production default) localCheckpoints the frame
     before the pair self-join consumes it twice: Catalyst does not

@@ -13,12 +13,20 @@ import os
 from pyspark.sql import SparkSession
 
 
-def get_spark(app_name: str = "neo-olap-spark", cpus: int | None = None) -> SparkSession:
+def get_spark(
+    app_name: str = "neo-olap-spark",
+    cpus: int | None = None,
+    conf: dict[str, str] | None = None,
+) -> SparkSession:
     """Build (or reuse) a SparkSession.
 
     AQE is on so runtime statistics re-plan shuffles (partition
     coalescing, skew-join splitting) — the scale-out answer to the
     reference's hand-rolled memory rounds (Runner.java:227-275).
+
+    ``conf`` entries are applied after the defaults, so they override
+    them: the profiler turns the UI on, and A/B variants set the
+    confs they compare. This is the only place a session is built.
     """
     if cpus is None:
         cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "0") or 0) or None
@@ -46,6 +54,8 @@ def get_spark(app_name: str = "neo-olap-spark", cpus: int | None = None) -> Spar
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
     )
+    for key, value in (conf or {}).items():
+        builder = builder.config(key, value)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark

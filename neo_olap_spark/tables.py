@@ -25,8 +25,6 @@ TABLES = (
     "embeddings",
 )
 
-DEFAULT_SF_DIR = "/root/testdata/sf0.001"
-
 
 def _enable_nanos_as_long(spark: SparkSession) -> None:
     """Make TIMESTAMP(NANOS) parquet columns readable on ANY session.
@@ -96,10 +94,6 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name == "events":
         df = _normalize_events_ts(df)
     return df
-
-
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {name: load(spark, sf_dir, name) for name in TABLES}
 
 
 def parquet_row_count(sf_dir: str, name: str) -> int:

@@ -87,14 +87,14 @@ def test_bench_waves_cover_registry_keys():
     appear in two waves (totals would double-count), and the CURRENT
     round's wave must carry correctness evidence alongside its first
     bench record. Through r10 that meant the new-key wave rides the
-    rotation front; r11's HEADLINE10/11 are BACKFILL waves (no new
+    rotation front; r11's headline10/11 waves are BACKFILL (no new
     keys), so the invariant becomes: every backfill key already has a
     driver hash-match record in some committed CORRECTNESS_r*.json OR
     rides the r11 rotation front — a bench number must never be the
     only evidence a key has. The two rows-only raw sampling keys are
     exempt: they are never driver-sampled BY DESIGN and their
     correctness evidence is the driver-green hash-checked *_verdict
-    twins (r8); HEADLINE11 carries them for perf records only.
+    twins (r8); headline11 carries them for perf records only.
     With both waves, bench coverage is the FULL registry (274/274) —
     also asserted here so a future key addition without a bench slot
     fails the suite."""
@@ -107,13 +107,10 @@ def test_bench_waves_cover_registry_keys():
     from neo_olap_spark.registry import DRIVER_WAVE_ROTATION, queries
 
     qs = set(queries())
-    waves = [
-        bench.HEADLINE, bench.HEADLINE2, bench.HEADLINE3, bench.HEADLINE4,
-        bench.HEADLINE5, bench.HEADLINE6, bench.HEADLINE7, bench.HEADLINE8,
-        bench.HEADLINE9, bench.HEADLINE10, bench.HEADLINE11, bench.TPCH,
-    ]
+    waves = dict(bench.WAVES)
+    assert len(waves) == len(bench.WAVES), "duplicate wave name"
     seen: set[str] = set()
-    for wave in waves:
+    for wave in waves.values():
         unknown = [k for k in wave if k not in qs]
         assert not unknown, f"bench wave key not in registry: {unknown}"
         dupes = [k for k in wave if k in seen]
@@ -135,7 +132,7 @@ def test_bench_waves_cover_registry_keys():
     front = set(DRIVER_WAVE_ROTATION)
     rows_only = {k for k in REGISTRY if REGISTRY[k].oracle is None}
     unevidenced = [
-        k for k in bench.HEADLINE10 + bench.HEADLINE11
+        k for k in waves["headline10"] + waves["headline11"]
         if k not in driver_verified and k not in front and k not in rows_only
     ]
     assert not unevidenced, (

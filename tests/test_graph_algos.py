@@ -9,10 +9,10 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from neo_olap_spark.functions import distributed_row_number
 from neo_olap_spark.operators.graph_algos import (
     bfs_distances,
     betweenness_sample,
-    dense_index,
     random_walk_counts,
 )
 
@@ -21,7 +21,8 @@ def test_dense_index_matches_global_rank(spark):
     # distributed two-phase index ≡ the single-task global window
     vals = [(v,) for v in [7, 3, 99, 42, 0, 15, 8, 23, 4, 100, 55]]
     df = spark.createDataFrame(vals, "node long")
-    got = {r.node: r.idx for r in dense_index(df, "node", n_parts=4).collect()}
+    idx = distributed_row_number(df, ["node"], n_parts=4, idx_name="idx")
+    got = {r.node: r.idx for r in idx.collect()}
     want = {v: i for i, (v,) in enumerate(sorted(vals))}
     assert got == want
 
@@ -71,20 +72,56 @@ def test_walk_deterministic(spark, sf_dir):
     assert sorted(map(tuple, a.collect())) == sorted(map(tuple, b.collect()))
 
 
-def test_walk_broadcast_path_matches_loop_path(spark, sf_dir, monkeypatch):
-    """r14 (guide §3.1): the broadcast-adjacency walk (adjacency as the
-    build side, visit log carried as a path array, one job) must be
-    row-identical to the streamed-adjacency loop (the at-scale shape).
-    Same picks, same teleports — only the join direction and the
-    logging mechanism differ."""
-    import neo_olap_spark.operators.graph_algos as ga
+def _isolated_fixture(src: str, dst) -> str:
+    """Copy of ``src`` whose orders all belong to customers 0-2 and whose
+    lineitems all reference parts 0-2: keys stay dense, but every other
+    customer and part has no edge, so walkers land on dead ends."""
+    import shutil
 
-    bcast = random_walk_counts(spark, sf_dir, n_walkers=24, n_steps=6, seed=3)
-    rows_b = sorted(map(tuple, bcast.collect()))
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from neo_olap_spark.tables import TABLES
+
+    for t in TABLES:
+        shutil.copyfile(f"{src}/{t}.parquet", dst / f"{t}.parquet")
+    for t, col in (("orders", "o_custkey"), ("lineitem", "l_partkey")):
+        tbl = pq.read_table(f"{src}/{t}.parquet")
+        i = tbl.schema.get_field_index(col)
+        remapped = pa.array(tbl[col].to_numpy() % 3, type=tbl.schema.field(i).type)
+        pq.write_table(tbl.set_column(i, col, remapped), dst / f"{t}.parquet")
+    return str(dst)
+
+
+def test_walk_broadcast_path_matches_loop_path(spark, sf_dir, monkeypatch, tmp_path):
+    """The three walk paths agree with each other and with the DuckDB
+    walk oracle on a graph where walkers teleport: the broadcast-
+    adjacency walk (one job), the streamed-adjacency loop (the at-scale
+    shape) and the streamed loop with the non-dense teleport fallback
+    (distributed node index + join). Only the join direction, the
+    logging mechanism and the teleport address map differ."""
+    import neo_olap_spark.operators.graph_algos as ga
+    from neo_olap_spark.testing import assert_parity
+
+    d = _isolated_fixture(sf_dir, tmp_path)
+    args = dict(n_walkers=24, n_steps=6, seed=3)
+    adj, _, _, walkers = ga._walk_setup(spark, d, args["n_walkers"], args["seed"])
+    dead_starts = walkers.join(adj.where(F.size("nbrs") == 0), F.col("node") == F.col("src"))
+    assert dead_starts.count() > 0, "no walker teleports on the planted fixture"
+    adj.unpersist()
+
+    arms = {"broadcast": random_walk_counts(spark, d, **args)}
     monkeypatch.setattr(ga, "_adj_fits_broadcast", lambda *a, **k: False)
-    loop = random_walk_counts(spark, sf_dir, n_walkers=24, n_steps=6, seed=3)
-    rows_l = sorted(map(tuple, loop.collect()))
-    assert rows_b == rows_l
+    arms["streamed_dense"] = random_walk_counts(spark, d, **args)
+    monkeypatch.setattr(ga, "_teleport_address_space", lambda *a, **k: (None, None))
+    arms["streamed_non_dense"] = random_walk_counts(spark, d, **args)
+
+    oracle = ga._random_walk_oracle(args["n_walkers"], args["n_steps"], args["seed"])
+    rows = {}
+    for name, df in arms.items():
+        assert_parity(df, oracle, d)
+        rows[name] = sorted(map(tuple, df.collect()))
+    assert rows["broadcast"] == rows["streamed_dense"] == rows["streamed_non_dense"]
 
 
 def test_betweenness_runs_and_deterministic(spark, sf_dir):

@@ -211,3 +211,26 @@ def test_stream_transform_state_on_bare_session(bare_conf, sf_dir):
     extraction — must run on a session without our builder confs."""
     out = streaming.q_stream_transform_state(bare_conf, sf_dir)
     assert out.count() >= 0
+
+
+def test_only_session_module_builds_sessions():
+    """session.get_spark is the one session factory: a second builder
+    chain drifts from it (the profiler's and the config A/B's copies
+    both lost the Arrow safe-cast conf), so no other module may start
+    a session builder chain."""
+    import os
+    import re
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    allowed = os.path.join(root, "neo_olap_spark", "session.py")
+    builder = re.compile(r"SparkSession\s*\.\s*builder\b")
+    offenders = []
+    for dirpath, dirnames, filenames in os.walk(root):
+        dirnames[:] = [d for d in dirnames if not d.startswith(".")]
+        for name in filenames:
+            path = os.path.join(dirpath, name)
+            if name.endswith(".py") and path != allowed:
+                with open(path, encoding="utf-8") as f:
+                    if builder.search(f.read()):
+                        offenders.append(os.path.relpath(path, root))
+    assert not offenders, f"session builder outside session.py: {offenders}"

@@ -10,7 +10,10 @@ For each key prints cold/warm wall times plus a per-job table (job
 description, duration, stages with task count / shuffle read+write /
 input bytes / spill) for the LAST (warm) run, so the dominant stage is
 visible without the browser UI. Optionally saves .explain("formatted")
-to <plans-out>/<key>_before.txt (or _after.txt via --suffix).
+to <plans-out>/<key>_before.txt (or _after.txt via --suffix), with
+run-varying ids and paths normalized away: dump the plans at two
+commits and ``diff -r`` the directories — identical plans with a
+slower wall time point at the host, a changed plan at the code.
 
 Measurement-only tool: never touches registry/oracle surfaces.
 """
@@ -20,6 +23,7 @@ from __future__ import annotations
 import argparse
 import json
 import os
+import re
 import sys
 import time
 import urllib.request
@@ -27,32 +31,31 @@ import urllib.request
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from neo_olap_spark.registry import queries  # noqa: E402
+from neo_olap_spark.session import get_spark  # noqa: E402
 
 
-def get_ui_spark(cpus: int):
-    """Session factory clone with the UI enabled (profiling only)."""
-    from pyspark.sql import SparkSession
+# UI on with enough history for the per-job REST breakdown; every
+# other setting is the production session's.
+UI_CONF = {
+    "spark.ui.enabled": "true",
+    "spark.ui.retainedJobs": "5000",
+    "spark.ui.retainedStages": "5000",
+}
 
-    builder = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("neo-olap-profile")
-        .config("spark.sql.shuffle.partitions", str(cpus))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.parquet.filterPushdown", "true")
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
-        .config("spark.ui.enabled", "true")
-        .config("spark.ui.retainedJobs", "5000")
-        .config("spark.ui.retainedStages", "5000")
-    )
-    spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    return spark
+
+def normalize_plan(text: str) -> str:
+    """Strip run-varying tokens so identical physical plans diff empty:
+    plan node ids `(12)`, codegen stage ids, exchange/subquery ids,
+    file paths, statistics, and pointer-ish hex."""
+    text = re.sub(r"\(\d+\)", "(#)", text)
+    text = re.sub(r"\[codegen id : \d+\]", "[codegen id : #]", text)
+    text = re.sub(r"\[id=#?\d+\]", "[id=#]", text)
+    text = re.sub(r"#\d+L?", "#x", text)  # attribute exprIds
+    text = re.sub(r"file:[^\],\s]+", "file:PATH", text)
+    text = re.sub(r"0x[0-9a-f]+", "0xHEX", text)
+    text = re.sub(r"subquery\d+", "subqueryN", text)
+    text = re.sub(r"cte\d+", "cteN", text)
+    return text
 
 
 def _api(base: str, path: str):
@@ -114,7 +117,7 @@ def main() -> None:
                     help="skip the per-job REST breakdown")
     args = ap.parse_args()
 
-    spark = get_ui_spark(args.cpus)
+    spark = get_spark("neo-olap-profile", cpus=args.cpus, conf=UI_CONF)
     qs = queries()
     spark.range(1000).selectExpr("sum(id)").collect()
     base = "http://localhost:4040"
@@ -147,7 +150,7 @@ def main() -> None:
             df = qs[key](spark, args.sf_dir)
             with open(os.path.join(
                     args.plans_out, f"{key}_{args.suffix}.txt"), "w") as f:
-                f.write(plan_str(df))
+                f.write(normalize_plan(plan_str(df)))
             spark.catalog.clearCache()
     spark.stop()
 

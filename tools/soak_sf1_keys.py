@@ -219,7 +219,7 @@ def main() -> None:
     if keys and keys[0] == "waves":
         import bench
 
-        wave_keys = keys[1:] or (bench.HEADLINE + bench.HEADLINE2 + bench.HEADLINE3)
+        wave_keys = keys[1:] or [k for _, w in bench.WAVES[:3] for k in w]
         print(json.dumps(soak_waves(spark, queries(), wave_keys)))
         return
     t0 = time.time()
