@@ -11,7 +11,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
-from neo_olap_spark.functions import money_sum
+from neo_olap_spark.functions import money_sum, prefix_sum
 from neo_olap_spark.registry import query
 from neo_olap_spark.tables import load, parquet_row_count
 
@@ -2396,21 +2396,19 @@ def q_agg_histogram_eqdepth(spark: SparkSession, sf_dir: str) -> DataFrame:
     engine-exact (ties broken by PK for a total order). Production
     swaps the exact rank for approx_percentile boundaries when ±ε
     bins suffice; this operator is the exact tier."""
-    from neo_olap_spark.functions import distributed_row_number
-
     li = load(spark, sf_dir, "lineitem")
     priced = li.select(
         F.floor(F.col("l_extendedprice") * 100 + 0.5).cast("long").alias("cents"),
         "l_orderkey",
         "l_linenumber",
     )
-    ranked = distributed_row_number(
-        priced, ["cents", "l_orderkey", "l_linenumber"], 32
+    ranked = prefix_sum(
+        priced, ["cents", "l_orderkey", "l_linenumber"], "rk", n_parts=32
     )
     return (
         ranked.select(
             F.floor(
-                F.lit(float(EQDEPTH_BUCKETS)) * F.col("rk") / F.col("_total")
+                F.lit(float(EQDEPTH_BUCKETS)) * (F.col("rk") - 1) / F.col("_total")
             ).alias("bucket"),
             "cents",
         )
@@ -3007,86 +3005,6 @@ def q_events_sequence_match(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Shared volume gate for the per-group window family (r14, VERDICT r13
-# item 2): at or below this many input rows the per-group window wins
-# (one exchange; each task sorts a bounded ~n/groups-row set); above it
-# a group's whole row set funnels through ONE task — the superlinear
-# wall q_agg_spearman measured at exponent 1.9 — so the distributed
-# two-pass rank/prefix-sum takes over. Same gate value and rationale
-# as SPEARMAN_WINDOW_MAX_ROWS; both paths produce identical values
-# (pinned per key in tests/test_quality_stats.py).
-# ---------------------------------------------------------------------------
-
-PARTITIONED_WINDOW_MAX_ROWS = 2_000_000
-
-
-def _grouped_cumsum_distributed(
-    df: DataFrame,
-    group_col: str,
-    order_exprs: list,
-    val_col,
-    cum_name: str,
-    n_parts: int,
-    sum_type: str = "long",
-) -> DataFrame:
-    """Per-group running sum of ``val_col`` in (group, *order_exprs)
-    order, DISTRIBUTED: range-partition on the full sort key, partial
-    running sums within each partition, then add per-(partition,
-    group) offsets (n_parts × n_groups scalars to the driver — the
-    distributed_row_number offset pattern, extended with
-    the group key because a range partition may span a group
-    boundary). No single task ever sorts more than ~rows/n_parts rows,
-    vs the window form's one-task-per-group funnel. Integer sums, so
-    the result is bit-identical to the window path. Returns df's
-    columns plus ``cum_name`` (running sum including current row) and
-    ``_gtotal`` (the group's total). ``val_col`` may be a column name
-    or an expression (e.g. pre-cast to decimal); ``sum_type`` is the
-    offset/total column type and must match what F.sum(val_col)
-    produces, so the distributed values are type- and bit-identical
-    to the window form."""
-    from neo_olap_spark.functions import local_rows_frame
-
-    spark = df.sparkSession
-    parts = (
-        df.repartitionByRange(n_parts, F.col(group_col), *order_exprs)
-        .sortWithinPartitions(F.col(group_col), *order_exprs)
-        .withColumn("_pid", F.spark_partition_id())
-        .localCheckpoint()  # pin partition ids across the two passes
-    )
-    rows = parts.groupBy("_pid", group_col).agg(
-        F.sum(val_col).alias("_s")
-    ).collect()
-    offs: list[tuple] = []
-    seen: dict = {}
-    # pid order IS range order within a group (the group leads the
-    # range key), so accumulating in (group, pid) order yields each
-    # partition's "sum of all earlier rows of my group"
-    for r in sorted(rows, key=lambda r: (r[group_col], r["_pid"])):
-        g = r[group_col]
-        offs.append((r["_pid"], g, seen.get(g, 0)))
-        seen[g] = seen.get(g, 0) + r["_s"]
-    off_df = local_rows_frame(
-        spark, offs, f"_pid int, {group_col} string, _off {sum_type}"
-    )
-    tot_df = local_rows_frame(
-        spark,
-        sorted(seen.items()),
-        f"{group_col} string, _gtotal {sum_type}",
-    )
-    w = (
-        W.partitionBy("_pid", group_col)
-        .orderBy(*order_exprs)
-        .rowsBetween(W.unboundedPreceding, W.currentRow)
-    )
-    return (
-        parts.join(F.broadcast(off_df), ["_pid", group_col])
-        .join(F.broadcast(tot_df), group_col)
-        .withColumn(cum_name, F.sum(val_col).over(w) + F.col("_off"))
-        .drop("_pid", "_off")
-    )
-
-
-# ---------------------------------------------------------------------------
 # q_agg_weighted_median — exact weighted median (integer weights)
 # ---------------------------------------------------------------------------
 
@@ -3120,44 +3038,19 @@ def q_agg_weighted_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     and cents-integerized values make the definition engine-exact
     with no interpolation ambiguity.
 
-    Scale shape (r14, VERDICT r13 item 2): below
-    PARTITIONED_WINDOW_MAX_ROWS, one Exchange on the group key shared
-    by both window sums (cumulative + total), then a filter and a
-    per-group MIN — each task sorts a bounded per-flag set. Above the
-    gate the per-flag window would funnel a flag's FULL row set
-    through one task, so the running weight comes from the
-    distributed two-pass prefix sum instead
-    (_grouped_cumsum_distributed — range partition + per-(partition,
-    flag) offsets); integer weights make the two paths bit-identical
-    (pinned in tests/test_quality_stats.py)."""
+    Scale shape: the running and total weight come from
+    functions.prefix_sum per flag — below its volume gate one
+    Exchange on the flag shared by both window sums, then a filter and
+    a per-flag MIN; above it the distributed two-pass form."""
     c = load(spark, sf_dir, "lineitem").select(
         F.col("l_returnflag").alias("flag"),
         F.floor(F.col("l_extendedprice") * 100 + 0.5).cast("long").alias("cents"),
         F.col("l_quantity").cast("long").alias("w"),
     )
-    n_rows = parquet_row_count(sf_dir, "lineitem")
-    if n_rows <= PARTITIONED_WINDOW_MAX_ROWS:
-        wo = W.partitionBy("flag").orderBy("cents", "w").rowsBetween(
-            W.unboundedPreceding, W.currentRow
-        )
-        wt = W.partitionBy("flag")
-        cum = c.select(
-            "flag",
-            "cents",
-            F.sum("w").over(wo).alias("cw"),
-            F.sum("w").over(wt).alias("tw"),
-        )
-    else:
-        from neo_olap_spark.functions import scaled_parts
-
-        cum = _grouped_cumsum_distributed(
-            c,
-            "flag",
-            [F.col("cents"), F.col("w")],
-            "w",
-            "cw",
-            scaled_parts(spark, n_rows, floor=32),
-        ).select("flag", "cents", "cw", F.col("_gtotal").alias("tw"))
+    cum = prefix_sum(
+        c, ["cents", "w"], "cw", value="w", by="flag",
+        n_rows=parquet_row_count(sf_dir, "lineitem"),
+    ).withColumnRenamed("_total", "tw")
     return (
         cum.where(F.col("cw") * 2 >= F.col("tw"))
         .groupBy("flag")
@@ -3577,63 +3470,21 @@ def q_agg_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
     boundary (the q_quality_ks discipline; the zero-divisor CASE is
     the shared ANSI-div-vs-DuckDB-NULL guard).
 
-    Scale shape (r14, VERDICT r13 item 2): below
-    PARTITIONED_WINDOW_MAX_ROWS, one rank window per priority
-    partition + a groupBy on the SAME key, which reuses the window's
-    hashpartitioning — ONE Exchange total (plan-pinned); output is
-    priority-cardinality rows. Above the gate the per-priority window
-    would funnel a priority's FULL row set through one task, so the
-    rank comes from the distributed two-pass row number with the
-    priority LEADING the sort (the q_agg_spearman pattern): a
-    priority's ranks occupy a contiguous block of the global rank and
-    the per-priority rank is global − (rows of smaller priorities) +
-    1 — the identical total order, bit-identical ranks (pinned in
-    tests/test_quality_stats.py)."""
+    Scale shape: the rank comes from functions.prefix_sum per
+    priority (value 1). Below its volume gate the rank window and the
+    groupBy on the SAME key reuse one hashpartitioning — ONE Exchange
+    total (plan-pinned); above it the distributed two-pass form.
+    Output is priority-cardinality rows."""
     c = load(spark, sf_dir, "orders").select(
         F.col("o_orderpriority").alias("prio"),
         F.floor(F.col("o_totalprice") * 100 + 0.5).cast("long").alias("cents"),
         "o_orderkey",
     )
     dec = "decimal(38,0)"
-    n_rows = parquet_row_count(sf_dir, "orders")
-    if n_rows <= PARTITIONED_WINDOW_MAX_ROWS:
-        r = c.select(
-            "prio",
-            "cents",
-            F.row_number()
-            .over(W.partitionBy("prio").orderBy("cents", "o_orderkey"))
-            .cast(dec)
-            .alias("i"),
-        )
-    else:
-        from neo_olap_spark.functions import (
-            distributed_row_number,
-            scaled_parts,
-        )
-
-        g = distributed_row_number(
-            c,
-            ["prio", "cents", "o_orderkey"],
-            scaled_parts(spark, n_rows, floor=32),
-            "g",
-        ).drop("_total")
-        # one row per priority (bounded enum) — the sanctioned scalar
-        # fetch, exactly the spearman offset map
-        counts = {
-            row[0]: row[1] for row in g.groupBy("prio").count().collect()
-        }
-        off_col = F.lit(0).cast("long")
-        acc = 0
-        for pval in sorted(counts):
-            off_col = F.when(
-                F.col("prio") == pval, F.lit(acc)
-            ).otherwise(off_col)
-            acc += counts[pval]
-        r = g.select(
-            "prio",
-            "cents",
-            (F.col("g") - off_col + 1).cast(dec).alias("i"),
-        )
+    r = prefix_sum(
+        c, ["cents", "o_orderkey"], "i", by="prio",
+        n_rows=parquet_row_count(sf_dir, "orders"),
+    ).withColumn("i", F.col("i").cast(dec))
     m = r.groupBy("prio").agg(
         F.count(F.lit(1)).cast(dec).alias("n"),
         F.sum(F.col("cents").cast(dec)).alias("s"),
@@ -3716,48 +3567,23 @@ def q_agg_pareto(spark: SparkSession, sf_dir: str) -> DataFrame:
     divisions. NO float crosses the engine boundary (the KS/gini
     discipline).
 
-    Scale shape (r14, VERDICT r13 item 2): below
-    PARTITIONED_WINDOW_MAX_ROWS, the running-sum window, the
-    per-partition total window, and the final groupBy all key on the
-    segment — the plan shares ONE Exchange (the gini reuse,
-    plan-pinned); output is segment-cardinality rows. Above the gate
-    the per-segment window would funnel a segment's FULL row set
-    through one task, so the running revenue comes from the
-    distributed two-pass prefix sum over the same (cents DESC,
-    orderkey) total order — decimal sums, bit-identical values
-    (pinned in tests/test_quality_stats.py)."""
+    Scale shape: the running and total revenue come from
+    functions.prefix_sum per segment over the same (cents DESC,
+    orderkey) order. Below its volume gate both windows and the final
+    groupBy key on the segment and share ONE Exchange (the gini
+    reuse, plan-pinned); above it the distributed two-pass form.
+    Output is segment-cardinality rows."""
     c = load(spark, sf_dir, "orders").select(
         F.col("o_orderpriority").alias("prio"),
         F.floor(F.col("o_totalprice") * 100 + 0.5).cast("long").alias("cents"),
         "o_orderkey",
     )
     dec = "decimal(38,0)"
-    n_rows = parquet_row_count(sf_dir, "orders")
-    if n_rows <= PARTITIONED_WINDOW_MAX_ROWS:
-        w_run = (
-            W.partitionBy("prio")
-            .orderBy(F.col("cents").desc(), "o_orderkey")
-            .rowsBetween(W.unboundedPreceding, W.currentRow)
-        )
-        w_all = W.partitionBy("prio")
-        r = c.select(
-            "prio",
-            "cents",
-            F.sum(F.col("cents").cast(dec)).over(w_run).alias("cum"),
-            F.sum(F.col("cents").cast(dec)).over(w_all).alias("s"),
-        )
-    else:
-        from neo_olap_spark.functions import scaled_parts
-
-        r = _grouped_cumsum_distributed(
-            c,
-            "prio",
-            [F.col("cents").desc(), F.col("o_orderkey")],
-            F.col("cents").cast(dec),
-            "cum",
-            scaled_parts(spark, n_rows, floor=32),
-            sum_type=dec,
-        ).select("prio", "cents", "cum", F.col("_gtotal").alias("s"))
+    r = prefix_sum(
+        c, [F.col("cents").desc(), "o_orderkey"], "cum",
+        value=F.col("cents").cast(dec), by="prio",
+        n_rows=parquet_row_count(sf_dir, "orders"),
+    ).withColumnRenamed("_total", "s")
     in_top = (F.col("cum") - F.col("cents")) * 100 < F.col("s") * PARETO_PCT
     m = r.groupBy("prio").agg(
         F.count(F.lit(1)).cast(dec).alias("n"),
@@ -4746,15 +4572,6 @@ _SPEARMAN_CORR = _corr_micro_expr("sx", "sy", "sxx", "syy", "sxy")
 # asserts that full tuple is unique per flag in every fixture.
 _SPEAR_TIE = "l_orderkey, l_linenumber, l_partkey, l_suppkey"
 
-# Volume gate for the rank computation: at or below this many lineitem
-# rows the per-flag window sorts win (one exchange, each task sorts a
-# bounded ~n/3-row set); above it the distributed two-pass rank path
-# takes over so no single task ever sorts an unbounded flag block
-# (sf0.1→sf0.2 measured exponent 1.9 on the window path). Both paths
-# produce bit-identical ranks (same total order) — pinned in
-# tests/test_quality_stats.py.
-SPEARMAN_WINDOW_MAX_ROWS = 2_000_000
-
 
 @query(
     "q_agg_spearman",
@@ -4808,15 +4625,11 @@ def q_agg_spearman(spark: SparkSession, sf_dir: str) -> DataFrame:
     wraps int64 near ~3e6 rows per group) and the correlation is the
     SAME shared micro expression every correlation key parses.
 
-    Scale shape (r13): two distributed rank passes (range partition +
-    per-partition offsets), each O(rows/partition · log) per task with
-    partition count ∝ cluster width — replaces the per-flag window
-    sorts that funneled each flag's whole row set through one task
-    (the q_agg_gini shape; measured sf0.1→sf0.2 exponent 1.9 on this
-    key). The flag leads both sort orders, so per-flag ranks fall out
-    of the global rank by a 3-entry offset map; the moment aggregate
-    shuffles one row per (flag-partition) after map-side partials;
-    output is one row per flag."""
+    Scale shape: both ranks come from functions.prefix_sum per flag
+    (value 1), so the per-flag window sorts give way to the
+    distributed two-pass form above its volume gate; the moment
+    aggregate shuffles one row per (flag-partition) after map-side
+    partials; output is one row per flag."""
     li = load(spark, sf_dir, "lineitem").select(
         "l_returnflag",
         F.col("l_quantity").cast("long").alias("x"),
@@ -4826,77 +4639,14 @@ def q_agg_spearman(spark: SparkSession, sf_dir: str) -> DataFrame:
         "l_partkey",
         "l_suppkey",
     )
-    # r13 optimization (sf0.1→sf0.2 exponent 1.9): the per-flag window
-    # sorts funnel each flag's FULL row set through one task (3 flags
-    # = 3 tasks regardless of data volume — the superlinear wall the
-    # scale sweep flagged). Above SPEARMAN_WINDOW_MAX_ROWS the ranks
-    # come from two DISTRIBUTED rank passes instead
-    # (functions.distributed_row_number: range-partition +
-    # per-partition offsets, the eqdepth/zorder precedent) with the
-    # flag LEADING the sort, so a flag's ranks occupy a contiguous
-    # block of the global 0-based rank and the per-flag rank is
-    # global − (rows of smaller flags) + 1 — the identical total
-    # order, bit-identical ranks, no single-task sort. The second
-    # pass carries the first pass's rank column, so rx/ry pair with
-    # no re-join. Below the threshold the windows stay (fewer passes,
-    # each task sorts a bounded row set) — the union_merge-style
-    # volume gate, both paths pinned value-identical in
-    # tests/test_quality_stats.py. The gate reads the parquet FOOTER
-    # row count on the driver (r14, ADVICE r13 #2: the old
-    # load(...).count() launched a real aggregate job on every
-    # invocation; this is a ~1 ms file-metadata read, no Spark job).
+    # the gate reads the parquet FOOTER row count on the driver (r14,
+    # ADVICE r13 #2): a ~1 ms file-metadata read, no Spark job
     n_rows = parquet_row_count(sf_dir, "lineitem")
-    if n_rows <= SPEARMAN_WINDOW_MAX_ROWS:
-        flag = W.partitionBy("l_returnflag")
-        tie = [
-            F.col(c)
-            for c in ("l_orderkey", "l_linenumber", "l_partkey", "l_suppkey")
-        ]
-        r = li.select(
-            "l_returnflag",
-            F.row_number()
-            .over(flag.orderBy(F.col("x"), F.col("y"), *tie))
-            .cast("long")
-            .alias("rx"),
-            F.row_number()
-            .over(flag.orderBy(F.col("y"), F.col("x"), *tie))
-            .cast("long")
-            .alias("ry"),
-        )
-    else:
-        from neo_olap_spark.functions import (
-            distributed_row_number,
-            scaled_parts,
-        )
-
-        # width ∝ cluster AND volume (VERDICT r13 item 3: the r13
-        # hardcoded 32 re-created a milder bounded-parallelism wall);
-        # ranks are partition-count-independent, pinned in tests
-        n_parts = scaled_parts(spark, n_rows, floor=32)
-        tie_names = ["l_orderkey", "l_linenumber", "l_partkey", "l_suppkey"]
-        r1 = distributed_row_number(
-            li, ["l_returnflag", "x", "y", *tie_names], n_parts, "gx"
-        ).drop("_total")
-        r2 = distributed_row_number(
-            r1, ["l_returnflag", "y", "x", *tie_names], n_parts, "gy"
-        ).drop("_total")
-        # one row per flag (bounded enum) — the sanctioned scalar fetch
-        counts = {
-            row[0]: row[1]
-            for row in r2.groupBy("l_returnflag").count().collect()
-        }
-        off_col = F.lit(0).cast("long")
-        acc = 0
-        for fval in sorted(counts):
-            off_col = F.when(
-                F.col("l_returnflag") == fval, F.lit(acc)
-            ).otherwise(off_col)
-            acc += counts[fval]
-        r = r2.select(
-            "l_returnflag",
-            (F.col("gx") - off_col + 1).cast("long").alias("rx"),
-            (F.col("gy") - off_col + 1).cast("long").alias("ry"),
-        )
+    tie = ["l_orderkey", "l_linenumber", "l_partkey", "l_suppkey"]
+    r = prefix_sum(
+        li, ["x", "y", *tie], "rx", by="l_returnflag", n_rows=n_rows
+    ).drop("_total")
+    r = prefix_sum(r, ["y", "x", *tie], "ry", by="l_returnflag", n_rows=n_rows)
     rxd = F.col("rx").cast("decimal(38,0)")
     ryd = F.col("ry").cast("decimal(38,0)")
     s = r.groupBy("l_returnflag").agg(

@@ -29,9 +29,9 @@ from contextlib import contextmanager
 
 from neo_olap_spark.checkpoints import latest_round, read_round, write_round
 from neo_olap_spark.functions import (
-    distributed_row_number,
     local_rows_frame,
     loop_checkpoint,
+    prefix_sum,
 )
 from neo_olap_spark.functions import numbered_sample as _numbered_sample
 from neo_olap_spark.graph import edges, symmetrize
@@ -326,7 +326,7 @@ def _teleport_address_space(spark: SparkSession, sf_dir: str):
     metadata-cheap aggregate verifies it, and the map becomes a CLOSED-
     FORM expression: no node table, no join, no cache. If a table ever
     arrives non-dense, callers fall back to
-    functions.distributed_row_number (the distributed rank path).
+    functions.prefix_sum (the distributed rank path).
 
     Returns (n_nodes, node_of_idx: Column -> Column) or (None, None)
     when the density check fails."""
@@ -394,8 +394,8 @@ def _walk_setup(spark: SparkSession, sf_dir: str, n_walkers: int, seed: int):
     if n_nodes is None:
         # non-dense keys: distributed-rank index, join-backed teleport
         tele_nodes = (
-            distributed_row_number(nodes_all, ["node"], idx_name="idx")
-            .select("node", "idx")
+            prefix_sum(nodes_all, ["node"], "idx")
+            .select("node", (F.col("idx") - 1).alias("idx"))
             .persist()
         )
         n_nodes = tele_nodes.count()
@@ -2221,7 +2221,6 @@ def sssp(
     max_rounds: int = SSSP_MAX_ROUNDS,
     n_edges: int | None = None,
     stats: dict | None = None,
-    union_merge: bool | None = None,
 ) -> DataFrame:
     """Distributed multi-source Bellman-Ford with frontier relaxation,
     keyed on (source, node): only entries whose distance IMPROVED last
@@ -2251,10 +2250,10 @@ def sssp(
     the test SFs coalescing never triggers — exit events cluster in
     the tail where state has already shrunk).
 
-    ``union_merge`` picks the per-round merge strategy (None = gate on
-    len(sources) × n_edges vs SSSP_UNION_MERGE_MAX_UNITS); both
-    strategies are exact — the choice is purely a shuffle-volume
-    trade, pinned equivalent in tests/test_graph_algos.py.
+    The per-round merge strategy is gated on len(sources) × n_edges
+    vs SSSP_UNION_MERGE_MAX_UNITS; both strategies are exact — the
+    choice is purely a shuffle-volume trade, pinned equivalent in
+    tests/test_graph_algos.py.
 
     Convergence is checked every HOPS_PER_CHECK relaxations: each
     hop's lazy checkpoint makes the one check job compute every hop's
@@ -2275,10 +2274,7 @@ def sssp(
     13.8 → 18.4 s, jobs 29 → 71)."""
     spark = wsym.sparkSession
     with _graph_loop(spark, n_edges, wsym, aqe=False) as (wsym, n_edges):
-        if union_merge is None:
-            union_merge = (
-                len(sources) * n_edges <= SSSP_UNION_MERGE_MAX_UNITS
-            )
+        union_merge = len(sources) * n_edges <= SSSP_UNION_MERGE_MAX_UNITS
         edges_p = wsym.repartition("src").persist()
         try:
             return _sssp_loop(edges_p, sources, max_rounds, union_merge, stats)

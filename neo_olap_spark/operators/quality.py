@@ -28,7 +28,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
-from neo_olap_spark.functions import distributed_row_number
+from neo_olap_spark.functions import prefix_sum
 from neo_olap_spark.registry import query
 from neo_olap_spark.tables import load
 
@@ -412,14 +412,14 @@ def q_zorder_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.floor("p_retailprice").cast("long") % (1 << ZBITS)).alias("db"),
     )
     z = b.withColumn("zval", F.expr(_interleave_sql("da", "db")))
-    # Distributed curve ranking (functions.distributed_row_number —
-    # the shared range-partition/offset pattern): a bounded-scalar
+    # Distributed curve ranking (functions.prefix_sum, by=None — the
+    # shared range-partition/offset pattern): a bounded-scalar
     # collect instead of the single-task global window that would
     # funnel the table at scale.
-    ranked = distributed_row_number(z, ["zval", "p_partkey"], ZFILES)
+    ranked = prefix_sum(z, ["zval", "p_partkey"], "rk", n_parts=ZFILES)
     filed = ranked.withColumn(
         "file_id",
-        F.floor(F.lit(float(ZFILES)) * F.col("rk") / F.col("_total")),
+        F.floor(F.lit(float(ZFILES)) * (F.col("rk") - 1) / F.col("_total")),
     )
     return (
         filed.groupBy("file_id")

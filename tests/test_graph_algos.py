@@ -9,7 +9,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from neo_olap_spark.functions import distributed_row_number
+from neo_olap_spark.functions import prefix_sum
 from neo_olap_spark.operators.graph_algos import (
     bfs_distances,
     betweenness_sample,
@@ -21,8 +21,8 @@ def test_dense_index_matches_global_rank(spark):
     # distributed two-phase index ≡ the single-task global window
     vals = [(v,) for v in [7, 3, 99, 42, 0, 15, 8, 23, 4, 100, 55]]
     df = spark.createDataFrame(vals, "node long")
-    idx = distributed_row_number(df, ["node"], n_parts=4, idx_name="idx")
-    got = {r.node: r.idx for r in idx.collect()}
+    idx = prefix_sum(df, ["node"], "idx", n_parts=4)
+    got = {r.node: r.idx - 1 for r in idx.collect()}
     want = {v: i for i, (v,) in enumerate(sorted(vals))}
     assert got == want
 
@@ -391,32 +391,28 @@ def test_sssp_raises_when_ceiling_too_low(spark):
         sssp(sym, [0], max_rounds=3)
 
 
-def test_sssp_merge_strategies_agree(spark, sf_dir):
+def test_sssp_merge_strategies_agree(spark, sf_dir, monkeypatch):
     """The size-gated merge strategies (union+groupBy for small state,
     partition-preserving full-outer for large) are a pure
     shuffle-volume trade: identical distances, round for round, on the
-    real derived graph with multiple sources."""
-    from neo_olap_spark.operators.graph_algos import (
-        _weighted_sym_edges,
-        sssp,
-    )
+    real derived graph with multiple sources. Each strategy is forced
+    through SSSP_UNION_MERGE_MAX_UNITS."""
+    from neo_olap_spark.operators import graph_algos as ga
     from neo_olap_spark.tables import load
 
-    wsym = _weighted_sym_edges(spark, sf_dir).localCheckpoint()
+    wsym = ga._weighted_sym_edges(spark, sf_dir).localCheckpoint()
     srcs = [
         r[0]
         for r in load(spark, sf_dir, "customer")
         .select("c_custkey").orderBy("c_custkey").limit(2).collect()
     ]
-    a = {
-        (r.source, r.node): r.dist
-        for r in sssp(wsym, srcs, union_merge=True).collect()
-    }
-    b = {
-        (r.source, r.node): r.dist
-        for r in sssp(wsym, srcs, union_merge=False).collect()
-    }
-    assert a == b
+    got = []
+    for cap in (10**18, 0):  # union+groupBy, then full-outer
+        monkeypatch.setattr(ga, "SSSP_UNION_MERGE_MAX_UNITS", cap)
+        got.append(
+            {(r.source, r.node): r.dist for r in ga.sssp(wsym, srcs).collect()}
+        )
+    assert got[0] == got[1]
 
 
 def test_sssp_per_source_early_exit(spark):

@@ -199,25 +199,24 @@ def test_spearman_tie_chain_is_unique_in_fixtures():
             assert four.duplicated().any()
 
 
-def test_spearman_distributed_rank_path_matches_window_path(spark, sf_dir):
-    """r13 volume gate: above SPEARMAN_WINDOW_MAX_ROWS the ranks come
-    from two distributed rank passes instead of per-flag window sorts
+def test_spearman_distributed_rank_path_matches_window_path(
+    spark, sf_dir, monkeypatch
+):
+    """Volume gate: above functions.WINDOW_MAX_ROWS the ranks come from
+    two distributed prefix_sum passes instead of per-flag window sorts
     (whose single-task-per-flag sort is superlinear at scale). Both
-    paths realize the SAME total order, so every output row must be
+    forms realize the SAME total order, so every output row must be
     bit-identical — forced here by dropping the gate to 0."""
+    from neo_olap_spark import functions
     from neo_olap_spark.operators import analytics
 
     window_out = sorted(
         map(tuple, analytics.q_agg_spearman(spark, sf_dir).collect())
     )
-    saved = analytics.SPEARMAN_WINDOW_MAX_ROWS
-    analytics.SPEARMAN_WINDOW_MAX_ROWS = 0
-    try:
-        dist_out = sorted(
-            map(tuple, analytics.q_agg_spearman(spark, sf_dir).collect())
-        )
-    finally:
-        analytics.SPEARMAN_WINDOW_MAX_ROWS = saved
+    monkeypatch.setattr(functions, "WINDOW_MAX_ROWS", 0)
+    dist_out = sorted(
+        map(tuple, analytics.q_agg_spearman(spark, sf_dir).collect())
+    )
     assert window_out == dist_out
 
 
@@ -225,22 +224,81 @@ def test_spearman_distributed_rank_path_matches_window_path(spark, sf_dir):
     "key", ["q_agg_gini", "q_agg_weighted_median", "q_agg_pareto"]
 )
 def test_partitioned_window_family_distributed_path_matches(
-    spark, sf_dir, key
+    spark, sf_dir, key, monkeypatch
 ):
-    """r14 (VERDICT r13 item 2): the spearman volume gate generalized
-    to the per-group window family. Above PARTITIONED_WINDOW_MAX_ROWS
-    the rank (gini) / running sum (weighted_median, pareto) comes from
-    the distributed two-pass form; integer/decimal arithmetic over the
-    same total order makes every output row bit-identical — forced
-    here by dropping the gate to 0."""
+    """The spearman volume gate covers the per-group window family.
+    Above functions.WINDOW_MAX_ROWS the rank (gini) / running sum
+    (weighted_median, pareto) comes from the distributed two-pass
+    form; integer/decimal arithmetic over the same total order makes
+    every output row bit-identical — forced here by dropping the gate
+    to 0."""
+    from neo_olap_spark import functions
     from neo_olap_spark.operators import analytics
 
     fn = getattr(analytics, key)
     window_out = sorted(map(tuple, fn(spark, sf_dir).collect()))
-    saved = analytics.PARTITIONED_WINDOW_MAX_ROWS
-    analytics.PARTITIONED_WINDOW_MAX_ROWS = 0
-    try:
-        dist_out = sorted(map(tuple, fn(spark, sf_dir).collect()))
-    finally:
-        analytics.PARTITIONED_WINDOW_MAX_ROWS = saved
+    monkeypatch.setattr(functions, "WINDOW_MAX_ROWS", 0)
+    dist_out = sorted(map(tuple, fn(spark, sf_dir).collect()))
     assert window_out == dist_out
+
+
+def test_prefix_sum_forms_agree(spark, monkeypatch):
+    """functions.prefix_sum: the window form, the forced-distributed
+    form and a plain-Python running sum agree on the running sum and
+    the group total, for long and decimal(38,0) values and for the
+    rank (value 1), over a descending order key with duplicates
+    broken by a tie column, with range partitions that span group
+    boundaries; by=None is the global 0-based rank + 1."""
+    from decimal import Decimal
+
+    from pyspark.sql import functions as F
+
+    from neo_olap_spark import functions
+
+    sizes = {"a": 7, "b": 13, "c": 10}
+    rows, t = [], 0
+    for g, n in sizes.items():
+        for i in range(n):
+            t += 1
+            rows.append((g, i % 4, t, t * 7 % 11 - 3, Decimal(t * 10**20)))
+    df = spark.createDataFrame(
+        rows, "g string, k long, t long, v long, dv decimal(38,0)"
+    )
+    order = [F.col("k").desc(), "t"]
+    n_parts = 4
+    pids = (
+        df.repartitionByRange(n_parts, "g", *order)
+        .groupBy(F.spark_partition_id().alias("pid"))
+        .agg(F.countDistinct("g").alias("n_g"))
+        .collect()
+    )
+    assert any(r.n_g > 1 for r in pids), "no partition spans a group boundary"
+
+    for value, val in (
+        ("v", lambda r: r[3]), ("dv", lambda r: r[4]), (1, lambda r: 1)
+    ):
+        cum, run = {}, {}
+        for r in sorted(rows, key=lambda r: (r[0], -r[1], r[2])):
+            run[r[0]] = run.get(r[0], 0) + val(r)
+            cum[r[2]] = run[r[0]]
+        # once every row is in, run holds each group's total
+        want = {r[2]: (cum[r[2]], run[r[0]]) for r in rows}
+        got = []
+        for gate in (functions.WINDOW_MAX_ROWS, 0):
+            monkeypatch.setattr(functions, "WINDOW_MAX_ROWS", gate)
+            out = functions.prefix_sum(
+                df, order, "cs", value=value, by="g",
+                n_rows=len(rows), n_parts=n_parts,
+            )
+            got.append((
+                out.schema["cs"].dataType, out.schema["_total"].dataType,
+                {r.t: (r.cs, r["_total"]) for r in out.collect()},
+            ))
+        assert got[0] == got[1]
+        assert got[0][2] == want
+
+    ranked = functions.prefix_sum(df, ["k", "t"], "rk", n_parts=n_parts)
+    by_rank = sorted(rows, key=lambda r: (r[1], r[2]))
+    assert {r.t: (r.rk, r["_total"]) for r in ranked.collect()} == {
+        r[2]: (i + 1, len(rows)) for i, r in enumerate(by_rank)
+    }
