@@ -1,4 +1,5 @@
-"""Graph views over the star schema.
+"""The derived graph over the star schema, defined once for Spark and
+for the DuckDB oracles.
 
 The reference's data model is an untyped, undirected edge list accessed
 by dense long IDs (SURVEY.md §1.1; Runner.java:40-56,
@@ -15,6 +16,10 @@ RandomWalkingRunner.java:21) maps to symmetrizing the edge list once.
 ID offsets keep the node-ID space disjoint and dense-ish, preserving
 the reference's "address by long ID" model (Runner.java:55-56) so ID
 range predicates (OlapRunner.java:41-43) stay meaningful.
+
+Every oracle that reads the derived graph composes the ``ORACLE_*``
+fragments below instead of re-typing its SQL, so the edge, node and
+weighted-edge definitions exist once per engine, in this module.
 """
 
 from __future__ import annotations
@@ -22,7 +27,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from neo_olap_spark.tables import load
+from neo_olap_spark.tables import load, parquet_row_count
 
 # Offsets keep the three node-id ranges disjoint. 2^40 apart: a table
 # would need a trillion rows before ranges could collide (1e6-style
@@ -66,14 +71,50 @@ def edges_raw(spark: SparkSession, sf_dir: str) -> DataFrame:
     return customer_order_edges(spark, sf_dir).unionAll(op)
 
 
+def all_nodes(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Every node id of the derived graph (customers, orders, parts).
+    Duplicate-free by construction: keys are unique within each table
+    and the three offset ranges are disjoint — no distinct needed."""
+    c = load(spark, sf_dir, "customer").select(F.col("c_custkey").alias("node"))
+    o = load(spark, sf_dir, "orders").select(
+        (F.lit(ORDER_OFFSET) + F.col("o_orderkey")).alias("node")
+    )
+    p = load(spark, sf_dir, "part").select((F.lit(PART_OFFSET) + F.col("p_partkey")).alias("node"))
+    return c.unionAll(o).unionAll(p)
+
+
+def weighted_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Weighted edge list over the derived graph: customer→order
+    edges carry weight 1; order→part edges carry the order's MIN line
+    quantity for that part (1..50, integral by construction) — a
+    deterministic per-edge cost with real variance. Returned
+    directed; callers symmetrize."""
+    o = load(spark, sf_dir, "orders").select(
+        F.col("o_custkey").alias("src"),
+        (F.lit(ORDER_OFFSET) + F.col("o_orderkey")).alias("dst"),
+        F.lit(1).cast("long").alias("w"),
+    )
+    li = (
+        load(spark, sf_dir, "lineitem")
+        .groupBy("l_orderkey", "l_partkey")
+        .agg(F.min("l_quantity").cast("long").alias("w"))
+        .select(
+            (F.lit(ORDER_OFFSET) + F.col("l_orderkey")).alias("src"),
+            (F.lit(PART_OFFSET) + F.col("l_partkey")).alias("dst"),
+            "w",
+        )
+    )
+    return o.unionAll(li)
+
+
 def edge_count_estimate(spark: SparkSession, sf_dir: str) -> int:
     """Cheap upper bound on the symmetrized edge count, for sizing
-    iteration-loop shuffles: 2 × (|orders| + |lineitem|). count() on a
-    bare parquet scan is answered from row-group metadata — no data
-    read, no shuffle (the exact count would cost the order→part
-    distinct, a full shuffle, before the loop even starts)."""
-    n_o = load(spark, sf_dir, "orders").count()
-    n_l = load(spark, sf_dir, "lineitem").count()
+    iteration-loop shuffles: 2 × (|orders| + |lineitem|), read from
+    the parquet footers (tables.parquet_row_count): no Spark job, and
+    no order→part distinct (the exact count would cost a full shuffle
+    before the loop even starts)."""
+    n_o = parquet_row_count(sf_dir, "orders")
+    n_l = parquet_row_count(sf_dir, "lineitem")
     return 2 * (n_o + n_l)
 
 
@@ -95,7 +136,10 @@ def degrees(e: DataFrame) -> DataFrame:
     return symmetrize(e).groupBy(F.col("src").alias("node_id")).agg(F.count("*").alias("degree"))
 
 
-# DuckDB oracle fragments reused by several registered queries.
+# DuckDB oracle fragments: CTE bodies without a leading WITH, so they
+# compose into any WITH or WITH RECURSIVE list.
+
+# the directed edge list (edges() above)
 ORACLE_EDGES = f"""
     SELECT o_custkey AS src, {ORDER_OFFSET} + o_orderkey AS dst FROM orders
     UNION ALL
@@ -103,7 +147,33 @@ ORACLE_EDGES = f"""
     FROM (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem)
 """
 
+# customer→order edges weigh 1, order→part edges the order's min line
+# quantity for the part (weighted_edges above)
+ORACLE_WEIGHTED_EDGES = f"""
+    SELECT o_custkey AS src, {ORDER_OFFSET} + o_orderkey AS dst,
+           CAST(1 AS BIGINT) AS w
+    FROM orders
+    UNION ALL
+    SELECT {ORDER_OFFSET} + l_orderkey, {PART_OFFSET} + l_partkey,
+           CAST(MIN(l_quantity) AS BIGINT)
+    FROM lineitem GROUP BY 1, 2
+"""
+
+# every node id: customers, orders, parts (all_nodes above)
+ORACLE_NODES = f"""
+    SELECT c_custkey AS node FROM customer
+    UNION ALL SELECT {ORDER_OFFSET} + o_orderkey FROM orders
+    UNION ALL SELECT {PART_OFFSET} + p_partkey FROM part
+"""
+
+
+# symmetrize() over a CTE named e, plain and weighted
+ORACLE_SYM = "SELECT src, dst FROM e UNION ALL SELECT dst AS src, src AS dst FROM e"
+ORACLE_WEIGHTED_SYM = (
+    "SELECT src, dst, w FROM e UNION ALL SELECT dst AS src, src AS dst, w FROM e"
+)
+
 ORACLE_SYM_EDGES = f"""
     WITH e AS ({ORACLE_EDGES}),
-    sym AS (SELECT src, dst FROM e UNION ALL SELECT dst AS src, src AS dst FROM e)
+    sym AS ({ORACLE_SYM})
 """

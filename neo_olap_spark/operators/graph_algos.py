@@ -10,13 +10,17 @@ it lazily checkpoints each round's state through ``loop_checkpoint``,
 runs the convergence action every ``check_every`` rounds (or one
 materializing count for fixed-round loops), and, given a
 ``ckpt_dir``, snapshots every round to parquet and resumes from it.
-``_graph_loop`` sets each loop's shuffle width and AQE. All randomness
-is ``xxhash64(…, seed)`` on stable keys, so runs are deterministic
-and retry-stable (SURVEY.md §7.3).
+``_graph_loop`` sets each loop's shuffle width and AQE and owns its
+edge cache: the one src-partitioned, persisted edge relation every
+round joins against, released on exit. All randomness is
+``xxhash64(…, seed)`` on stable keys, so runs are deterministic and
+retry-stable (SURVEY.md §7.3). The DuckDB oracles compose the derived
+graph's SQL from neo_olap_spark.graph's ``ORACLE_*`` fragments.
 
-Scale notes: each BFS/walk step is one shuffle keyed on node/walker id;
-the edge list is persisted once and reused; visited/frontier sets stay
-distributed (no driver collect besides scalar counts).
+Scale notes: each BFS/walk step is one shuffle keyed on node/walker
+id; the edge list is partitioned and persisted once and reused;
+visited/frontier sets stay distributed (no driver collect besides
+scalar counts).
 """
 
 from __future__ import annotations
@@ -34,7 +38,21 @@ from neo_olap_spark.functions import (
     prefix_sum,
 )
 from neo_olap_spark.functions import numbered_sample as _numbered_sample
-from neo_olap_spark.graph import edges, symmetrize
+from neo_olap_spark import graph
+from neo_olap_spark.graph import (
+    ORACLE_EDGES,
+    ORACLE_NODES,
+    ORACLE_SYM,
+    ORACLE_SYM_EDGES,
+    ORACLE_WEIGHTED_EDGES,
+    ORACLE_WEIGHTED_SYM,
+    ORDER_OFFSET as _ORD,
+    PART_OFFSET as _PRT,
+    all_nodes,
+    edges,
+    symmetrize,
+    weighted_edges,
+)
 from neo_olap_spark.registry import query
 from neo_olap_spark.tables import load
 
@@ -47,7 +65,7 @@ def _graph_loop(
     *,
     aqe: bool,
 ):
-    """Session settings and edge-count hint for one graph loop.
+    """Session settings and the edge cache of one graph loop.
 
     Shuffle partitions are sized to the loop's ACTUAL data volume:
     iterative loops shuffle the same (known-size) tables dozens of
@@ -55,7 +73,10 @@ def _graph_loop(
     arbitrary queries) makes every micro-iteration pay full
     task-scheduling overhead — measured 1.6× on PageRank/CC at sf0.1.
     ~2M rows per partition keeps partitions ∝ data, so a 1e12-edge
-    graph still fans out to thousands of reducers.
+    graph still fans out to thousands of reducers. ``n_edges`` is the
+    cheap metadata estimate (graph.edge_count_estimate) on every
+    registered query key; ``n_edges=None`` keeps the session's width
+    and runs no job.
 
     ``aqe=False`` disables AQE for the loop: its per-stage re-plan
     round-trips dominate when each step touches a few hundred rows
@@ -63,37 +84,29 @@ def _graph_loop(
     whose shape AQE could never improve. BFS-shaped loops (BFS,
     betweenness, k-core) pass ``aqe=True`` and keep the session's
     setting: with AQE off, ``q_shortest_path_len`` ran fewer jobs but
-    2.4× the tasks and was slower warm. Both settings are restored on
-    exit, so large one-shot queries keep AQE's skew/coalesce benefits.
+    2.4× the tasks and was slower warm.
 
-    ``n_edges`` is normally the cheap metadata estimate
-    (graph.edge_count_estimate) — every registered query key passes
-    it. The None fallback persists ``edge_frame`` BEFORE counting, so
-    the loop's own first action reuses the count's materialization
-    instead of rebuilding the upstream edge shuffle twice; the cache
-    is released on exit even if the loop body raises. On that path the
-    pre-repartition edge frame stays cached beside the loop's
-    repartitioned copy — a bounded double-cache no registered key
-    takes.
-
-    Yields (edge_frame, n_edges) with the count resolved.
-    """
-    cached = None
-    if n_edges is None:
-        cached = edge_frame = edge_frame.persist()
-        n_edges = cached.count()
-    confs = {
-        "spark.sql.shuffle.partitions": str(
+    Given ``edge_frame``, yields it hash-partitioned on src and
+    persisted — the one partitioned edge relation every round joins
+    against, so each round shuffles only the loop state — else yields
+    None. On exit, the error path included, the cache is released and
+    both settings are restored, so large one-shot queries keep AQE's
+    skew/coalesce benefits."""
+    confs = {}
+    if n_edges is not None:
+        confs["spark.sql.shuffle.partitions"] = str(
             max(8, min(10_000, (n_edges + 2_000_000 - 1) // 2_000_000))
         )
-    }
     if not aqe:
         confs["spark.sql.adaptive.enabled"] = "false"
     prev = {k: spark.conf.get(k) for k in confs}
     for k, v in confs.items():
         spark.conf.set(k, v)
+    cached = None
     try:
-        yield edge_frame, n_edges
+        if edge_frame is not None:
+            cached = edge_frame.repartition("src").persist()
+        yield cached
     finally:
         for k, v in prev.items():
             spark.conf.set(k, v)
@@ -248,19 +261,11 @@ def bfs_distances(
     return visited.select("tag", "node", "dist")
 
 
-from neo_olap_spark.graph import ORDER_OFFSET as _ORD, PART_OFFSET as _PRT  # noqa: E402
-
-
 @query(
     "q_shortest_path_len",
     oracle=f"""
-    WITH RECURSIVE e AS (
-      SELECT o_custkey AS src, {_ORD} + o_orderkey AS dst FROM orders
-      UNION ALL
-      SELECT {_ORD} + l_orderkey AS src, {_PRT} + l_partkey AS dst
-      FROM (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem)
-    ),
-    sym AS (SELECT src, dst FROM e UNION ALL SELECT dst AS src, src AS dst FROM e),
+    WITH RECURSIVE e AS ({ORACLE_EDGES}),
+    sym AS ({ORACLE_SYM}),
     srcs AS (SELECT c_custkey AS src FROM customer WHERE c_custkey < 3),
     bfs AS (
       SELECT src AS tag, src AS node, 0 AS dist FROM srcs
@@ -277,44 +282,27 @@ def q_shortest_path_len(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Shortest-path distance from 3 source customers to every node
     within 4 hops (R2's deterministic core; oracle = DuckDB recursive
     CTE). Level-synchronous BFS: the edge list is hash-partitioned on
-    src ONCE and persisted, so each level shuffles only the frontier."""
-    from neo_olap_spark.graph import edge_count_estimate
-
-    sym0 = symmetrize(edges(spark, sf_dir))
-    with _graph_loop(spark, edge_count_estimate(spark, sf_dir), aqe=True):
-        sym = sym0.repartition("src").persist()
+    src ONCE and persisted, so each level shuffles only the frontier;
+    the levels are checkpointed, so the cache is released on return."""
+    with _graph_loop(
+        spark, graph.edge_count_estimate(spark, sf_dir),
+        symmetrize(edges(spark, sf_dir)), aqe=True,
+    ) as sym:
         sources = (
             load(spark, sf_dir, "customer")
             .where(F.col("c_custkey") < 3)
             .select(F.col("c_custkey").alias("tag"), F.col("c_custkey").alias("node"))
         )
-        out = bfs_distances(sym, sources, max_depth=4).select(
+        return bfs_distances(sym, sources, max_depth=4).select(
             F.col("tag").alias("src_id"),
             F.col("node").alias("node_id"),
             F.col("dist").cast("long").alias("dist"),
         )
-        # BFS levels are checkpointed — the edge cache is dead weight
-        sym.unpersist()
-        return out
 
 
 # ---------------------------------------------------------------------------
 # Random-walk visit counting (R1)
 # ---------------------------------------------------------------------------
-
-
-def all_nodes(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Every node id of the derived graph (customers, orders, parts).
-    Duplicate-free by construction: keys are unique within each table
-    and the three offset ranges are disjoint — no distinct needed."""
-    from neo_olap_spark.graph import ORDER_OFFSET, PART_OFFSET
-
-    c = load(spark, sf_dir, "customer").select(F.col("c_custkey").alias("node"))
-    o = load(spark, sf_dir, "orders").select(
-        (F.lit(ORDER_OFFSET) + F.col("o_orderkey")).alias("node")
-    )
-    p = load(spark, sf_dir, "part").select((F.lit(PART_OFFSET) + F.col("p_partkey")).alias("node"))
-    return c.unionAll(o).unionAll(p)
 
 
 def _teleport_address_space(spark: SparkSession, sf_dir: str):
@@ -330,8 +318,6 @@ def _teleport_address_space(spark: SparkSession, sf_dir: str):
 
     Returns (n_nodes, node_of_idx: Column -> Column) or (None, None)
     when the density check fails."""
-    from neo_olap_spark.graph import ORDER_OFFSET, PART_OFFSET
-
     tagged = None
     for t, key in (("customer", "c_custkey"), ("orders", "o_orderkey"), ("part", "p_partkey")):
         part = load(spark, sf_dir, t).select(F.lit(t).alias("t"), F.col(key).alias("k"))
@@ -349,8 +335,8 @@ def _teleport_address_space(spark: SparkSession, sf_dir: str):
     def node_of_idx(ix):
         return (
             F.when(ix < nc, ix)
-            .when(ix < nc + no, F.lit(ORDER_OFFSET) + ix - nc)
-            .otherwise(F.lit(PART_OFFSET) + ix - nc - no)
+            .when(ix < nc + no, F.lit(_ORD) + ix - nc)
+            .otherwise(F.lit(_PRT) + ix - nc - no)
         )
 
     return nc + no + np_, node_of_idx
@@ -414,6 +400,21 @@ def _walk_setup(spark: SparkSession, sf_dir: str, n_walkers: int, seed: int):
     return adj, (tele_nodes, node_of_idx), n_nodes, walkers
 
 
+def _walk_step_cols(n_nodes: int, seed: int, node_of_idx=None):
+    """The columns of one walk step over (walker_id, step, nbrs) rows:
+    (next step, neighbor pick, teleport index). The pick hashes
+    (walker, step, seed) into the sorted neighbor array; given the
+    dense ``node_of_idx``, a dead end (empty nbrs) picks its teleport
+    node instead."""
+    nstep = F.col("step") + 1
+    h = F.xxhash64(F.col("walker_id"), nstep, F.lit(seed))
+    pick = F.element_at("nbrs", (F.pmod(h, F.size("nbrs")) + 1).cast("int"))
+    tele_idx = F.pmod(h, F.lit(n_nodes))
+    if node_of_idx is not None:
+        pick = F.when(F.size("nbrs") > 0, pick).otherwise(node_of_idx(tele_idx))
+    return nstep, pick, tele_idx
+
+
 def _advance_walkers(
     frontier: DataFrame,
     adj: DataFrame,
@@ -432,21 +433,12 @@ def _advance_walkers(
     codegen cache is hit 15 of 16 times. The pick depends only on
     (walker_id, step, seed), so any resumption replays identically."""
     tele_nodes, node_of_idx = tele
-    nstep = F.col("step") + 1
-    h = F.xxhash64(F.col("walker_id"), nstep, F.lit(seed))
-    pick = F.element_at("nbrs", (F.pmod(h, F.size("nbrs")) + 1).cast("int"))
-    tele_idx = F.pmod(h, F.lit(n_nodes))
+    nstep, pick, tele_idx = _walk_step_cols(n_nodes, seed, node_of_idx)
     joined = adj.join(F.broadcast(frontier), adj.src == frontier.node, "inner")
     if node_of_idx is not None:
         # dense keys: dead ends (empty nbrs) teleport via a pure
         # expression — the whole step is ONE broadcast join, one scan
-        return joined.select(
-            "walker_id",
-            F.when(F.size("nbrs") > 0, pick)
-            .otherwise(node_of_idx(tele_idx))
-            .alias("node"),
-            nstep.alias("step"),
-        )
+        return joined.select("walker_id", pick.alias("node"), nstep.alias("step"))
     # non-dense fallback: teleport needs the index join
     stepped = joined.where(F.size("nbrs") > 0).select(
         "walker_id", pick.alias("node"), nstep.alias("step")
@@ -484,8 +476,8 @@ def _advance_walkers_bcast(
     seed: int,
 ) -> DataFrame:
     """One walk step with the ADJACENCY table as the broadcast build
-    side (dense-key path only): the identical pick/teleport expressions
-    as _advance_walkers, but the streamed side is the walker frontier
+    side (dense-key path only): the same _walk_step_cols columns as
+    _advance_walkers, but the streamed side is the walker frontier
     (n_walkers rows) instead of the full adjacency table — so a step
     touches n_walkers rows, not |V|. The walked node is appended to a
     carried ``path`` array, which keeps every frontier referenced
@@ -493,11 +485,7 @@ def _advance_walkers_bcast(
     whole n_steps walk plus the final explode+count runs as a single
     job in which Spark's exchange reuse builds the adjacency broadcast
     once."""
-    nstep = F.col("step") + 1
-    h = F.xxhash64(F.col("walker_id"), nstep, F.lit(seed))
-    pick = F.element_at("nbrs", (F.pmod(h, F.size("nbrs")) + 1).cast("int"))
-    tele_idx = F.pmod(h, F.lit(n_nodes))
-    new_node = F.when(F.size("nbrs") > 0, pick).otherwise(node_of_idx(tele_idx))
+    nstep, new_node, _ = _walk_step_cols(n_nodes, seed, node_of_idx)
     return (
         frontier.join(F.broadcast(adj), frontier.node == adj.src, "inner")
         .select(
@@ -547,9 +535,7 @@ def random_walk_counts(
     step, seed), so an interrupted-and-resumed walk is bit-identical
     to an uninterrupted one. Returns (node_id, visits).
     """
-    from neo_olap_spark.graph import edge_count_estimate
-
-    n_edges = edge_count_estimate(spark, sf_dir)
+    n_edges = graph.edge_count_estimate(spark, sf_dir)
     with _graph_loop(spark, n_edges, aqe=False):
         adj, tele, n_nodes, walkers = _walk_setup(spark, sf_dir, n_walkers, seed)
 
@@ -666,24 +652,15 @@ def _random_walk_oracle(n_walkers: int, n_steps: int, seed: int) -> str:
              (SELECT COUNT(*) FROM orders) AS no_,
              (SELECT COUNT(*) FROM part) AS np
     ),
-    nodes AS (
-      SELECT c_custkey AS node FROM customer
-      UNION ALL SELECT {_ORD} + o_orderkey FROM orders
-      UNION ALL SELECT {_PRT} + p_partkey FROM part
-    ),
+    nodes AS ({ORACLE_NODES}),
     selh AS ({sel}),
     walkers AS (
       SELECT CAST(ROW_NUMBER() OVER (ORDER BY sh) - 1 AS INT) AS walker_id,
              node
       FROM (SELECT node, sh FROM selh ORDER BY sh LIMIT {n_walkers})
     ),
-    e AS (
-      SELECT o_custkey AS src, {_ORD} + o_orderkey AS dst FROM orders
-      UNION ALL
-      SELECT {_ORD} + l_orderkey AS src, {_PRT} + l_partkey AS dst
-      FROM lineitem
-    ),
-    sym AS (SELECT src, dst FROM e UNION ALL SELECT dst, src FROM e),
+    e AS ({ORACLE_EDGES}),
+    sym AS ({ORACLE_SYM}),
     adj AS (
       SELECT src, list(dst ORDER BY dst) AS nbrs
       FROM (SELECT DISTINCT src, dst FROM sym) GROUP BY src
@@ -734,11 +711,10 @@ def betweenness_sample(
     interior increment, computed by joins (SURVEY.md §2.1 R2).
     Endpoints are excluded (OlapRunner.java:52 skips first/last).
     """
-    from neo_olap_spark.graph import edge_count_estimate
-
-    sym0 = symmetrize(edges(spark, sf_dir))
-    with _graph_loop(spark, edge_count_estimate(spark, sf_dir), aqe=True):
-        sym = sym0.repartition("src").persist()
+    with _graph_loop(
+        spark, graph.edge_count_estimate(spark, sf_dir),
+        symmetrize(edges(spark, sf_dir)), aqe=True,
+    ) as sym:
         nodes = all_nodes(spark, sf_dir).distinct()
 
         # Deterministic pair sampling: lowest md5-hex ranks with
@@ -768,10 +744,8 @@ def betweenness_sample(
             .localCheckpoint()
         )
 
-        result = betweenness_pair_counts(sym, pairs, max_depth)
-        # fwd/bwd BFS outputs are checkpointed; drop the edge cache
-        sym.unpersist()
-        return result
+        # fwd/bwd BFS outputs are checkpointed: the edge cache goes on return
+        return betweenness_pair_counts(sym, pairs, max_depth)
 
 
 def betweenness_pair_counts(
@@ -869,18 +843,9 @@ def _betweenness_oracle(n_pairs: int, max_depth: int, seed: int) -> str:
         return ",\n    ".join(parts)
 
     return f"""
-    WITH e AS (
-      SELECT o_custkey AS src, {_ORD} + o_orderkey AS dst FROM orders
-      UNION ALL
-      SELECT {_ORD} + l_orderkey AS src, {_PRT} + l_partkey AS dst
-      FROM (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem)
-    ),
-    sym AS (SELECT src, dst FROM e UNION ALL SELECT dst AS src, src AS dst FROM e),
-    nodes AS (
-      SELECT c_custkey AS node FROM customer
-      UNION ALL SELECT {_ORD} + o_orderkey FROM orders
-      UNION ALL SELECT {_PRT} + p_partkey FROM part
-    ),
+    WITH e AS ({ORACLE_EDGES}),
+    sym AS ({ORACLE_SYM}),
+    nodes AS ({ORACLE_NODES}),
     an AS (
       SELECT rn AS pair_id, node FROM (
         SELECT node, ROW_NUMBER() OVER (
@@ -962,12 +927,14 @@ def pagerank(
     body serves both keys, so the oracle checks the expressions both
     variants run.
 
-    Scale shape: dangling nodes get SELF-LOOPS (their mass returns to
-    them — the standard dangling treatment that needs no per-iteration
-    driver scalar), the rank state carries its degree (no extra join),
-    and the edge list is hash-partitioned on src once — each iteration
-    is exactly ONE shuffle (the contribution groupBy); the join back to
-    the co-partitioned state adds no exchange. Total rank is exactly
+    Scale shape: a dangling node keeps its own mass (the standard
+    self-loop treatment, needing no per-iteration driver scalar) as a
+    term of the rank update: on a symmetrized edge list a degree-0
+    node has no in-edges, so its in-mass is exactly rank / 1.0. The
+    rank state carries its degree (no extra join), and the edge list
+    is hash-partitioned on src once — each iteration is exactly ONE
+    shuffle (the contribution groupBy); the join back to the
+    co-partitioned state adds no exchange. Total rank is exactly
     n_nodes every iteration (asserted in tests).
 
     ``ckpt_dir`` snapshots the rank state (teleport column included)
@@ -979,8 +946,8 @@ def pagerank(
     one.
     """
     spark = sym_edges.sparkSession
-    with _graph_loop(spark, n_edges, sym_edges, aqe=False) as (sym_edges, n_edges):
-        deg0 = sym_edges.groupBy("src").agg(F.count("*").alias("deg"))
+    with _graph_loop(spark, n_edges, sym_edges, aqe=False) as edges_p:
+        deg0 = edges_p.groupBy("src").agg(F.count("*").alias("deg"))
         base = (
             nodes.join(deg0, nodes.node == deg0.src, "left")
             .select("node", F.coalesce("deg", F.lit(0)).alias("deg"))
@@ -1003,16 +970,12 @@ def pagerank(
                 F.col("node").isin([int(s) for s in seeds]),
                 F.lit(float(n_nodes) / len(seeds)),
             ).otherwise(F.lit(0.0))
-        self_loops = base.where(F.col("deg") == 0).select(
-            F.col("node").alias("src"), F.col("node").alias("dst")
-        )
-        edges_p = sym_edges.unionByName(self_loops).repartition("src").persist()
         state = base.select(
-            "node",
-            F.greatest("deg", F.lit(1)).alias("deg"),
-            tele.alias("tele"),
-            tele.alias("rank"),
+            "node", "deg", tele.alias("tele"), tele.alias("rank")
         ).transform(loop_checkpoint)
+        in_mass = F.coalesce(
+            "in_mass", F.when(F.col("deg") == 0, F.col("rank")).otherwise(F.lit(0.0))
+        )
 
         def power_step(s, _):
             # shuffle_hash: build on the small state side — SMJ would
@@ -1026,26 +989,21 @@ def pagerank(
                 .agg(F.sum("c").alias("in_mass"))
             )
             yield "state", (
-                st.select("node", "deg", "tele")
-                .join(contrib.hint("shuffle_hash"), "node", "left")
-                .select(
+                st.join(contrib.hint("shuffle_hash"), "node", "left").select(
                     "node",
                     "deg",
                     "tele",
                     (
-                        F.lit(1.0 - damping) * F.col("tele")
-                        + F.lit(damping) * F.coalesce("in_mass", F.lit(0.0))
+                        F.lit(1.0 - damping) * F.col("tele") + F.lit(damping) * in_mass
                     ).alias("rank"),
                 )
             )
 
         # power iteration has no convergence test (n_iters is fixed),
         # so all n_iters states materialize inside _iterate's single
-        # count — run before the unpersists below, since the chain
-        # reads the cached base/edge frames
+        # count — run before the caches it reads are released
         state = _iterate({"state": state}, power_step, n_iters, ckpt_dir=ckpt_dir)[0]["state"]
         base.unpersist()
-        edges_p.unpersist()
         return state.select(F.col("node").alias("node_id"), F.round("rank", 6).alias("rank"))
 
 
@@ -1056,7 +1014,8 @@ def _pagerank_oracle(
     FIXPOINT is not CTE-expressible, but q_pagerank runs a FIXED
     n_iters — so, like the betweenness oracle, the recurrence unrolls
     into plain per-iteration CTEs (rank join edges, groupBy dst,
-    damped update; dangling nodes get the same self-loops). Verified
+    damped update; dangling nodes get self-loops, the SQL form of the
+    Spark loop's dangling term). Verified
     drift between the engines' summation orders after 8 iterations is
     ~1e-13 — six rounded decimals match exactly at every tested SF.
 
@@ -1080,18 +1039,9 @@ def _pagerank_oracle(
         )
     parts = [
         f"""
-    e AS (
-      SELECT o_custkey AS src, {_ORD} + o_orderkey AS dst FROM orders
-      UNION ALL
-      SELECT {_ORD} + l_orderkey AS src, {_PRT} + l_partkey AS dst
-      FROM (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem)
-    ),
-    sym AS (SELECT src, dst FROM e UNION ALL SELECT dst AS src, src AS dst FROM e),
-    nodes AS (
-      SELECT c_custkey AS node FROM customer
-      UNION ALL SELECT {_ORD} + o_orderkey FROM orders
-      UNION ALL SELECT {_PRT} + p_partkey FROM part
-    ),{seeds_cte}
+    e AS ({ORACLE_EDGES}),
+    sym AS ({ORACLE_SYM}),
+    nodes AS ({ORACLE_NODES}),{seeds_cte}
     dg AS (SELECT src AS node, COUNT(*) AS d FROM sym GROUP BY src),
     base AS (SELECT n.node, COALESCE(dg.d, 0) AS d
              FROM nodes n LEFT JOIN dg ON n.node = dg.node),
@@ -1125,12 +1075,10 @@ def q_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     Hash-checked against the unrolled fixed-iteration DuckDB twin
     (_pagerank_oracle); invariants stay in tests: total rank ≈
     n_nodes, determinism, hubs outrank leaves on a star fixture."""
-    from neo_olap_spark.graph import edge_count_estimate
-
     sym = symmetrize(edges(spark, sf_dir))
     return pagerank(
         sym, all_nodes(spark, sf_dir), n_iters=8,
-        n_edges=edge_count_estimate(spark, sf_dir),
+        n_edges=graph.edge_count_estimate(spark, sf_dir),
     )
 
 
@@ -1156,8 +1104,6 @@ def q_pagerank_personalized(spark: SparkSession, sf_dir: str) -> DataFrame:
     identical: one edge-keyed shuffle per iteration, seeds broadcast
     as a literal IN-list (|S| is always tiny — it's a query parameter,
     not data)."""
-    from neo_olap_spark.graph import edge_count_estimate
-
     seeds = [
         int(r[0])
         for r in load(spark, sf_dir, "customer")
@@ -1176,7 +1122,7 @@ def q_pagerank_personalized(spark: SparkSession, sf_dir: str) -> DataFrame:
     sym = symmetrize(edges(spark, sf_dir))
     return pagerank(
         sym, nodes, n_iters=8,
-        n_edges=edge_count_estimate(spark, sf_dir),
+        n_edges=graph.edge_count_estimate(spark, sf_dir),
         seeds=seeds,
     )
 
@@ -1197,8 +1143,7 @@ def connected_components(
     counted every HOPS_PER_CHECK rounds.
     """
     spark = sym_edges.sparkSession
-    with _graph_loop(spark, n_edges, sym_edges, aqe=False) as (sym_edges, n_edges):
-        edges_p = sym_edges.repartition("src").persist()
+    with _graph_loop(spark, n_edges, sym_edges, aqe=False) as edges_p:
         labels = nodes.select("node", F.col("node").alias("label")).transform(
             loop_checkpoint
         )
@@ -1234,7 +1179,6 @@ def connected_components(
             check_every=HOPS_PER_CHECK,
             done=lambda s, _: s["improved"].count() == 0,
         )
-        edges_p.unpersist()
         if stats is not None:
             stats["rounds"] = rounds
         if not converged:
@@ -1261,19 +1205,9 @@ def _cc_oracle(n_rounds: int) -> str:
     expansion would otherwise be exponential."""
     parts = [
         f"""
-    e AS (
-      SELECT o_custkey AS src, {_ORD} + o_orderkey AS dst FROM orders
-      UNION ALL
-      SELECT {_ORD} + l_orderkey AS src, {_PRT} + l_partkey AS dst
-      FROM (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem)
-    ),
-    sym AS MATERIALIZED (
-      SELECT src, dst FROM e UNION ALL SELECT dst AS src, src AS dst FROM e),
-    nodes AS (
-      SELECT c_custkey AS node FROM customer
-      UNION ALL SELECT {_ORD} + o_orderkey FROM orders
-      UNION ALL SELECT {_PRT} + p_partkey FROM part
-    ),
+    e AS ({ORACLE_EDGES}),
+    sym AS MATERIALIZED ({ORACLE_SYM}),
+    nodes AS ({ORACLE_NODES}),
     l0 AS MATERIALIZED (SELECT node, node AS label FROM nodes)"""
     ]
     for r in range(1, n_rounds + 1):
@@ -1301,11 +1235,9 @@ def q_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     as the Spark loop); invariants stay in tests: a path graph is one
     component, disjoint cliques are separate, labels are the
     component-minimum node id."""
-    from neo_olap_spark.graph import edge_count_estimate
-
     sym = symmetrize(edges(spark, sf_dir))
     return connected_components(
-        sym, all_nodes(spark, sf_dir), n_edges=edge_count_estimate(spark, sf_dir)
+        sym, all_nodes(spark, sf_dir), n_edges=graph.edge_count_estimate(spark, sf_dir)
     )
 
 
@@ -1333,8 +1265,7 @@ def label_propagation(
     synchronous updates + total-ordered tie-break (count DESC, label
     ASC via max_by on a (cnt, -label) struct)."""
     spark = sym_edges.sparkSession
-    with _graph_loop(spark, n_edges, sym_edges, aqe=False) as (sym_edges, n_edges):
-        edges_p = sym_edges.repartition("src").persist()
+    with _graph_loop(spark, n_edges, sym_edges, aqe=False) as edges_p:
         labels = nodes.select("node", F.col("node").alias("label")).transform(
             loop_checkpoint
         )
@@ -1363,7 +1294,6 @@ def label_propagation(
         # fixed round count: no mid-loop action; the chain materializes
         # in _iterate's one count while the edge cache is alive
         labels = _iterate({"labels": labels}, vote, n_rounds)[0]["labels"]
-        edges_p.unpersist()
         return labels.select(
             F.col("node").alias("node_id"), F.col("label").alias("community")
         )
@@ -1380,19 +1310,9 @@ def _lpa_oracle(n_rounds: int) -> str:
     twice (votes + keep-old fallback)."""
     parts = [
         f"""
-    e AS (
-      SELECT o_custkey AS src, {_ORD} + o_orderkey AS dst FROM orders
-      UNION ALL
-      SELECT {_ORD} + l_orderkey AS src, {_PRT} + l_partkey AS dst
-      FROM (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem)
-    ),
-    sym AS MATERIALIZED (
-      SELECT src, dst FROM e UNION ALL SELECT dst AS src, src AS dst FROM e),
-    nodes AS (
-      SELECT c_custkey AS node FROM customer
-      UNION ALL SELECT {_ORD} + o_orderkey FROM orders
-      UNION ALL SELECT {_PRT} + p_partkey FROM part
-    ),
+    e AS ({ORACLE_EDGES}),
+    sym AS MATERIALIZED ({ORACLE_SYM}),
+    nodes AS ({ORACLE_NODES}),
     l0 AS MATERIALIZED (SELECT node, node AS label FROM nodes)"""
     ]
     for r in range(1, n_rounds + 1):
@@ -1478,8 +1398,6 @@ def q_graph_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
     labels⋈edges⋈labels join — two node-keyed shuffles — and the
     degree rollup reuses the label join; everything downstream of LPA
     is community-keyed (tiny)."""
-    from neo_olap_spark.graph import edge_count_estimate
-
     # e is consumed FOUR times (count action, intra-edge join, and
     # sym feeds LPA + the degree rollup): materialize the distinct
     # edge build once — the multiple-consumption pattern that cost
@@ -1487,7 +1405,7 @@ def q_graph_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = edges(spark, sf_dir).localCheckpoint()
     sym = symmetrize(e)
     labels = label_propagation(
-        sym, all_nodes(spark, sf_dir), n_edges=edge_count_estimate(spark, sf_dir)
+        sym, all_nodes(spark, sf_dir), n_edges=graph.edge_count_estimate(spark, sf_dir)
     ).localCheckpoint()  # consumed by three branches below
     m = e.count()
     la = labels.select(F.col("node_id").alias("src"), F.col("community").alias("ca"))
@@ -1536,11 +1454,9 @@ def q_graph_lpa(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate is a weighted vote rather than a min, which is what
     makes it a community (not component) assignment. Reference
     analog: whole-graph analytics family (Runner.java:40-56)."""
-    from neo_olap_spark.graph import edge_count_estimate
-
     sym = symmetrize(edges(spark, sf_dir))
     return label_propagation(
-        sym, all_nodes(spark, sf_dir), n_edges=edge_count_estimate(spark, sf_dir)
+        sym, all_nodes(spark, sf_dir), n_edges=graph.edge_count_estimate(spark, sf_dir)
     )
 
 
@@ -1662,21 +1578,27 @@ def oriented_triangle_count(pairs: DataFrame) -> tuple[int, int]:
 # tail at 100x, the same shape MAX_SHINGLE_DF guards in llm_dedup.
 MAX_BASKET_PARTS = 1024
 
-
-@query(
-    "q_triangle_count",
-    oracle=f"""
-    WITH op AS (
+# DuckDB twins of the capped baskets, (o, p) with each order's
+# MAX_BASKET_PARTS lowest distinct part ids, and of _copurchase_pairs,
+# e(u, v) with u < v
+_ORACLE_BASKETS = f"""op AS (
       SELECT o, p FROM (
         SELECT l_orderkey AS o, l_partkey AS p,
                ROW_NUMBER() OVER (PARTITION BY l_orderkey ORDER BY l_partkey) AS rn
         FROM (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem)
       ) WHERE rn <= {MAX_BASKET_PARTS}
-    ),
+    )"""
+_ORACLE_COPURCHASE = f"""{_ORACLE_BASKETS},
     e AS (
       SELECT DISTINCT a.p AS u, b.p AS v
       FROM op a JOIN op b ON a.o = b.o AND a.p < b.p
-    ),
+    )"""
+
+
+@query(
+    "q_triangle_count",
+    oracle=f"""
+    WITH {_ORACLE_COPURCHASE},
     tri AS (
       SELECT 1 AS one
       FROM e e1
@@ -1711,18 +1633,10 @@ _SURVIVOR_ROW_BYTES = 32
 
 
 def _broadcast_threshold_bytes(spark: SparkSession) -> int:
-    """spark.sql.autoBroadcastJoinThreshold as bytes (handles the
-    '10485760', '10m'/'10MB', and '-1' = disabled forms)."""
-    raw = str(
-        spark.conf.get("spark.sql.autoBroadcastJoinThreshold", "10485760")
-    ).strip().lower()
-    units = {"k": 1 << 10, "m": 1 << 20, "g": 1 << 30, "t": 1 << 40}
-    for suffix in ("kb", "mb", "gb", "tb", "k", "m", "g", "t", "b"):
-        if raw.endswith(suffix):
-            mult = units.get(suffix[0], 1)
-            return int(float(raw[: -len(suffix)]) * mult)
-    n = int(float(raw))
-    return n if n >= 0 else 0
+    """spark.sql.autoBroadcastJoinThreshold in bytes, as Spark itself
+    parses it (unit suffixes included); -1 (disabled) reads as 0."""
+    conf = spark._jsparkSession.sessionState().conf()
+    return max(0, conf.autoBroadcastJoinThreshold())
 
 
 def _fits_broadcast(n_rows: int, limit_bytes: int) -> bool:
@@ -1765,44 +1679,47 @@ def k_core(
     degree >= k, by iterative peeling — drop under-degree nodes,
     recompute degrees on the induced subgraph, repeat to fixpoint.
 
-    ``sym_edges`` must be symmetrized (src, dst). Each round is two
-    bounded shuffles (a semi join filtering edges to survivors and a
-    degree groupBy), both keyed on node ids; survivors are
-    checkpointed per round so plans stay flat. Rounds are bounded by the
-    degeneracy-peeling depth (tiny in practice — degree distributions
-    collapse geometrically), with max_iters as the safety rail.
+    ``sym_edges`` must be symmetrized (src, dst). Each round filters
+    the src-partitioned edge cache to survivors (two semi joins) and
+    recomputes degrees; while the survivor set fits a broadcast,
+    neither step shuffles the edges (the degree groupBy runs in the
+    src partitions), else the semi joins shuffle on node ids.
+    Survivors are checkpointed per round so plans stay flat. Rounds
+    are bounded by the degeneracy-peeling depth (tiny in practice —
+    degree distributions collapse geometrically), with max_iters as
+    the safety rail.
     Returns (node_id,). Raises instead of returning a partial answer
     if the fixpoint isn't reached — same contract as
     connected_components.
     """
     spark = sym_edges.sparkSession
-    edges_p = sym_edges.persist()
-    survivors = loop_checkpoint(edges_p.select(F.col("src").alias("node")).distinct())
     # Broadcast the survivor set only while its estimated BYTES fit the
     # session's autoBroadcastJoinThreshold (one long + row overhead per
     # survivor) — a row-count gate ages badly if the schema widens, and
     # the byte gate keeps the decision consistent with what AQE would
     # pick for a statistics-visible relation.
     bcast_limit = _broadcast_threshold_bytes(spark)
-    n_prev = survivors.count()
+    # n_edges=None: the width is the caller's (q_graph_kcore sizes it)
+    with _graph_loop(spark, None, sym_edges, aqe=True) as edges_p:
+        survivors = loop_checkpoint(edges_p.select(F.col("src").alias("node")).distinct())
+        n_prev = survivors.count()
 
-    def peel(s, _):
-        yield "survivors", _kcore_round(
-            edges_p, s["survivors"], k, _fits_broadcast(n_prev, bcast_limit)
+        def peel(s, _):
+            yield "survivors", _kcore_round(
+                edges_p, s["survivors"], k, _fits_broadcast(n_prev, bcast_limit)
+            )
+
+        def fixpoint(s, _) -> bool:
+            # the survivor count is the job that materializes the round
+            nonlocal n_prev
+            n_next = s["survivors"].count()
+            stable = n_next in (n_prev, 0)
+            n_prev = n_next
+            return stable
+
+        state, rounds, converged = _iterate(
+            {"survivors": survivors}, peel, max_iters, done=fixpoint
         )
-
-    def fixpoint(s, _) -> bool:
-        # the survivor count is the job that materializes the round
-        nonlocal n_prev
-        n_next = s["survivors"].count()
-        stable = n_next in (n_prev, 0)
-        n_prev = n_next
-        return stable
-
-    state, rounds, converged = _iterate(
-        {"survivors": survivors}, peel, max_iters, done=fixpoint
-    )
-    edges_p.unpersist()
     if stats is not None:
         stats["rounds"] = rounds
     if not converged:
@@ -1826,14 +1743,8 @@ def _kcore_oracle(k: int, n_rounds: int) -> str:
     quietly."""
     parts = [
         f"""
-    e AS (
-      SELECT o_custkey AS src, {_ORD} + o_orderkey AS dst FROM orders
-      UNION ALL
-      SELECT {_ORD} + l_orderkey AS src, {_PRT} + l_partkey AS dst
-      FROM (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem)
-    ),
-    sym AS MATERIALIZED (
-      SELECT src, dst FROM e UNION ALL SELECT dst AS src, src AS dst FROM e),
+    e AS ({ORACLE_EDGES}),
+    sym AS MATERIALIZED ({ORACLE_SYM}),
     s0 AS MATERIALIZED (SELECT DISTINCT src AS node FROM sym)"""
     ]
     # AS MATERIALIZED is load-bearing: DuckDB inlines plain CTEs at
@@ -1862,10 +1773,8 @@ def q_graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     peel to nothing, cycles and cliques survive whole, pendant tails
     fall off. Reference analog: whole-graph structural analytics
     (R1/R2 family)."""
-    from neo_olap_spark.graph import edge_count_estimate
-
     sym = symmetrize(edges(spark, sf_dir))
-    with _graph_loop(spark, edge_count_estimate(spark, sf_dir), aqe=True):
+    with _graph_loop(spark, graph.edge_count_estimate(spark, sf_dir), aqe=True):
         return k_core(sym, k=2)
 
 
@@ -1911,17 +1820,7 @@ def _copurchase_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q_graph_clustering",
     oracle=f"""
-    WITH op AS (
-      SELECT o, p FROM (
-        SELECT l_orderkey AS o, l_partkey AS p,
-               ROW_NUMBER() OVER (PARTITION BY l_orderkey ORDER BY l_partkey) AS rn
-        FROM (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem)
-      ) WHERE rn <= {MAX_BASKET_PARTS}
-    ),
-    e AS (
-      SELECT DISTINCT a.p AS u, b.p AS v
-      FROM op a JOIN op b ON a.o = b.o AND a.p < b.p
-    ),
+    WITH {_ORACLE_COPURCHASE},
     tri AS (
       SELECT e1.u AS a, e1.v AS b, e2.v AS c
       FROM e e1
@@ -2008,12 +1907,9 @@ def q_graph_clustering(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out
 
 
-from neo_olap_spark.graph import ORACLE_SYM_EDGES as _ORACLE_SYM  # noqa: E402
-
-
 @query(
     "q_graph_degree_hist",
-    oracle=_ORACLE_SYM
+    oracle=ORACLE_SYM_EDGES
     + """
     SELECT deg AS degree, CAST(COUNT(*) AS BIGINT) AS n_nodes
     FROM (SELECT src, CAST(COUNT(*) AS BIGINT) AS deg FROM sym GROUP BY src)
@@ -2043,17 +1939,7 @@ def q_graph_degree_hist(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q_graph_jaccard",
     oracle=f"""
-    WITH op AS (
-      SELECT o, p FROM (
-        SELECT l_orderkey AS o, l_partkey AS p,
-               ROW_NUMBER() OVER (PARTITION BY l_orderkey ORDER BY l_partkey) AS rn
-        FROM (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem)
-      ) WHERE rn <= {MAX_BASKET_PARTS}
-    ),
-    e AS (
-      SELECT DISTINCT a.p AS u, b.p AS v
-      FROM op a JOIN op b ON a.o = b.o AND a.p < b.p
-    ),
+    WITH {_ORACLE_COPURCHASE},
     s AS MATERIALIZED (
       SELECT u AS a, v AS b FROM e UNION ALL SELECT v AS a, u AS b FROM e),
     deg AS (SELECT a AS node, CAST(COUNT(*) AS BIGINT) AS deg FROM s GROUP BY a),
@@ -2166,30 +2052,6 @@ SSSP_MAX_ROUNDS = 40  # measured depth 26 at sf0.1; headroom for larger SFs
 _SSSP_INF = 1 << 60
 
 
-def weighted_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Weighted edge list over the derived graph: customer→order
-    edges carry weight 1; order→part edges carry the order's MIN line
-    quantity for that part (1..50, integral by construction) — a
-    deterministic per-edge cost with real variance. Returned
-    directed; callers symmetrize."""
-    o = load(spark, sf_dir, "orders").select(
-        F.col("o_custkey").alias("src"),
-        (F.lit(_ORD) + F.col("o_orderkey")).alias("dst"),
-        F.lit(1).cast("long").alias("w"),
-    )
-    li = (
-        load(spark, sf_dir, "lineitem")
-        .groupBy("l_orderkey", "l_partkey")
-        .agg(F.min("l_quantity").cast("long").alias("w"))
-        .select(
-            (F.lit(_ORD) + F.col("l_orderkey")).alias("src"),
-            (F.lit(_PRT) + F.col("l_partkey")).alias("dst"),
-            "w",
-        )
-    )
-    return o.unionAll(li)
-
-
 # Above this many (source × edge) units, the per-round merge switches
 # from union+groupBy (one aggregate, but it re-shuffles the FULL state
 # every round) to the partition-preserving full-outer join (state stays
@@ -2273,142 +2135,130 @@ def sssp(
     sources — k concurrent loops paid it k times (closeness warm
     13.8 → 18.4 s, jobs 29 → 71)."""
     spark = wsym.sparkSession
-    with _graph_loop(spark, n_edges, wsym, aqe=False) as (wsym, n_edges):
+    with _graph_loop(spark, n_edges, wsym, aqe=False) as edges_p:
+        if n_edges is None:
+            # the merge gate needs a size: count the cache the loop
+            # reads anyway (planted-graph callers; every query key
+            # passes the metadata estimate)
+            n_edges = edges_p.count()
         union_merge = len(sources) * n_edges <= SSSP_UNION_MERGE_MAX_UNITS
-        edges_p = wsym.repartition("src").persist()
-        try:
-            return _sssp_loop(edges_p, sources, max_rounds, union_merge, stats)
-        finally:
-            edges_p.unpersist()
+        # State is the last relaxation's ``merged`` frame (source, node,
+        # dist, old): dist and the improved frontier are views of it.
+        improved = F.col("dist") < F.coalesce("old", F.lit(_SSSP_INF))
+        merged = loop_checkpoint(local_rows_frame(
+            spark,
+            [(s, s, 0, None) for s in sources],
+            "source long, node long, dist long, old long",
+        ))
 
-
-def _sssp_loop(
-    edges_p: DataFrame,
-    sources: list[int],
-    max_rounds: int,
-    union_merge: bool,
-    stats: dict | None,
-) -> DataFrame:
-    """The sssp() relaxation loop over an already-persisted,
-    src-partitioned edge frame; the caller owns session settings and
-    the edge cache. State is the last relaxation's ``merged`` frame
-    (source, node, dist, old): dist and the improved frontier are
-    views of it."""
-    improved = F.col("dist") < F.coalesce("old", F.lit(_SSSP_INF))
-    merged = loop_checkpoint(local_rows_frame(
-        edges_p.sparkSession,
-        [(s, s, 0, None) for s in sources],
-        "source long, node long, dist long, old long",
-    ))
-
-    def relax(s, _):
-        m = s["merged"]
-        frontier = m.where(improved).select("source", "node", "dist")
-        dist = m.select("source", "node", "dist")
-        pushed_raw = (
-            frontier.hint("shuffle_hash")
-            .join(edges_p, frontier.node == edges_p.src)
-            .select(
-                "source",
-                F.col("dst").alias("node"),
-                (F.col("dist") + F.col("w")).alias("val"),
+        def relax(s, _):
+            m = s["merged"]
+            frontier = m.where(improved).select("source", "node", "dist")
+            dist = m.select("source", "node", "dist")
+            pushed_raw = (
+                frontier.hint("shuffle_hash")
+                .join(edges_p, frontier.node == edges_p.src)
+                .select(
+                    "source",
+                    F.col("dst").alias("node"),
+                    (F.col("dist") + F.col("w")).alias("val"),
+                )
             )
-        )
-        if union_merge:
-            # Small state: ONE union+groupBy merge (the CC-merge
-            # shape) — candidate pushes and the standing distances
-            # union into a single min aggregate; partial aggregation
-            # combines duplicates map-side and the round runs TWO
-            # exchanges. `old` (the standing distance, for the
-            # improvement test) rides along as a conditional min in
-            # the same aggregate.
+            if union_merge:
+                # Small state: ONE union+groupBy merge (the CC-merge
+                # shape) — candidate pushes and the standing distances
+                # union into a single min aggregate; partial aggregation
+                # combines duplicates map-side and the round runs TWO
+                # exchanges. `old` (the standing distance, for the
+                # improvement test) rides along as a conditional min in
+                # the same aggregate.
+                yield "merged", (
+                    dist.select(
+                        "source", "node",
+                        F.col("dist").alias("val"),
+                        F.lit(True).alias("is_old"),
+                    )
+                    .unionByName(pushed_raw.withColumn("is_old", F.lit(False)))
+                    .groupBy("source", "node")
+                    .agg(
+                        F.min("val").alias("dist"),
+                        F.min(F.when(F.col("is_old"), F.col("val"))).alias("old"),
+                    )
+                )
+                return
+            # Large state: aggregate only the (frontier-sized) pushes,
+            # then FULL-OUTER against the standing distances — dist is
+            # already hash-partitioned on (source, node) from last
+            # round's merge (preserved through the LogicalRDD
+            # checkpoint), so only the pushes shuffle; the state never
+            # re-moves. This is what keeps k-source closeness linear at
+            # 10×.
+            pushed = pushed_raw.groupBy("source", "node").agg(
+                F.min("val").alias("cand")
+            )
             yield "merged", (
-                dist.select(
-                    "source", "node",
-                    F.col("dist").alias("val"),
-                    F.lit(True).alias("is_old"),
-                )
-                .unionByName(pushed_raw.withColumn("is_old", F.lit(False)))
-                .groupBy("source", "node")
-                .agg(
-                    F.min("val").alias("dist"),
-                    F.min(F.when(F.col("is_old"), F.col("val"))).alias("old"),
+                dist.withColumnRenamed("dist", "old")
+                .join(pushed, ["source", "node"], "full_outer")
+                .select(
+                    "source",
+                    "node",
+                    F.least(
+                        F.coalesce("old", F.lit(_SSSP_INF)),
+                        F.coalesce("cand", F.lit(_SSSP_INF)),
+                    ).alias("dist"),
+                    "old",
                 )
             )
-            return
-        # Large state: aggregate only the (frontier-sized) pushes,
-        # then FULL-OUTER against the standing distances — dist is
-        # already hash-partitioned on (source, node) from last
-        # round's merge (preserved through the LogicalRDD
-        # checkpoint), so only the pushes shuffle; the state never
-        # re-moves. This is what keeps k-source closeness linear at
-        # 10×.
-        pushed = pushed_raw.groupBy("source", "node").agg(
-            F.min("val").alias("cand")
-        )
-        yield "merged", (
-            dist.withColumnRenamed("dist", "old")
-            .join(pushed, ["source", "node"], "full_outer")
-            .select(
-                "source",
-                "node",
-                F.least(
-                    F.coalesce("old", F.lit(_SSSP_INF)),
-                    F.coalesce("cand", F.lit(_SSSP_INF)),
-                ).alias("dist"),
-                "old",
-            )
-        )
 
-    frozen: list[DataFrame] = []
-    active: set[int] = set(sources)
+        frozen: list[DataFrame] = []
+        active: set[int] = set(sources)
 
-    def drop_finished(s, r) -> bool:
-        # Per-source convergence check (VERDICT r11 item 2). The
-        # (source, node) states never interact across sources — pushes
-        # carry their source key through the join, so a source whose
-        # frontier emptied can never improve again and is FINAL. Its
-        # rows leave the live state immediately (frozen for the final
-        # union), so every later round's merge aggregate / checkpoint
-        # touches only the still-active sources' shrinking state. The
-        # distinct() is the materializing action: partial aggregation
-        # collapses it to ≤ k rows map-side.
-        nonlocal frozen, active
-        m = s["merged"]
-        still = {
-            int(row[0])
-            for row in m.where(improved).select("source").distinct().collect()
-        }
-        finished = active - still
-        if finished:
-            if stats is not None:
-                stats.setdefault("source_exit_rounds", {}).update(
-                    {int(src): r for src in sorted(finished)}
-                )
-            done_col = F.col("source").isin([int(src) for src in finished])
-            frozen.append(m.where(done_col).select("source", "node", "dist"))
-            s["merged"] = m.where(~done_col)
-            active -= finished
-            if len(frozen) >= SSSP_FROZEN_COALESCE_CAP:
-                # Bound plan depth + retained checkpoints (ADVICE r12
-                # #2): collapse the chained frozen frames into one
-                # EAGER checkpoint so the per-round states they pinned
-                # become collectable and the final union stays shallow.
-                # Eager is load-bearing — a lazy checkpoint would keep
-                # every upstream frame referenced until the caller's
-                # action, defeating the bound.
-                combined = frozen[0]
-                for fz in frozen[1:]:
-                    combined = combined.unionByName(fz)
-                frozen = [loop_checkpoint(combined)]
+        def drop_finished(s, r) -> bool:
+            # Per-source convergence check (VERDICT r11 item 2). The
+            # (source, node) states never interact across sources — pushes
+            # carry their source key through the join, so a source whose
+            # frontier emptied can never improve again and is FINAL. Its
+            # rows leave the live state immediately (frozen for the final
+            # union), so every later round's merge aggregate / checkpoint
+            # touches only the still-active sources' shrinking state. The
+            # distinct() is the materializing action: partial aggregation
+            # collapses it to ≤ k rows map-side.
+            nonlocal frozen, active
+            m = s["merged"]
+            still = {
+                int(row[0])
+                for row in m.where(improved).select("source").distinct().collect()
+            }
+            finished = active - still
+            if finished:
                 if stats is not None:
-                    stats["frozen_coalesces"] = stats.get("frozen_coalesces", 0) + 1
-        return not active
+                    stats.setdefault("source_exit_rounds", {}).update(
+                        {int(src): r for src in sorted(finished)}
+                    )
+                done_col = F.col("source").isin([int(src) for src in finished])
+                frozen.append(m.where(done_col).select("source", "node", "dist"))
+                s["merged"] = m.where(~done_col)
+                active -= finished
+                if len(frozen) >= SSSP_FROZEN_COALESCE_CAP:
+                    # Bound plan depth + retained checkpoints (ADVICE r12
+                    # #2): collapse the chained frozen frames into one
+                    # EAGER checkpoint so the per-round states they pinned
+                    # become collectable and the final union stays shallow.
+                    # Eager is load-bearing — a lazy checkpoint would keep
+                    # every upstream frame referenced until the caller's
+                    # action, defeating the bound.
+                    combined = frozen[0]
+                    for fz in frozen[1:]:
+                        combined = combined.unionByName(fz)
+                    frozen = [loop_checkpoint(combined)]
+                    if stats is not None:
+                        stats["frozen_coalesces"] = stats.get("frozen_coalesces", 0) + 1
+            return not active
 
-    state, rounds, converged = _iterate(
-        {"merged": merged}, relax, max_rounds,
-        check_every=HOPS_PER_CHECK, done=drop_finished,
-    )
+        state, rounds, converged = _iterate(
+            {"merged": merged}, relax, max_rounds,
+            check_every=HOPS_PER_CHECK, done=drop_finished,
+        )
     if stats is not None:
         stats["rounds"] = rounds
     if not converged:
@@ -2440,18 +2290,8 @@ def _sssp_oracle(n_rounds: int) -> str:
     source) and plain CTEs would expand exponentially."""
     parts = [
         f"""
-    e AS (
-      SELECT o_custkey AS src, {_ORD} + o_orderkey AS dst,
-             CAST(1 AS BIGINT) AS w
-      FROM orders
-      UNION ALL
-      SELECT {_ORD} + l_orderkey, {_PRT} + l_partkey,
-             CAST(MIN(l_quantity) AS BIGINT)
-      FROM lineitem GROUP BY 1, 2
-    ),
-    sym AS MATERIALIZED (
-      SELECT src, dst, w FROM e
-      UNION ALL SELECT dst AS src, src AS dst, w FROM e),
+    e AS ({ORACLE_WEIGHTED_EDGES}),
+    sym AS MATERIALIZED ({ORACLE_WEIGHTED_SYM}),
     d0 AS MATERIALIZED (
       SELECT CAST((SELECT MIN(c_custkey) FROM customer) AS BIGINT) AS node,
              CAST(0 AS BIGINT) AS dist)"""
@@ -2497,14 +2337,12 @@ def q_graph_sssp(spark: SparkSession, sf_dir: str) -> DataFrame:
     flat. Reference analog: PathFinderNodeCountingRunner's
     shortest-path queries (reference computes hop paths; this is the
     weighted generalization)."""
-    from neo_olap_spark.graph import edge_count_estimate
-
     src_row = load(spark, sf_dir, "customer").agg(F.min("c_custkey")).collect()
     source_id = int(src_row[0][0])
     out = sssp(
         _weighted_sym_edges(spark, sf_dir),
         [source_id],
-        n_edges=edge_count_estimate(spark, sf_dir),
+        n_edges=graph.edge_count_estimate(spark, sf_dir),
     )
     return out.select(F.col("node").alias("node_id"), "dist")
 
@@ -2522,18 +2360,8 @@ def _closeness_oracle(n_rounds: int) -> str:
     BIGINT is HUGEINT — CAST back (float-landmine (c))."""
     parts = [
         f"""
-    e AS (
-      SELECT o_custkey AS src, {_ORD} + o_orderkey AS dst,
-             CAST(1 AS BIGINT) AS w
-      FROM orders
-      UNION ALL
-      SELECT {_ORD} + l_orderkey, {_PRT} + l_partkey,
-             CAST(MIN(l_quantity) AS BIGINT)
-      FROM lineitem GROUP BY 1, 2
-    ),
-    sym AS MATERIALIZED (
-      SELECT src, dst, w FROM e
-      UNION ALL SELECT dst AS src, src AS dst, w FROM e),
+    e AS ({ORACLE_WEIGHTED_EDGES}),
+    sym AS MATERIALIZED ({ORACLE_WEIGHTED_SYM}),
     srcs AS MATERIALIZED (
       SELECT CAST(c_custkey AS BIGINT) AS source FROM customer
       ORDER BY c_custkey LIMIT {CLOSENESS_SOURCES}),
@@ -2595,12 +2423,10 @@ def q_graph_closeness(spark: SparkSession, sf_dir: str) -> DataFrame:
         .limit(CLOSENESS_SOURCES)
         .collect()
     ]
-    from neo_olap_spark.graph import edge_count_estimate
-
     dist = sssp(
         _weighted_sym_edges(spark, sf_dir),
         srcs,
-        n_edges=edge_count_estimate(spark, sf_dir),
+        n_edges=graph.edge_count_estimate(spark, sf_dir),
     )
     # isolated-source guard: sum_dist = 0 (nothing reached) must yield
     # NULL in BOTH engines — unguarded, Spark's 0.0/0 -> NaN path and
@@ -2642,17 +2468,8 @@ def _hits_oracle(n_iters: int) -> str:
     would expand exponentially (the _cc_oracle lesson)."""
     parts = [
         f"""
-    de AS MATERIALIZED (
-      SELECT o_custkey AS src, {_ORD} + o_orderkey AS dst FROM orders
-      UNION ALL
-      SELECT {_ORD} + l_orderkey AS src, {_PRT} + l_partkey AS dst
-      FROM (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem)
-    ),
-    allnodes AS MATERIALIZED (
-      SELECT c_custkey AS node FROM customer
-      UNION ALL SELECT {_ORD} + o_orderkey FROM orders
-      UNION ALL SELECT {_PRT} + p_partkey FROM part
-    ),
+    de AS MATERIALIZED ({ORACLE_EDGES}),
+    allnodes AS MATERIALIZED ({ORACLE_NODES}),
     nd AS MATERIALIZED (SELECT CAST(COUNT(*) AS DOUBLE) AS nn FROM allnodes),
     h0 AS MATERIALIZED (SELECT node, CAST(1.0 AS DOUBLE) AS hub FROM allnodes)"""
     ]
@@ -2714,76 +2531,67 @@ def hits(
     per half-step (landmine 4's double-reference rule; round 8's plan
     audit found 32 edge joins per run instead of 16)."""
     spark = directed_edges.sparkSession
-    with _graph_loop(spark, n_edges, directed_edges, aqe=False) as (directed_edges, n_edges):
-        e_src = directed_edges.repartition("src").persist()
+    with _graph_loop(spark, n_edges, directed_edges, aqe=False) as e_src:
+        # derive the dst-partitioned copy FROM the persisted src copy:
+        # the upstream edge build (a full fact shuffle) runs once,
+        # not once per direction (self-review r7 finding)
+        e_dst = e_src.repartition("dst").persist()
+        base = nodes.repartition("node").persist()
         try:
-            return _hits_loop(e_src, nodes, n_iters)
+            n_nodes = float(base.count())
+
+            def push(score: DataFrame, col: str, e: DataFrame, frm: str, to: str):
+                return (
+                    score.hint("shuffle_hash")
+                    .join(e, score.node == e[frm])
+                    .groupBy(to)
+                    .agg(F.sum(col).alias("raw"))
+                    .withColumnRenamed(to, "node")
+                )
+
+            def normalize(raw: DataFrame, name: str) -> DataFrame:
+                total = raw.agg(F.sum("raw").alias("s"))
+                return (
+                    base.join(raw, "node", "left")
+                    .crossJoin(F.broadcast(total))
+                    .select(
+                        "node",
+                        (
+                            F.coalesce("raw", F.lit(0.0))
+                            * (F.lit(n_nodes) / F.col("s"))
+                        ).alias(name),
+                    )
+                )
+
+            def half_steps(s, _):
+                yield "a_raw", push(s["hub"], "hub", e_src, "src", "dst")
+                yield "auth", normalize(s["a_raw"], "auth")
+                yield "h_raw", push(s["auth"], "auth", e_dst, "dst", "src")
+                yield "hub", normalize(s["h_raw"], "hub")
+
+            # HITS runs a FIXED iteration count, so no convergence action is
+            # needed mid-loop: the states materialize inside (a) each
+            # half-step's normalizer broadcast, which executes when its
+            # lazily checkpointed frame is built and caches that half-step's
+            # raw aggregate as a side effect, and (b) _iterate's one count,
+            # which computes the rest of the chain while the e_src/e_dst/
+            # base caches are alive. The output join reads the cached
+            # states; it is checkpointed before the finally unpersists them.
+            hub = loop_checkpoint(base.select("node", F.lit(1.0).alias("hub")), eager=False)
+            state = _iterate({"hub": hub}, half_steps, n_iters)[0]
+            return loop_checkpoint(
+                state["hub"].join(state["auth"], "node").select(
+                    F.col("node").alias("node_id"),
+                    F.expr("FLOOR(hub * 100000 + 0.5) / 100000").alias("hub"),
+                    F.expr("FLOOR(auth * 100000 + 0.5) / 100000").alias("auth"),
+                ),
+                eager=False,
+            )
         finally:
             # unpersist on ALL paths: a mid-loop failure must not pin
             # the largest cached frames for the session lifetime
-            e_src.unpersist()
-
-
-def _hits_loop(e_src: DataFrame, nodes: DataFrame, n_iters: int) -> DataFrame:
-    """The hits() iteration body, with exception-safe cache cleanup."""
-    # derive the dst-partitioned copy FROM the persisted src copy:
-    # the upstream edge build (a full fact shuffle) runs once,
-    # not once per direction (self-review r7 finding)
-    e_dst = e_src.repartition("dst").persist()
-    base = nodes.repartition("node").persist()
-    try:
-        n_nodes = float(base.count())
-
-        def push(score: DataFrame, col: str, e: DataFrame, frm: str, to: str) -> DataFrame:
-            return (
-                score.hint("shuffle_hash")
-                .join(e, score.node == e[frm])
-                .groupBy(to)
-                .agg(F.sum(col).alias("raw"))
-                .withColumnRenamed(to, "node")
-            )
-
-        def normalize(raw: DataFrame, name: str) -> DataFrame:
-            total = raw.agg(F.sum("raw").alias("s"))
-            return (
-                base.join(raw, "node", "left")
-                .crossJoin(F.broadcast(total))
-                .select(
-                    "node",
-                    (
-                        F.coalesce("raw", F.lit(0.0))
-                        * (F.lit(n_nodes) / F.col("s"))
-                    ).alias(name),
-                )
-            )
-
-        def half_steps(s, _):
-            yield "a_raw", push(s["hub"], "hub", e_src, "src", "dst")
-            yield "auth", normalize(s["a_raw"], "auth")
-            yield "h_raw", push(s["auth"], "auth", e_dst, "dst", "src")
-            yield "hub", normalize(s["h_raw"], "hub")
-
-        # HITS runs a FIXED iteration count, so no convergence action is
-        # needed mid-loop: the states materialize inside (a) each
-        # half-step's normalizer broadcast, which executes when its
-        # lazily checkpointed frame is built and caches that half-step's
-        # raw aggregate as a side effect, and (b) _iterate's one count,
-        # which computes the rest of the chain while the e_src/e_dst/
-        # base caches are alive. The output join reads the cached
-        # states; it is checkpointed before the finally unpersists them.
-        hub = loop_checkpoint(base.select("node", F.lit(1.0).alias("hub")), eager=False)
-        state = _iterate({"hub": hub}, half_steps, n_iters)[0]
-        return loop_checkpoint(
-            state["hub"].join(state["auth"], "node").select(
-                F.col("node").alias("node_id"),
-                F.expr("FLOOR(hub * 100000 + 0.5) / 100000").alias("hub"),
-                F.expr("FLOOR(auth * 100000 + 0.5) / 100000").alias("auth"),
-            ),
-            eager=False,
-        )
-    finally:
-        e_dst.unpersist()
-        base.unpersist()
+            e_dst.unpersist()
+            base.unpersist()
 
 
 @query("q_graph_hits", oracle=_hits_oracle(HITS_ITERS))
@@ -2810,13 +2618,11 @@ def q_graph_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
     lazy checkpoint per half-step (each state is referenced twice —
     next half-step's push + the carried output — landmine 4, exactly
     the pagerank rule)."""
-    from neo_olap_spark.graph import edge_count_estimate
-
     return hits(
         edges(spark, sf_dir),
         all_nodes(spark, sf_dir),
         n_iters=HITS_ITERS,
-        n_edges=edge_count_estimate(spark, sf_dir),
+        n_edges=graph.edge_count_estimate(spark, sf_dir),
     )
 
 
@@ -2838,7 +2644,7 @@ def _assort_corr_expr() -> str:
 def _assortativity_oracle() -> str:
     corr = _assort_corr_expr()
     return f"""
-    {_ORACLE_SYM},
+    {ORACLE_SYM_EDGES},
     deg AS (
       SELECT src AS node, CAST(COUNT(*) AS BIGINT) AS deg
       FROM sym GROUP BY src
@@ -2942,13 +2748,7 @@ _LLIFT_MICRO = (
 @query(
     "q_basket_lift",
     oracle=f"""
-    WITH op AS (
-      SELECT o, p FROM (
-        SELECT l_orderkey AS o, l_partkey AS p,
-               ROW_NUMBER() OVER (PARTITION BY l_orderkey ORDER BY l_partkey) AS rn
-        FROM (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem)
-      ) WHERE rn <= {MAX_BASKET_PARTS}
-    ),
+    WITH {_ORACLE_BASKETS},
     scal AS (SELECT CAST(COUNT(DISTINCT o) AS BIGINT) AS n_orders FROM op),
     items AS (SELECT p, CAST(COUNT(*) AS BIGINT) AS c FROM op GROUP BY p),
     pc AS (

@@ -629,28 +629,74 @@ def test_hits_planted_numpy_pinned(spark):
 
 
 def test_edge_count_hint_releases_cache_on_failure(spark):
-    """The n_edges=None fallback must unpersist its edge cache even
-    when the loop body raises (round-9 ADVICE: the old hits() shape
-    pinned the cache for the session on a pre-loop failure), and the
-    loop's session settings must be restored on that path too."""
+    """_graph_loop owns the loop's edge cache: the src-partitioned,
+    persisted frame it yields is released even when the loop body
+    raises, the AQE and width settings are restored on that path, and
+    n_edges=None keeps the session's width without running a job."""
     import pytest
 
     from neo_olap_spark.operators.graph_algos import _graph_loop
 
-    aqe = "spark.sql.adaptive.enabled"
-    before = spark.conf.get(aqe)
+    aqe, width = "spark.sql.adaptive.enabled", "spark.sql.shuffle.partitions"
+    before = {k: spark.conf.get(k) for k in (aqe, width)}
     df = spark.range(100).selectExpr("id AS src", "id + 1 AS dst")
     with pytest.raises(RuntimeError, match="boom"):
-        with _graph_loop(spark, None, df, aqe=False) as (cached, n):
-            assert n == 100
+        with _graph_loop(spark, 100_000_000, df, aqe=False) as cached:
             assert cached.storageLevel.useMemory  # persisted for reuse
+            assert "hashpartitioning(src" in (
+                cached._jdf.queryExecution().executedPlan().toString()
+            )
             assert spark.conf.get(aqe) == "false"
+            assert spark.conf.get(width) == "50"  # 1e8 edges / 2M per partition
             raise RuntimeError("boom")
     assert not cached.storageLevel.useMemory  # released on the error path
-    assert spark.conf.get(aqe) == before
-    # the n_edges-provided path must not persist anything, and
-    # aqe=True leaves the session's setting alone
-    with _graph_loop(spark, 42, df, aqe=True) as (same, n):
-        assert same is df and n == 42
-        assert not df.storageLevel.useMemory
-        assert spark.conf.get(aqe) == before
+    assert {k: spark.conf.get(k) for k in (aqe, width)} == before
+
+    sc = spark.sparkContext
+    group = "graph_loop_no_hint"
+    sc.setJobGroup(group, group)
+    try:
+        with _graph_loop(spark, None, df, aqe=True) as cached:
+            assert {k: spark.conf.get(k) for k in (aqe, width)} == before
+        with _graph_loop(spark, None, aqe=False) as none:
+            assert none is None
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert not cached.storageLevel.useMemory
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 0
+
+
+def test_derived_graph_sql_has_one_definition():
+    """The derived graph's oracle SQL is defined once: the edge and
+    node-list SQL in neo_olap_spark/graph.py, the basket-pair SQL in
+    operators/graph_algos.py. Every other oracle composes those
+    fragments; a re-typed copy drifts from them unnoticed."""
+    import os
+    import re
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    pkg = os.path.join(root, "neo_olap_spark")
+    owners = {
+        # plain and weighted edges
+        r"o_custkey AS src,\s*\{": ("graph.py", 2),
+        r"c_custkey AS node FROM customer": ("graph.py", 1),
+        r"PARTITION BY l_orderkey ORDER BY l_partkey": (
+            os.path.join("operators", "graph_algos.py"), 1,
+        ),
+    }
+    found = {pat: {} for pat in owners}
+    for dirpath, _, filenames in os.walk(pkg):
+        for name in filenames:
+            if not name.endswith(".py"):
+                continue
+            path = os.path.join(dirpath, name)
+            with open(path, encoding="utf-8") as f:
+                text = f.read()
+            for pat in owners:
+                n = len(re.findall(pat, text))
+                if n:
+                    found[pat][os.path.relpath(path, pkg)] = n
+    for pat, (owner, n) in owners.items():
+        assert found[pat] == {owner: n}, (pat, found[pat])

@@ -3,10 +3,10 @@
 Each loop key runs its build (the operator call, where iterative loops
 run their driver actions) and then the noop write under a
 ``key:phase`` job group; the job counts come from
-``statusTracker().getJobIdsForGroup``. The pinned numbers are what the
-loops ran before they moved onto the shared round driver
-(graph_algos._iterate), measured under this suite's session (cpus=8)
-at sf0.001 — a mid-loop eager action creeping back fails here.
+``statusTracker().getJobIdsForGroup``. The pinned numbers are measured
+under this suite's session (cpus=8) at sf0.001 — a mid-loop eager
+action creeping back fails here. Build counts include no job for the
+edge-count hint: graph.edge_count_estimate reads parquet footers.
 """
 
 from __future__ import annotations
@@ -17,17 +17,17 @@ from neo_olap_spark.registry import queries
 
 # key -> (build jobs, exec jobs)
 LOOP_JOBS = {
-    "q_shortest_path_len": (36, 1),
-    "q_betweenness_sample": (14, 9),
-    "q_random_walk_counts": (16, 3),
-    "q_pagerank": (14, 1),
-    "q_pagerank_personalized": (17, 1),
-    "q_connected_components": (16, 1),
-    "q_graph_lpa": (13, 1),
-    "q_graph_kcore": (24, 1),
-    "q_graph_sssp": (20, 1),
-    "q_graph_closeness": (20, 4),
-    "q_graph_hits": (29, 1),
+    "q_shortest_path_len": (30, 1),
+    "q_betweenness_sample": (8, 9),
+    "q_random_walk_counts": (10, 3),
+    "q_pagerank": (8, 1),
+    "q_pagerank_personalized": (11, 1),
+    "q_connected_components": (10, 1),
+    "q_graph_lpa": (7, 1),
+    "q_graph_kcore": (16, 1),
+    "q_graph_sssp": (14, 1),
+    "q_graph_closeness": (14, 4),
+    "q_graph_hits": (23, 1),
 }
 
 # q_betweenness_sample's execute phase runs with AQE on over two BFS
