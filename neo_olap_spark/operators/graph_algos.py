@@ -715,7 +715,7 @@ def betweenness_sample(
         spark, graph.edge_count_estimate(spark, sf_dir),
         symmetrize(edges(spark, sf_dir)), aqe=True,
     ) as sym:
-        nodes = all_nodes(spark, sf_dir).distinct()
+        nodes = all_nodes(spark, sf_dir)
 
         # Deterministic pair sampling: lowest md5-hex ranks with
         # seed-salted inputs (disjoint salts for the a and b draws).

@@ -204,15 +204,13 @@ def _stage_replay_file(
 
 
 def _copy_events_parquet(spark: SparkSession, sf_dir: str, dest_dir: str) -> None:
-    """Copy events.parquet into a stream-source directory. Routed
-    through the same nanos guard as tables.load so the copy read works
-    under ANY SparkSession (events.ts is TIMESTAMP(NANOS))."""
-    from neo_olap_spark.tables import _enable_nanos_as_long
-
-    _enable_nanos_as_long(spark)
-    spark.read.parquet(f"{sf_dir}/events.parquet").write.mode("overwrite").parquet(
-        dest_dir
-    )
+    """Copy events.parquet into a stream-source directory. Read through
+    tables.load (footer-checked declared schema, nanos guard, UTC pin),
+    so the copy works under ANY SparkSession; ts is written back as
+    TIMESTAMP_NTZ, the declared layout stream_events checks for."""
+    load(spark, sf_dir, "events").withColumn(
+        "ts", F.col("ts").cast("timestamp_ntz")
+    ).write.mode("overwrite").parquet(dest_dir)
 
 
 _SHARED_REPLAY_CACHE: dict[tuple[str, str], str] = {}
@@ -381,15 +379,19 @@ def _replay_state_partitions(
 def stream_events(spark: SparkSession, events_dir: str) -> DataFrame:
     """Structured Streaming source over a directory of events parquet.
 
-    Mirrors tables.load's nanos handling: ts arrives as long nanos or
-    TIMESTAMP_NTZ depending on Spark version and is normalized to a
-    proper timestamp before any windowing.
+    Mirrors tables.load: the footer is checked against the declared
+    events schema (no inference job), and ts — TIMESTAMP_NTZ, or long
+    nanos — is normalized to a proper timestamp before any windowing.
     """
-    from neo_olap_spark.tables import _enable_nanos_as_long, _normalize_events_ts
+    from neo_olap_spark.tables import (
+        _enable_nanos_as_long,
+        _normalize_events_ts,
+        read_schema,
+    )
 
+    schema = read_schema(events_dir, "events")
     _enable_nanos_as_long(spark)
-    static = spark.read.parquet(events_dir)
-    stream = spark.readStream.schema(static.schema).parquet(events_dir)
+    stream = spark.readStream.schema(schema).parquet(events_dir)
     return _normalize_events_ts(stream)
 
 

@@ -36,7 +36,7 @@ def planted_sf_dir(spark):
         ).alias("text"),
         F.lit("en").alias("lang"),
         F.lit("planted").alias("source"),
-        F.length(F.lit(BOILER)).alias("n_chars"),
+        F.length(F.lit(BOILER)).cast("long").alias("n_chars"),
     )
     docs.coalesce(1).write.mode("overwrite").parquet(f"{tmp}/documents.parquet")
     yield tmp

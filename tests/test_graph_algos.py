@@ -9,6 +9,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from neo_olap_spark import tables
 from neo_olap_spark.functions import prefix_sum
 from neo_olap_spark.operators.graph_algos import (
     bfs_distances,
@@ -302,8 +303,10 @@ def test_copurchase_basket_cap(spark, monkeypatch, tmp_path):
     mega = [(1, p) for p in range(100)]              # one 100-part order
     normal = [(2, p) for p in (500, 501, 502)]       # a 3-part order
     dup = [(2, 500)]                                 # duplicate line: must not double-pair
+    # the declared lineitem layout; the columns the basket does not read are null
     spark.createDataFrame(
-        mega + normal + dup, "l_orderkey long, l_partkey long"
+        [(o, p) + (None,) * 9 for o, p in mega + normal + dup],
+        tables.SCHEMAS["lineitem"],
     ).write.mode("overwrite").parquet(f"{tmp_path}/lineitem.parquet")
 
     monkeypatch.setattr(graph_algos, "MAX_BASKET_PARTS", 8)

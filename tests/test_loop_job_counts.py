@@ -6,7 +6,8 @@ run their driver actions) and then the noop write under a
 ``statusTracker().getJobIdsForGroup``. The pinned numbers are measured
 under this suite's session (cpus=8) at sf0.001 — a mid-loop eager
 action creeping back fails here. Build counts include no job for the
-edge-count hint: graph.edge_count_estimate reads parquet footers.
+edge-count hint (graph.edge_count_estimate reads parquet footers) and
+none for table loads (tables.load reads with a declared schema).
 """
 
 from __future__ import annotations
@@ -17,17 +18,17 @@ from neo_olap_spark.registry import queries
 
 # key -> (build jobs, exec jobs)
 LOOP_JOBS = {
-    "q_shortest_path_len": (30, 1),
-    "q_betweenness_sample": (8, 9),
-    "q_random_walk_counts": (10, 3),
-    "q_pagerank": (8, 1),
-    "q_pagerank_personalized": (11, 1),
-    "q_connected_components": (10, 1),
-    "q_graph_lpa": (7, 1),
-    "q_graph_kcore": (16, 1),
-    "q_graph_sssp": (14, 1),
-    "q_graph_closeness": (14, 4),
-    "q_graph_hits": (23, 1),
+    "q_shortest_path_len": (27, 1),
+    "q_betweenness_sample": (2, 9),
+    "q_random_walk_counts": (2, 3),
+    "q_pagerank": (3, 1),
+    "q_pagerank_personalized": (5, 1),
+    "q_connected_components": (5, 1),
+    "q_graph_lpa": (2, 1),
+    "q_graph_kcore": (14, 1),
+    "q_graph_sssp": (11, 1),
+    "q_graph_closeness": (11, 4),
+    "q_graph_hits": (18, 1),
 }
 
 # q_betweenness_sample's execute phase runs with AQE on over two BFS
@@ -54,6 +55,7 @@ def test_loop_job_counts(spark, sf_dir, key):
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
     build, exec_ = LOOP_JOBS[key]
-    assert _jobs(spark, f"{key}:build") == build
     lo, hi = EXEC_SPREAD.get(key, (exec_, exec_))
-    assert lo <= _jobs(spark, f"{key}:exec") <= hi
+    # one comparison, so a moved build pin still shows the exec count
+    got = (_jobs(spark, f"{key}:build"), _jobs(spark, f"{key}:exec"))
+    assert got in {(build, e) for e in range(lo, hi + 1)}
