@@ -5,12 +5,27 @@ an events DataFrame — static (batch, DuckDB-oracle-checkable) or a
 Structured Streaming source — and returns the same logical plan
 (SURVEY.md §7.3: one builder, two modes, so the oracle checks the
 exact expressions the stream runs). The streaming variants add
-watermarks and run under micro-batch triggers; tests drive them with a
-memory sink + processAllAvailable.
+watermarks and run under micro-batch triggers.
+
+Sources: ``stream_events`` streams the events fixture in place — the
+path ``tables.load`` reads, a single file or a directory of part
+files — with the footer-checked declared schema. The three phased
+replays (late data, outer-join flush, CDC apply) stage their phase
+frames as time-ordered files (``_phased_replay``) and read them back
+with the frames' own schema. No read here infers a schema or counts
+rows in Spark: state partitions are sized from parquet footers and
+sink reads pass the schema the sink was written with.
+
+Runners: every query drains its stream once through ``_drain``
+(``availableNow`` trigger, ``processAllAvailable``, stop) into a
+memory sink (aggregate-sized results), a foreachBatch parquet sink
+(fact-sized results, read back lazily) or a checkpointed parquet sink.
 
 Reference provenance: the LMAX Disruptor dependency (pom.xml:55-59)
 signals stream-processing intent that the reference never wired up —
 Structured Streaming is the Spark-native realization (SURVEY.md §2.2).
+The checkpointed parquet sink is the stream form of the reference's
+checkpointed round loop (Runner.java:67-88).
 
 Scale notes: windowed aggregations shuffle on (window, key) with
 partial aggregation map-side; state store size is bounded by the
@@ -19,13 +34,30 @@ watermark horizon, not stream length.
 
 from __future__ import annotations
 
+import glob
+import os
+import shutil
+import tempfile
+import time
+import uuid
+from contextlib import contextmanager
+from datetime import timedelta
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-
+from pyspark.sql.streaming import DataStreamWriter
+from pyspark.sql.window import Window as W
 
 from neo_olap_spark.functions import local_rows_frame, money_sum
+from neo_olap_spark.operators.io_sources import generational_sink_dir
 from neo_olap_spark.registry import query
-from neo_olap_spark.tables import load
+from neo_olap_spark.tables import (
+    _enable_nanos_as_long,
+    _normalize_events_ts,
+    load,
+    parquet_row_count,
+    read_schema,
+)
 
 # ---------------------------------------------------------------------------
 # Mode-agnostic builders
@@ -182,157 +214,6 @@ def q_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def _stage_replay_file(
-    staging_dir: str, files_dir: str, idx: int, frame: DataFrame, mtime: float
-) -> None:
-    """Write ``frame`` as the idx-th TIME-ORDERED file of a replay
-    source: single part file (coalesce(1)) copied to a stable name
-    with an explicit mtime — the file stream source orders batches by
-    modification time, so the mtimes ARE the replay schedule. Shared
-    by every phased-replay key (q_stream_late's straggler phases,
-    q_stream_join_outer's sentinel flushes, q_stream_cdc_apply's
-    changelog terciles)."""
-    import glob as globmod
-    import os
-    import shutil
-
-    stage = os.path.join(staging_dir, f"w{idx}")
-    frame.coalesce(1).write.mode("overwrite").parquet(stage)
-    dst = os.path.join(files_dir, f"{idx:02d}.parquet")
-    shutil.copy(globmod.glob(f"{stage}/part-*.parquet")[0], dst)
-    os.utime(dst, (mtime, mtime))
-
-
-def _copy_events_parquet(spark: SparkSession, sf_dir: str, dest_dir: str) -> None:
-    """Copy events.parquet into a stream-source directory. Read through
-    tables.load (footer-checked declared schema, nanos guard, UTC pin),
-    so the copy works under ANY SparkSession; ts is written back as
-    TIMESTAMP_NTZ, the declared layout stream_events checks for."""
-    load(spark, sf_dir, "events").withColumn(
-        "ts", F.col("ts").cast("timestamp_ntz")
-    ).write.mode("overwrite").parquet(dest_dir)
-
-
-_SHARED_REPLAY_CACHE: dict[tuple[str, str], str] = {}
-
-_REPLAY_ROOT = "/tmp/neo_olap_stream_src"
-# 7 days, not 24 h (ADVICE r7): the heartbeat fires on every
-# shared_events_replay_dir call AND every foreachBatch micro-batch
-# (_heartbeat_own_replay_dirs), so for a sibling's prune to hit a live
-# app that app would have to run a single streaming query for a week
-# with no new batch — far past any plausible single-query runtime here.
-_REPLAY_STALE_SECONDS = 7 * 24 * 3600
-
-
-def _heartbeat_own_replay_dirs() -> None:
-    """Refresh the mtime of every replay dir THIS process created, so a
-    long-running streaming query keeps its source alive against sibling
-    apps' staleness pruning even between shared_events_replay_dir calls
-    (ADVICE r7: the heartbeat used to fire only on dir-resolution, so a
-    single query streaming past the cutoff could lose its source
-    mid-run). Called per micro-batch from the foreachBatch sink —
-    driver-side, best-effort, O(#cached dirs)."""
-    import os
-    import time
-
-    now = time.time()
-    for (app_id, _sf), _path in list(_SHARED_REPLAY_CACHE.items()):
-        try:
-            os.utime(os.path.join(_REPLAY_ROOT, app_id), (now, now))
-        except OSError:
-            pass
-
-
-def _prune_stale_replay_dirs(keep_app: str) -> None:
-    """Best-effort bounded-disk guard for the per-app replay copies:
-    remove sibling app directories last TOUCHED over
-    _REPLAY_STALE_SECONDS (7 days) ago. Liveness is a heartbeat, not
-    just creation time — every shared_events_replay_dir call (cache
-    hit included) AND every foreachBatch micro-batch
-    (_heartbeat_own_replay_dirs) utimes the app's own dir, so an app
-    is only treated as dead after a week with NO streaming activity at
-    all; and the cache self-heals (existence check on hit) in case an
-    idle-past-cutoff app ever does lose its copy to a sibling's
-    prune."""
-    import os
-    import shutil
-    import time
-
-    try:
-        entries = os.listdir(_REPLAY_ROOT)
-    except OSError:
-        return
-    cutoff = time.time() - _REPLAY_STALE_SECONDS
-    for entry in entries:
-        if entry == keep_app:
-            continue
-        path = os.path.join(_REPLAY_ROOT, entry)
-        try:
-            if os.path.isdir(path) and os.path.getmtime(path) < cutoff:
-                shutil.rmtree(path, ignore_errors=True)
-        except OSError:
-            continue
-
-
-def shared_events_replay_dir(spark: SparkSession, sf_dir: str) -> str:
-    """One events replay-source copy per (Spark app, sf_dir), shared by
-    every streaming key that only READS its source directory (the
-    interval joins, transform_state, stateful, enrich, ohlc,
-    dedup_state). Profiling
-    the streaming wave (VERDICT r5 item 5) showed each key paying a
-    full read+write copy job before its stream even started — 6 keys ×
-    2 bench runs = 12 identical copies of the same parquet per bench.
-    The copy is made once per app and NOT deleted per key: the path is
-    fixed per sf name (bounded disk — next app overwrites in place,
-    the q_sink_partitioned rule), and a file-stream source with a
-    fresh checkpoint replays the same directory fully each time, so
-    sharing changes nothing about replay semantics. q_stream_late
-    keeps a private copy — it APPENDS straggler files to its source.
-
-    The dest path includes the Spark applicationId, so two concurrent
-    apps on the same sf each write their own copy — concurrent-app
-    corruption is structurally impossible, not just contractually
-    forbidden. Disk stays bounded: within one app the path is fixed
-    per sf (overwrite in place), and sibling app dirs untouched for
-    _REPLAY_STALE_SECONDS (7 days) are pruned best-effort on first
-    use. Every call heartbeats the app's own dir mtime — as does every
-    foreachBatch micro-batch (_heartbeat_own_replay_dirs) — so an
-    active long-lived app never looks stale, and the cache self-heals
-    on a missing path."""
-    import hashlib
-    import os
-
-    import time
-
-    sf_abs = os.path.abspath(sf_dir)
-    app_id = spark.sparkContext.applicationId
-    app_key = (app_id, sf_abs)
-    app_root = f"{_REPLAY_ROOT}/{app_id}"
-    cached = _SHARED_REPLAY_CACHE.get(app_key)
-    if cached is not None and os.path.isdir(cached):
-        # heartbeat: refresh the app dir's mtime so a long-lived app's
-        # copy never crosses a sibling's staleness cutoff while in use
-        try:
-            now = time.time()
-            os.utime(app_root, (now, now))
-        except OSError:
-            pass
-        return cached
-    _prune_stale_replay_dirs(keep_app=app_id)
-    # dest must be unique per FULL source path, not per basename — two
-    # sf dirs named "sf0.1" under different roots would otherwise
-    # overwrite one dest while the cache (keyed on the full path) kept
-    # serving it for both, silently replaying the wrong dataset
-    name = os.path.basename(os.path.normpath(sf_abs)) or "sf"
-    tag = hashlib.sha256(sf_abs.encode()).hexdigest()[:8]
-    dest = f"{app_root}/{name}-{tag}"
-    _copy_events_parquet(spark, sf_abs, dest)
-    _SHARED_REPLAY_CACHE[app_key] = dest
-    return dest
-
-
-from contextlib import contextmanager
-
 STATE_ROWS_PER_PARTITION = 50_000
 # Python-stateful operators (applyInPandasWithState / transformWith
 # State) pay a per-GROUP Python function call + state get/update, so
@@ -348,7 +229,7 @@ PY_STATE_ROWS_PER_PARTITION = 3_000
 @contextmanager
 def _replay_state_partitions(
     spark: SparkSession,
-    events_dir: str,
+    sf_dir: str,
     rows_per_partition: int = STATE_ROWS_PER_PARTITION,
 ):
     """Size stream-STATE partitioning to the replay volume (measured:
@@ -357,17 +238,19 @@ def _replay_state_partitions(
     of a stateful operator owns state-store instances whose per-commit
     file cost is fixed, so partitions beyond the data volume buy pure
     overhead). The partition count is chosen ONCE per query from the
-    source's metadata row count (parquet footer — no data read) and
-    clamped to the session default as ceiling, so a 100 TB replay still
-    gets the full session width; a stream's state partitioning is fixed
-    at first start, which is why this must be decided before .start()
-    and why each invocation uses a fresh checkpoint generation.
+    events table's row count in its parquet footers
+    (``tables.parquet_row_count``: no Spark job; the phased replays
+    stream the same rows, re-cut) and clamped to the session default
+    as ceiling, so a 100 TB replay still gets the full session width;
+    a stream's state partitioning is fixed at first start, which is
+    why this must be decided before .start() and why each invocation
+    uses a fresh checkpoint generation.
 
     Same principle as graph_algos._graph_loop: shuffle
     width should track data volume, not a global constant."""
     key = "spark.sql.shuffle.partitions"
     prev = spark.conf.get(key)
-    n_rows = spark.read.parquet(events_dir).count()  # metadata-only
+    n_rows = parquet_row_count(sf_dir, "events")
     parts = max(2, min(int(prev), n_rows // rows_per_partition + 1))
     spark.conf.set(key, str(parts))
     try:
@@ -376,61 +259,112 @@ def _replay_state_partitions(
         spark.conf.set(key, prev)
 
 
-def stream_events(spark: SparkSession, events_dir: str) -> DataFrame:
-    """Structured Streaming source over a directory of events parquet.
+def stream_events(spark: SparkSession, path: str) -> DataFrame:
+    """Structured Streaming source over the events table at ``path`` —
+    the path tables.load reads (``{sf_dir}/events.parquet``), a single
+    parquet file or a directory of part files, streamed in place.
 
     Mirrors tables.load: the footer is checked against the declared
     events schema (no inference job), and ts — TIMESTAMP_NTZ, or long
     nanos — is normalized to a proper timestamp before any windowing.
+    The file source takes a directory, not a file ("Option 'basePath'
+    must be a directory"), so it reads a one-character glob of the
+    path (``events.parque[t]``): the glob matches the path itself, a
+    file or a directory whose part files are listed, and a glob source
+    sets no basePath.
     """
-    from neo_olap_spark.tables import (
-        _enable_nanos_as_long,
-        _normalize_events_ts,
-        read_schema,
-    )
-
-    schema = read_schema(events_dir, "events")
+    schema = read_schema(path, "events")
     _enable_nanos_as_long(spark)
-    stream = spark.readStream.schema(schema).parquet(events_dir)
+    path = path.rstrip("/")
+    stream = spark.readStream.schema(schema).parquet(f"{path[:-1]}[{path[-1]}]")
     return _normalize_events_ts(stream)
+
+
+@contextmanager
+def _phased_replay(spark: SparkSession, phases: list[DataFrame]):
+    """Yield a file stream that replays ``phases`` one frame per
+    micro-batch, in list order (q_stream_late's straggler phases,
+    q_stream_join_outer's sentinel flushes, q_stream_cdc_apply's
+    changelog terciles). Each frame is staged as a single part file
+    (coalesce(1)) under a stable name with an explicit mtime — the
+    file source orders batches by modification time, so the mtimes ARE
+    the replay schedule — and read back with maxFilesPerTrigger=1 and
+    the frames' own schema (no inference job). The staging directory
+    is removed on exit."""
+    replay_dir = tempfile.mkdtemp(prefix="neo_olap_replay_")
+    files_dir = os.path.join(replay_dir, "files")
+    try:
+        os.makedirs(files_dir)
+        now = time.time()
+        for i, phase in enumerate(phases):
+            stage = os.path.join(replay_dir, f"w{i}")
+            phase.coalesce(1).write.mode("overwrite").parquet(stage)
+            dst = os.path.join(files_dir, f"{i:02d}.parquet")
+            shutil.copy(glob.glob(f"{stage}/part-*.parquet")[0], dst)
+            mtime = now - 100 * (len(phases) - i)
+            os.utime(dst, (mtime, mtime))
+        yield (
+            spark.readStream.schema(phases[0].schema)
+            .option("maxFilesPerTrigger", "1")
+            .parquet(files_dir)
+        )
+    finally:
+        shutil.rmtree(replay_dir, ignore_errors=True)
+
+
+def _drain(writer: DataStreamWriter) -> None:
+    """Run a configured stream writer over everything its sources hold
+    now (availableNow trigger), then stop it — the one start/drain/stop
+    sequence every runner here shares."""
+    q = writer.trigger(availableNow=True).start()
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
 
 
 def run_stream_once(
     df: DataFrame, name: str, output_mode: str = "complete"
 ) -> None:
     """Drive a streaming DataFrame to completion into a memory sink."""
-    q = (
-        df.writeStream.outputMode(output_mode)
-        .format("memory")
-        .queryName(name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
+    _drain(df.writeStream.outputMode(output_mode).format("memory").queryName(name))
 
 
-def streaming_tumbling_with_watermark(spark: SparkSession, events_dir: str) -> DataFrame:
+def _collect_stream(
+    spark: SparkSession, sf_dir: str, df: DataFrame, output_mode: str
+) -> DataFrame:
+    """Drain ``df`` into a fresh memory sink, with state partitions
+    sized to the events replay, and return the sink's rows as a
+    driver-local frame — for aggregate-sized results only (the
+    event-granularity keys go through the foreachBatch parquet sink)."""
+    name = f"t_stream_{uuid.uuid4().hex}"
+    with _replay_state_partitions(spark, sf_dir):
+        run_stream_once(df, name, output_mode)
+    final = spark.table(name)
+    return local_rows_frame(spark, final.collect(), final.schema)
+
+
+def streaming_tumbling_with_watermark(spark: SparkSession, events_path: str) -> DataFrame:
     """The real streaming path: watermark + tumbling window. Late rows
     beyond 10 minutes are dropped; state is bounded by the watermark."""
-    ev = stream_events(spark, events_dir).withWatermark("ts", "10 minutes")
+    ev = stream_events(spark, events_path).withWatermark("ts", "10 minutes")
     return build_tumbling(ev)
 
 
-def streaming_dedup_with_watermark(spark: SparkSession, events_dir: str) -> DataFrame:
+def streaming_dedup_with_watermark(spark: SparkSession, events_path: str) -> DataFrame:
     """Stateful streaming dedup on event_id with BOUNDED state:
     dropDuplicatesWithinWatermark evicts each key once the watermark
     passes its event time. Plain dropDuplicates(["event_id"]) would
     keep one state entry per distinct id forever (the watermark only
     bounds state when the event-time column is part of the key set)."""
-    ev = stream_events(spark, events_dir).withWatermark("ts", "10 minutes")
+    ev = stream_events(spark, events_path).withWatermark("ts", "10 minutes")
     return ev.dropDuplicatesWithinWatermark(["event_id"]).select(
         "event_id", "user_id", "event_type"
     )
 
 
 def streaming_interval_join(
-    spark: SparkSession, events_dir: str, how: str = "inner"
+    spark: SparkSession, events_path: str, how: str = "inner"
 ) -> DataFrame:
     """The real stream-stream join: two file streams over the same
     events feed (clicks / purchases), both watermarked, joined on
@@ -438,16 +372,19 @@ def streaming_interval_join(
     the range condition are required for state eviction — without them
     each side's join state grows forever."""
     clicks = (
-        stream_events(spark, events_dir)
+        stream_events(spark, events_path)
         .where(F.col("event_type") == "click")
         .withWatermark("ts", "1 hour")
     )
     purchases = (
-        stream_events(spark, events_dir)
+        stream_events(spark, events_path)
         .where(F.col("event_type") == "purchase")
         .withWatermark("ts", "1 hour")
     )
     return build_interval_join(clicks, purchases, how)
+
+
+JOIN_OUTPUT_SCHEMA = "click_id long, purchase_id long, user_id long"
 
 
 @query(
@@ -467,14 +404,28 @@ def q_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     the oracle.
 
     The sink is foreachBatch -> parquet (run_foreach_batch_to_parquet)
-    and the return is the LAZY parquet read: the output is
+    and the return is the LAZY parquet read (join columns only —
+    batch_id is sink-layout metadata): the output is
     event-granularity (every click->purchase pair), which at scale is
     itself a fact table — a memory sink / driver collect would funnel
-    the whole pair set through one process."""
-    return _run_interval_join_to_parquet(spark, sf_dir, "stream_join", "inner")
+    the whole pair set through one process. Each invocation writes a
+    FRESH generation directory (fresh checkpoint => full replay) and
+    prunes older generations only after its own write completes, so a
+    previous invocation's lazy result stays consistent until this one
+    is durable (generational_sink_dir's single-outstanding-result
+    contract)."""
+    base, promote = generational_sink_dir(spark, "stream_join")
+    sink_dir = f"{base}/sink"
+    with _replay_state_partitions(spark, sf_dir):
+        run_foreach_batch_to_parquet(
+            streaming_interval_join(spark, f"{sf_dir}/events.parquet"),
+            sink_dir,
+            f"{base}/ckpt",
+        )
+    return finalize_generational_sink(spark, sink_dir, promote, JOIN_OUTPUT_SCHEMA)
 
 
-def streaming_interval_join_outer(spark: SparkSession, events_dir: str) -> DataFrame:
+def streaming_interval_join_outer(spark: SparkSession, events_path: str) -> DataFrame:
     """Stream-stream LEFT OUTER interval join (same builder as the
     inner variant, how='left_outer'). Null-extended rows for a click
     are emitted only once the watermark proves no matching purchase
@@ -483,7 +434,7 @@ def streaming_interval_join_outer(spark: SparkSession, events_dir: str) -> DataF
     stays unmatched-undecided and is NOT emitted. That is watermark
     semantics, not data loss: registered rows-only, with the
     inner-part equivalence asserted in tests."""
-    return streaming_interval_join(spark, events_dir, how="left_outer")
+    return streaming_interval_join(spark, events_path, how="left_outer")
 
 
 @query(
@@ -509,7 +460,7 @@ def q_stream_join_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch SQL reproduces.
 
     The q_stream_late replayed-watermark technique closes that gap:
-    the replay is time-ordered files (maxFilesPerTrigger=1) — first
+    the replay is time-ordered files (_phased_replay) — first
     ALL real events, then two sentinel "flush" batches 10 and 20 days
     past the real maximum, each carrying one click and one purchase on
     negative user_ids that can match nothing. The first flush batch
@@ -529,112 +480,61 @@ def q_stream_join_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
     2×delay+range horizon per user, foreachBatch parquet sink with
     dynamic-partition idempotence, lazy fact-sized read. The sentinel
     flush is two 2-row files; its cost is two extra micro-batches."""
-    import os
-    import shutil
-    import tempfile
-    import time
-    from datetime import timedelta
+    ev = load(spark, sf_dir, "events")
+    mx = ev.agg(F.max("ts").alias("m")).collect()[0].m
 
-    from neo_olap_spark.operators.io_sources import generational_sink_dir
-    from neo_olap_spark.tables import _normalize_events_ts
+    def sentinels(day_offset: int, id0: int) -> DataFrame:
+        t = mx + timedelta(days=day_offset)
+        rows = [
+            (id0, t, -1, "click", 0.0, None),
+            (id0 - 1, t, -2, "purchase", 0.0, None),
+        ]
+        return local_rows_frame(spark, rows, ev.schema)
 
-    replay_dir = tempfile.mkdtemp(prefix="neo_olap_join_outer_")
-    try:
-        ev = load(spark, sf_dir, "events")
-        mx = ev.agg(F.max("ts").alias("m")).collect()[0].m
-        files_dir = os.path.join(replay_dir, "files")
-        os.makedirs(files_dir)
-
-        def sentinels(day_offset: int, id0: int) -> DataFrame:
-            t = mx + timedelta(days=day_offset)
-            rows = [
-                (id0, t, -1, "click", 0.0, None),
-                (id0 - 1, t, -2, "purchase", 0.0, None),
-            ]
-            return local_rows_frame(spark, rows, ev.schema)
-
-        now = time.time()
-        _stage_replay_file(replay_dir, files_dir, 0, ev, now - 300)
-        _stage_replay_file(replay_dir, files_dir, 1, sentinels(10, -1), now - 200)
-        _stage_replay_file(replay_dir, files_dir, 2, sentinels(20, -3), now - 100)
-
-        static = spark.read.parquet(files_dir)
+    base, promote = generational_sink_dir(spark, "stream_join_outer")
+    sink_dir = f"{base}/sink"
+    with _phased_replay(spark, [ev, sentinels(10, -1), sentinels(20, -3)]) as stream:
 
         def side(event_type: str) -> DataFrame:
-            return (
-                _normalize_events_ts(
-                    spark.readStream.schema(static.schema)
-                    .option("maxFilesPerTrigger", "1")
-                    .parquet(files_dir)
-                )
-                .where(F.col("event_type") == event_type)
-                .withWatermark("ts", "1 hour")
+            return stream.where(F.col("event_type") == event_type).withWatermark(
+                "ts", "1 hour"
             )
 
         joined = build_interval_join(side("click"), side("purchase"), "left_outer")
-        base, promote = generational_sink_dir(spark, "stream_join_outer")
-        sink_dir = f"{base}/sink"
-        with _replay_state_partitions(spark, files_dir):
+        with _replay_state_partitions(spark, sf_dir):
             run_foreach_batch_to_parquet(joined, sink_dir, f"{base}/ckpt")
-        return (
-            finalize_generational_sink(
-                spark, sink_dir, promote,
-                "click_id long, purchase_id long, user_id long",
-            )
-            .where(F.col("user_id") >= 0)
-            .select("click_id", "purchase_id", "user_id")
-        )
-    finally:
-        shutil.rmtree(replay_dir, ignore_errors=True)
-
-
-def _run_interval_join_to_parquet(
-    spark: SparkSession, sf_dir: str, key: str, how: str
-) -> DataFrame:
-    """Replay events as two file streams, run the watermarked interval
-    join through the foreachBatch parquet sink, and return the LAZY
-    read of the sink (join columns only — batch_id is sink-layout
-    metadata). Each invocation writes a FRESH generation directory
-    (fresh checkpoint => full replay) and prunes older generations
-    only after its own write completes, so a previous invocation's
-    lazy result stays consistent until this one is durable
-    (generational_sink_dir's single-outstanding-result contract)."""
-    from neo_olap_spark.operators.io_sources import generational_sink_dir
-
-    events_dir = shared_events_replay_dir(spark, sf_dir)
-    base, promote = generational_sink_dir(spark, key)
-    sink_dir = f"{base}/sink"
-    with _replay_state_partitions(spark, events_dir):
-        run_foreach_batch_to_parquet(
-            streaming_interval_join(spark, events_dir, how),
-            sink_dir,
-            f"{base}/ckpt",
-        )
     return finalize_generational_sink(
-        spark, sink_dir, promote,
-        "click_id long, purchase_id long, user_id long",
-    ).select("click_id", "purchase_id", "user_id")
+        spark, sink_dir, promote, JOIN_OUTPUT_SCHEMA
+    ).where(F.col("user_id") >= 0)
 
 
 def finalize_generational_sink(
-    spark: SparkSession, sink_dir: str, promote, empty_schema: str
+    spark: SparkSession, sink_dir: str, promote, schema: str
 ) -> DataFrame:
     """Shared tail of every foreachBatch-sink key (interval joins,
-    join_outer, stateful, dedup_state): promote the generation, then
-    return the LAZY sink read — or the TYPED empty frame when every
+    join_outer, stateful, transform_state, dedup_state): promote the
+    generation, then return the LAZY sink read with the ``schema`` the
+    sink was written with (no inference job; the ``batch_id`` layout
+    column is dropped) — or the TYPED empty frame when every
     micro-batch was empty (the partitioned writer leaves no part
-    files, so a parquet read cannot infer a schema). Extracted in
-    round 8 (third copy of the promote/glob/empty-fallback boilerplate
-    appeared) so the promote-ordering and empty-sink contracts live in
-    ONE place. Callers chain .where/.select — both work identically on
-    the empty frame (it carries the same columns, minus the sink's
-    batch_id layout metadata, which no caller selects)."""
-    import glob
-
+    files). The promote-ordering and empty-sink contracts live in ONE
+    place."""
     promote()
     if not glob.glob(f"{sink_dir}/batch_id=*/part-*"):
-        return local_rows_frame(spark, [], empty_schema)
-    return spark.read.parquet(sink_dir)
+        return local_rows_frame(spark, [], schema)
+    return spark.read.schema(schema).parquet(sink_dir).drop("batch_id")
+
+
+def _final_emission(emissions: DataFrame, *keys: str) -> DataFrame:
+    """The last (= maximal) cumulative update-mode emission per key is
+    the final state: a DISTRIBUTED window over the lazy sink read, so
+    key-cardinality-sized state never funnels through the driver."""
+    w = W.partitionBy(*keys).orderBy(F.col("n_events").desc())
+    return (
+        emissions.withColumn("rn", F.row_number().over(w))
+        .where(F.col("rn") == 1)
+        .drop("rn")
+    )
 
 
 def run_foreach_batch_to_parquet(
@@ -649,7 +549,6 @@ def run_foreach_batch_to_parquet(
     standard exactly-once recipe for foreachBatch."""
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        _heartbeat_own_replay_dirs()
         (
             batch_df.withColumn("batch_id", F.lit(batch_id))
             .write.mode("overwrite")
@@ -658,15 +557,11 @@ def run_foreach_batch_to_parquet(
             .parquet(sink_dir)
         )
 
-    q = (
+    _drain(
         df.writeStream.foreachBatch(write_batch)
         .outputMode(output_mode)
         .option("checkpointLocation", ckpt_dir)
-        .trigger(availableNow=True)
-        .start()
     )
-    q.processAllAvailable()
-    q.stop()
 
 
 # ---------------------------------------------------------------------------
@@ -703,7 +598,7 @@ def _user_stats_fn(key, pdfs, state):
     )
 
 
-def streaming_user_stats(spark: SparkSession, events_dir: str) -> DataFrame:
+def streaming_user_stats(spark: SparkSession, events_path: str) -> DataFrame:
     """Custom stateful aggregation the built-in operators can't express
     (arbitrary per-key state machine): running per-user event count and
     value sum via applyInPandasWithState. State is one (long, long)
@@ -711,7 +606,7 @@ def streaming_user_stats(spark: SparkSession, events_dir: str) -> DataFrame:
     cardinality, not stream length."""
     from pyspark.sql.streaming.state import GroupStateTimeout
 
-    ev = stream_events(spark, events_dir)
+    ev = stream_events(spark, events_path)
     return ev.groupBy("user_id").applyInPandasWithState(
         _user_stats_fn,
         outputStructType=STATEFUL_OUTPUT_SCHEMA,
@@ -779,12 +674,12 @@ def _make_type_count_processor():
     return TypeCountProcessor()
 
 
-def streaming_type_counts(spark: SparkSession, events_dir: str) -> DataFrame:
+def streaming_type_counts(spark: SparkSession, events_path: str) -> DataFrame:
     """Running per-(user, event_type) counts via transformWithState —
     the Spark 4.x arbitrary-stateful API (successor of
     applyInPandasWithState): typed composite state (Value/List/Map),
     timers, and TTL. Requires the RocksDB state store provider."""
-    ev = stream_events(spark, events_dir)
+    ev = stream_events(spark, events_path)
     return ev.groupBy("user_id").transformWithStateInPandas(
         _make_type_count_processor(),
         outputStructType=TWS_OUTPUT_SCHEMA,
@@ -828,7 +723,7 @@ def _type_count_fn(key, pdfs, state):
     )
 
 
-def streaming_type_counts_fallback(spark: SparkSession, events_dir: str) -> DataFrame:
+def streaming_type_counts_fallback(spark: SparkSession, events_path: str) -> DataFrame:
     """Running per-(user, event_type) counts on the PROTOBUF-FREE
     arbitrary-stateful API (applyInPandasWithState): grouping on the
     COMPOSITE (user_id, event_type) key flattens the TypeCountProcessor's
@@ -842,7 +737,7 @@ def streaming_type_counts_fallback(spark: SparkSession, events_dir: str) -> Data
     its runtime exists."""
     from pyspark.sql.streaming.state import GroupStateTimeout
 
-    ev = stream_events(spark, events_dir)
+    ev = stream_events(spark, events_path)
     return ev.groupBy("user_id", "event_type").applyInPandasWithState(
         _type_count_fn,
         outputStructType=TWS_OUTPUT_SCHEMA,
@@ -874,13 +769,7 @@ def q_stream_transform_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     distributed window over the LAZY sink read: (user × type) state is
     fact-sized at scale, so nothing funnels through the driver (same
     sink rule as q_stream_stateful)."""
-    import glob
-
-    from pyspark.sql.window import Window as W
-
-    from neo_olap_spark.operators.io_sources import generational_sink_dir
-
-    events_dir = shared_events_replay_dir(spark, sf_dir)
+    events_path = f"{sf_dir}/events.parquet"
     base, promote = generational_sink_dir(spark, "stream_transform_state")
     sink_dir = f"{base}/sink"
     provider_key = "spark.sql.streaming.stateStore.providerClass"
@@ -889,33 +778,24 @@ def q_stream_transform_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     try:
         if use_tws:
             spark.conf.set(provider_key, ROCKSDB_PROVIDER)
-            stream = streaming_type_counts(spark, events_dir)
+            stream = streaming_type_counts(spark, events_path)
         else:
-            stream = streaming_type_counts_fallback(spark, events_dir)
-        with _replay_state_partitions(
-            spark, events_dir, rows_per_partition=PY_STATE_ROWS_PER_PARTITION
-        ):
+            stream = streaming_type_counts_fallback(spark, events_path)
+        with _replay_state_partitions(spark, sf_dir, PY_STATE_ROWS_PER_PARTITION):
             run_foreach_batch_to_parquet(
                 stream, sink_dir, f"{base}/ckpt", output_mode="update"
             )
-        promote()
-        if not glob.glob(f"{sink_dir}/batch_id=*/part-*"):
-            return local_rows_frame(
-                spark, [], "user_id long, event_type string, n_events long"
-            )
-        mem = spark.read.parquet(sink_dir)
-        w = W.partitionBy("user_id", "event_type").orderBy(F.col("n_events").desc())
-        return (
-            mem.withColumn("rn", F.row_number().over(w))
-            .where(F.col("rn") == 1)
-            .select("user_id", "event_type", "n_events")
-        )
     finally:
         if use_tws:
             if prev_provider is None:
                 spark.conf.unset(provider_key)
             else:
                 spark.conf.set(provider_key, prev_provider)
+    return _final_emission(
+        finalize_generational_sink(spark, sink_dir, promote, TWS_OUTPUT_SCHEMA),
+        "user_id",
+        "event_type",
+    )
 
 
 def run_to_parquet_sink(df: DataFrame, sink_dir: str, ckpt_dir: str) -> None:
@@ -924,38 +804,26 @@ def run_to_parquet_sink(df: DataFrame, sink_dir: str, ckpt_dir: str) -> None:
     so a restarted query resumes exactly where it stopped and the sink
     stays exactly-once across restarts (asserted in tests). This is
     the production shape of R10's checkpoint/resume for streams."""
-    q = (
+    _drain(
         df.writeStream.outputMode("append")
         .format("parquet")
         .option("path", sink_dir)
         .option("checkpointLocation", ckpt_dir)
-        .trigger(availableNow=True)
-        .start()
     )
-    q.processAllAvailable()
-    q.stop()
 
 
 def streaming_enriched_segments(
-    spark: SparkSession, events_dir: str, customer: DataFrame
+    spark: SparkSession, events_path: str, customer: DataFrame
 ) -> DataFrame:
     """Stream-static join: each micro-batch of events is enriched with
     the static customer dim via broadcast — no stream state at all, the
     standard shape for dimension lookups on a 100 TB/day event feed."""
-    ev = stream_events(spark, events_dir)
+    ev = stream_events(spark, events_path)
     return (
         ev.join(F.broadcast(customer), ev.user_id == customer.c_custkey)
         .groupBy("c_mktsegment")
         .agg(F.count("*").alias("n_events"), money_sum("value").alias("sum_value"))
     )
-
-
-_SINK_COUNTER = [0]
-
-
-def _fresh_sink_name(prefix: str) -> str:
-    _SINK_COUNTER[0] += 1
-    return f"{prefix}_{_SINK_COUNTER[0]}"
 
 
 @query(
@@ -971,17 +839,13 @@ def q_stream_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     file stream, enriched per micro-batch against the static customer
     dim, aggregated in complete mode; the final memory-sink table must
     hash-match the batch join — the oracle."""
-    events_dir = shared_events_replay_dir(spark, sf_dir)
-    name = _fresh_sink_name("t_enrich")
     customer = load(spark, sf_dir, "customer")
-    with _replay_state_partitions(spark, events_dir):
-        run_stream_once(
-            streaming_enriched_segments(spark, events_dir, customer),
-            name,
-            output_mode="complete",
-        )
-    final = spark.table(name)
-    return local_rows_frame(spark, final.collect(), final.schema)
+    return _collect_stream(
+        spark,
+        sf_dir,
+        streaming_enriched_segments(spark, f"{sf_dir}/events.parquet", customer),
+        "complete",
+    )
 
 
 @query(
@@ -1004,32 +868,19 @@ def q_stream_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
     at 100 TB that is itself a large relation, so nothing here may
     funnel through the driver (same sink rule as the stream-stream
     join keys)."""
-    from pyspark.sql.window import Window as W
-
-    from neo_olap_spark.operators.io_sources import generational_sink_dir
-
-    events_dir = shared_events_replay_dir(spark, sf_dir)
     base, promote = generational_sink_dir(spark, "stream_stateful")
     sink_dir = f"{base}/sink"
-    with _replay_state_partitions(
-        spark, events_dir, rows_per_partition=PY_STATE_ROWS_PER_PARTITION
-    ):
+    with _replay_state_partitions(spark, sf_dir, PY_STATE_ROWS_PER_PARTITION):
         run_foreach_batch_to_parquet(
-            streaming_user_stats(spark, events_dir),
+            streaming_user_stats(spark, f"{sf_dir}/events.parquet"),
             sink_dir,
             f"{base}/ckpt",
             output_mode="update",
         )
-    mem = finalize_generational_sink(
-        spark, sink_dir, promote,
-        "user_id long, n_events long, sum_value double",
-    )
-    # last (= maximal) cumulative emission per user is the final state
-    w = W.partitionBy("user_id").orderBy(F.col("n_events").desc())
-    return (
-        mem.withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") == 1)
-        .select("user_id", "n_events", "sum_value")  # exact cents/100
+    # sum_value is exact cents / 100 (_user_stats_fn)
+    return _final_emission(
+        finalize_generational_sink(spark, sink_dir, promote, STATEFUL_OUTPUT_SCHEMA),
+        "user_id",
     )
 
 
@@ -1055,23 +906,20 @@ def q_stream_dedup_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     possible re-emission of keys whose duplicates outlive the horizon,
     which would break exact dedup). Keys hash-partition across the
     state store; the sink read stays lazy."""
-    from neo_olap_spark.operators.io_sources import generational_sink_dir
-
-    events_dir = shared_events_replay_dir(spark, sf_dir)
     base, promote = generational_sink_dir(spark, "stream_dedup_state")
     sink_dir = f"{base}/sink"
-    with _replay_state_partitions(spark, events_dir):
-        deduped = (
-            stream_events(spark, events_dir)
-            .select("user_id", "event_type")
-            .dropDuplicates(["user_id", "event_type"])
-        )
+    deduped = (
+        stream_events(spark, f"{sf_dir}/events.parquet")
+        .select("user_id", "event_type")
+        .dropDuplicates(["user_id", "event_type"])
+    )
+    with _replay_state_partitions(spark, sf_dir):
         run_foreach_batch_to_parquet(
             deduped, sink_dir, f"{base}/ckpt", output_mode="append"
         )
     return finalize_generational_sink(
         spark, sink_dir, promote, "user_id long, event_type string"
-    ).select("user_id", "event_type")
+    )
 
 
 LATE_DELAY_US = 600_000_000  # the 10-minute watermark, in microseconds
@@ -1134,51 +982,24 @@ def q_stream_late(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows accounted rather than silently merged; the windowed
     aggregate shuffles on (window, event_type) with map-side
     partials, identical to q_stream_tumbling."""
-    import glob as globmod
-    import os
-    import shutil
-    import tempfile
-    import time
-
-    from neo_olap_spark.tables import _normalize_events_ts
-
-    events_dir = tempfile.mkdtemp(prefix="neo_olap_late_")
-    try:
-        ev = load(spark, sf_dir, "events")
-        b = ev.agg(
-            F.min(F.unix_micros("ts")).alias("lo"),
-            F.max(F.unix_micros("ts")).alias("hi"),
-        ).collect()[0]
-        t1, t2 = _late_phase_splits(b.lo, b.hi)
-        us = F.unix_micros("ts")
-        straggler = (F.col("event_id") % 17 == 0) & (
-            us < t1 - LATE_STRAGGLER_LAG_US
-        )
-        phases = [
-            ev.where((us <= t1) & ~straggler),
-            ev.where((us > t1) & (us <= t2) & ~straggler),
-            ev.where((us > t2) | straggler),
-        ]
-        files_dir = os.path.join(events_dir, "files")
-        os.makedirs(files_dir)
-        now = time.time()
-        for i, phase in enumerate(phases):
-            _stage_replay_file(
-                events_dir, files_dir, i, phase, now - 300 + i * 100
-            )
-
-        static = spark.read.parquet(files_dir)
-        stream = (
-            _normalize_events_ts(
-                spark.readStream.schema(static.schema)
-                .option("maxFilesPerTrigger", "1")
-                .parquet(files_dir)
-            )
-            .withWatermark("ts", "10 minutes")
-        )
-        cents = F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long")
+    ev = load(spark, sf_dir, "events")
+    b = ev.agg(
+        F.min(F.unix_micros("ts")).alias("lo"),
+        F.max(F.unix_micros("ts")).alias("hi"),
+    ).collect()[0]
+    t1, t2 = _late_phase_splits(b.lo, b.hi)
+    us = F.unix_micros("ts")
+    straggler = (F.col("event_id") % 17 == 0) & (us < t1 - LATE_STRAGGLER_LAG_US)
+    phases = [
+        ev.where((us <= t1) & ~straggler),
+        ev.where((us > t1) & (us <= t2) & ~straggler),
+        ev.where((us > t2) | straggler),
+    ]
+    cents = F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long")
+    with _phased_replay(spark, phases) as stream:
         out = (
-            stream.groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
+            stream.withWatermark("ts", "10 minutes")
+            .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
             .agg(
                 F.count("*").alias("n_events"),
                 F.sum(cents).alias("v_cents"),
@@ -1190,13 +1011,7 @@ def q_stream_late(spark: SparkSession, sf_dir: str) -> DataFrame:
                 (F.col("v_cents").cast("double") / 100.0).alias("sum_value"),
             )
         )
-        name = _fresh_sink_name("t_late")
-        with _replay_state_partitions(spark, files_dir):
-            run_stream_once(out, name, output_mode="append")
-        final = spark.table(name)
-        return local_rows_frame(spark, final.collect(), final.schema)
-    finally:
-        shutil.rmtree(events_dir, ignore_errors=True)
+        return _collect_stream(spark, sf_dir, out, "append")
 
 
 EVENT_TYPES = ("signup", "click", "error", "view", "purchase")
@@ -1297,16 +1112,12 @@ def q_stream_ohlc(spark: SparkSession, sf_dir: str) -> DataFrame:
     construction, so the memory sink is the right tool here (unlike
     the event-granularity join keys, which go through the parquet
     sink)."""
-    events_dir = shared_events_replay_dir(spark, sf_dir)
-    name = _fresh_sink_name("t_ohlc")
-    with _replay_state_partitions(spark, events_dir):
-        run_stream_once(
-            build_ohlc(stream_events(spark, events_dir)),
-            name,
-            output_mode="complete",
-        )
-    final = spark.table(name)
-    return local_rows_frame(spark, final.collect(), final.schema)
+    return _collect_stream(
+        spark,
+        sf_dir,
+        build_ohlc(stream_events(spark, f"{sf_dir}/events.parquet")),
+        "complete",
+    )
 
 
 @query(
@@ -1354,89 +1165,63 @@ def q_stream_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     would replace the generation dirs with MERGE INTO, same plan
     underneath. The final state must hash-match the batch
     last-writer-wins ranking — the oracle."""
-    import glob as globmod
-    import os
-    import shutil
-    import tempfile
-    import time
+    o = load(spark, sf_dir, "orders")
+    changelog = o.select(
+        F.col("o_custkey").alias("custkey"),
+        F.col("o_orderkey").alias("orderkey"),
+        F.datediff(
+            F.col("o_orderdate").cast("date"), F.lit("1970-01-01").cast("date")
+        ).cast("long").alias("date_days"),
+        F.round("o_totalprice", 2).alias("price"),
+    )
+    b = changelog.agg(
+        F.min("date_days").alias("lo"), F.max("date_days").alias("hi")
+    ).collect()[0]
+    t1 = b.lo + (b.hi - b.lo) // 3
+    t2 = b.lo + (b.hi - b.lo) * 2 // 3
+    phases = [
+        changelog.where(F.col("date_days") <= t1),
+        changelog.where((F.col("date_days") > t1) & (F.col("date_days") <= t2)),
+        changelog.where(F.col("date_days") > t2),
+    ]
+    # the state has the changelog's columns: one winning change per key
+    state_schema = changelog.schema
+    base, promote = generational_sink_dir(spark, "stream_cdc_apply")
 
-    from neo_olap_spark.operators.io_sources import generational_sink_dir
+    def state_dir(batch_id: int) -> str:
+        return os.path.join(base, f"state_g{batch_id:06d}")
 
-    replay_dir = tempfile.mkdtemp(prefix="neo_olap_cdc_")
-    try:
-        o = load(spark, sf_dir, "orders")
-        changelog = o.select(
-            F.col("o_custkey").alias("custkey"),
-            F.col("o_orderkey").alias("orderkey"),
-            F.datediff(
-                F.col("o_orderdate").cast("date"), F.lit("1970-01-01").cast("date")
-            ).cast("long").alias("date_days"),
-            F.round("o_totalprice", 2).alias("price"),
-        )
-        b = changelog.agg(
-            F.min("date_days").alias("lo"), F.max("date_days").alias("hi")
-        ).collect()[0]
-        t1 = b.lo + (b.hi - b.lo) // 3
-        t2 = b.lo + (b.hi - b.lo) * 2 // 3
-        phases = [
-            changelog.where(F.col("date_days") <= t1),
-            changelog.where((F.col("date_days") > t1) & (F.col("date_days") <= t2)),
-            changelog.where(F.col("date_days") > t2),
-        ]
-        files_dir = os.path.join(replay_dir, "files")
-        os.makedirs(files_dir)
-        now = time.time()
-        for i, phase in enumerate(phases):
-            _stage_replay_file(
-                replay_dir, files_dir, i, phase, now - 300 + i * 100
+    latest = F.max(F.struct("date_days", "orderkey", "price")).alias("w")
+
+    def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
+        merged = batch_df
+        prev = state_dir(batch_id - 1)
+        if batch_id > 0 and os.path.exists(prev):
+            merged = spark.read.schema(state_schema).parquet(prev).unionByName(batch_df)
+        (
+            merged.groupBy("custkey")
+            .agg(latest)
+            .select(
+                "custkey",
+                F.col("w.orderkey").alias("orderkey"),
+                F.col("w.date_days").alias("date_days"),
+                F.col("w.price").alias("price"),
             )
+            .write.mode("overwrite")
+            .parquet(state_dir(batch_id))
+        )
 
-        base, promote = generational_sink_dir(spark, "stream_cdc_apply")
-
-        def state_dir(batch_id: int) -> str:
-            return os.path.join(base, f"state_g{batch_id:06d}")
-
-        latest = F.max(
-            F.struct("date_days", "orderkey", "price")
-        ).alias("w")
-
-        def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-            merged = batch_df
-            prev = state_dir(batch_id - 1)
-            if batch_id > 0 and os.path.exists(prev):
-                merged = spark.read.parquet(prev).unionByName(batch_df)
-            (
-                merged.groupBy("custkey")
-                .agg(latest)
-                .select(
-                    "custkey",
-                    F.col("w.orderkey").alias("orderkey"),
-                    F.col("w.date_days").alias("date_days"),
-                    F.col("w.price").alias("price"),
-                )
-                .write.mode("overwrite")
-                .parquet(state_dir(batch_id))
+    with _phased_replay(spark, phases) as stream:
+        _drain(
+            stream.writeStream.foreachBatch(apply_batch).option(
+                "checkpointLocation", os.path.join(base, "ckpt")
             )
-
-        static = spark.read.parquet(files_dir)
-        q = (
-            spark.readStream.schema(static.schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(files_dir)
-            .writeStream.foreachBatch(apply_batch)
-            .option("checkpointLocation", os.path.join(base, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
         )
-        q.processAllAvailable()
-        q.stop()
-        promote()
-        finals = sorted(globmod.glob(os.path.join(base, "state_g*")))
-        return spark.read.parquet(finals[-1]).select(
-            "custkey",
-            F.col("orderkey").alias("last_orderkey"),
-            F.col("date_days").alias("last_date_days"),
-            F.col("price").alias("last_price"),
-        )
-    finally:
-        shutil.rmtree(replay_dir, ignore_errors=True)
+    promote()
+    finals = sorted(glob.glob(os.path.join(base, "state_g*")))
+    return spark.read.schema(state_schema).parquet(finals[-1]).select(
+        "custkey",
+        F.col("orderkey").alias("last_orderkey"),
+        F.col("date_days").alias("last_date_days"),
+        F.col("price").alias("last_price"),
+    )

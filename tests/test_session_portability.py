@@ -55,8 +55,8 @@ def test_stream_events_on_bare_session(bare_conf, sf_dir):
 
 
 def test_stream_query_copy_path_on_bare_session(bare_conf, sf_dir):
-    # the q_stream_* wrappers copy events.parquet into a temp stream
-    # source — that read must also survive a session without the conf
+    # the q_stream_* wrappers stream events.parquet in place — that
+    # read must also survive a session without the conf
     out = streaming.q_stream_join(bare_conf, sf_dir)
     assert out.count() >= 0
 

@@ -20,63 +20,60 @@ from neo_olap_spark.tables import load
 
 
 @pytest.fixture(scope="module")
-def events_dir(spark, sf_dir):
-    # readStream wants a directory; re-write the events table into one
-    d = tempfile.mkdtemp(prefix="neo_olap_stream_")
-    spark.read.parquet(f"{sf_dir}/events.parquet").write.mode("overwrite").parquet(d)
-    yield d
-    shutil.rmtree(d, ignore_errors=True)
+def events_path(sf_dir):
+    # stream_events streams the fixture in place, file or directory
+    return f"{sf_dir}/events.parquet"
 
 
 def _rows(df):
     return sorted(map(tuple, df.collect()))
 
 
-def test_stream_tumbling_matches_batch(spark, sf_dir, events_dir):
+def test_stream_tumbling_matches_batch(spark, sf_dir, events_path):
     batch = build_tumbling(load(spark, sf_dir, "events"))
-    stream = build_tumbling(stream_events(spark, events_dir))
+    stream = build_tumbling(stream_events(spark, events_path))
     run_stream_once(stream, "t_tumbling", output_mode="complete")
     assert _rows(spark.sql("SELECT * FROM t_tumbling")) == _rows(batch)
 
 
-def test_stream_tumbling_watermark_runs(spark, events_dir):
+def test_stream_tumbling_watermark_runs(spark, events_path):
     # append mode + watermark: emits only finalized windows; with a
     # single micro-batch nothing may finalize — the contract here is
     # that the plan is streamable and runs clean.
-    df = streaming_tumbling_with_watermark(spark, events_dir)
+    df = streaming_tumbling_with_watermark(spark, events_path)
     run_stream_once(df, "t_wm", output_mode="append")
     assert spark.sql("SELECT * FROM t_wm").count() >= 0
 
 
-def test_stream_sliding_matches_batch(spark, sf_dir, events_dir):
+def test_stream_sliding_matches_batch(spark, sf_dir, events_path):
     from neo_olap_spark.operators.streaming import build_sliding
 
     batch = build_sliding(load(spark, sf_dir, "events"))
-    stream = build_sliding(stream_events(spark, events_dir))
+    stream = build_sliding(stream_events(spark, events_path))
     run_stream_once(stream, "t_sliding_test", output_mode="complete")
     assert _rows(spark.sql("SELECT * FROM t_sliding_test")) == _rows(batch)
 
 
-def test_stream_session_matches_batch(spark, sf_dir, events_dir):
+def test_stream_session_matches_batch(spark, sf_dir, events_path):
     """Session windows driven as a real stream (complete mode) must
     equal the batch sessionization."""
     from neo_olap_spark.operators.streaming import build_session
 
     batch = build_session(load(spark, sf_dir, "events"))
-    stream = build_session(stream_events(spark, events_dir))
+    stream = build_session(stream_events(spark, events_path))
     run_stream_once(stream, "t_session_test", output_mode="complete")
     assert _rows(spark.sql("SELECT * FROM t_session_test")) == _rows(batch)
 
 
-def test_stream_dedup_matches_batch(spark, sf_dir, events_dir):
-    df = streaming_dedup_with_watermark(spark, events_dir)
+def test_stream_dedup_matches_batch(spark, sf_dir, events_path):
+    df = streaming_dedup_with_watermark(spark, events_path)
     run_stream_once(df, "t_dedup", output_mode="append")
     got = spark.sql("SELECT count(DISTINCT event_id) AS n, count(*) AS total FROM t_dedup").first()
     want = load(spark, sf_dir, "events").select(F.countDistinct("event_id")).first()[0]
     assert got.n == got.total == want
 
 
-def test_stream_interval_join_matches_batch(spark, sf_dir, events_dir):
+def test_stream_interval_join_matches_batch(spark, sf_dir, events_path):
     """Stream-stream interval join (watermarked both sides, append
     mode) must emit exactly the batch theta-join pairs."""
     from neo_olap_spark.operators.streaming import (
@@ -89,12 +86,12 @@ def test_stream_interval_join_matches_batch(spark, sf_dir, events_dir):
         ev.where(F.col("event_type") == "click"),
         ev.where(F.col("event_type") == "purchase"),
     )
-    stream = streaming_interval_join(spark, events_dir)
+    stream = streaming_interval_join(spark, events_path)
     run_stream_once(stream, "t_ssjoin_test", output_mode="append")
     assert _rows(spark.sql("SELECT * FROM t_ssjoin_test")) == _rows(batch)
 
 
-def test_stream_interval_join_outer_invariants(spark, sf_dir, events_dir):
+def test_stream_interval_join_outer_invariants(spark, sf_dir, events_path):
     """Outer stream-stream join: matched rows equal the inner join;
     null-extended rows are exactly clicks with no purchase in window
     whose outcome the final watermark could decide."""
@@ -108,7 +105,7 @@ def test_stream_interval_join_outer_invariants(spark, sf_dir, events_dir):
         ev.where(F.col("event_type") == "click"),
         ev.where(F.col("event_type") == "purchase"),
     )
-    stream = streaming_interval_join_outer(spark, events_dir)
+    stream = streaming_interval_join_outer(spark, events_path)
     run_stream_once(stream, "t_ssjoin_outer_test", output_mode="append")
     got = spark.sql("SELECT * FROM t_ssjoin_outer_test")
     matched = got.where(F.col("purchase_id").isNotNull())
@@ -131,10 +128,11 @@ def test_foreach_batch_sink_matches_batch(spark, sf_dir):
     )
 
     base = tempfile.mkdtemp(prefix="neo_olap_feb_")
-    src, sink, ckpt = f"{base}/src", f"{base}/sink", f"{base}/ckpt"
+    sink, ckpt = f"{base}/sink", f"{base}/ckpt"
     try:
-        spark.read.parquet(f"{sf_dir}/events.parquet").write.parquet(src)
-        out = stream_events(spark, src).select("event_id", "user_id", "value")
+        out = stream_events(spark, f"{sf_dir}/events.parquet").select(
+            "event_id", "user_id", "value"
+        )
         run_foreach_batch_to_parquet(out, sink, ckpt)
         got = spark.read.parquet(sink)
         want = load(spark, sf_dir, "events")
@@ -219,14 +217,14 @@ def test_parquet_sink_exactly_once_across_restart(spark, sf_dir):
         shutil.rmtree(base, ignore_errors=True)
 
 
-def test_stream_quality_matches_batch(spark, sf_dir, events_dir):
+def test_stream_quality_matches_batch(spark, sf_dir, events_path):
     """The streaming quality audit over a REAL stream must agree with
     its batch twin, and the clean fixture must show zero violations
     in every window except the (intentional) value-outlier counter."""
     from neo_olap_spark.operators.streaming import build_quality_audit
 
     batch = build_quality_audit(load(spark, sf_dir, "events"))
-    stream = build_quality_audit(stream_events(spark, events_dir))
+    stream = build_quality_audit(stream_events(spark, events_path))
     run_stream_once(stream, "t_quality_test", output_mode="complete")
     got = _rows(spark.sql("SELECT * FROM t_quality_test"))
     assert got == _rows(batch)

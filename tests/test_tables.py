@@ -59,20 +59,47 @@ def test_load_launches_no_spark_job(spark, sf_dir):
 
 
 def test_stream_events_reads_declared_schema(spark, sf_dir, tmp_path):
-    """The streaming source takes the declared events schema too: no
-    inference job, and its replay copy carries the declared layout."""
+    """The streaming source takes the declared events schema too and
+    streams the table in place: over the fixture file and over a
+    directory of part files, it starts with no inference job and
+    returns load's rows."""
     events = tables.load(spark, sf_dir, "events")
-    src = f"{sf_dir}/events.parquet"
-    stream = []
-    assert _jobs_in_group(
-        spark, "stream_events_schema",
-        lambda: stream.append(streaming.stream_events(spark, src)),
-    ) == 0
-    assert stream[0].schema == events.schema
-    copy = str(tmp_path / "replay")
-    streaming._copy_events_parquet(spark, sf_dir, copy)
-    assert tables.read_schema(copy, "events") == tables.SCHEMAS["events"]
-    assert streaming.stream_events(spark, copy).schema == events.schema
+    want = sorted(map(tuple, events.collect()))
+    t = pq.read_table(f"{sf_dir}/events.parquet")
+    parts = tmp_path / "events.parquet"
+    parts.mkdir()
+    step = -(-t.num_rows // 3)
+    for i in range(3):
+        pq.write_table(t.slice(i * step, step), parts / f"part-{i:05d}.parquet")
+    for layout, src in [("file", f"{sf_dir}/events.parquet"), ("dir", str(parts))]:
+        stream = []
+        assert _jobs_in_group(
+            spark, f"stream_events_schema_{layout}",
+            lambda: stream.append(streaming.stream_events(spark, src)),
+        ) == 0
+        assert stream[0].schema == events.schema
+        streaming.run_stream_once(stream[0], f"t_stream_events_{layout}", "append")
+        got = spark.table(f"t_stream_events_{layout}").collect()
+        assert sorted(map(tuple, got)) == want, layout
+
+
+def test_replay_state_partitions_reads_footers(spark, sf_dir):
+    """Stream state partitions are sized from the events footer row
+    count: entering the context runs no Spark job, and it restores the
+    session width on exit."""
+    key = "spark.sql.shuffle.partitions"
+    prev = spark.conf.get(key)
+    n_rows = tables.parquet_row_count(sf_dir, "events")
+    seen = []
+
+    def enter():
+        with streaming._replay_state_partitions(spark, sf_dir):
+            seen.append(spark.conf.get(key))
+
+    assert _jobs_in_group(spark, "replay_state_partitions", enter) == 0
+    want = max(2, min(int(prev), n_rows // streaming.STATE_ROWS_PER_PARTITION + 1))
+    assert seen == [str(want)]
+    assert spark.conf.get(key) == prev
 
 
 def _rename(t: pa.Table) -> pa.Table:
@@ -128,11 +155,13 @@ def test_schema_drift_fails_loudly(spark, sf_dir, tmp_path, drift, layout):
     assert "lineitem" in errors[0] and repr(column) in errors[0], errors[0]
 
 
-# a spark.read / spark.readStream call chain (.option(...), .schema(...)
-# links) ending in .parquet( of a star-table path "{<dir>}/<table>.parquet"
+# a spark.read / spark.readStream call chain: its links (.option(...),
+# .schema(...)) in group 1, up to the .parquet( that ends it
+READ_CHAIN = r"\.read(?:Stream)?((?:\s*\.\w+\((?:[^()]|\([^()]*\))*\))*)\s*\.parquet\("
+# ... of a star-table path "{<dir>}/<table>.parquet"
 STAR_READ = re.compile(
-    r"\.read(?:Stream)?(?:\s*\.\w+\((?:[^()]|\([^()]*\))*\))*\s*\.parquet\("
-    r"\s*f?[\"'][^\"'\n]*\}/(?:" + "|".join(tables.TABLES) + r")\.parquet[\"']"
+    READ_CHAIN
+    + r"\s*f?[\"'][^\"'\n]*\}/(?:" + "|".join(tables.TABLES) + r")\.parquet[\"']"
 )
 
 
@@ -161,3 +190,29 @@ def test_star_reads_go_through_tables():
                 text = f.read()
             found += [(os.path.relpath(path, pkg), m.group(0)) for m in STAR_READ.finditer(text)]
     assert found == []
+
+
+def _inferred_reads(text: str) -> list[str]:
+    return [
+        m.group(0)
+        for m in re.finditer(READ_CHAIN, text)
+        if ".schema(" not in m.group(1)
+    ]
+
+
+def test_streaming_reads_declare_their_schema():
+    """Every parquet read in operators/streaming.py passes a schema:
+    each source it reads (the events table, staged replay phases, its
+    own sinks and CDC state) has a schema it already holds, and an
+    inferred read runs a Spark job per call."""
+    assert _inferred_reads("n = spark.read.parquet(d).count()")
+    assert _inferred_reads(
+        'spark.readStream.option("maxFilesPerTrigger", "1")\n    .parquet(d)'
+    )
+    assert not _inferred_reads('spark.read.schema(s).parquet(f"{d}/sink")')
+    assert not _inferred_reads(
+        'spark.readStream.schema(p[0].schema)\n    .option("a", "1")\n    .parquet(d)'
+    )
+    assert not _inferred_reads('df.write.mode("overwrite").parquet(d)')
+    with open(streaming.__file__, encoding="utf-8") as f:
+        assert _inferred_reads(f.read()) == []
