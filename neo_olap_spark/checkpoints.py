@@ -9,10 +9,15 @@ carries the loop state exactly like the reference's filename — with
 delete-previous retention, so disk stays bounded at one round.
 
 These are the storage primitives of the graph-loop driver's
-``ckpt_dir`` policy (operators.graph_algos._iterate): a loop given a
-``ckpt_dir`` (``pagerank``, ``random_walk_counts``, the CLI's
-``walk --ckpt-dir``) snapshots its whole state after every round and
-resumes from the latest intact round on the next call.
+``ckpt_dir`` policy (operators.graph_algos._iterate), the engine's one
+durable checkpoint: a loop given a ``ckpt_dir`` (``pagerank``,
+``random_walk_counts``, the CLI's ``walk --ckpt-dir``) snapshots its
+whole state after every round, continues from the snapshot (so losing
+a round's local-checkpoint blocks costs nothing), and resumes from the
+latest intact round on the next call. Every other lineage cut is a
+non-durable ``localCheckpoint`` (functions.loop_checkpoint). The
+directory is the caller's: the loop never deletes it, and it holds one
+round once a write completes.
 
 Parquet replaces the length-prefixed binary int format (ArrayStore
 .java:13-80): columnar, compressed, splittable, schema-carrying.
@@ -25,6 +30,9 @@ import shutil
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
+
+from neo_olap_spark.tables import checked_schema
 
 _ROUND_RE = re.compile(r"^round=(\d+)$")
 _TMP_ROUND_RE = re.compile(r"^_tmp_round=\d+$")
@@ -73,5 +81,13 @@ def write_round(dfs: dict[str, DataFrame], base: str, step: int) -> None:
             shutil.rmtree(d, ignore_errors=True)
 
 
-def read_round(spark: SparkSession, base: str, step: int, name: str) -> DataFrame:
-    return spark.read.parquet(f"{round_dir(base, step)}/{name}")
+def read_round(
+    spark: SparkSession, base: str, step: int, name: str, schema: StructType
+) -> DataFrame:
+    """Frame ``name`` of round=<step>, read with the loop's own
+    ``schema`` after a footer check (tables.checked_schema): no
+    schema-inference job, and a snapshot whose columns differ from the
+    loop's state raises ValueError naming the frame and the column
+    instead of reading NULLs."""
+    path = f"{round_dir(base, step)}/{name}"
+    return spark.read.schema(checked_schema(path, schema, f"frame {name}")).parquet(path)

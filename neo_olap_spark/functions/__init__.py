@@ -134,45 +134,19 @@ def numbered_sample(df, n: int, order_col: str, idx_name: str):
     )
 
 
-RELIABLE_CKPT_CONF = "spark.neo_olap.reliableLoopCheckpoint"
-RELIABLE_CKPT_DIR_CONF = "spark.neo_olap.checkpointDir"
-
-
 def loop_checkpoint(df, eager: bool = True):
-    """Checkpoint for ITERATIVE-LOOP state (r14, VERDICT r13 item 7).
+    """Lineage cut for ITERATIVE-LOOP state: ``localCheckpoint``.
 
     Every graph-loop state frame goes through here: the round driver
     (operators.graph_algos._iterate) checkpoints each round's frames
     lazily, and the loops checkpoint their initial state and outputs
-    with it too. Default: ``localCheckpoint`` — executor-local blocks,
-    cheap, the right local/bench trade. localCheckpoint is
-    NON-replicated: at cluster scale an executor loss makes the
-    lineage-truncated state unrecoverable (full job re-run). Setting
-    the session conf ``spark.neo_olap.reliableLoopCheckpoint=true``
-    switches every loop-state checkpoint to a reliable
-    ``checkpoint()`` backed by ``spark.neo_olap.checkpointDir`` (or
-    the context's already-set checkpoint dir) — slower per round (a
-    filesystem write), but an executor loss then recovers from
-    storage instead of recomputing the whole loop. Values are
-    identical in both modes, and no loop bypasses the switch (both
-    pinned in tests/test_graph_algos.py). Parquet round snapshots for
-    resume are a separate, opt-in policy (the driver's ``ckpt_dir``,
-    neo_olap_spark.checkpoints)."""
-    spark = df.sparkSession
-    if (
-        spark.conf.get(RELIABLE_CKPT_CONF, "false").lower() == "true"
-    ):
-        sc = spark.sparkContext
-        if sc._jsc.sc().checkpointDir().isEmpty():
-            ckpt_dir = spark.conf.get(RELIABLE_CKPT_DIR_CONF, None)
-            if ckpt_dir is None:
-                raise ValueError(
-                    f"{RELIABLE_CKPT_CONF}=true needs a checkpoint "
-                    f"directory: set {RELIABLE_CKPT_DIR_CONF} or call "
-                    "sparkContext.setCheckpointDir"
-                )
-            sc.setCheckpointDir(ckpt_dir)
-        return df.checkpoint(eager=eager)
+    with it too. A local checkpoint keeps executor-local,
+    non-replicated blocks: cheap, and it bounds plan depth, but it is
+    not durable. A lost block fails the loop with Spark's "Checkpoint
+    block ... not found" instead of returning wrong rows (pinned in
+    tests/test_checkpoints.py). The one durable policy is the loop
+    driver's ``ckpt_dir``: parquet round snapshots that survive lost
+    blocks and resume across processes (neo_olap_spark.checkpoints)."""
     return df.localCheckpoint(eager=eager)
 
 

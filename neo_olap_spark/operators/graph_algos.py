@@ -6,10 +6,13 @@ programs: a driver-side Python loop builds per-step plans and Catalyst
 optimizes each. Every loop — BFS, the streamed walk, PageRank, CC,
 LPA, k-core, sssp and HITS — runs on one round driver, ``_iterate``
 (the analog of the reference's round loop, Runner.java:67-88,107-129):
-it lazily checkpoints each round's state through ``loop_checkpoint``,
-runs the convergence action every ``check_every`` rounds (or one
-materializing count for fixed-round loops), and, given a
-``ckpt_dir``, snapshots every round to parquet and resumes from it.
+it lazily checkpoints each round's state through ``loop_checkpoint``
+(a non-durable ``localCheckpoint``: a lost block fails the loop
+loudly), runs the convergence action every ``check_every`` rounds (or
+one materializing count for fixed-round loops), and, given a
+``ckpt_dir`` (the one durable policy; PageRank and the walk take
+one), snapshots every round to parquet, continues from the snapshot
+and resumes from it.
 ``_graph_loop`` sets each loop's shuffle width and AQE and owns its
 edge cache: the one src-partitioned, persisted edge relation every
 round joins against, released on exit. All randomness is
@@ -140,7 +143,7 @@ def _iterate(
 
     ``step(state, r)`` builds round ``r`` (1-based) as a generator of
     ``(name, frame)`` pairs. Each yielded frame is lazily checkpointed
-    (``loop_checkpoint(eager=False)``, so the reliable mode covers it)
+    (``loop_checkpoint(eager=False)``, a ``localCheckpoint``)
     and stored in ``state`` before the generator resumes, so a later
     frame of the same round reads the checkpointed one. A lazy
     checkpoint cuts lineage and caches its RDD on first compute: every
@@ -155,18 +158,22 @@ def _iterate(
     materializes the chain when the loop ends — before the caller
     unpersists the caches the chain reads.
 
-    ``ckpt_dir`` snapshots every frame to parquet after every round
-    (checkpoints.write_round: crash-safe, delete-previous retention)
-    and continues from the snapshot; a call whose ``ckpt_dir`` holds a
-    snapshot resumes from it instead of from ``state``. A snapshot past
-    ``n`` raises ValueError rather than returning a later round's
-    state.
+    ``ckpt_dir`` is the one durable policy: it snapshots every frame
+    to parquet after every round (checkpoints.write_round: crash-safe,
+    delete-previous retention) and continues from the snapshot, so the
+    next round reads no local-checkpoint block; a call whose
+    ``ckpt_dir`` holds a snapshot resumes from it instead of from
+    ``state``. Every reload reads with the schema of the frame it
+    replaces (the one just written, or on resume the caller's initial
+    state) after a footer check, so it runs no inference job and a
+    mismatched snapshot raises ValueError. A snapshot past ``n`` also
+    raises ValueError rather than returning a later round's state.
 
     Returns (state, rounds run including resumed ones, converged)."""
 
     def reload(r: int) -> dict[str, DataFrame]:
         spark = next(iter(state.values())).sparkSession
-        return {k: read_round(spark, ckpt_dir, r, k) for k in state}
+        return {k: read_round(spark, ckpt_dir, r, k, f.schema) for k, f in state.items()}
 
     rounds = 0
     if ckpt_dir is not None and (last := latest_round(ckpt_dir)) is not None:

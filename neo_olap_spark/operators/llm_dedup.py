@@ -25,7 +25,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from neo_olap_spark.functions import loop_checkpoint, shingles, ws_tokens
+from neo_olap_spark.functions import shingles, ws_tokens
 from neo_olap_spark.registry import query
 from neo_olap_spark.tables import load
 
@@ -847,9 +847,9 @@ def q_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     # same footprint every signature store pays — and the chunk stage
     # evaluates 9 cheap shift/mask structs over a materialized long
     # (measured 7.5 s → 2.5 s warm on the full key).
-    # loop_checkpoint: reliable-mode gated (r14, VERDICT r13 item 7) —
-    # default stays localCheckpoint, plan unchanged
-    sigs = loop_checkpoint(simhash_signatures(spark, sf_dir))
+    # Not loop state, so a plain localCheckpoint like the other
+    # shared-subtree barriers.
+    sigs = simhash_signatures(spark, sf_dir).localCheckpoint()
     chunk_cols = []
     for c in range(SIMHASH_N_CHUNKS):
         lo, hi = _CHUNK_BOUNDS[c], _CHUNK_BOUNDS[c + 1]

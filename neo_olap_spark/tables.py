@@ -124,12 +124,22 @@ def _footer_schema(path: str) -> pa.Schema:
 
 def read_schema(path: str, name: str) -> T.StructType:
     """The schema to read table ``name`` at ``path`` with: its declared
-    schema, after checking the parquet footer (one part file of a
-    directory) against it. Column names and types must match in order;
-    any difference raises ValueError naming the table and the column.
-    The one allowed difference: events.ts stored as TIMESTAMP(NANOS)
-    reads as BIGINT nanos, which ``_normalize_events_ts`` converts."""
-    declared = SCHEMAS[name]
+    schema, after ``checked_schema``. The one allowed difference:
+    events.ts stored as TIMESTAMP(NANOS) reads as BIGINT nanos, which
+    ``_normalize_events_ts`` converts."""
+    return checked_schema(
+        path, SCHEMAS[name], f"table {name}", "ts" if name == "events" else None
+    )
+
+
+def checked_schema(
+    path: str, declared: T.StructType, what: str, nanos_col: str | None = None
+) -> T.StructType:
+    """``declared``, after checking the parquet footer at ``path`` (one
+    part file of a directory) against it. Column names and types must
+    match in order; any difference raises ValueError naming ``what``
+    (the table or frame) and the column. Column ``nanos_col``, stored
+    as TIMESTAMP(NANOS), may read as BIGINT."""
     found = _footer_schema(path)
     fields = []
     for i, want in enumerate(declared.fields):
@@ -137,24 +147,22 @@ def read_schema(path: str, name: str) -> T.StructType:
         if i >= len(found) or found.field(i).name != want.name:
             seen = f"column {found.field(i).name!r}" if i < len(found) else "nothing"
             raise ValueError(
-                f"table {name}: declared column {want.name!r} ({decl}) at position "
+                f"{what}: declared column {want.name!r} ({decl}) at position "
                 f"{i}, found {seen} in {path}"
             )
         at = found.field(i).type
         got = _footer_type(at)
-        nanos = (name, want.name) == ("events", "ts") and got == T.LongType() and (
-            pa.types.is_timestamp(at)
-        )
+        nanos = want.name == nanos_col and got == T.LongType() and pa.types.is_timestamp(at)
         if got != want.dataType and not nanos:
             raise ValueError(
-                f"table {name}: column {want.name!r} is {got.simpleString() if got else at}"
+                f"{what}: column {want.name!r} is {got.simpleString() if got else at}"
                 f" in {path}, declared {decl}"
             )
         fields.append(T.StructField(want.name, got))
     if len(found) > len(declared):
         extra = found.field(len(declared))
         raise ValueError(
-            f"table {name}: column {extra.name!r} ({extra.type}) in {path} is not declared"
+            f"{what}: column {extra.name!r} ({extra.type}) in {path} is not declared"
         )
     return T.StructType(fields)
 

@@ -21,3 +21,24 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return SF_DIR
+
+
+@pytest.fixture()
+def lose_blocks(spark):
+    """``lose_blocks(drop=True)`` unpersists every RDD persisted since
+    its previous call (the first call: since the test began), as an
+    executor loss would drop their blocks; ``drop=False`` only marks
+    them as seen. Returns how many it found."""
+    jsc = spark.sparkContext._jsc
+    seen = set(jsc.getPersistentRDDs().keySet())
+
+    def lose(drop: bool = True) -> int:
+        rdds = jsc.getPersistentRDDs()
+        new = [rid for rid in rdds.keySet() if rid not in seen]
+        seen.update(new)
+        if drop:
+            for rid in new:
+                rdds.get(rid).unpersist(True)
+        return len(new)
+
+    return lose

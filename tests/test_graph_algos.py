@@ -487,72 +487,54 @@ def test_sssp_frozen_coalesce_bounds_plan_depth(spark, monkeypatch):
     assert coalesced == baseline
 
 
-def test_reliable_loop_checkpoint_mode_matches_default(spark, tmp_path, monkeypatch):
-    """r14 (VERDICT r13 item 7): with
-    spark.neo_olap.reliableLoopCheckpoint=true every loop-state
-    checkpoint goes through a reliable checkpoint() into the
-    configured dir instead of a non-replicated localCheckpoint —
-    values must be identical for every loop family, no loop may call
-    localCheckpoint directly (it raises here while reliable mode is
-    on), and the checkpoint dir must actually receive files."""
-    import os
+def test_reliable_loop_checkpoint_mode_matches_default(
+    spark, sf_dir, tmp_path, lose_blocks, monkeypatch
+):
+    """The one durable checkpoint policy is the loop driver's
+    ``ckpt_dir``: every round's state is snapshotted to parquet and
+    read back, so no later round reads a local-checkpoint block. With
+    every block persisted since the loop began lost after each round's
+    snapshot, PageRank (uniform and personalized) and the walk must
+    return exactly the rows of a plain run."""
+    from neo_olap_spark.graph import edge_count_estimate, edges, symmetrize
+    from neo_olap_spark.operators import graph_algos as ga
 
-    from neo_olap_spark.functions import (
-        RELIABLE_CKPT_CONF,
-        RELIABLE_CKPT_DIR_CONF,
-    )
-    from neo_olap_spark.operators.graph_algos import (
-        bfs_distances,
-        connected_components,
-        hits,
-        k_core,
-        label_propagation,
-        pagerank,
-        sssp,
-    )
+    seeds = [
+        int(r[0])
+        for r in tables.load(spark, sf_dir, "customer")
+        .select("c_custkey").orderBy("c_custkey").limit(ga.PPR_SEEDS).collect()
+    ]
 
-    # a 7-node chain bridged to a triangle: the triangle is the 2-core
-    directed = spark.createDataFrame(
-        [(i, i + 1, 1) for i in range(7)] + [(7, 8, 1), (8, 9, 1), (9, 7, 1)],
-        "src long, dst long, w long",
-    )
-    sym = directed.unionAll(directed.selectExpr("dst as src", "src as dst", "w"))
-    sym2 = sym.select("src", "dst")
-    nodes = spark.createDataFrame([(i,) for i in range(10)], "node long")
-    sources = spark.createDataFrame([(0, 0), (1, 9)], "tag long, node long")
+    def run_all(ckpt=None):
+        def where(label):
+            return ckpt and str(tmp_path / label)
 
-    def run_all():
-        return {
-            "sssp": sorted(map(tuple, sssp(sym, [0], max_rounds=12).collect())),
-            "cc": sorted(map(tuple, connected_components(sym2, nodes).collect())),
-            "bfs": sorted(map(tuple, bfs_distances(
-                sym2, sources, max_depth=10, count_paths=True).collect())),
-            "pagerank": sorted(map(tuple, pagerank(sym2, nodes, n_iters=4).collect())),
-            "lpa": sorted(map(tuple, label_propagation(sym2, nodes, n_rounds=3).collect())),
-            "kcore": sorted(map(tuple, k_core(sym2, 2).collect())),
-            "hits": sorted(map(tuple, hits(
-                directed.select("src", "dst"), nodes, n_iters=3).collect())),
+        out = {
+            label: sorted(map(tuple, ga.pagerank(
+                symmetrize(edges(spark, sf_dir)), ga.all_nodes(spark, sf_dir),
+                n_iters=4, n_edges=edge_count_estimate(spark, sf_dir),
+                seeds=variant, ckpt_dir=where(label),
+            ).collect()))
+            for label, variant in (("pagerank", None), ("personalized", seeds))
         }
+        out["walk"] = sorted(map(tuple, random_walk_counts(
+            spark, sf_dir, n_walkers=32, n_steps=8, seed=42, ckpt_dir=where("walk"),
+        ).collect()))
+        return out
 
-    base = run_all()
-    assert base["kcore"] == [(7,), (8,), (9,)]
-    ckpt_dir = str(tmp_path / "reliable_ckpt")
+    plain = run_all()
+    real = ga.write_round
+    lost = []
 
-    def no_local_checkpoint(*_a, **_k):
-        raise AssertionError("loop state bypassed loop_checkpoint")
+    def write_then_lose(dfs, base, step):
+        real(dfs, base, step)
+        lost.append(lose_blocks())
 
-    spark.conf.set(RELIABLE_CKPT_CONF, "true")
-    spark.conf.set(RELIABLE_CKPT_DIR_CONF, ckpt_dir)
-    try:
-        with monkeypatch.context() as m:
-            m.setattr(type(sym), "localCheckpoint", no_local_checkpoint)
-            reliable = run_all()
-    finally:
-        spark.conf.set(RELIABLE_CKPT_CONF, "false")
-    assert reliable == base
-    # the reliable path must have written checkpoint files
-    found = any(files for _, _, files in os.walk(ckpt_dir))
-    assert found, f"no checkpoint files under {ckpt_dir}"
+    monkeypatch.setattr(ga, "write_round", write_then_lose)
+    lose_blocks(drop=False)  # the plain runs' blocks
+    assert run_all(ckpt=True) == plain
+    # every round of the three loops lost its blocks
+    assert len(lost) == 4 + 4 + 8 and all(lost), lost
 
 
 def test_sssp_two_hop_raises_when_ceiling_too_low(spark):

@@ -198,7 +198,8 @@ def test_hive_partition_pruning(spark, sf_dir):
     from neo_olap_spark.sources import write_parquet_tuned
     from neo_olap_spark.tables import load
 
-    out = tempfile.mkdtemp(prefix="neo_olap_part_") + "/orders"
+    root = tempfile.mkdtemp(prefix="neo_olap_part_")
+    out = root + "/orders"
     try:
         write_parquet_tuned(
             load(spark, sf_dir, "orders"), out, partition_by=("o_orderstatus",)
@@ -210,7 +211,7 @@ def test_hive_partition_pruning(spark, sf_dir):
             f"partition filter did not reach the scan:\n{p}"
         )
     finally:
-        shutil.rmtree(out, ignore_errors=True)
+        shutil.rmtree(root, ignore_errors=True)
 
 
 def test_compact_parquet_reduces_files(spark, sf_dir):

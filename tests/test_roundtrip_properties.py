@@ -82,7 +82,8 @@ def test_parquet_tuned_writer(spark, sf_dir):
 
     o = load(spark, sf_dir, "orders")
     n = o.count()
-    out = tempfile.mkdtemp(prefix="neo_olap_tuned_") + "/orders"
+    root = tempfile.mkdtemp(prefix="neo_olap_tuned_")
+    out = root + "/orders"
     try:
         write_parquet_tuned(
             o, out, compression="zstd", max_records_per_file=200,
@@ -100,7 +101,7 @@ def test_parquet_tuned_writer(spark, sf_dir):
             r.o_orderkey for r in o.select("o_orderkey").collect()
         }
     finally:
-        shutil.rmtree(out, ignore_errors=True)
+        shutil.rmtree(root, ignore_errors=True)
 
 
 asof_events = st.lists(

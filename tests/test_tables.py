@@ -18,8 +18,8 @@ import pyarrow.compute as pc
 import pyarrow.parquet as pq
 import pytest
 
-from neo_olap_spark import tables
-from neo_olap_spark.operators import streaming
+from neo_olap_spark import checkpoints, tables
+from neo_olap_spark.operators import graph_algos, streaming
 
 # the checked-in fixtures, siblings of the suite's sf_dir
 FIXTURES = ["sf0.001", "sf0.01", "sf0.1"]
@@ -201,10 +201,11 @@ def _inferred_reads(text: str) -> list[str]:
 
 
 def test_streaming_reads_declare_their_schema():
-    """Every parquet read in operators/streaming.py passes a schema:
-    each source it reads (the events table, staged replay phases, its
-    own sinks and CDC state) has a schema it already holds, and an
-    inferred read runs a Spark job per call."""
+    """Every parquet read in operators/streaming.py and checkpoints.py
+    passes a schema: each source they read (the events table, staged
+    replay phases, their own sinks, CDC state and loop snapshots) has a
+    schema they already hold, and an inferred read runs a Spark job per
+    call."""
     assert _inferred_reads("n = spark.read.parquet(d).count()")
     assert _inferred_reads(
         'spark.readStream.option("maxFilesPerTrigger", "1")\n    .parquet(d)'
@@ -214,5 +215,31 @@ def test_streaming_reads_declare_their_schema():
         'spark.readStream.schema(p[0].schema)\n    .option("a", "1")\n    .parquet(d)'
     )
     assert not _inferred_reads('df.write.mode("overwrite").parquet(d)')
-    with open(streaming.__file__, encoding="utf-8") as f:
-        assert _inferred_reads(f.read()) == []
+    for module in (streaming, checkpoints):
+        with open(module.__file__, encoding="utf-8") as f:
+            assert _inferred_reads(f.read()) == [], module.__name__
+
+
+def test_snapshot_resume_launches_no_spark_job(spark, tmp_path):
+    """A resume reload reads each frame with the caller's initial
+    schema after a driver-side footer check: 0 jobs for two frames,
+    where an inferred read runs one job per frame."""
+    from pyspark.sql import functions as F
+
+    d = str(tmp_path)
+    start = spark.range(8).selectExpr("id AS node", "CAST(id AS DOUBLE) AS rank")
+
+    def step(s, _):
+        yield "a", s["a"].select("node", (F.col("rank") + 1).alias("rank"))
+        yield "b", s["a"].select("node", (F.col("rank") * 2).alias("rank"))
+
+    def run():
+        return graph_algos._iterate({"a": start, "b": start}, step, 2, ckpt_dir=d)
+
+    run()
+    out = []
+    assert _jobs_in_group(spark, "snapshot_resume", lambda: out.append(run())) == 0
+    resumed, rounds, _ = out[0]
+    assert rounds == 2
+    assert sorted(map(tuple, resumed["a"].collect())) == [(i, i + 2.0) for i in range(8)]
+    assert sorted(map(tuple, resumed["b"].collect())) == [(i, (i + 2.0) * 2) for i in range(8)]
