@@ -13,6 +13,9 @@ DataFrames. We derive a bipartite-ish graph from the star schema:
 
 Undirected traversal (node.getRelationships() with no direction,
 RandomWalkingRunner.java:21) maps to symmetrizing the edge list once.
+Every graph loop caches one edge frame defined here (``sym_edges``,
+``weighted_sym_edges``, ``directed_edges``): raw rows, partitioned on
+src and deduped in place, one exchange per build.
 ID offsets keep the node-ID space disjoint and dense-ish, preserving
 the reference's "address by long ID" model (Runner.java:55-56) so ID
 range predicates (OlapRunner.java:41-43) stay meaningful.
@@ -45,30 +48,62 @@ def customer_order_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def order_part_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Directed edges order -> part (distinct: one edge per pair)."""
-    lineitem = load(spark, sf_dir, "lineitem")
-    return lineitem.select(
+def _order_part_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Order -> part, one row per lineitem line (an order that buys a
+    part on several lines repeats the edge), weighted by the line's
+    quantity."""
+    return load(spark, sf_dir, "lineitem").select(
         (F.lit(ORDER_OFFSET) + F.col("l_orderkey")).alias("src"),
         (F.lit(PART_OFFSET) + F.col("l_partkey")).alias("dst"),
-    ).distinct()
+        F.col("l_quantity").cast("long").alias("w"),
+    )
 
 
 def edges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Full directed edge list of the derived graph."""
-    return customer_order_edges(spark, sf_dir).unionAll(order_part_edges(spark, sf_dir))
+    """Full directed edge list of the derived graph, one row per edge."""
+    op = _order_part_lines(spark, sf_dir).select("src", "dst").distinct()
+    return customer_order_edges(spark, sf_dir).unionAll(op)
 
 
 def edges_raw(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Edge list WITHOUT the order->part distinct. For consumers that
-    dedup anyway (collect_set adjacency, groupBy) this skips a full
-    600k-row-per-SF shuffle."""
-    lineitem = load(spark, sf_dir, "lineitem")
-    op = lineitem.select(
-        (F.lit(ORDER_OFFSET) + F.col("l_orderkey")).alias("src"),
-        (F.lit(PART_OFFSET) + F.col("l_partkey")).alias("dst"),
-    )
+    """Edge list WITHOUT the order->part distinct: the base every
+    graph loop's edge frame dedupes in place, and the walk's adjacency
+    dedupes inside its collect_set."""
+    op = _order_part_lines(spark, sf_dir).select("src", "dst")
     return customer_order_edges(spark, sf_dir).unionAll(op)
+
+
+# The edge frames the graph loops cache. Each is built as raw rows ->
+# repartition("src") -> dedupe in place: hash(src) satisfies the
+# dedupe's (src, dst) clustering, so the build plans ONE exchange and
+# the frame comes out src-partitioned, as every round's join needs it.
+# Deduping after symmetrize equals symmetrizing the deduped list: the
+# derived graph has no reversed duplicates (its edges run one way
+# between disjoint id ranges).
+
+
+def sym_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """symmetrize(edges()) as a multiset, src-partitioned."""
+    return symmetrize(edges_raw(spark, sf_dir)).repartition("src").distinct()
+
+
+def directed_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """edges() as a multiset, src-partitioned."""
+    return edges_raw(spark, sf_dir).repartition("src").distinct()
+
+
+def weighted_sym_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Weighted undirected edge list, src-partitioned: customer<->order
+    edges weigh 1; order<->part edges the order's MIN line quantity
+    for that part (1..50, integral by construction) — a deterministic
+    per-edge cost with real variance."""
+    co = customer_order_edges(spark, sf_dir).withColumn("w", F.lit(1).cast("long"))
+    return (
+        symmetrize(co.unionAll(_order_part_lines(spark, sf_dir)))
+        .repartition("src")
+        .groupBy("src", "dst")
+        .agg(F.min("w").alias("w"))
+    )
 
 
 def all_nodes(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -83,30 +118,6 @@ def all_nodes(spark: SparkSession, sf_dir: str) -> DataFrame:
     return c.unionAll(o).unionAll(p)
 
 
-def weighted_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Weighted edge list over the derived graph: customer→order
-    edges carry weight 1; order→part edges carry the order's MIN line
-    quantity for that part (1..50, integral by construction) — a
-    deterministic per-edge cost with real variance. Returned
-    directed; callers symmetrize."""
-    o = load(spark, sf_dir, "orders").select(
-        F.col("o_custkey").alias("src"),
-        (F.lit(ORDER_OFFSET) + F.col("o_orderkey")).alias("dst"),
-        F.lit(1).cast("long").alias("w"),
-    )
-    li = (
-        load(spark, sf_dir, "lineitem")
-        .groupBy("l_orderkey", "l_partkey")
-        .agg(F.min("l_quantity").cast("long").alias("w"))
-        .select(
-            (F.lit(ORDER_OFFSET) + F.col("l_orderkey")).alias("src"),
-            (F.lit(PART_OFFSET) + F.col("l_partkey")).alias("dst"),
-            "w",
-        )
-    )
-    return o.unionAll(li)
-
-
 def edge_count_estimate(spark: SparkSession, sf_dir: str) -> int:
     """Cheap upper bound on the symmetrized edge count, for sizing
     iteration-loop shuffles: 2 × (|orders| + |lineitem|), read from
@@ -119,12 +130,14 @@ def edge_count_estimate(spark: SparkSession, sf_dir: str) -> int:
 
 
 def symmetrize(e: DataFrame) -> DataFrame:
-    """Undirected view: each edge appears in both directions.
+    """Undirected view: each edge appears in both directions; columns
+    after (src, dst), such as a weight, ride along.
 
     Spark analog of the reference's direction-free getRelationships()
     (RandomWalkingRunner.java:21-22).
     """
-    return e.unionAll(e.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
+    rest = e.columns[2:]
+    return e.unionAll(e.select(F.col("dst").alias("src"), F.col("src").alias("dst"), *rest))
 
 
 def degrees(e: DataFrame) -> DataFrame:
@@ -148,7 +161,7 @@ ORACLE_EDGES = f"""
 """
 
 # customer→order edges weigh 1, order→part edges the order's min line
-# quantity for the part (weighted_edges above)
+# quantity for the part (weighted_sym_edges above, before symmetrize)
 ORACLE_WEIGHTED_EDGES = f"""
     SELECT o_custkey AS src, {ORDER_OFFSET} + o_orderkey AS dst,
            CAST(1 AS BIGINT) AS w

@@ -15,9 +15,12 @@ one), snapshots every round to parquet, continues from the snapshot
 and resumes from it.
 ``_graph_loop`` sets each loop's shuffle width and AQE and owns its
 edge cache: the one src-partitioned, persisted edge relation every
-round joins against, released on exit. All randomness is
-``xxhash64(…, seed)`` on stable keys, so runs are deterministic and
-retry-stable (SURVEY.md §7.3). The DuckDB oracles compose the derived
+round joins against, released on exit. Every loop key hands it a
+frame built in neo_olap_spark.graph (``sym_edges``,
+``weighted_sym_edges``, ``directed_edges``): raw rows deduped in place
+after a single src shuffle. All randomness is ``xxhash64(…, seed)`` on
+stable keys, so runs are deterministic and retry-stable (SURVEY.md
+§7.3). The DuckDB oracles compose the derived
 graph's SQL from neo_olap_spark.graph's ``ORACLE_*`` fragments.
 
 Scale notes: each BFS/walk step is one shuffle keyed on node/walker
@@ -54,7 +57,6 @@ from neo_olap_spark.graph import (
     all_nodes,
     edges,
     symmetrize,
-    weighted_edges,
 )
 from neo_olap_spark.registry import query
 from neo_olap_spark.tables import load
@@ -92,9 +94,12 @@ def _graph_loop(
     Given ``edge_frame``, yields it hash-partitioned on src and
     persisted — the one partitioned edge relation every round joins
     against, so each round shuffles only the loop state — else yields
-    None. On exit, the error path included, the cache is released and
-    both settings are restored, so large one-shot queries keep AQE's
-    skew/coalesce benefits."""
+    None. The registered keys pass a neo_olap_spark.graph loop frame,
+    which is src-partitioned already, so the repartition here is
+    planned away and the build runs one exchange; it still partitions
+    a planted frame. On exit, the error path included, the cache is
+    released and both settings are restored, so large one-shot
+    queries keep AQE's skew/coalesce benefits."""
     confs = {}
     if n_edges is not None:
         confs["spark.sql.shuffle.partitions"] = str(
@@ -293,7 +298,7 @@ def q_shortest_path_len(spark: SparkSession, sf_dir: str) -> DataFrame:
     the levels are checkpointed, so the cache is released on return."""
     with _graph_loop(
         spark, graph.edge_count_estimate(spark, sf_dir),
-        symmetrize(edges(spark, sf_dir)), aqe=True,
+        graph.sym_edges(spark, sf_dir), aqe=True,
     ) as sym:
         sources = (
             load(spark, sf_dir, "customer")
@@ -359,8 +364,6 @@ def _walk_setup(spark: SparkSession, sf_dir: str, n_walkers: int, seed: int):
     16-step walk 16 cheap passes instead of 16 edge-list shuffles.
     collect_set over the raw (non-distinct) edge list dedups multi-
     edges inside the aggregate, skipping a separate distinct shuffle."""
-    from neo_olap_spark.graph import edges_raw
-
     nodes_all = all_nodes(spark, sf_dir)
     # TOTAL adjacency: isolated nodes get an empty array, so every
     # frontier row matches the single inner join in _advance_walkers
@@ -374,7 +377,7 @@ def _walk_setup(spark: SparkSession, sf_dir: str, n_walkers: int, seed: int):
         F.col("node").alias("src"), F.lit(None).cast("bigint").alias("dst")
     )
     adj = (
-        symmetrize(edges_raw(spark, sf_dir))
+        symmetrize(graph.edges_raw(spark, sf_dir))
         .unionByName(phantom)
         .groupBy("src")
         .agg(F.sort_array(F.collect_set("dst")).alias("nbrs"))
@@ -720,7 +723,7 @@ def betweenness_sample(
     """
     with _graph_loop(
         spark, graph.edge_count_estimate(spark, sf_dir),
-        symmetrize(edges(spark, sf_dir)), aqe=True,
+        graph.sym_edges(spark, sf_dir), aqe=True,
     ) as sym:
         nodes = all_nodes(spark, sf_dir)
 
@@ -1082,7 +1085,7 @@ def q_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     Hash-checked against the unrolled fixed-iteration DuckDB twin
     (_pagerank_oracle); invariants stay in tests: total rank ≈
     n_nodes, determinism, hubs outrank leaves on a star fixture."""
-    sym = symmetrize(edges(spark, sf_dir))
+    sym = graph.sym_edges(spark, sf_dir)
     return pagerank(
         sym, all_nodes(spark, sf_dir), n_iters=8,
         n_edges=graph.edge_count_estimate(spark, sf_dir),
@@ -1126,7 +1129,7 @@ def q_pagerank_personalized(spark: SparkSession, sf_dir: str) -> DataFrame:
             f"found {len(seeds)} in {sf_dir}"
         )
     nodes = all_nodes(spark, sf_dir)
-    sym = symmetrize(edges(spark, sf_dir))
+    sym = graph.sym_edges(spark, sf_dir)
     return pagerank(
         sym, nodes, n_iters=8,
         n_edges=graph.edge_count_estimate(spark, sf_dir),
@@ -1242,7 +1245,7 @@ def q_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     as the Spark loop); invariants stay in tests: a path graph is one
     component, disjoint cliques are separate, labels are the
     component-minimum node id."""
-    sym = symmetrize(edges(spark, sf_dir))
+    sym = graph.sym_edges(spark, sf_dir)
     return connected_components(
         sym, all_nodes(spark, sf_dir), n_edges=graph.edge_count_estimate(spark, sf_dir)
     )
@@ -1461,7 +1464,7 @@ def q_graph_lpa(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate is a weighted vote rather than a min, which is what
     makes it a community (not component) assignment. Reference
     analog: whole-graph analytics family (Runner.java:40-56)."""
-    sym = symmetrize(edges(spark, sf_dir))
+    sym = graph.sym_edges(spark, sf_dir)
     return label_propagation(
         sym, all_nodes(spark, sf_dir), n_edges=graph.edge_count_estimate(spark, sf_dir)
     )
@@ -1780,7 +1783,7 @@ def q_graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     peel to nothing, cycles and cliques survive whole, pendant tails
     fall off. Reference analog: whole-graph structural analytics
     (R1/R2 family)."""
-    sym = symmetrize(edges(spark, sf_dir))
+    sym = graph.sym_edges(spark, sf_dir)
     with _graph_loop(spark, graph.edge_count_estimate(spark, sf_dir), aqe=True):
         return k_core(sym, k=2)
 
@@ -2059,17 +2062,6 @@ SSSP_MAX_ROUNDS = 40  # measured depth 26 at sf0.1; headroom for larger SFs
 _SSSP_INF = 1 << 60
 
 
-# Above this many (source × edge) units, the per-round merge switches
-# from union+groupBy (one aggregate, but it re-shuffles the FULL state
-# every round) to the partition-preserving full-outer join (state stays
-# put; only frontier-sized pushes shuffle). Measured crossover: at
-# sf0.1 single-source (1.4M units) union-merge wins on fixed costs
-# (10.4 vs 11.1 s warm); at the 10× 4-source closeness run (55M units)
-# the full state is 4.4M rows × ~26 rounds of re-shuffle — the reason
-# closeness soaked at exponent 0.77 while sssp held 0.28. Same
-# size-gated-strategy pattern as the k-core broadcast gate.
-SSSP_UNION_MERGE_MAX_UNITS = 16_000_000
-
 # Per-source early exit appends one lazily-filtered frozen frame (and
 # pins that round's checkpointed state) per DISTINCT exit round. At
 # the current k=4 closeness batch that is ≤ 4 frames and noise, but a
@@ -2119,10 +2111,15 @@ def sssp(
     the test SFs coalescing never triggers — exit events cluster in
     the tail where state has already shrunk).
 
-    The per-round merge strategy is gated on len(sources) × n_edges
-    vs SSSP_UNION_MERGE_MAX_UNITS; both strategies are exact — the
-    choice is purely a shuffle-volume trade, pinned equivalent in
-    tests/test_graph_algos.py.
+    Each relaxation merges by aggregating only the (frontier-sized)
+    pushes, then FULL-OUTER joining them against the standing
+    distances. The standing state is already hash-partitioned on
+    (source, node) from the last merge (preserved through the
+    LogicalRDD checkpoint), so only the pushes shuffle and the state
+    never re-moves: the shape that keeps k-source closeness linear at
+    10×. It is the one merge: a union+groupBy merge of the full state
+    ran within noise of it at sf0.1 (SCALING.md, "sssp: one merge
+    path").
 
     Convergence is checked every HOPS_PER_CHECK relaxations: each
     hop's lazy checkpoint makes the one check job compute every hop's
@@ -2143,12 +2140,6 @@ def sssp(
     13.8 → 18.4 s, jobs 29 → 71)."""
     spark = wsym.sparkSession
     with _graph_loop(spark, n_edges, wsym, aqe=False) as edges_p:
-        if n_edges is None:
-            # the merge gate needs a size: count the cache the loop
-            # reads anyway (planted-graph callers; every query key
-            # passes the metadata estimate)
-            n_edges = edges_p.count()
-        union_merge = len(sources) * n_edges <= SSSP_UNION_MERGE_MAX_UNITS
         # State is the last relaxation's ``merged`` frame (source, node,
         # dist, old): dist and the improved frontier are views of it.
         improved = F.col("dist") < F.coalesce("old", F.lit(_SSSP_INF))
@@ -2161,50 +2152,14 @@ def sssp(
         def relax(s, _):
             m = s["merged"]
             frontier = m.where(improved).select("source", "node", "dist")
-            dist = m.select("source", "node", "dist")
-            pushed_raw = (
+            pushed = (
                 frontier.hint("shuffle_hash")
                 .join(edges_p, frontier.node == edges_p.src)
-                .select(
-                    "source",
-                    F.col("dst").alias("node"),
-                    (F.col("dist") + F.col("w")).alias("val"),
-                )
-            )
-            if union_merge:
-                # Small state: ONE union+groupBy merge (the CC-merge
-                # shape) — candidate pushes and the standing distances
-                # union into a single min aggregate; partial aggregation
-                # combines duplicates map-side and the round runs TWO
-                # exchanges. `old` (the standing distance, for the
-                # improvement test) rides along as a conditional min in
-                # the same aggregate.
-                yield "merged", (
-                    dist.select(
-                        "source", "node",
-                        F.col("dist").alias("val"),
-                        F.lit(True).alias("is_old"),
-                    )
-                    .unionByName(pushed_raw.withColumn("is_old", F.lit(False)))
-                    .groupBy("source", "node")
-                    .agg(
-                        F.min("val").alias("dist"),
-                        F.min(F.when(F.col("is_old"), F.col("val"))).alias("old"),
-                    )
-                )
-                return
-            # Large state: aggregate only the (frontier-sized) pushes,
-            # then FULL-OUTER against the standing distances — dist is
-            # already hash-partitioned on (source, node) from last
-            # round's merge (preserved through the LogicalRDD
-            # checkpoint), so only the pushes shuffle; the state never
-            # re-moves. This is what keeps k-source closeness linear at
-            # 10×.
-            pushed = pushed_raw.groupBy("source", "node").agg(
-                F.min("val").alias("cand")
+                .groupBy("source", F.col("dst").alias("node"))
+                .agg(F.min(F.col("dist") + F.col("w")).alias("cand"))
             )
             yield "merged", (
-                dist.withColumnRenamed("dist", "old")
+                m.select("source", "node", F.col("dist").alias("old"))
                 .join(pushed, ["source", "node"], "full_outer")
                 .select(
                     "source",
@@ -2280,13 +2235,6 @@ def sssp(
     return out
 
 
-def _weighted_sym_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    w = weighted_edges(spark, sf_dir)
-    return w.unionAll(
-        w.select(F.col("dst").alias("src"), F.col("src").alias("dst"), "w")
-    )
-
-
 def _sssp_oracle(n_rounds: int) -> str:
     """DuckDB twin of Bellman-Ford, unrolled to the SAME ceiling as
     the Spark loop: full (non-frontier) relaxation per round is
@@ -2347,7 +2295,7 @@ def q_graph_sssp(spark: SparkSession, sf_dir: str) -> DataFrame:
     src_row = load(spark, sf_dir, "customer").agg(F.min("c_custkey")).collect()
     source_id = int(src_row[0][0])
     out = sssp(
-        _weighted_sym_edges(spark, sf_dir),
+        graph.weighted_sym_edges(spark, sf_dir),
         [source_id],
         n_edges=graph.edge_count_estimate(spark, sf_dir),
     )
@@ -2431,7 +2379,7 @@ def q_graph_closeness(spark: SparkSession, sf_dir: str) -> DataFrame:
         .collect()
     ]
     dist = sssp(
-        _weighted_sym_edges(spark, sf_dir),
+        graph.weighted_sym_edges(spark, sf_dir),
         srcs,
         n_edges=graph.edge_count_estimate(spark, sf_dir),
     )
@@ -2626,7 +2574,7 @@ def q_graph_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
     next half-step's push + the carried output — landmine 4, exactly
     the pagerank rule)."""
     return hits(
-        edges(spark, sf_dir),
+        graph.directed_edges(spark, sf_dir),
         all_nodes(spark, sf_dir),
         n_iters=HITS_ITERS,
         n_edges=graph.edge_count_estimate(spark, sf_dir),

@@ -68,74 +68,71 @@ DRIVER_WAVE_SIZE = 50  # the driver's observed per-round sample size
 ROWS_ONLY_WAVE_KEYS: frozenset[str] = frozenset()
 
 DRIVER_WAVE_ROTATION: tuple[str, ...] = (
-    # round-13 wave. Composition (VERDICT r12 item 1): no key's plan
-    # changed since its latest driver record (the r13 sssp frozen-
-    # frame coalescing only engages above its cap, which k=4 driver
-    # runs never reach — executed plan byte-identical at every tested
-    # SF, pinned by test), so the wave is purely staleness-driven.
-    # FRONT = the ENTIRE 31-key r7 staleness tier — the only keys
-    # whose newest driver record predates r8 (mechanically from
-    # tools/staleness_ledger.py after CORRECTNESS_r12: the q_scalar_*
-    # block, window basics, set ops, agg basics, samplers, TPC-H
-    # q12/q15/q16) — machinery-heaviest first (multiway TPC-H mids,
-    # windows, winsorize's percentile machinery, then the
-    # single-shuffle scalars). The remaining 19 slots start on the
-    # 49-key r8 tier, machinery-heaviest first: the two graph-loop
-    # keys (pagerank_personalized doubles as a warm>cold adjudication
-    # target, VERDICT r12 item 3), the seven Structured-Streaming
-    # replay keys, the multimodal/dedup/postings machinery, and the
-    # two heaviest r8 TPC-H keys. Displaced to the r14 ledger: the
-    # remaining 30 r8 keys (see NEXT.md).
-    "q_sql_tpch_q12",
-    "q_sql_tpch_q15",
-    "q_sql_tpch_q16",
-    "q_agg_winsorize",
-    "q_window_rank",
-    "q_window_running_sum",
-    "q_window_lag",
-    "q_window_ntile",
-    "q_window_ratio",
-    "q_window_first_last",
-    "q_topn",
-    "q_sort",
-    "q_union",
-    "q_set_ops",
-    "q_agg_groupby",
-    "q_agg_rollup",
-    "q_agg_distinct",
-    "q_agg_sum",
-    "q_sample_bernoulli",
-    "q_scalar_array",
-    "q_scalar_bitwise",
-    "q_scalar_cond",
-    "q_scalar_date",
-    "q_scalar_json",
-    "q_scalar_map",
-    "q_scalar_math",
-    "q_scalar_posexplode",
-    "q_scalar_string",
-    "q_scalar_struct",
-    "q_scalar_trycast",
-    "q_scalar_url",
-    "q_graph_hits",
+    # Built from tools/staleness_ledger.py over CORRECTNESS_r1-r14.
+    # FRONT (27) = every key whose plan or oracle text changed since
+    # its latest CORRECTNESS_r* record: the 11 graph-loop keys (each
+    # loop's edge frame is built with one exchange in graph.py; sssp
+    # keeps one merge path), q_graph_modularity (its oracle composes the
+    # graph.py fragments), the 6 other functions.prefix_sum callers
+    # (the walk's teleport index is a loop key above) and the 9
+    # streaming keys that now read the events fixture in place or stage
+    # phased replays. The remaining 23 slots take the oldest tier (r8,
+    # 30 keys), machinery-heaviest first: TPC-H, subqueries, joins,
+    # text, quality, time and anomaly keys. Displaced to the next
+    # ledger: the 7 lightest r8 keys (q_scalar_variant, q_sample_hash,
+    # q_sample_verdict, q_sample_stratified_verdict,
+    # q_sample_exact_stratified, q_agg_skew_kurtosis,
+    # q_agg_bitmap_distinct).
+    "q_shortest_path_len",
+    "q_betweenness_sample",
+    "q_random_walk_counts",
+    "q_pagerank",
     "q_pagerank_personalized",
+    "q_connected_components",
+    "q_graph_lpa",
+    "q_graph_kcore",
+    "q_graph_sssp",
+    "q_graph_closeness",
+    "q_graph_hits",
+    "q_graph_modularity",
+    "q_agg_spearman",
+    "q_agg_gini",
+    "q_agg_weighted_median",
+    "q_agg_pareto",
+    "q_agg_histogram_eqdepth",
+    "q_zorder_layout",
+    "q_stream_join",
     "q_stream_join_outer",
+    "q_stream_ohlc",
     "q_stream_transform_state",
-    "q_stream_cdc_apply",
-    "q_stream_session",
-    "q_stream_sliding",
-    "q_stream_tumbling",
+    "q_stream_stateful",
     "q_stream_enrich",
-    "q_multimodal_scenes",
-    "q_multimodal_dedup",
-    "q_dedup_near",
-    "q_dedup_incremental",
-    "q_embed_knn_graph",
-    "q_text_postings",
-    "q_merge_upsert",
-    "q_join_asof_nearest",
-    "q_sql_tpch_q21",
-    "q_sql_tpch_q17",
+    "q_stream_dedup_state",
+    "q_stream_late",
+    "q_stream_cdc_apply",
+    "q_sql_tpch_q18",
+    "q_sql_tpch_q20",
+    "q_sql_tpch_q22",
+    "q_subquery_correlated",
+    "q_subquery_scalar",
+    "q_join_asof",
+    "q_join_range_binned",
+    "q_join_range",
+    "q_join_bucketed",
+    "q_join_cardinality",
+    "q_join_null_safe",
+    "q_topk_per_group",
+    "q_text_levenshtein",
+    "q_text_ngram_stats",
+    "q_text_repetition",
+    "q_text_chunk",
+    "q_pipeline_split",
+    "q_quality_ks",
+    "q_quality_psi",
+    "q_agg_corr_matrix",
+    "q_time_backfill_gaps",
+    "q_anomaly_mad",
+    "q_skew_profile",
 )
 
 

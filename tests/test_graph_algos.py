@@ -7,6 +7,7 @@ gap with structural invariants.
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from neo_olap_spark import tables
@@ -394,30 +395,6 @@ def test_sssp_raises_when_ceiling_too_low(spark):
         sssp(sym, [0], max_rounds=3)
 
 
-def test_sssp_merge_strategies_agree(spark, sf_dir, monkeypatch):
-    """The size-gated merge strategies (union+groupBy for small state,
-    partition-preserving full-outer for large) are a pure
-    shuffle-volume trade: identical distances, round for round, on the
-    real derived graph with multiple sources. Each strategy is forced
-    through SSSP_UNION_MERGE_MAX_UNITS."""
-    from neo_olap_spark.operators import graph_algos as ga
-    from neo_olap_spark.tables import load
-
-    wsym = ga._weighted_sym_edges(spark, sf_dir).localCheckpoint()
-    srcs = [
-        r[0]
-        for r in load(spark, sf_dir, "customer")
-        .select("c_custkey").orderBy("c_custkey").limit(2).collect()
-    ]
-    got = []
-    for cap in (10**18, 0):  # union+groupBy, then full-outer
-        monkeypatch.setattr(ga, "SSSP_UNION_MERGE_MAX_UNITS", cap)
-        got.append(
-            {(r.source, r.node): r.dist for r in ga.sssp(wsym, srcs).collect()}
-        )
-    assert got[0] == got[1]
-
-
 def test_sssp_per_source_early_exit(spark):
     """r12: sources with different depths must each exit at their own
     depth (the frozen state drops out of the live loop), and the
@@ -590,8 +567,8 @@ def test_hits_planted_numpy_pinned(spark):
         [(0, 2), (0, 3), (1, 3), (1, 4), (2, 4)], "src long, dst long"
     )
     n = spark.createDataFrame([(i,) for i in range(5)], "node long")
-    orig = (ga.edges, ga.all_nodes, g.edge_count_estimate)
-    ga.edges = lambda _s, _d: e
+    orig = (g.directed_edges, ga.all_nodes, g.edge_count_estimate)
+    g.directed_edges = lambda _s, _d: e
     ga.all_nodes = lambda _s, _d: n
     g.edge_count_estimate = lambda _s, _d: 5
     try:
@@ -600,7 +577,7 @@ def test_hits_planted_numpy_pinned(spark):
             for r in ga.q_graph_hits(spark, "unused").collect()
         }
     finally:
-        ga.edges, ga.all_nodes, g.edge_count_estimate = orig
+        g.directed_edges, ga.all_nodes, g.edge_count_estimate = orig
     want = {
         0: (1.78374, 0.0),
         1: (2.22544, 0.0),
@@ -651,6 +628,71 @@ def test_edge_count_hint_releases_cache_on_failure(spark):
     assert not cached.storageLevel.useMemory
     sc._jsc.sc().listenerBus().waitUntilEmpty()
     assert len(sc.statusTracker().getJobIdsForGroup(group)) == 0
+
+
+def _loop_frames(spark, sf_dir):
+    from neo_olap_spark import graph as g
+
+    return {
+        "sym_edges": g.sym_edges(spark, sf_dir),
+        "weighted_sym_edges": g.weighted_sym_edges(spark, sf_dir),
+        "directed_edges": g.directed_edges(spark, sf_dir),
+    }
+
+
+@pytest.mark.parametrize("aqe", [True, False])
+def test_loop_edge_frames_plan_one_exchange(spark, sf_dir, aqe):
+    """Every edge frame a graph loop caches is built with ONE exchange,
+    _graph_loop's own repartition("src") included: the frame is
+    src-partitioned before its dedupe, so the dedupe and the loop's
+    repartition add none (the symmetrize-then-dedupe form planned 3,
+    the directed distinct 2)."""
+    import re
+
+    from neo_olap_spark.operators.graph_algos import _graph_loop
+    from neo_olap_spark.plans import plan_str
+
+    for name, frame in _loop_frames(spark, sf_dir).items():
+        with _graph_loop(spark, 1_000_000, frame, aqe=aqe) as cached:
+            p = plan_str(cached, "simple")
+        assert len(re.findall(r"\bExchange ", p)) == 1, (name, p)
+        assert "ReusedExchange" not in p, (name, p)
+
+
+def test_loop_edge_frames_equal_edges_multisets(spark, sf_dir):
+    """The one-exchange loop frames equal the derived graph built the
+    dedupe-first way, as multisets: symmetrize(edges()), edges(), and
+    the weighted list with each order→part edge's min line quantity,
+    symmetrized."""
+    from neo_olap_spark.graph import ORDER_OFFSET, PART_OFFSET, edges, symmetrize
+    from neo_olap_spark.tables import load
+
+    o = load(spark, sf_dir, "orders").select(
+        F.col("o_custkey").alias("src"),
+        (F.lit(ORDER_OFFSET) + F.col("o_orderkey")).alias("dst"),
+        F.lit(1).cast("long").alias("w"),
+    )
+    li = (
+        load(spark, sf_dir, "lineitem")
+        .groupBy("l_orderkey", "l_partkey")
+        .agg(F.min("l_quantity").cast("long").alias("w"))
+        .select(
+            (F.lit(ORDER_OFFSET) + F.col("l_orderkey")).alias("src"),
+            (F.lit(PART_OFFSET) + F.col("l_partkey")).alias("dst"),
+            "w",
+        )
+    )
+    w = o.unionAll(li)
+    want = {
+        "sym_edges": symmetrize(edges(spark, sf_dir)),
+        "weighted_sym_edges": w.unionAll(w.selectExpr("dst AS src", "src AS dst", "w")),
+        "directed_edges": edges(spark, sf_dir),
+    }
+    for name, got in _loop_frames(spark, sf_dir).items():
+        assert got.columns == want[name].columns, name
+        assert got.count() == want[name].count() > 0, name
+        assert got.exceptAll(want[name]).isEmpty(), name
+        assert want[name].exceptAll(got).isEmpty(), name
 
 
 def test_derived_graph_sql_has_one_definition():

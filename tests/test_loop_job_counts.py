@@ -18,14 +18,14 @@ from neo_olap_spark.registry import queries
 
 # key -> (build jobs, exec jobs)
 LOOP_JOBS = {
-    "q_shortest_path_len": (27, 1),
+    "q_shortest_path_len": (26, 1),
     "q_betweenness_sample": (2, 9),
     "q_random_walk_counts": (2, 3),
     "q_pagerank": (3, 1),
     "q_pagerank_personalized": (5, 1),
     "q_connected_components": (5, 1),
     "q_graph_lpa": (2, 1),
-    "q_graph_kcore": (14, 1),
+    "q_graph_kcore": (13, 1),
     "q_graph_sssp": (11, 1),
     "q_graph_closeness": (11, 4),
     "q_graph_hits": (18, 1),

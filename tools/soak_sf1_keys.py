@@ -234,12 +234,8 @@ def main() -> None:
         spark.catalog.clearCache()
 
     # round depths for the frontier loops, via the stats hook
-    from neo_olap_spark.graph import edge_count_estimate
-    from neo_olap_spark.operators.graph_algos import (
-        SSSP_MAX_ROUNDS,
-        _weighted_sym_edges,
-        sssp,
-    )
+    from neo_olap_spark.graph import edge_count_estimate, weighted_sym_edges
+    from neo_olap_spark.operators.graph_algos import SSSP_MAX_ROUNDS, sssp
 
     st: dict = {}
     src0 = (
@@ -249,7 +245,7 @@ def main() -> None:
     )
     t0 = time.time()
     sssp(
-        _weighted_sym_edges(spark, DST), sources=[int(src0)],
+        weighted_sym_edges(spark, DST), sources=[int(src0)],
         max_rounds=SSSP_MAX_ROUNDS, n_edges=edge_count_estimate(spark, DST),
         stats=st,
     ).write.format("noop").mode("overwrite").save()
