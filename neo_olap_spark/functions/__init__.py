@@ -260,19 +260,58 @@ def prefix_sum(df, order, name, value=1, by=None, n_rows=None, n_parts=None):
     )
 
 
-def money_sum(col):
-    """Order-independent money sum (repo landmine-(e) rule): per-row
-    floor-shift to exact integer cents, SUM the integers, divide once
-    — a double SUM's accumulation order is engine- and
-    partitioning-dependent, so ROUND(SUM(double), 2) is a coin flip
-    whenever a group lands on a half-cent. Accepts a column name or
-    any Column expression (e.g. price * (1 - discount)). The oracle
-    twin is the inline SQL form
-    CAST(CAST(SUM(CAST(FLOOR(x*100+0.5) AS BIGINT)) AS BIGINT)
-    AS DOUBLE)/100.0 — kept inline per oracle so each string stays a
-    self-contained artifact the driver can run verbatim."""
-    c = col if isinstance(col, Column) else F.col(col)
-    return F.sum(F.floor(c * 100 + F.lit(0.5)).cast("long")).cast("double") / 100.0
+def _col(col) -> Column:
+    return col if isinstance(col, Column) else F.col(col)
+
+
+# Engine-exact floor-shift idioms, each defined once as a Spark Column
+# builder and a SQL-text builder that compute the same value in Spark
+# and DuckDB (NEXT.md landmines (a) and (e)). ``col`` is a column name
+# or Column, ``x_sql`` SQL text, ``k`` the decimal scale 10^k. The SQL
+# half is 0.5e0, a DOUBLE in both engines: a bare 0.5 is DECIMAL and
+# would pull a non-double ``x_sql`` into decimal arithmetic whose rules
+# differ cross-engine.
+
+
+def cents(col, k: int = 2) -> Column:
+    """Per-row floor-shift of a double to an exact BIGINT at scale
+    10^k (k=2: integer cents, k=6: the micro quantization): round half
+    up the same way in both engines, where ROUND's half rule and a
+    double SUM's accumulation order are engine-specific."""
+    return F.floor(_col(col) * 10**k + F.lit(0.5)).cast("long")
+
+
+def cents_sql(x_sql: str, k: int = 2) -> str:
+    """SQL text of ``cents``: CAST(FLOOR(x * 10^k + 0.5) AS BIGINT)."""
+    return f"CAST(FLOOR({x_sql} * {10**k} + 0.5e0) AS BIGINT)"
+
+
+def money_sum(col) -> Column:
+    """Order-independent money sum (landmine (e)): per-row ``cents``,
+    SUM the integers, divide once. A double SUM's accumulation order
+    is engine- and partitioning-dependent, so ROUND(SUM(double), 2) is
+    a coin flip whenever a group lands on a half-cent. Accepts a
+    column name or any Column expression (e.g. price * (1 - discount)).
+    The SQL twin is ``money_sum_sql``."""
+    return F.sum(cents(col)).cast("double") / 100.0
+
+
+def money_sum_sql(x_sql: str) -> str:
+    """SQL text of ``money_sum``; the inner BIGINT cast narrows
+    DuckDB's HUGEINT sum (a no-op in Spark)."""
+    return f"CAST(CAST(SUM({cents_sql(x_sql)}) AS BIGINT) AS DOUBLE) / 100.0"
+
+
+def floor_round(col, k: int) -> Column:
+    """A double rounded half up to k decimals, FLOOR(x * 10^k + 0.5)
+    / 10^k (landmine (a)): an AVG can land exactly on a half, where
+    Spark's and DuckDB's ROUND disagree."""
+    return F.floor(_col(col) * 10**k + F.lit(0.5)) / 10**k
+
+
+def floor_round_sql(x_sql: str, k: int) -> str:
+    """SQL text of ``floor_round``."""
+    return f"FLOOR({x_sql} * {10**k} + 0.5e0) / {10**k}"
 
 
 def trunc_div_sql(num: str, den: str, div: str) -> str:

@@ -11,7 +11,16 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
-from neo_olap_spark.functions import money_sum, prefix_sum
+from neo_olap_spark.functions import (
+    cents,
+    cents_sql,
+    floor_round,
+    floor_round_sql,
+    money_sum,
+    money_sum_sql,
+    prefix_sum,
+    trunc_div_sql,
+)
 from neo_olap_spark.registry import query
 from neo_olap_spark.tables import load, parquet_row_count
 
@@ -20,9 +29,9 @@ N_SALTS = 16
 
 @query(
     "q_star_join",
-    oracle="""
+    oracle=f"""
     SELECT n_name,
-           CAST(CAST(SUM(CAST(FLOOR(l_extendedprice * (1 - l_discount) * 100 + 0.5) AS BIGINT)) AS BIGINT) AS DOUBLE) / 100.0 AS revenue,
+           {money_sum_sql("l_extendedprice * (1 - l_discount)")} AS revenue,
            COUNT(*) AS n_items
     FROM customer
     JOIN orders   ON c_custkey = o_custkey
@@ -63,15 +72,7 @@ def q_star_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(r), n.n_regionkey == r.r_regionkey)
         .groupBy("n_name")
         .agg(
-            (
-                F.sum(
-                    F.floor(
-                        F.col("l_extendedprice") * (1 - F.col("l_discount")) * 100
-                        + 0.5
-                    ).cast("long")
-                ).cast("double")
-                / 100.0
-            ).alias(
+            money_sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))).alias(
                 "revenue"
             ),
             F.count("*").alias("n_items"),
@@ -81,11 +82,11 @@ def q_star_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_time_rollup",
-    oracle="""
+    oracle=f"""
     SELECT CAST(epoch(date_trunc('day', ts)) AS BIGINT) AS day_epoch,
            CAST(epoch(date_trunc('hour', ts)) AS BIGINT) AS hour_epoch,
            COUNT(*) AS n_events,
-           CAST(CAST(SUM(CAST(FLOOR(value * 100 + 0.5) AS BIGINT)) AS BIGINT) AS DOUBLE) / 100.0 AS sum_value
+           {money_sum_sql("value")} AS sum_value
     FROM events
     GROUP BY ROLLUP(date_trunc('day', ts), date_trunc('hour', ts))
     """,
@@ -112,10 +113,10 @@ def q_time_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_agg_cube",
-    oracle="""
+    oracle=f"""
     SELECT o_orderstatus, o_orderpriority,
            COUNT(*) AS n_orders,
-           CAST(CAST(SUM(CAST(FLOOR(o_totalprice * 100 + 0.5) AS BIGINT)) AS BIGINT) AS DOUBLE) / 100.0 AS total
+           {money_sum_sql("o_totalprice")} AS total
     FROM orders GROUP BY CUBE(o_orderstatus, o_orderpriority)
     """,
 )
@@ -133,11 +134,11 @@ def q_agg_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_grouping_sets",
-    oracle="""
+    oracle=f"""
     SELECT COALESCE(o_orderstatus, 'ALL') AS status,
            COALESCE(o_orderpriority, 'ALL') AS priority,
            COUNT(*) AS n_orders,
-           CAST(CAST(SUM(CAST(FLOOR(o_totalprice * 100 + 0.5) AS BIGINT)) AS BIGINT) AS DOUBLE) / 100.0 AS total
+           {money_sum_sql("o_totalprice")} AS total
     FROM orders
     GROUP BY GROUPING SETS ((o_orderstatus), (o_orderpriority), ())
     """,
@@ -152,11 +153,11 @@ def q_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load(spark, sf_dir, "orders")
     o.createOrReplaceTempView("q_gs_orders")
     return spark.sql(
-        """
+        f"""
         SELECT COALESCE(o_orderstatus, 'ALL') AS status,
                COALESCE(o_orderpriority, 'ALL') AS priority,
                COUNT(*) AS n_orders,
-           CAST(CAST(SUM(CAST(FLOOR(o_totalprice * 100 + 0.5) AS BIGINT)) AS BIGINT) AS DOUBLE) / 100.0 AS total
+           {money_sum_sql("o_totalprice")} AS total
         FROM q_gs_orders
         GROUP BY GROUPING SETS ((o_orderstatus), (o_orderpriority), ())
         """
@@ -322,9 +323,9 @@ def q_agg_approx_quantile(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-TPCH_Q3_SQL = """
+TPCH_Q3_SQL = f"""
 SELECT l_orderkey,
-       CAST(CAST(SUM(CAST(FLOOR(l_extendedprice * (1 - l_discount) * 100 + 0.5) AS BIGINT)) AS BIGINT) AS DOUBLE) / 100.0 AS revenue,
+       {money_sum_sql("l_extendedprice * (1 - l_discount)")} AS revenue,
        CAST(o_orderdate AS STRING) AS o_orderdate_s,
        o_orderpriority
 FROM customer
@@ -341,9 +342,9 @@ LIMIT 10
 
 @query(
     "q_sql_surface",
-    oracle="""
+    oracle=f"""
     SELECT l_orderkey,
-           CAST(CAST(SUM(CAST(FLOOR(l_extendedprice * (1 - l_discount) * 100 + 0.5) AS BIGINT)) AS BIGINT) AS DOUBLE) / 100.0 AS revenue,
+           {money_sum_sql("l_extendedprice * (1 - l_discount)")} AS revenue,
            strftime(CAST(o_orderdate AS TIMESTAMP), '%Y-%m-%d %H:%M:%S') AS o_orderdate_s,
            o_orderpriority
     FROM customer
@@ -760,7 +761,7 @@ SESSION_GAP_US = 30 * 60 * 1_000_000  # 30-minute inactivity gap, in micros
            CAST(floor(epoch(MIN(ts))) AS BIGINT) AS session_start_epoch,
            CAST(floor(epoch(MAX(ts))) AS BIGINT) AS session_end_epoch,
            COUNT(*) AS n_events,
-           CAST(CAST(SUM(CAST(FLOOR(value * 100 + 0.5) AS BIGINT)) AS BIGINT) AS DOUBLE) / 100.0 AS total_value
+           {money_sum_sql("value")} AS total_value
     FROM s
     GROUP BY user_id, session_seq
     """,
@@ -802,10 +803,10 @@ def q_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_time_gap_fill",
-    oracle="""
+    oracle=f"""
     WITH hourly AS (
       SELECT user_id, date_trunc('hour', ts) AS hr,
-             CAST(CAST(SUM(CAST(FLOOR(value * 100 + 0.5) AS BIGINT)) AS BIGINT) AS DOUBLE) / 100.0 AS v
+             {money_sum_sql("value")} AS v
       FROM events GROUP BY user_id, date_trunc('hour', ts)
     ),
     bounds AS (SELECT user_id, MIN(hr) AS lo, MAX(hr) AS hi FROM hourly GROUP BY user_id),
@@ -867,19 +868,19 @@ def q_time_gap_fill(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # SQL text shared verbatim by Spark and DuckDB (date literals as
 # strings: each engine coerces to its own timestamp flavor)
-TPCH_Q1_SQL = """
+TPCH_Q1_SQL = f"""
     SELECT l_returnflag, l_linestatus,
            ROUND(SUM(l_quantity), 2) AS sum_qty,
-           CAST(CAST(SUM(CAST(FLOOR(l_extendedprice * 100 + 0.5) AS BIGINT)) AS BIGINT) AS DOUBLE) / 100.0 AS sum_base,
-           CAST(CAST(SUM(CAST(FLOOR(l_extendedprice * (1 - l_discount) * 100 + 0.5) AS BIGINT)) AS BIGINT) AS DOUBLE) / 100.0 AS sum_disc,
+           {money_sum_sql("l_extendedprice")} AS sum_base,
+           {money_sum_sql("l_extendedprice * (1 - l_discount)")} AS sum_disc,
            COUNT(*) AS n_rows
     FROM lineitem
     WHERE l_shipdate <= '1998-09-02'
     GROUP BY l_returnflag, l_linestatus
 """
 
-TPCH_Q6_SQL = """
-    SELECT CAST(CAST(SUM(CAST(FLOOR(l_extendedprice * l_discount * 100 + 0.5) AS BIGINT)) AS BIGINT) AS DOUBLE) / 100.0 AS revenue,
+TPCH_Q6_SQL = f"""
+    SELECT {money_sum_sql("l_extendedprice * l_discount")} AS revenue,
            COUNT(*) AS n_rows
     FROM lineitem
     WHERE l_shipdate >= '1997-01-01' AND l_shipdate < '1998-01-01'
@@ -923,10 +924,9 @@ TPCH_Q4_SQL = """
     GROUP BY o_orderpriority
 """
 
-TPCH_Q10_SQL = """
+TPCH_Q10_SQL = f"""
     SELECT c_custkey, c_name,
-           CAST(CAST(SUM(CAST(FLOOR(l_extendedprice * (1 - l_discount) * 100 + 0.5) AS BIGINT))
-                AS BIGINT) AS DOUBLE) / 100.0 AS revenue,
+           {money_sum_sql("l_extendedprice * (1 - l_discount)")} AS revenue,
            ROUND(c_acctbal, 2) AS acctbal
     FROM customer, orders, lineitem
     WHERE c_custkey = o_custkey AND l_orderkey = o_orderkey
@@ -937,16 +937,18 @@ TPCH_Q10_SQL = """
     LIMIT 20
 """
 
-TPCH_Q14_SQL = """
-    SELECT FLOOR(100.0 * CAST(CAST(pc AS BIGINT) AS DOUBLE)
-                 / CAST(CAST(tc AS BIGINT) AS DOUBLE) * 10000 + 0.5) / 10000
-             AS promo_revenue,
+TPCH_Q14_SQL = f"""
+    SELECT {floor_round_sql(
+               "100.0 * CAST(CAST(pc AS BIGINT) AS DOUBLE)"
+               " / CAST(CAST(tc AS BIGINT) AS DOUBLE)",
+               4,
+           )} AS promo_revenue,
            n_rows
     FROM (
       SELECT SUM(CASE WHEN p_type = 'PROMO'
-                      THEN CAST(FLOOR(l_extendedprice * (1 - l_discount) * 100 + 0.5) AS BIGINT)
+                      THEN {cents_sql("l_extendedprice * (1 - l_discount)")}
                       ELSE 0 END) AS pc,
-             SUM(CAST(FLOOR(l_extendedprice * (1 - l_discount) * 100 + 0.5) AS BIGINT)) AS tc,
+             SUM({cents_sql("l_extendedprice * (1 - l_discount)")}) AS tc,
              COUNT(*) AS n_rows
       FROM lineitem, part
       WHERE l_partkey = p_partkey
@@ -954,9 +956,8 @@ TPCH_Q14_SQL = """
     )
 """
 
-TPCH_Q19_SQL = """
-    SELECT CAST(CAST(SUM(CAST(FLOOR(l_extendedprice * (1 - l_discount) * 100 + 0.5) AS BIGINT))
-                AS BIGINT) AS DOUBLE) / 100.0 AS revenue,
+TPCH_Q19_SQL = f"""
+    SELECT {money_sum_sql("l_extendedprice * (1 - l_discount)")} AS revenue,
            COUNT(*) AS n_rows
     FROM lineitem, part
     WHERE p_partkey = l_partkey
@@ -968,10 +969,9 @@ TPCH_Q19_SQL = """
             AND l_quantity BETWEEN 20 AND 30))
 """
 
-TPCH_Q5_SQL = """
+TPCH_Q5_SQL = f"""
     SELECT n_name,
-           CAST(CAST(SUM(CAST(FLOOR(l_extendedprice * (1 - l_discount) * 100 + 0.5) AS BIGINT))
-                AS BIGINT) AS DOUBLE) / 100.0 AS revenue
+           {money_sum_sql("l_extendedprice * (1 - l_discount)")} AS revenue
     FROM customer, orders, lineitem, supplier, nation, region
     WHERE c_custkey = o_custkey AND l_orderkey = o_orderkey
       AND l_suppkey = s_suppkey AND c_nationkey = s_nationkey
@@ -1066,15 +1066,9 @@ def q_join_multiway(spark: SparkSession, sf_dir: str) -> DataFrame:
             # money-cents rule: per-row floor-shift to exact integer
             # cents, sum the integers (order-independent), one final
             # division — a double SUM here is summation-order-dependent
-            (
-                F.sum(
-                    F.floor(
-                        F.col("l_extendedprice") * (1 - F.col("l_discount")) * 100
-                        + 0.5
-                    ).cast("long")
-                ).cast("double")
-                / 100.0
-            ).alias("revenue")
+            money_sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))).alias(
+                "revenue"
+            )
         )
     )
 
@@ -1112,14 +1106,14 @@ def q_agg_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_agg_argmax",
-    oracle="""
+    oracle=f"""
     SELECT l_returnflag,
            MAX_BY(l_orderkey,
-                  LPAD(CAST(CAST(FLOOR(l_extendedprice * 100 + 0.5) AS BIGINT) AS VARCHAR), 14, '0')
+                  LPAD(CAST({cents_sql("l_extendedprice")} AS VARCHAR), 14, '0')
                   || '#' || LPAD(CAST(l_orderkey AS VARCHAR), 14, '0')) AS top_order,
            ROUND(MAX(l_extendedprice), 2) AS top_price,
            MIN_BY(l_orderkey,
-                  LPAD(CAST(CAST(FLOOR(l_extendedprice * 100 + 0.5) AS BIGINT) AS VARCHAR), 14, '0')
+                  LPAD(CAST({cents_sql("l_extendedprice")} AS VARCHAR), 14, '0')
                   || '#' || LPAD(CAST(l_orderkey AS VARCHAR), 14, '0')) AS bottom_order,
            ROUND(MIN(l_extendedprice), 2) AS bottom_price
     FROM lineitem
@@ -1136,10 +1130,9 @@ def q_agg_argmax(spark: SparkSession, sf_dir: str) -> DataFrame:
     '10.2'). Partial-aggregable (max_by merges map-side), one shuffle
     into 3 groups."""
     li = load(spark, sf_dir, "lineitem")
-    cents = F.floor(F.col("l_extendedprice") * 100 + 0.5).cast("long")
     ordinal = F.concat_ws(
         "#",
-        F.lpad(cents.cast("string"), 14, "0"),
+        F.lpad(cents("l_extendedprice").cast("string"), 14, "0"),
         F.lpad(F.col("l_orderkey").cast("string"), 14, "0"),
     )
     return li.groupBy("l_returnflag").agg(
@@ -1343,11 +1336,13 @@ DOWNSAMPLE_HOURS = 6
     SELECT event_type,
            CAST(FLOOR(epoch(ts) / ({DOWNSAMPLE_HOURS} * 3600)) AS BIGINT) AS bucket,
            COUNT(*) AS n_events,
-           FLOOR(CAST(CAST(SUM(CAST(FLOOR(value * 100 + 0.5) AS BIGINT))
-                 AS BIGINT) AS DOUBLE) / COUNT(*) / 100 * 10000 + 0.5) / 10000
-             AS avg_value,
-           FLOOR(MIN(value) * 10000 + 0.5) / 10000 AS min_value,
-           FLOOR(MAX(value) * 10000 + 0.5) / 10000 AS max_value
+           {floor_round_sql(
+               f"CAST(CAST(SUM({cents_sql('value')}) AS BIGINT) AS DOUBLE)"
+               " / COUNT(*) / 100",
+               4,
+           )} AS avg_value,
+           {floor_round_sql("MIN(value)", 4)} AS min_value,
+           {floor_round_sql("MAX(value)", 4)} AS max_value
     FROM events
     GROUP BY event_type, bucket
     """,
@@ -1369,24 +1364,16 @@ def q_time_downsample(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("event_type", "bucket")
         .agg(
             F.count("*").alias("n_events"),
-            # floor(x*1e4+.5)/1e4, not round(): an avg of k values can
+            # floor_round, not round(): an avg of k values can
             # land EXACTLY on a half (e.g. 55.12125) and the engines'
             # round-half rules differ — same fix as q_embed_quantize
             # exact avg: integer cents sum / count (a double AVG's
             # accumulation order is engine-specific — landmine (h))
-            (
-                F.floor(
-                    F.sum(F.floor(F.col("value") * 100 + 0.5).cast("long"))
-                    .cast("double")
-                    / F.count(F.lit(1))
-                    / 100
-                    * 10000
-                    + 0.5
-                )
-                / 10000
+            floor_round(
+                F.sum(cents("value")).cast("double") / F.count(F.lit(1)) / 100, 4
             ).alias("avg_value"),
-            (F.floor(F.min("value") * 10000 + 0.5) / 10000).alias("min_value"),
-            (F.floor(F.max("value") * 10000 + 0.5) / 10000).alias("max_value"),
+            floor_round(F.min("value"), 4).alias("min_value"),
+            floor_round(F.max("value"), 4).alias("max_value"),
         )
     )
 
@@ -1406,15 +1393,15 @@ _M4 = (
     f"((s4/n) - ((4*{_MU})*(s3/n)) + (((6*{_MU})*{_MU})*(s2/n))"
     f" - (((3*{_MU})*{_MU})*{_MU}*{_MU}))"
 )
-SKEW_EXPR = f"FLOOR(({_M3} / ({_M2} * sqrt({_M2}))) * 1000000 + 0.5) / 1000000"
-KURT_EXPR = f"FLOOR((({_M4} / ({_M2} * {_M2})) - 3) * 1000000 + 0.5) / 1000000"
+SKEW_EXPR = floor_round_sql(f"({_M3} / ({_M2} * sqrt({_M2})))", 6)
+KURT_EXPR = floor_round_sql(f"(({_M4} / ({_M2} * {_M2})) - 3)", 6)
 
 
 @query(
     "q_agg_skew_kurtosis",
     oracle=f"""
     WITH c AS (
-      SELECT event_type, CAST(FLOOR(value * 100 + 0.5) AS BIGINT) AS c
+      SELECT event_type, {cents_sql("value")} AS c
       FROM events
     ),
     s AS (
@@ -1461,7 +1448,7 @@ def q_agg_skew_kurtosis(spark: SparkSession, sf_dir: str) -> DataFrame:
     trick costs nothing over the built-ins at any scale."""
     ev = load(spark, sf_dir, "events").select(
         "event_type",
-        F.floor(F.col("value") * 100 + 0.5).cast("long").alias("c"),
+        cents("value").alias("c"),
     )
     c2 = F.col("c") * F.col("c")
     cd = F.col("c").cast("decimal(38,0)")
@@ -1496,8 +1483,7 @@ def _corr_micro_expr(a: str, b: str, aa: str, bb: str, ab: str) -> str:
     vb = f"(n * {bb} - {b} * {b})"
     return (
         f"CASE WHEN {va} * {vb} > 0 THEN "
-        f"CAST(FLOOR((n * {ab} - {a} * {b}) / sqrt({va} * {vb}) "
-        f"* 1000000 + 0.5) AS BIGINT) ELSE NULL END"
+        f"{cents_sql(f'(n * {ab} - {a} * {b}) / sqrt({va} * {vb})', 6)} ELSE NULL END"
     )
 
 
@@ -1512,8 +1498,8 @@ _CORR_PD = _corr_micro_expr("sp", "sd", "spp", "sdd", "spd")
     WITH c AS (
       SELECT l_returnflag,
              CAST(l_quantity AS BIGINT) AS q,
-             CAST(FLOOR(l_extendedprice * 100 + 0.5) AS BIGINT) AS p,
-             CAST(FLOOR(l_discount * 100 + 0.5) AS BIGINT) AS d
+             {cents_sql("l_extendedprice")} AS p,
+             {cents_sql("l_discount")} AS d
       FROM lineitem
     ),
     s AS (
@@ -1562,8 +1548,8 @@ def q_agg_corr_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load(spark, sf_dir, "lineitem").select(
         "l_returnflag",
         F.col("l_quantity").cast("long").alias("q"),
-        F.floor(F.col("l_extendedprice") * 100 + 0.5).cast("long").alias("p"),
-        F.floor(F.col("l_discount") * 100 + 0.5).cast("long").alias("d"),
+        cents("l_extendedprice").alias("p"),
+        cents("l_discount").alias("d"),
     )
     qd = F.col("q").cast("decimal(38,0)")
     pd_ = F.col("p").cast("decimal(38,0)")
@@ -1597,11 +1583,11 @@ def q_agg_corr_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
 # terms from exact integer counts (cast to double once each), ln tail
 # per the tfidf/bigram-LM/PSI precedent (irrational sums never land on
 # a representable rounding half), floor-shift quantized at 1e-6.
-_MI_EXPR = (
-    "FLOOR(SUM((CAST(nab AS DOUBLE) / CAST(n AS DOUBLE)) * "
+_MI_EXPR = floor_round_sql(
+    "SUM((CAST(nab AS DOUBLE) / CAST(n AS DOUBLE)) * "
     "ln((CAST(nab AS DOUBLE) * CAST(n AS DOUBLE)) / "
-    "(CAST(na AS DOUBLE) * CAST(nb AS DOUBLE)))) * 1000000 + 0.5) "
-    "/ 1000000"
+    "(CAST(na AS DOUBLE) * CAST(nb AS DOUBLE))))",
+    6,
 )
 
 
@@ -1678,9 +1664,9 @@ MAD_Z_NUM = 35000  # modified-z threshold 3.5 ×10⁴ (Iglewicz-Hoaglin)
 
 @query(
     "q_anomaly_mad",
-    oracle="""
+    oracle=f"""
     WITH c AS (
-      SELECT event_type, CAST(FLOOR(value * 100 + 0.5) AS BIGINT) AS cents
+      SELECT event_type, {cents_sql("value")} AS cents
       FROM events
     ),
     r AS (
@@ -1744,7 +1730,7 @@ def q_anomaly_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window as W
 
     ev = load(spark, sf_dir, "events").select(
-        "event_type", F.floor(F.col("value") * 100 + 0.5).cast("long").alias("cents")
+        "event_type", cents("value").alias("cents")
     )
     w = W.partitionBy("event_type")
 
@@ -1795,7 +1781,7 @@ def q_anomaly_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH c AS (
       SELECT event_id, event_type, value,
-             CAST(FLOOR(value * 100 + 0.5) AS BIGINT) AS cents
+             {cents_sql("value")} AS cents
       FROM events
     ),
     stats AS (
@@ -1813,7 +1799,7 @@ def q_anomaly_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     SELECT event_id, event_type,
            ROUND(value, 4) AS value,
-           FLOOR(zscore * 1000 + 0.5) / 1000 AS zscore
+           {floor_round_sql("zscore", 3)} AS zscore
     FROM z WHERE ABS(zscore) > {Z_THRESHOLD}
     """,
 )
@@ -1827,7 +1813,7 @@ def q_anomaly_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
     the rejoin is broadcast — the full pass stays embarrassingly
     parallel at 100 TB."""
     ev = load(spark, sf_dir, "events").withColumn(
-        "cents", F.floor(F.col("value") * 100 + 0.5).cast("long")
+        "cents", cents("value")
     )
     # exactness: cents sums are exact integers (order-independent);
     # mu/sigma then come from ONE deterministic double expression per
@@ -1849,7 +1835,7 @@ def q_anomaly_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
             "event_id",
             "event_type",
             F.round("value", 4).alias("value"),
-            (F.floor(z * 1000 + 0.5) / 1000).alias("zscore"),
+            floor_round(z, 3).alias("zscore"),
         )
     )
 
@@ -1900,11 +1886,11 @@ def q_cohort_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_time_interpolate",
-    oracle="""
+    oracle=f"""
     WITH hourly AS (
       SELECT user_id,
              CAST(FLOOR(epoch(ts) / 3600) AS BIGINT) * 3600 AS hr_epoch,
-             CAST(SUM(CAST(FLOOR(value * 100 + 0.5) AS BIGINT)) AS BIGINT)
+             CAST(SUM({cents_sql("value")}) AS BIGINT)
                AS v_cents
       FROM events GROUP BY user_id, CAST(FLOOR(epoch(ts) / 3600) AS BIGINT) * 3600
     ),
@@ -1977,9 +1963,8 @@ def q_time_interpolate(spark: SparkSession, sf_dir: str) -> DataFrame:
     Exchange + two sorts and NO UnboundedFollowing frame."""
     ev = load(spark, sf_dir, "events")
     hr = (F.floor(F.col("ts").cast("long") / 3600) * 3600).cast("long")
-    cents = F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long")
     hourly = ev.groupBy("user_id", hr.alias("hr_epoch")).agg(
-        F.sum(cents).alias("v_cents")
+        F.sum(cents("value")).alias("v_cents")
     )
     bounds = hourly.groupBy("user_id").agg(
         F.min("hr_epoch").alias("lo"), F.max("hr_epoch").alias("hi")
@@ -2201,11 +2186,10 @@ def q_agg_freq_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-PARAMS_SQL = """
+PARAMS_SQL = f"""
     SELECT o_orderpriority,
            CAST(COUNT(*) AS BIGINT) AS n_orders,
-           CAST(SUM(CAST(FLOOR(o_totalprice * 100 + 0.5) AS BIGINT))
-                AS DOUBLE) / 100.0 AS total
+           {money_sum_sql("o_totalprice")} AS total
     FROM orders
     WHERE o_orderdate >= :start_date AND o_orderdate < :end_date
       AND o_orderstatus = :status
@@ -2365,7 +2349,7 @@ EQDEPTH_BUCKETS = 16
     "q_agg_histogram_eqdepth",
     oracle=f"""
     WITH priced AS (
-      SELECT CAST(FLOOR(l_extendedprice * 100 + 0.5) AS BIGINT) AS cents,
+      SELECT {cents_sql("l_extendedprice")} AS cents,
              l_orderkey, l_linenumber
       FROM lineitem
     ),
@@ -2398,7 +2382,7 @@ def q_agg_histogram_eqdepth(spark: SparkSession, sf_dir: str) -> DataFrame:
     bins suffice; this operator is the exact tier."""
     li = load(spark, sf_dir, "lineitem")
     priced = li.select(
-        F.floor(F.col("l_extendedprice") * 100 + 0.5).cast("long").alias("cents"),
+        cents("l_extendedprice").alias("cents"),
         "l_orderkey",
         "l_linenumber",
     )
@@ -2488,10 +2472,10 @@ def q_time_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_feature_target_enc",
-    oracle="""
+    oracle=f"""
     WITH c AS (
       SELECT event_id, event_type,
-             CAST(FLOOR(value * 100 + 0.5) AS BIGINT) AS cents
+             {cents_sql("value")} AS cents
       FROM events
     ),
     stats AS (
@@ -2527,7 +2511,7 @@ def q_feature_target_enc(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = e.select(
         "event_id",
         "event_type",
-        F.floor(F.col("value") * 100 + 0.5).cast("long").alias("cents"),
+        cents("value").alias("cents"),
     )
     stats = c.groupBy("event_type").agg(
         F.sum("cents").alias("total"), F.count(F.lit(1)).alias("n")
@@ -2557,7 +2541,7 @@ WINSOR_HI_PCT = 95
     oracle=f"""
     WITH c AS (
       SELECT l_returnflag,
-             CAST(FLOOR(l_extendedprice * 100 + 0.5) AS BIGINT) AS cents
+             {cents_sql("l_extendedprice")} AS cents
       FROM lineitem
     ),
     r AS (
@@ -2592,9 +2576,9 @@ WINSOR_HI_PCT = 95
            CAST(n AS BIGINT) AS n_items,
            CAST(lo_c AS DOUBLE) / 100.0 AS p05,
            CAST(hi_c AS DOUBLE) / 100.0 AS p95,
-           FLOOR(CAST(sum_raw AS DOUBLE) / n / 100.0 * 10000 + 0.5) / 10000
+           {floor_round_sql("CAST(sum_raw AS DOUBLE) / n / 100.0", 4)}
              AS mean_raw,
-           FLOOR(CAST(sum_wins AS DOUBLE) / n / 100.0 * 10000 + 0.5) / 10000
+           {floor_round_sql("CAST(sum_wins AS DOUBLE) / n / 100.0", 4)}
              AS mean_winsorized
     FROM agg
     """,
@@ -2618,9 +2602,7 @@ def q_agg_winsorize(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load(spark, sf_dir, "lineitem")
     c = li.select(
         "l_returnflag",
-        F.floor(F.col("l_extendedprice") * 100 + F.lit(0.5))
-        .cast("bigint")
-        .alias("cents"),
+        cents("l_extendedprice").alias("cents"),
     )
     w = W.partitionBy("l_returnflag")
     lo_rank = (F.col("cnt") * WINSOR_LO_PCT + 99) / 100
@@ -2665,13 +2647,7 @@ def q_agg_winsorize(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     def qmean(col: str):
-        return (
-            F.floor(
-                F.col(col).cast("double") / F.col("n") / 100.0 * 10000
-                + F.lit(0.5)
-            )
-            / 10000
-        )
+        return floor_round(F.col(col).cast("double") / F.col("n") / 100.0, 4)
 
     return agg.select(
         "l_returnflag",
@@ -2699,7 +2675,7 @@ ROLLING_MEDIAN_FRAME = 6  # current row + 6 preceding = 7-row window
              ROWS BETWEEN {ROLLING_MEDIAN_FRAME} PRECEDING AND CURRENT ROW
            ) AS median_cents
     FROM (SELECT o_custkey, o_orderkey, o_orderdate,
-                 CAST(FLOOR(o_totalprice * 100 + 0.5) AS BIGINT) AS cents
+                 {cents_sql("o_totalprice")} AS cents
           FROM orders)
     """,
 )
@@ -2722,13 +2698,13 @@ def q_window_rolling_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     summation, no rounding boundary). The (o_orderdate, o_orderkey)
     ordering is a total order, so the frame content is deterministic."""
     o = load(spark, sf_dir, "orders")
-    cents = F.floor(F.col("o_totalprice") * 100 + F.lit(0.5)).cast("bigint")
+    price_cents = cents("o_totalprice")
     w = (
         W.partitionBy("o_custkey")
         .orderBy("o_orderdate", "o_orderkey")
         .rowsBetween(-ROLLING_MEDIAN_FRAME, 0)
     )
-    s = F.array_sort(F.collect_list(cents).over(w))
+    s = F.array_sort(F.collect_list(price_cents).over(w))
     n = F.size(s)
     lo = F.element_at(s, ((n + F.lit(1)) / F.lit(2)).cast("int"))
     hi = F.element_at(s, (n / F.lit(2)).cast("int") + F.lit(1))
@@ -2752,7 +2728,7 @@ CORR_MIN_PAIRS = 10
     oracle=f"""
     WITH c AS (
       SELECT event_id, event_type, ts,
-             CAST(FLOOR(value * 100 + 0.5) AS BIGINT) AS x
+             {cents_sql("value")} AS x
       FROM events
     ),
     lagd AS (
@@ -2774,9 +2750,10 @@ CORR_MIN_PAIRS = 10
     SELECT event_id, event_type,
            CASE WHEN n >= {CORR_MIN_PAIRS}
                  AND (n * sxx - sx * sx) * (n * syy - sy * sy) > 0
-                THEN CAST(FLOOR((n * sxy - sx * sy)
-                     / sqrt((n * sxx - sx * sx) * (n * syy - sy * sy))
-                     * 1000000 + 0.5) AS BIGINT)
+                THEN {cents_sql(
+                    "(n * sxy - sx * sy) / sqrt((n * sxx - sx * sx) * (n * syy - sy * sy))",
+                    6,
+                )}
                 ELSE NULL END AS autocorr_micro
     FROM sums
     """,
@@ -2805,7 +2782,7 @@ def q_window_rolling_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_id",
         "event_type",
         "ts",
-        F.floor(F.col("value") * 100 + 0.5).cast("long").alias("x"),
+        cents("value").alias("x"),
     )
     lagd = c.withColumn("y", F.lag("x").over(wo))
     pair = lambda expr: F.when(F.col("y").isNull(), F.lit(0)).otherwise(expr)  # noqa: E731
@@ -2827,7 +2804,7 @@ def q_window_rolling_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type",
         F.when(
             (F.col("n") >= CORR_MIN_PAIRS) & (vx * vy > 0),
-            F.floor(cov / F.sqrt(vx * vy) * 1000000 + 0.5).cast("long"),
+            cents(cov / F.sqrt(vx * vy), 6),
         ).alias("autocorr_micro"),
     )
 
@@ -3011,10 +2988,10 @@ def q_events_sequence_match(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_agg_weighted_median",
-    oracle="""
+    oracle=f"""
     WITH c AS (
       SELECT l_returnflag AS flag,
-             CAST(FLOOR(l_extendedprice * 100 + 0.5) AS BIGINT) AS cents,
+             {cents_sql("l_extendedprice")} AS cents,
              CAST(l_quantity AS BIGINT) AS w
       FROM lineitem
     ),
@@ -3044,7 +3021,7 @@ def q_agg_weighted_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     a per-flag MIN; above it the distributed two-pass form."""
     c = load(spark, sf_dir, "lineitem").select(
         F.col("l_returnflag").alias("flag"),
-        F.floor(F.col("l_extendedprice") * 100 + 0.5).cast("long").alias("cents"),
+        cents("l_extendedprice").alias("cents"),
         F.col("l_quantity").cast("long").alias("w"),
     )
     cum = prefix_sum(
@@ -3338,17 +3315,15 @@ _REG_COV = "(n * sxy - sx * sy)"
 _REG_VY = "(n * syy - sy * sy)"
 _REG_SLOPE = (
     f"CASE WHEN {_REG_VX} > 0 THEN "
-    f"CAST(FLOOR({_REG_COV} / {_REG_VX} * 1000000 + 0.5) AS BIGINT) END"
+    f"{cents_sql(f'{_REG_COV} / {_REG_VX}', 6)} END"
 )
 _REG_INTERCEPT = (
     f"CASE WHEN {_REG_VX} > 0 THEN "
-    f"CAST(FLOOR((sy * {_REG_VX} - {_REG_COV} * sx) / (n * {_REG_VX}) "
-    f"* 1000000 + 0.5) AS BIGINT) END"
+    f"{cents_sql(f'(sy * {_REG_VX} - {_REG_COV} * sx) / (n * {_REG_VX})', 6)} END"
 )
 _REG_R2 = (
     f"CASE WHEN {_REG_VX} * {_REG_VY} > 0 THEN "
-    f"CAST(FLOOR({_REG_COV} * {_REG_COV} / ({_REG_VX} * {_REG_VY}) "
-    f"* 1000000 + 0.5) AS BIGINT) END"
+    f"{cents_sql(f'{_REG_COV} * {_REG_COV} / ({_REG_VX} * {_REG_VY})', 6)} END"
 )
 
 
@@ -3358,7 +3333,7 @@ _REG_R2 = (
     WITH c AS (
       SELECT l_returnflag AS flag,
              CAST(l_quantity AS BIGINT) AS x,
-             CAST(FLOOR(l_extendedprice * 100 + 0.5) AS BIGINT) AS y
+             {cents_sql("l_extendedprice")} AS y
       FROM lineitem
     ),
     m AS (
@@ -3400,7 +3375,7 @@ def q_agg_regression(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = load(spark, sf_dir, "lineitem").select(
         F.col("l_returnflag").alias("flag"),
         F.col("l_quantity").cast("long").alias("x"),
-        F.floor(F.col("l_extendedprice") * 100 + 0.5).cast("long").alias("y"),
+        cents("l_extendedprice").alias("y"),
     )
     dec = "decimal(38,0)"
     m = c.groupBy("flag").agg(
@@ -3428,10 +3403,10 @@ def q_agg_regression(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_agg_gini",
-    oracle="""
+    oracle=f"""
     WITH c AS (
       SELECT o_orderpriority AS prio,
-             CAST(FLOOR(o_totalprice * 100 + 0.5) AS BIGINT) AS cents,
+             {cents_sql("o_totalprice")} AS cents,
              o_orderkey
       FROM orders
     ),
@@ -3477,7 +3452,7 @@ def q_agg_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
     Output is priority-cardinality rows."""
     c = load(spark, sf_dir, "orders").select(
         F.col("o_orderpriority").alias("prio"),
-        F.floor(F.col("o_totalprice") * 100 + 0.5).cast("long").alias("cents"),
+        cents("o_totalprice").alias("cents"),
         "o_orderkey",
     )
     dec = "decimal(38,0)"
@@ -3513,7 +3488,7 @@ PARETO_PCT = 80  # the classic 80% revenue line
     oracle=f"""
     WITH c AS (
       SELECT o_orderpriority AS prio,
-             CAST(FLOOR(o_totalprice * 100 + 0.5) AS BIGINT) AS cents,
+             {cents_sql("o_totalprice")} AS cents,
              o_orderkey
       FROM orders
     ),
@@ -3575,7 +3550,7 @@ def q_agg_pareto(spark: SparkSession, sf_dir: str) -> DataFrame:
     Output is segment-cardinality rows."""
     c = load(spark, sf_dir, "orders").select(
         F.col("o_orderpriority").alias("prio"),
-        F.floor(F.col("o_totalprice") * 100 + 0.5).cast("long").alias("cents"),
+        cents("o_totalprice").alias("cents"),
         "o_orderkey",
     )
     dec = "decimal(38,0)"
@@ -3714,11 +3689,11 @@ RECURSIVE_ROOT_CAP = 5000  # anchor slice: orderkeys below this walk up
 _RECURSIVE_SQL = f"""
 WITH RECURSIVE chain AS (
   SELECT o_orderkey AS node, o_orderkey AS cur, 0 AS depth,
-         CAST(FLOOR(o_totalprice * 100 + 0.5) AS BIGINT) AS path_cents
+         {cents_sql("o_totalprice")} AS path_cents
   FROM orders WHERE o_orderkey < {RECURSIVE_ROOT_CAP}
   UNION ALL
   SELECT c.node, o.o_orderkey, c.depth + 1,
-         c.path_cents + CAST(FLOOR(o.o_totalprice * 100 + 0.5) AS BIGINT)
+         c.path_cents + {cents_sql("o.o_totalprice")}
   FROM chain c JOIN orders o ON o.o_orderkey = c.cur {{div}} 10
   WHERE c.cur >= 10
 ),
@@ -3767,10 +3742,10 @@ def q_sql_recursive(spark: SparkSession, sf_dir: str) -> DataFrame:
 # q_sql_pipe — SQL pipe syntax (SQL-surface family)
 # ---------------------------------------------------------------------------
 
-_PIPE_SQL = """
+_PIPE_SQL = f"""
 FROM orders
 |> WHERE o_orderstatus = 'F'
-|> EXTEND CAST(FLOOR(o_totalprice * 100 + 0.5) AS BIGINT) AS cents
+|> EXTEND {cents_sql("o_totalprice")} AS cents
 |> AGGREGATE CAST(COUNT(*) AS BIGINT) AS n_orders,
              CAST(SUM(cents) AS BIGINT) AS sum_cents,
              CAST(MIN(o_orderkey) AS BIGINT) AS first_key
@@ -3782,13 +3757,13 @@ FROM orders
 
 @query(
     "q_sql_pipe",
-    oracle="""
+    oracle=f"""
     SELECT o_orderpriority,
            CAST(COUNT(*) AS BIGINT) AS n_orders,
-           CAST(SUM(CAST(FLOOR(o_totalprice * 100 + 0.5) AS BIGINT)) AS BIGINT)
+           CAST(SUM({cents_sql("o_totalprice")}) AS BIGINT)
              AS sum_cents,
            CAST(MIN(o_orderkey) AS BIGINT) AS first_key,
-           CAST(SUM(CAST(FLOOR(o_totalprice * 100 + 0.5) AS BIGINT))
+           CAST(SUM({cents_sql("o_totalprice")})
                 // COUNT(*) AS BIGINT) AS avg_cents
     FROM orders WHERE o_orderstatus = 'F'
     GROUP BY o_orderpriority ORDER BY o_orderpriority
@@ -3822,22 +3797,14 @@ def q_sql_pipe(spark: SparkSession, sf_dir: str) -> DataFrame:
 SEASONAL_TREND_HALF = 3  # 7-day centered rolling-mean trend window
 
 
-def _trunc_div(num: str, den: str, div: str) -> str:
-    """Shared truncate-toward-zero integer division — one definition
-    in functions.trunc_div_sql (round-10 self-review)."""
-    from neo_olap_spark.functions import trunc_div_sql
-
-    return trunc_div_sql(num, den, div)
-
-
 def _seasonal_oracle() -> str:
-    trend = _trunc_div("fs", "fc", "//")
-    seas = _trunc_div("SUM(detr)", "COUNT(*)", "//")
+    trend = trunc_div_sql("fs", "fc", "//")
+    seas = trunc_div_sql("SUM(detr)", "COUNT(*)", "//")
     return f"""
     WITH c AS (
       SELECT event_type,
              CAST(FLOOR(epoch(ts) / 86400) AS BIGINT) AS day,
-             CAST(FLOOR(value * 100 + 0.5) AS BIGINT) AS cents0
+             {cents_sql("value")} AS cents0
       FROM events WHERE value IS NOT NULL
     ),
     daily AS (
@@ -3896,7 +3863,7 @@ def q_time_seasonal(spark: SparkSession, sf_dir: str) -> DataFrame:
         ev.select(
             "event_type",
             F.floor(F.col("ts").cast("long") / 86400).cast("long").alias("day"),
-            F.floor(F.col("value") * 100 + 0.5).cast("long").alias("cents0"),
+            cents("value").alias("cents0"),
         )
         .groupBy("event_type", "day")
         .agg(F.sum("cents0").cast("long").alias("cents"))
@@ -3913,7 +3880,7 @@ def q_time_seasonal(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("cents").over(w).cast("long").alias("fs"),
         F.count(F.lit(1)).over(w).cast("long").alias("fc"),
     )
-    trend = _trunc_div("fs", "fc", "div")
+    trend = trunc_div_sql("fs", "fc", "div")
     dt = tr.selectExpr(
         "event_type",
         "day",
@@ -3927,7 +3894,7 @@ def q_time_seasonal(spark: SparkSession, sf_dir: str) -> DataFrame:
         .selectExpr(
             "event_type",
             "dow",
-            f"{_trunc_div('sdetr', 'ndetr', 'div')} AS seasonal_q",
+            f"{trunc_div_sql('sdetr', 'ndetr', 'div')} AS seasonal_q",
         )
     )
     return (
@@ -3957,7 +3924,7 @@ CUSUM_THRESH_CENTS = 50_000  # mean |cumulative deviation| flag level
     WITH daily AS (
       SELECT event_type,
              CAST(FLOOR(epoch(ts) / 86400) AS BIGINT) AS day,
-             CAST(SUM(CAST(FLOOR(value * 100 + 0.5) AS BIGINT)) AS BIGINT)
+             CAST(SUM({cents_sql("value")}) AS BIGINT)
                AS cents
       FROM events WHERE value IS NOT NULL GROUP BY 1, 2
     ),
@@ -4018,7 +3985,7 @@ def q_anomaly_cusum(spark: SparkSession, sf_dir: str) -> DataFrame:
         ev.select(
             "event_type",
             F.floor(F.col("ts").cast("long") / 86400).cast("long").alias("day"),
-            F.floor(F.col("value") * 100 + 0.5).cast("long").alias("cents0"),
+            cents("value").alias("cents0"),
         )
         .groupBy("event_type", "day")
         .agg(F.sum("cents0").cast("long").alias("cents"))
@@ -4075,7 +4042,7 @@ RFM_NTILES = 5
       SELECT o_custkey,
              CAST(MAX(FLOOR(epoch(o_orderdate) / 86400)) AS BIGINT) AS last_day,
              CAST(COUNT(*) AS BIGINT) AS frequency,
-             CAST(SUM(CAST(FLOOR(o_totalprice * 100 + 0.5) AS BIGINT)) AS BIGINT)
+             CAST(SUM({cents_sql("o_totalprice")}) AS BIGINT)
                AS monetary_cents
       FROM orders GROUP BY o_custkey
     ),
@@ -4135,7 +4102,7 @@ def q_events_rfm(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("long")
             .alias("last_day"),
             F.count(F.lit(1)).cast("long").alias("frequency"),
-            F.sum(F.floor(F.col("o_totalprice") * 100 + 0.5).cast("long"))
+            F.sum(cents("o_totalprice"))
             .cast("long")
             .alias("monetary_cents"),
         )
@@ -4193,7 +4160,7 @@ _ACF_CORR = _corr_micro_expr("sx", "sy", "sxx", "syy", "sxy")
     WITH daily AS (
       SELECT event_type,
              CAST(FLOOR(epoch(ts) / 86400) AS BIGINT) AS day,
-             CAST(SUM(CAST(FLOOR(value * 100 + 0.5) AS BIGINT)) AS BIGINT)
+             CAST(SUM({cents_sql("value")}) AS BIGINT)
                AS cents
       FROM events WHERE value IS NOT NULL GROUP BY 1, 2
     ),
@@ -4255,7 +4222,7 @@ def q_time_acf(spark: SparkSession, sf_dir: str) -> DataFrame:
         ev.select(
             "event_type",
             F.floor(F.col("ts").cast("long") / 86400).cast("long").alias("day"),
-            F.floor(F.col("value") * 100 + 0.5).cast("long").alias("cents0"),
+            cents("value").alias("cents0"),
         )
         .groupBy("event_type", "day")
         .agg(F.sum("cents0").cast("long").alias("cents"))
@@ -4297,10 +4264,10 @@ def q_time_acf(spark: SparkSession, sf_dir: str) -> DataFrame:
 # WOE with +1 Laplace smoothing, micro-quantized: ln of each BARE
 # integer (the collocations sum-of-logs discipline — products like
 # (g+1)*(B+K) never form inside the ln), double literals scientific.
-_WOE_MICRO = (
-    "CAST(FLOOR((ln((n_good + 1) * 1.0e0) - ln((n_bad + 1) * 1.0e0)"
-    " - ln((g_tot + n_bands) * 1.0e0) + ln((b_tot + n_bands) * 1.0e0))"
-    " * 1.0e6 + 0.5e0) AS BIGINT)"
+_WOE_MICRO = cents_sql(
+    "(ln((n_good + 1) * 1.0e0) - ln((n_bad + 1) * 1.0e0)"
+    " - ln((g_tot + n_bands) * 1.0e0) + ln((b_tot + n_bands) * 1.0e0))",
+    6,
 )
 
 
@@ -4403,8 +4370,8 @@ def q_feature_woe(spark: SparkSession, sf_dir: str) -> DataFrame:
 # HHI = sum of squared revenue shares, from exact sums cast to double
 # once inside one shared expression (single division). The equivalent
 # competitor count 1/HHI ships in milli units from the same sums.
-_HHI_PPM = "CAST(FLOOR(sxx / (sx * sx) * 1.0e6 + 0.5e0) AS BIGINT)"
-_HHI_EQ_N_MILLI = "CAST(FLOOR(sx * sx / sxx * 1.0e3 + 0.5e0) AS BIGINT)"
+_HHI_PPM = cents_sql("sxx / (sx * sx)", 6)
+_HHI_EQ_N_MILLI = cents_sql("sx * sx / sxx", 3)
 
 
 @query(
@@ -4413,7 +4380,7 @@ _HHI_EQ_N_MILLI = "CAST(FLOOR(sx * sx / sxx * 1.0e3 + 0.5e0) AS BIGINT)"
     WITH per_cust AS (
       SELECT o_orderpriority,
              o_custkey,
-             CAST(SUM(CAST(FLOOR(o_totalprice * 100 + 0.5) AS BIGINT))
+             CAST(SUM({cents_sql("o_totalprice")})
                   AS BIGINT) AS cents
       FROM orders GROUP BY 1, 2
     ),
@@ -4451,7 +4418,7 @@ def q_agg_hhi(spark: SparkSession, sf_dir: str) -> DataFrame:
     Output is one row per segment."""
     o = load(spark, sf_dir, "orders")
     per_cust = o.groupBy("o_orderpriority", "o_custkey").agg(
-        F.sum(F.floor(F.col("o_totalprice") * 100 + 0.5).cast("long"))
+        F.sum(cents("o_totalprice"))
         .cast("long")
         .alias("cents")
     )
@@ -4579,7 +4546,7 @@ _SPEAR_TIE = "l_orderkey, l_linenumber, l_partkey, l_suppkey"
     WITH m AS (
       SELECT l_returnflag,
              CAST(l_quantity AS BIGINT) AS x,
-             CAST(FLOOR(l_extendedprice * 100 + 0.5) AS BIGINT) AS y,
+             {cents_sql("l_extendedprice")} AS y,
              l_orderkey, l_linenumber, l_partkey, l_suppkey
       FROM lineitem
     ),
@@ -4633,7 +4600,7 @@ def q_agg_spearman(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load(spark, sf_dir, "lineitem").select(
         "l_returnflag",
         F.col("l_quantity").cast("long").alias("x"),
-        F.floor(F.col("l_extendedprice") * 100 + 0.5).cast("long").alias("y"),
+        cents("l_extendedprice").alias("y"),
         "l_orderkey",
         "l_linenumber",
         "l_partkey",

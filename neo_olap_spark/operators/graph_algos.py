@@ -39,6 +39,9 @@ from contextlib import contextmanager
 
 from neo_olap_spark.checkpoints import latest_round, read_round, write_round
 from neo_olap_spark.functions import (
+    cents_sql,
+    floor_round,
+    floor_round_sql,
     local_rows_frame,
     loop_checkpoint,
     prefix_sum,
@@ -1383,10 +1386,11 @@ def _modularity_oracle(n_rounds: int) -> str:
     SELECT (SELECT CAST(COUNT(DISTINCT label) AS BIGINT) FROM labels)
              AS n_communities,
            (SELECT m FROM m_cnt) AS m_edges,
-           FLOOR(CAST(CAST(SUM(term) AS BIGINT) AS DOUBLE)
-                 / CAST(4 * (SELECT m FROM m_cnt)
-                          * (SELECT m FROM m_cnt) AS DOUBLE)
-                 * 1000000 + 0.5) / 1000000 AS modularity
+           {floor_round_sql(
+               "CAST(CAST(SUM(term) AS BIGINT) AS DOUBLE)"
+               " / CAST(4 * (SELECT m FROM m_cnt) * (SELECT m FROM m_cnt) AS DOUBLE)",
+               6,
+           )} AS modularity
     FROM terms
     """
     )
@@ -1442,14 +1446,8 @@ def q_graph_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
     return terms.agg(
         F.lit(n_comm).cast("long").alias("n_communities"),
         F.lit(m).cast("long").alias("m_edges"),
-        (
-            F.floor(
-                F.sum("term").cast("double")
-                / F.lit(float(4 * m * m))
-                * 1_000_000
-                + F.lit(0.5)
-            )
-            / 1_000_000
+        floor_round(
+            F.sum("term").cast("double") / F.lit(float(4 * m * m)), 6
         ).alias("modularity"),
     )
 
@@ -1960,9 +1958,11 @@ def q_graph_degree_hist(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     SELECT e.u, e.v,
            CAST(COALESCE(t.common, 0) AS BIGINT) AS common_neighbors,
-           FLOOR(CAST(COALESCE(t.common, 0) AS DOUBLE)
-                 / CAST(du.deg + dv.deg - COALESCE(t.common, 0) AS DOUBLE)
-                 * 1000000 + 0.5) / 1000000 AS jaccard
+           {floor_round_sql(
+               "CAST(COALESCE(t.common, 0) AS DOUBLE)"
+               " / CAST(du.deg + dv.deg - COALESCE(t.common, 0) AS DOUBLE)",
+               6,
+           )} AS jaccard
     FROM e JOIN deg du ON e.u = du.node
            JOIN deg dv ON e.v = dv.node
            LEFT JOIN tri_e t ON e.u = t.u AND e.v = t.v
@@ -2041,14 +2041,10 @@ def q_graph_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
             "u",
             "v",
             common.alias("common_neighbors"),
-            (
-                F.floor(
-                    common.cast("double")
-                    / (F.col("du") + F.col("dv") - common).cast("double")
-                    * 1_000_000
-                    + F.lit(0.5)
-                )
-                / 1_000_000
+            floor_round(
+                common.cast("double")
+                / (F.col("du") + F.col("dv") - common).cast("double"),
+                6,
             ).alias("jaccard"),
         )
     )
@@ -2459,8 +2455,8 @@ def _hits_oracle(n_iters: int) -> str:
         + ",".join(parts)
         + f"""
     SELECT h.node AS node_id,
-           FLOOR(h.hub * 100000 + 0.5) / 100000 AS hub,
-           FLOOR(a.auth * 100000 + 0.5) / 100000 AS auth
+           {floor_round_sql("h.hub", 5)} AS hub,
+           {floor_round_sql("a.auth", 5)} AS auth
     FROM h{n_iters} h JOIN a{n_iters} a ON h.node = a.node"""
     )
 
@@ -2537,8 +2533,8 @@ def hits(
             return loop_checkpoint(
                 state["hub"].join(state["auth"], "node").select(
                     F.col("node").alias("node_id"),
-                    F.expr("FLOOR(hub * 100000 + 0.5) / 100000").alias("hub"),
-                    F.expr("FLOOR(auth * 100000 + 0.5) / 100000").alias("auth"),
+                    floor_round("hub", 5).alias("hub"),
+                    floor_round("auth", 5).alias("auth"),
                 ),
                 eager=False,
             )
@@ -2694,9 +2690,8 @@ BASKET_TOP_N = 40
 # (n_ab * N alone overflows BIGINT at warehouse scale; every ln input
 # here is a bare positive integer — the collocations-PMI discipline,
 # double literals in scientific form per the BM25 decimal landmine).
-_LLIFT_MICRO = (
-    "CAST(FLOOR((ln(n_ab * 1.0e0) + ln(n_orders * 1.0e0)"
-    " - ln(c_a * 1.0e0) - ln(c_b * 1.0e0)) * 1.0e6 + 0.5e0) AS BIGINT)"
+_LLIFT_MICRO = cents_sql(
+    "(ln(n_ab * 1.0e0) + ln(n_orders * 1.0e0) - ln(c_a * 1.0e0) - ln(c_b * 1.0e0))", 6
 )
 
 

@@ -19,7 +19,7 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from neo_olap_spark.functions import local_rows_frame
+from neo_olap_spark.functions import cents, cents_sql, local_rows_frame
 from neo_olap_spark.registry import query
 from neo_olap_spark.sources import read_csv, read_json, write_csv, write_json
 from neo_olap_spark.tables import load
@@ -186,14 +186,14 @@ def q_sink_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_schema_evolution",
-    oracle="""
+    oracle=f"""
     SELECT o_orderkey,
-           CAST(FLOOR(o_totalprice * 100 + 0.5) AS BIGINT) AS price_cents,
+           {cents_sql("o_totalprice")} AS price_cents,
            CAST(NULL AS VARCHAR) AS o_orderpriority
     FROM orders WHERE o_orderkey % 2 = 0
     UNION ALL
     SELECT o_orderkey,
-           CAST(FLOOR(o_totalprice * 100 + 0.5) AS BIGINT) AS price_cents,
+           {cents_sql("o_totalprice")} AS price_cents,
            o_orderpriority
     FROM orders WHERE o_orderkey % 2 = 1
     """,
@@ -216,7 +216,7 @@ def q_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     semantics demonstrated here are identical."""
     o = load(spark, sf_dir, "orders").select(
         "o_orderkey",
-        F.floor(F.col("o_totalprice") * 100 + 0.5).cast("long").alias("price_cents"),
+        cents("o_totalprice").alias("price_cents"),
         "o_orderpriority",
     )
     root, promote = generational_sink_dir(spark, "schema_evolution")
@@ -250,7 +250,7 @@ DPP_MONTH_CUTOFF = "1995-07"  # urgent-order months before this drive the probe
     )
     SELECT strftime(l_shipdate, '%Y-%m') AS ship_month,
            CAST(COUNT(*) AS BIGINT) AS n_items,
-           CAST(SUM(CAST(FLOOR(l_extendedprice * 100 + 0.5) AS BIGINT))
+           CAST(SUM({cents_sql("l_extendedprice")})
                 AS BIGINT) AS revenue_cents
     FROM lineitem
     JOIN dim ON strftime(l_shipdate, '%Y-%m') = dim.m
@@ -300,7 +300,7 @@ def q_join_dpp(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("ship_month")
         .agg(
             F.count(F.lit(1)).cast("long").alias("n_items"),
-            F.sum(F.floor(F.col("l_extendedprice") * 100 + 0.5).cast("long"))
+            F.sum(cents("l_extendedprice"))
             .cast("long")
             .alias("revenue_cents"),
         )

@@ -14,7 +14,15 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
-from neo_olap_spark.functions import local_rows_frame, shingles, ws_tokens
+from neo_olap_spark.functions import (
+    cents,
+    cents_sql,
+    floor_round,
+    floor_round_sql,
+    local_rows_frame,
+    shingles,
+    ws_tokens,
+)
 from neo_olap_spark.registry import query
 from neo_olap_spark.tables import load
 
@@ -316,7 +324,7 @@ def q_embed_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_embed_stats",
-    oracle="""
+    oracle=f"""
     WITH n AS (
       SELECT label,
              sqrt(list_aggregate(list_transform(embedding,
@@ -328,9 +336,9 @@ def q_embed_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
            COUNT(*) AS n_vecs,
            CAST(MIN(dim) AS BIGINT) AS min_dim,
            CAST(MAX(dim) AS BIGINT) AS max_dim,
-           FLOOR(AVG(nrm) * 10000 + 0.5) / 10000 AS avg_norm,
-           FLOOR(MIN(nrm) * 10000 + 0.5) / 10000 AS min_norm,
-           FLOOR(MAX(nrm) * 10000 + 0.5) / 10000 AS max_norm
+           {floor_round_sql("AVG(nrm)", 4)} AS avg_norm,
+           {floor_round_sql("MIN(nrm)", 4)} AS min_norm,
+           {floor_round_sql("MAX(nrm)", 4)} AS max_norm
     FROM n GROUP BY label
     """,
 )
@@ -351,9 +359,9 @@ def q_embed_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count("*").alias("n_vecs"),
         F.min("dim").cast("long").alias("min_dim"),
         F.max("dim").cast("long").alias("max_dim"),
-        (F.floor(F.avg("nrm") * 10000 + 0.5) / 10000).alias("avg_norm"),
-        (F.floor(F.min("nrm") * 10000 + 0.5) / 10000).alias("min_norm"),
-        (F.floor(F.max("nrm") * 10000 + 0.5) / 10000).alias("max_norm"),
+        floor_round(F.avg("nrm"), 4).alias("avg_norm"),
+        floor_round(F.min("nrm"), 4).alias("min_norm"),
+        floor_round(F.max("nrm"), 4).alias("max_norm"),
     )
 
 
@@ -601,7 +609,7 @@ def _pca_fit(e: DataFrame):
     return n_total, mean, cov, comps, evals_desc
 
 
-PCA_QUANT = 10**6  # per-element quantization step for the exact anchors
+PCA_QUANT = 10**6  # scale of the exact anchors' per-element cents(v, 6)
 
 
 @query(
@@ -609,8 +617,7 @@ PCA_QUANT = 10**6  # per-element quantization step for the exact anchors
     oracle=f"""
     WITH q AS (
       SELECT r.i AS pos,
-             CAST(FLOOR(CAST(embedding[r.i] AS DOUBLE) * {PCA_QUANT} + 0.5)
-                  AS BIGINT) AS qv
+             {cents_sql("CAST(embedding[r.i] AS DOUBLE)", 6)} AS qv
       FROM embeddings, range(1, 65) r(i)
     ),
     per AS (SELECT pos, SUM(qv) AS sx, SUM(qv * qv) AS sxx FROM q GROUP BY pos),
@@ -661,9 +668,7 @@ def q_embed_pca(spark: SparkSession, sf_dir: str) -> DataFrame:
         e.select(F.posexplode("embedding").alias("pos", "v"))
         .select(
             "pos",
-            F.floor(F.col("v").cast("double") * PCA_QUANT + F.lit(0.5))
-            .cast("long")
-            .alias("qv"),
+            cents(F.col("v").cast("double"), 6).alias("qv"),
         )
         .groupBy("pos")
         .agg(F.sum("qv").alias("sx"), F.sum(F.col("qv") * F.col("qv")).alias("sxx"))
@@ -797,7 +802,7 @@ MIX_EPOCH_TARGET = 100_000  # docs per training epoch to apportion
 # an exact integer (repo rule: sqrt blessed, pow banned); quantizing
 # each weight to an integer BEFORE summing keeps every share and
 # quota an exact integer division.
-_TEMP_W = "CAST(FLOOR(sqrt(n_docs * 1.0e0) * 1.0e6 + 0.5e0) AS BIGINT)"
+_TEMP_W = cents_sql("sqrt(n_docs * 1.0e0)", 6)
 
 
 @query(

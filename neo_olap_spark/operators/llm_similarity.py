@@ -22,7 +22,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
-from neo_olap_spark.functions import local_rows_frame, trunc_div_sql
+from neo_olap_spark.functions import cents, cents_sql, local_rows_frame, trunc_div_sql
 from neo_olap_spark.registry import query
 from neo_olap_spark.tables import load
 
@@ -631,7 +631,6 @@ def q_sim_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 KMEANS_K = 8  # fixed deterministic centroids: the vectors with vec_id < K
-EMBED_QUANT = 10**6  # the PCA/embed per-element quantization step
 
 # the assignment CTE chain shared by BOTH centroid-tier oracles (one
 # text, two consumers — the capped_postings single-definition rule
@@ -640,8 +639,7 @@ _ASSIGN_CTES = f"""
     q AS (
       SELECT vec_id,
              list_transform(embedding,
-               x -> CAST(FLOOR(CAST(x AS DOUBLE) * {EMBED_QUANT} + 0.5)
-                         AS BIGINT)) AS qv
+               x -> {cents_sql("CAST(x AS DOUBLE)", 6)}) AS qv
       FROM embeddings
     ),
     c AS (SELECT vec_id AS cid, qv AS cv FROM q WHERE vec_id < {KMEANS_K}),
@@ -684,9 +682,9 @@ def centroid_assignments(
     e = load(spark, sf_dir, "embeddings")
     qv = F.transform(
         "embedding",
-        lambda x: F.floor(x.cast("double") * EMBED_QUANT + 0.5).cast("long"),
+        lambda x: cents(x.cast("double"), 6),
     )
-    cents = (
+    seeds = (
         e.where(F.col("vec_id") < KMEANS_K)
         .select("vec_id", qv.alias("cv"))
         .orderBy("vec_id")
@@ -697,14 +695,14 @@ def centroid_assignments(
     # only when the seed ids are exactly 0..K-1, so enforce it rather
     # than silently emitting ids that mean something else on a corpus
     # with non-dense vec_ids (round-10 self-review finding)
-    seed_ids = [row["vec_id"] for row in cents]
+    seed_ids = [row["vec_id"] for row in seeds]
     if seed_ids != list(range(KMEANS_K)):
         raise ValueError(
             f"centroid seeding needs dense vec_ids 0..{KMEANS_K - 1}; "
             f"found {seed_ids} — remap ids or pass explicit centroids"
         )
     carr = F.array(*[
-        F.array(*[F.lit(int(v)) for v in row["cv"]]) for row in cents
+        F.array(*[F.lit(int(v)) for v in row["cv"]]) for row in seeds
     ])
     dists = F.transform(
         carr,
@@ -902,7 +900,7 @@ def q_sim_kmeans_update(spark: SparkSession, sf_dir: str) -> DataFrame:
 # per-vector silhouette from exact integer squared distances, the
 # single division in doubles (corr-micro discipline); b >= a by
 # construction (a IS the minimum), so s in [0, 1e6]
-_SIL_PPM = "CAST(FLOOR((b_q - a_q) / b_q * 1.0e6 + 0.5e0) AS BIGINT)"
+_SIL_PPM = cents_sql("(b_q - a_q) / b_q", 6)
 
 
 @query(

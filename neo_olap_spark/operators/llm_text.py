@@ -16,6 +16,7 @@ from pyspark.sql.window import Window as W
 from neo_olap_spark.functions import (
     bigrams,
     bounded_sequence,
+    cents_sql,
     local_rows_frame,
     ws_tokens,
 )
@@ -985,11 +986,11 @@ def q_text_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # one shared float tail parsed by BOTH engines from exact integer
 # counts — the q_agg_corr_matrix expression-string discipline
-_FLESCH_EXPR = (
-    "CAST(FLOOR((206.835"
+_FLESCH_EXPR = cents_sql(
+    "(206.835"
     " - 1.015 * (CAST(n_words AS DOUBLE) / CAST(n_sentences AS DOUBLE))"
-    " - 84.6 * (CAST(n_syllables AS DOUBLE) / CAST(n_words AS DOUBLE))"
-    ") * 1000 + 0.5) AS BIGINT)"
+    " - 84.6 * (CAST(n_syllables AS DOUBLE) / CAST(n_words AS DOUBLE)))",
+    3,
 )
 
 
@@ -1098,12 +1099,11 @@ BM25_QUERIES = (
 # scale/truncation rules DIFFER cross-engine — the scientific form
 # (0.5e0) is a DOUBLE literal in both, keeping every step in IEEE
 # doubles (seen in the plan: cast(... as decimal(20,0)) before the fix).
-_BM25_TERM_MICRO = (
-    "CAST(FLOOR("
+_BM25_TERM_MICRO = cents_sql(
     "ln(1.0e0 + (n_docs - df + 0.5e0) / (df + 0.5e0))"
     " * (tf * 2.2e0)"
-    " / (tf + 1.2e0 * (0.25e0 + 0.75e0 * (dl * CAST(n_docs AS DOUBLE)) / total_tok))"
-    " * 1.0e6 + 0.5e0) AS BIGINT)"
+    " / (tf + 1.2e0 * (0.25e0 + 0.75e0 * (dl * CAST(n_docs AS DOUBLE)) / total_tok))",
+    6,
 )
 
 _BM25_QT_VALUES = ", ".join(f"('{q}', '{t}')" for q, t in BM25_QUERIES)
@@ -1245,10 +1245,10 @@ COLLOC_TOP_N = 40
 # integer). One shared expression text evaluated by both engines on
 # identical integers (the BM25/tfidf/psi ln precedent); double
 # literals in scientific form per the BM25 decimal landmine.
-_PMI_MICRO = (
-    "CAST(FLOOR((ln(c_ab * 1.0e0) + 2.0e0 * ln(n_uni * 1.0e0)"
-    " - ln(n_bg * 1.0e0) - ln(c_a * 1.0e0) - ln(c_b * 1.0e0))"
-    " * 1.0e6 + 0.5e0) AS BIGINT)"
+_PMI_MICRO = cents_sql(
+    "(ln(c_ab * 1.0e0) + 2.0e0 * ln(n_uni * 1.0e0)"
+    " - ln(n_bg * 1.0e0) - ln(c_a * 1.0e0) - ln(c_b * 1.0e0))",
+    6,
 )
 
 
@@ -1352,8 +1352,8 @@ def q_text_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
 # identical input (the collocations/BM25 precedent); quantizing BEFORE
 # summing makes the moment sums order-free exact integers. Double
 # literals in scientific form per the BM25 decimal landmine.
-_ZIPF_X = "CAST(FLOOR(ln(rank * 1.0e0) * 1.0e6 + 0.5e0) AS BIGINT)"
-_ZIPF_Y = "CAST(FLOOR(ln(freq * 1.0e0) * 1.0e6 + 0.5e0) AS BIGINT)"
+_ZIPF_X = cents_sql("ln(rank * 1.0e0)", 6)
+_ZIPF_Y = cents_sql("ln(freq * 1.0e0)", 6)
 
 # OLS slope/intercept of y on x from exact integer moment sums, cast
 # to double once each; ONE expression text parsed by both engines.
@@ -1362,13 +1362,8 @@ _ZIPF_Y = "CAST(FLOOR(ln(freq * 1.0e0) * 1.0e6 + 0.5e0) AS BIGINT)"
 # scale is zipf's own (y is already micro-nats, so the intercept
 # rounds at unit scale), and x-values are distinct ranks, so the
 # variance denominator is never 0 and no guard is needed.
-_ZIPF_SLOPE = (
-    f"CAST(FLOOR({_REG_COV} / {_REG_VX} * 1.0e6 + 0.5e0) AS BIGINT)"
-)
-_ZIPF_INTERCEPT = (
-    f"CAST(FLOOR((sy * {_REG_VX} - {_REG_COV} * sx) / (n * {_REG_VX})"
-    f" * 1.0e0 + 0.5e0) AS BIGINT)"
-)
+_ZIPF_SLOPE = cents_sql(f"{_REG_COV} / {_REG_VX}", 6)
+_ZIPF_INTERCEPT = cents_sql(f"(sy * {_REG_VX} - {_REG_COV} * sx) / (n * {_REG_VX})", 0)
 
 
 @query(

@@ -28,7 +28,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
-from neo_olap_spark.functions import prefix_sum
+from neo_olap_spark.functions import cents, cents_sql, floor_round_sql, prefix_sum
 from neo_olap_spark.registry import query
 from neo_olap_spark.tables import load
 
@@ -740,7 +740,7 @@ PSI_BIN_CENTS = 2_000  # $20-wide value bins (~28 observed bins)
     oracle=f"""
     WITH c AS (
       SELECT event_type,
-             CAST(FLOOR(value * 100 + 0.5) AS BIGINT) // {PSI_BIN_CENTS} AS bin,
+             {cents_sql("value")} // {PSI_BIN_CENTS} AS bin,
              CAST(epoch_us(ts) AS BIGINT) AS us
       FROM events
     ),
@@ -765,7 +765,7 @@ PSI_BIN_CENTS = 2_000  # $20-wide value bins (~28 observed bins)
     )
     SELECT event_type,
            MIN(ta) AS n_first_half, MIN(tb) AS n_second_half,
-           FLOOR(SUM((p - q) * ln(p / q)) * 1000000 + 0.5) / 1000000 AS psi
+           {floor_round_sql("SUM((p - q) * ln(p / q))", 6)} AS psi
     FROM terms GROUP BY event_type
     """,
 )
@@ -795,9 +795,7 @@ def q_quality_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
     nothing else."""
     ev = load(spark, sf_dir, "events").select(
         "event_type",
-        F.floor(
-            F.floor(F.col("value") * 100 + 0.5).cast("long") / PSI_BIN_CENTS
-        ).cast("long").alias("bin"),
+        F.floor(cents("value") / PSI_BIN_CENTS).cast("long").alias("bin"),
         F.unix_micros("ts").alias("us"),
     )
     # `div` is Spark's integer division — exact BIGINT semantics shared
@@ -833,7 +831,7 @@ def q_quality_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.min("ta").alias("n_first_half"),
         F.min("tb").alias("n_second_half"),
         F.expr(
-            "FLOOR(SUM((p - q) * ln(p / q)) * 1000000 + 0.5) / 1000000"
+            floor_round_sql("SUM((p - q) * ln(p / q))", 6)
         ).alias("psi"),
     )
 
@@ -845,10 +843,10 @@ def q_quality_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_quality_ks",
-    oracle="""
+    oracle=f"""
     WITH c AS (
       SELECT event_type,
-             CAST(FLOOR(value * 100 + 0.5) AS BIGINT) AS cents,
+             {cents_sql("value")} AS cents,
              CAST(epoch_us(ts) AS BIGINT) AS us
       FROM events
       WHERE value IS NOT NULL
@@ -922,7 +920,7 @@ def q_quality_ks(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(F.col("value").isNotNull())
         .select(
             "event_type",
-            F.floor(F.col("value") * 100 + 0.5).cast("long").alias("cents"),
+            cents("value").alias("cents"),
             F.unix_micros("ts").alias("us"),
         )
     )
@@ -984,9 +982,9 @@ def q_quality_ks(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_quality_benford",
-    oracle="""
+    oracle=f"""
     WITH c AS (
-      SELECT CAST(FLOOR(value * 100 + 0.5) AS BIGINT) AS cents
+      SELECT {cents_sql("value")} AS cents
       FROM events WHERE value IS NOT NULL
     ),
     d AS (
@@ -998,10 +996,9 @@ def q_quality_ks(spark: SparkSession, sf_dir: str) -> DataFrame:
     t AS (SELECT CAST(SUM(n) AS BIGINT) AS total FROM d)
     SELECT d.digit, d.n,
            CAST((d.n * 1000000) // t.total AS BIGINT) AS obs_ppm,
-           CAST(FLOOR(ln(1.0 + 1.0 / d.digit) / ln(10.0) * 1000000 + 0.5)
-                AS BIGINT) AS benford_ppm,
+           {cents_sql("ln(1.0 + 1.0 / d.digit) / ln(10.0)", 6)} AS benford_ppm,
            CAST((d.n * 1000000) // t.total
-                - FLOOR(ln(1.0 + 1.0 / d.digit) / ln(10.0) * 1000000 + 0.5)
+                - {cents_sql("ln(1.0 + 1.0 / d.digit) / ln(10.0)", 6)}
                 AS BIGINT) AS dev_ppm
     FROM d CROSS JOIN t
     """,
@@ -1029,7 +1026,7 @@ def q_quality_benford(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = (
         load(spark, sf_dir, "events")
         .where(F.col("value").isNotNull())
-        .select(F.floor(F.col("value") * 100 + 0.5).cast("long").alias("cents"))
+        .select(cents("value").alias("cents"))
         .where(F.col("cents") != 0)
     )
     d = (
@@ -1045,12 +1042,12 @@ def q_quality_benford(spark: SparkSession, sf_dir: str) -> DataFrame:
         .localCheckpoint()
     )
     t = d.agg(F.sum("n").cast("long").alias("total"))
-    benford = "FLOOR(ln(1.0 + 1.0 / digit) / ln(10.0) * 1000000 + 0.5)"
+    benford = cents_sql("ln(1.0 + 1.0 / digit) / ln(10.0)", 6)
     return d.crossJoin(F.broadcast(t)).selectExpr(
         "digit",
         "n",
         "CAST((n * 1000000) div total AS BIGINT) AS obs_ppm",
-        f"CAST({benford} AS BIGINT) AS benford_ppm",
+        f"{benford} AS benford_ppm",
         f"CAST((n * 1000000) div total - {benford} AS BIGINT) AS dev_ppm",
     )
 
@@ -1409,10 +1406,7 @@ def q_privacy_tcloseness(spark: SparkSession, sf_dir: str) -> DataFrame:
 # n * (ad - bc)^2 / ((a+b)(c+d)(a+c)(b+d)), micro-quantized. d1 is
 # computed exactly in 128-bit first (a*d alone wraps int64 at
 # warehouse scale), then the single division happens in doubles.
-_CHI2_MICRO = (
-    "CAST(FLOOR(n * d1 * d1 / (ra * rb * ca * cb) * 1.0e6 + 0.5e0)"
-    " AS BIGINT)"
-)
+_CHI2_MICRO = cents_sql("n * d1 * d1 / (ra * rb * ca * cb)", 6)
 CHI2_95_MICRO = 3_841_459  # chi2_{1,0.95} = 3.841459 in micro units
 
 
@@ -1517,10 +1511,7 @@ def q_quality_abtest(spark: SparkSession, sf_dir: str) -> DataFrame:
 # cells — ln in micro units caps the factor at ~21e6), so S sums
 # order-free; the two divisions are positive-only integer division
 # and one shared double ln. Scientific literals per the BM25 landmine.
-_ENTROPY_MICRO = (
-    "CAST(FLOOR(ln(n * 1.0e0) * 1.0e6 + 0.5e0) AS BIGINT)"
-    " - CAST(s div n AS BIGINT)"
-)
+_ENTROPY_MICRO = cents_sql("ln(n * 1.0e0)", 6) + " - CAST(s div n AS BIGINT)"
 
 
 def _entropy_cte(table: str, col: str) -> str:
@@ -1528,8 +1519,7 @@ def _entropy_cte(table: str, col: str) -> str:
       SELECT '{col}' AS column_name,
              CAST(SUM(c) AS BIGINT) AS n,
              CAST(COUNT(*) AS BIGINT) AS n_distinct,
-             CAST(SUM(c * CAST(FLOOR(ln(c * 1.0e0) * 1.0e6 + 0.5e0)
-                               AS BIGINT)) AS BIGINT) AS s
+             CAST(SUM(c * {cents_sql("ln(c * 1.0e0)", 6)}) AS BIGINT) AS s
       FROM (SELECT CAST(COUNT(*) AS BIGINT) AS c FROM {table}
             GROUP BY {col})
     """
@@ -1549,8 +1539,7 @@ def _entropy_cte(table: str, col: str) -> str:
            {_ENTROPY_MICRO} AS entropy_micro,
            CAST(CASE WHEN n_distinct > 1 THEN
              (({_ENTROPY_MICRO}) * 1000000)
-               div CAST(FLOOR(ln(n_distinct * 1.0e0) * 1.0e6 + 0.5e0)
-                        AS BIGINT)
+               div {cents_sql("ln(n_distinct * 1.0e0)", 6)}
              ELSE 0 END AS BIGINT) AS balance_ppm
     FROM cols
     """.replace(" div ", " // "),
@@ -1589,9 +1578,7 @@ def q_profile_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).cast("long").alias("n_distinct"),
             F.sum(
                 F.col("c")
-                * F.expr(
-                    "CAST(FLOOR(ln(c * 1.0e0) * 1.0e6 + 0.5e0) AS BIGINT)"
-                )
+                * F.expr(cents_sql("ln(c * 1.0e0)", 6))
             )
             .cast("long")
             .alias("s"),
@@ -1609,7 +1596,6 @@ def q_profile_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
         f"{_ENTROPY_MICRO} AS entropy_micro",
         f"""CAST(CASE WHEN n_distinct > 1 THEN
              (({_ENTROPY_MICRO}) * 1000000)
-               div CAST(FLOOR(ln(n_distinct * 1.0e0) * 1.0e6 + 0.5e0)
-                        AS BIGINT)
+               div {cents_sql("ln(n_distinct * 1.0e0)", 6)}
              ELSE 0 END AS BIGINT) AS balance_ppm""",
     )

@@ -23,7 +23,15 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
 from neo_olap_spark.graph import ORACLE_SYM_EDGES, ORDER_OFFSET, degrees, edges
-from neo_olap_spark.functions import local_rows_frame, money_sum
+from neo_olap_spark.functions import (
+    cents,
+    cents_sql,
+    floor_round,
+    floor_round_sql,
+    local_rows_frame,
+    money_sum,
+    money_sum_sql,
+)
 from neo_olap_spark.registry import query
 from neo_olap_spark.tables import load
 
@@ -56,10 +64,10 @@ def q_scan_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_sink_roundtrip",
-    oracle="""
+    oracle=f"""
     SELECT COUNT(*) AS n_rows,
            CAST(SUM(l_orderkey) AS BIGINT) AS sum_key,
-           CAST(CAST(SUM(CAST(FLOOR(l_extendedprice * 100 + 0.5) AS BIGINT)) AS BIGINT) AS DOUBLE) / 100.0 AS sum_price
+           {money_sum_sql("l_extendedprice")} AS sum_price
     FROM lineitem WHERE l_orderkey < 1000
     """,
 )
@@ -158,9 +166,9 @@ def q_join_inner(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_join_outer",
-    oracle="""
+    oracle=f"""
     SELECT c_custkey, COUNT(o_orderkey) AS order_cnt,
-           CAST(COALESCE(CAST(SUM(CAST(FLOOR(o_totalprice * 100 + 0.5) AS BIGINT))
+           CAST(COALESCE(CAST(SUM({cents_sql("o_totalprice")})
                 AS BIGINT), 0) AS DOUBLE) / 100.0 AS total_spend
     FROM customer LEFT JOIN orders ON c_custkey = o_custkey
     GROUP BY c_custkey
@@ -178,9 +186,7 @@ def q_join_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count("o_orderkey").alias("order_cnt"),
             (
                 F.coalesce(
-                    F.sum(
-                        F.floor(F.col("o_totalprice") * 100 + 0.5).cast("long")
-                    ),
+                    F.sum(cents("o_totalprice")),
                     F.lit(0),
                 ).cast("double")
                 / 100.0
@@ -518,9 +524,9 @@ def bucketed_customer_orders(
 
 @query(
     "q_join_bucketed",
-    oracle="""
+    oracle=f"""
     SELECT c_mktsegment, COUNT(*) AS n_orders,
-           CAST(CAST(SUM(CAST(FLOOR(o_totalprice * 100 + 0.5) AS BIGINT)) AS BIGINT) AS DOUBLE) / 100.0 AS total
+           {money_sum_sql("o_totalprice")} AS total
     FROM customer JOIN orders ON c_custkey = o_custkey
     GROUP BY c_mktsegment
     """,
@@ -693,16 +699,20 @@ def q_agg_sum(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_agg_groupby",
-    oracle="""
+    oracle=f"""
     SELECT l_returnflag, l_linestatus,
            ROUND(SUM(l_quantity), 2) AS sum_qty,
-           CAST(CAST(SUM(CAST(FLOOR(l_extendedprice * 100 + 0.5) AS BIGINT)) AS BIGINT) AS DOUBLE) / 100.0 AS sum_base_price,
-           CAST(CAST(SUM(CAST(FLOOR(l_extendedprice * (1 - l_discount) * 100 + 0.5) AS BIGINT)) AS BIGINT) AS DOUBLE) / 100.0 AS sum_disc_price,
-           FLOOR(CAST(CAST(SUM(CAST(l_quantity AS BIGINT)) AS BIGINT) AS DOUBLE)
-                 / COUNT(*) * 10000 + 0.5) / 10000 AS avg_qty,
-           FLOOR(CAST(CAST(SUM(CAST(FLOOR(l_discount * 100 + 0.5) AS BIGINT))
-                 AS BIGINT) AS DOUBLE) / COUNT(*) / 100 * 10000 + 0.5) / 10000
-             AS avg_disc,
+           {money_sum_sql("l_extendedprice")} AS sum_base_price,
+           {money_sum_sql("l_extendedprice * (1 - l_discount)")} AS sum_disc_price,
+           {floor_round_sql(
+               "CAST(CAST(SUM(CAST(l_quantity AS BIGINT)) AS BIGINT) AS DOUBLE) / COUNT(*)",
+               4,
+           )} AS avg_qty,
+           {floor_round_sql(
+               f"CAST(CAST(SUM({cents_sql('l_discount')}) AS BIGINT) AS DOUBLE)"
+               " / COUNT(*) / 100",
+               4,
+           )} AS avg_disc,
            COUNT(*) AS count_order
     FROM lineitem
     GROUP BY l_returnflag, l_linestatus
@@ -722,25 +732,12 @@ def q_agg_groupby(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         # floor-shifted exact-integer averages (landmine (a): never
         # ROUND an AVG — integer sums divide deterministically)
-        (
-            F.floor(
-                F.sum(F.col("l_quantity").cast("long")).cast("double")
-                / F.count(F.lit(1))
-                * 10000
-                + 0.5
-            )
-            / 10000
+        floor_round(
+            F.sum(F.col("l_quantity").cast("long")).cast("double") / F.count(F.lit(1)),
+            4,
         ).alias("avg_qty"),
-        (
-            F.floor(
-                F.sum(F.floor(F.col("l_discount") * 100 + 0.5).cast("long"))
-                .cast("double")
-                / F.count(F.lit(1))
-                / 100
-                * 10000
-                + 0.5
-            )
-            / 10000
+        floor_round(
+            F.sum(cents("l_discount")).cast("double") / F.count(F.lit(1)) / 100, 4
         ).alias("avg_disc"),
         F.count("*").alias("count_order"),
     )
@@ -1368,20 +1365,23 @@ def q_sample_bernoulli(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_window_ratio",
-    oracle="""
+    oracle=f"""
     WITH g AS (
       SELECT o_orderstatus, o_orderpriority,
-             CAST(SUM(CAST(FLOOR(o_totalprice * 100 + 0.5) AS BIGINT)) AS BIGINT)
+             CAST(SUM({cents_sql("o_totalprice")}) AS BIGINT)
                AS cents
       FROM orders GROUP BY o_orderstatus, o_orderpriority
     )
     SELECT o_orderstatus, o_orderpriority,
            CAST(cents AS DOUBLE) / 100.0 AS revenue,
-           FLOOR(CAST(cents AS DOUBLE)
-                 / CAST(SUM(cents) OVER (PARTITION BY o_orderstatus) AS DOUBLE)
-                 * 10000 + 0.5) / 10000 AS share_of_status,
-           FLOOR(CAST(cents AS DOUBLE) / CAST(SUM(cents) OVER () AS DOUBLE)
-                 * 10000 + 0.5) / 10000 AS share_of_total
+           {floor_round_sql(
+               "CAST(cents AS DOUBLE)"
+               " / CAST(SUM(cents) OVER (PARTITION BY o_orderstatus) AS DOUBLE)",
+               4,
+           )} AS share_of_status,
+           {floor_round_sql(
+               "CAST(cents AS DOUBLE) / CAST(SUM(cents) OVER () AS DOUBLE)", 4
+           )} AS share_of_total
     FROM g
     """,
 )
@@ -1400,9 +1400,7 @@ def q_window_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     # denominators regardless of summation order, then one
     # floor-shifted division (repo money rule)
     g = o.groupBy("o_orderstatus", "o_orderpriority").agg(
-        F.sum(F.floor(F.col("o_totalprice") * 100 + 0.5).cast("long")).alias(
-            "cents"
-        )
+        F.sum(cents("o_totalprice")).alias("cents")
     )
     w_status = W.partitionBy("o_orderstatus")
     total = g.agg(F.sum("cents").alias("_tot"))
@@ -1410,21 +1408,13 @@ def q_window_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_orderstatus",
         "o_orderpriority",
         (F.col("cents").cast("double") / 100.0).alias("revenue"),
-        (
-            F.floor(
-                F.col("cents").cast("double")
-                / F.sum("cents").over(w_status).cast("double")
-                * 10000
-                + 0.5
-            )
-            / 10000
+        floor_round(
+            F.col("cents").cast("double")
+            / F.sum("cents").over(w_status).cast("double"),
+            4,
         ).alias("share_of_status"),
-        (
-            F.floor(
-                F.col("cents").cast("double") / F.col("_tot").cast("double") * 10000
-                + 0.5
-            )
-            / 10000
+        floor_round(
+            F.col("cents").cast("double") / F.col("_tot").cast("double"), 4
         ).alias("share_of_total"),
     )
 
@@ -1593,16 +1583,16 @@ def q_join_null_safe(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_window_cume",
-    oracle="""
+    oracle=f"""
     WITH c AS (
       SELECT l_returnflag AS flag, l_orderkey, l_linenumber,
-             CAST(FLOOR(l_extendedprice * 100 + 0.5) AS BIGINT) AS cents
+             {cents_sql("l_extendedprice")} AS cents
       FROM lineitem WHERE l_orderkey < 2000
     )
     SELECT flag, l_orderkey, l_linenumber, cents,
-           CAST(FLOOR(percent_rank() OVER w * 1000000 + 0.5) AS BIGINT)
+           {cents_sql("percent_rank() OVER w", 6)}
              AS pct_rank_micro,
-           CAST(FLOOR(cume_dist() OVER w * 1000000 + 0.5) AS BIGINT)
+           {cents_sql("cume_dist() OVER w", 6)}
              AS cume_dist_micro
     FROM c
     WINDOW w AS (PARTITION BY flag ORDER BY cents, l_orderkey, l_linenumber)
@@ -1627,7 +1617,7 @@ def q_window_cume(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("l_returnflag").alias("flag"),
         "l_orderkey",
         "l_linenumber",
-        F.floor(F.col("l_extendedprice") * 100 + 0.5).cast("long").alias("cents"),
+        cents("l_extendedprice").alias("cents"),
     )
     w = W.partitionBy("flag").orderBy("cents", "l_orderkey", "l_linenumber")
     return c.select(
@@ -1635,10 +1625,6 @@ def q_window_cume(spark: SparkSession, sf_dir: str) -> DataFrame:
         "l_orderkey",
         "l_linenumber",
         "cents",
-        F.floor(F.percent_rank().over(w) * 1000000 + 0.5)
-        .cast("long")
-        .alias("pct_rank_micro"),
-        F.floor(F.cume_dist().over(w) * 1000000 + 0.5)
-        .cast("long")
-        .alias("cume_dist_micro"),
+        cents(F.percent_rank().over(w), 6).alias("pct_rank_micro"),
+        cents(F.cume_dist().over(w), 6).alias("cume_dist_micro"),
     )

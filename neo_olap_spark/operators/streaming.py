@@ -48,7 +48,13 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import DataStreamWriter
 from pyspark.sql.window import Window as W
 
-from neo_olap_spark.functions import local_rows_frame, money_sum
+from neo_olap_spark.functions import (
+    cents,
+    cents_sql,
+    local_rows_frame,
+    money_sum,
+    money_sum_sql,
+)
 from neo_olap_spark.operators.io_sources import generational_sink_dir
 from neo_olap_spark.registry import query
 from neo_olap_spark.tables import (
@@ -146,9 +152,9 @@ def build_dedup(events: DataFrame) -> DataFrame:
 
 @query(
     "q_stream_tumbling",
-    oracle="""
+    oracle=f"""
     SELECT CAST(epoch(date_trunc('hour', ts)) AS BIGINT) AS window_start,
-           event_type, COUNT(*) AS n_events, CAST(CAST(SUM(CAST(FLOOR(value * 100 + 0.5) AS BIGINT)) AS BIGINT) AS DOUBLE) / 100.0 AS sum_value
+           event_type, COUNT(*) AS n_events, {money_sum_sql("value")} AS sum_value
     FROM events GROUP BY 1, 2
     """,
 )
@@ -175,7 +181,7 @@ def q_stream_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_stream_session",
-    oracle="""
+    oracle=f"""
     WITH lagd AS (
       SELECT user_id, ts, value,
              lag(ts) OVER (PARTITION BY user_id ORDER BY ts) AS prev_ts
@@ -192,7 +198,7 @@ def q_stream_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
       FROM flagged
     )
     SELECT user_id, CAST(floor(epoch(MIN(ts))) AS BIGINT) AS session_start,
-           COUNT(*) AS n_events, CAST(CAST(SUM(CAST(FLOOR(value * 100 + 0.5) AS BIGINT)) AS BIGINT) AS DOUBLE) / 100.0 AS sum_value
+           COUNT(*) AS n_events, {money_sum_sql("value")} AS sum_value
     FROM sess GROUP BY user_id, sid
     """,
 )
@@ -828,8 +834,8 @@ def streaming_enriched_segments(
 
 @query(
     "q_stream_enrich",
-    oracle="""
-    SELECT c_mktsegment, COUNT(*) AS n_events, CAST(CAST(SUM(CAST(FLOOR(value * 100 + 0.5) AS BIGINT)) AS BIGINT) AS DOUBLE) / 100.0 AS sum_value
+    oracle=f"""
+    SELECT c_mktsegment, COUNT(*) AS n_events, {money_sum_sql("value")} AS sum_value
     FROM events JOIN customer ON user_id = c_custkey
     GROUP BY c_mktsegment
     """,
@@ -850,8 +856,8 @@ def q_stream_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_stream_stateful",
-    oracle="""
-    SELECT user_id, COUNT(*) AS n_events, CAST(CAST(SUM(CAST(FLOOR(value * 100 + 0.5) AS BIGINT)) AS BIGINT) AS DOUBLE) / 100.0 AS sum_value
+    oracle=f"""
+    SELECT user_id, COUNT(*) AS n_events, {money_sum_sql("value")} AS sum_value
     FROM events GROUP BY user_id
     """,
 )
@@ -947,8 +953,7 @@ def _late_phase_splits(lo_us: int, hi_us: int) -> tuple[int, int]:
     agg AS (
       SELECT (us // 3600000000) * 3600 AS window_start, event_type,
              CAST(COUNT(*) AS BIGINT) AS n_events,
-             CAST(SUM(CAST(FLOOR(value * 100 + 0.5) AS BIGINT)) AS DOUBLE)
-               / 100.0 AS sum_value
+             {money_sum_sql("value")} AS sum_value
       FROM kept GROUP BY 1, 2
     )
     SELECT window_start, event_type, n_events, sum_value
@@ -995,14 +1000,13 @@ def q_stream_late(spark: SparkSession, sf_dir: str) -> DataFrame:
         ev.where((us > t1) & (us <= t2) & ~straggler),
         ev.where((us > t2) | straggler),
     ]
-    cents = F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long")
     with _phased_replay(spark, phases) as stream:
         out = (
             stream.withWatermark("ts", "10 minutes")
             .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
             .agg(
                 F.count("*").alias("n_events"),
-                F.sum(cents).alias("v_cents"),
+                F.sum(cents("value")).alias("v_cents"),
             )
             .select(
                 F.col("w.start").cast("long").alias("window_start"),

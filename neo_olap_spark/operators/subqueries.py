@@ -24,16 +24,17 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
+from neo_olap_spark.functions import cents, cents_sql
 from neo_olap_spark.registry import query
 from neo_olap_spark.tables import load, register_views
 
 
 @query(
     "q_subquery_scalar",
-    oracle="""
+    oracle=f"""
     WITH c AS (
       SELECT o_orderpriority,
-             CAST(FLOOR(o_totalprice * 100 + 0.5) AS BIGINT) AS cents
+             {cents_sql("o_totalprice")} AS cents
       FROM orders
     ),
     t AS (SELECT CAST(SUM(cents) AS BIGINT) AS tot, COUNT(*) AS n FROM c)
@@ -56,7 +57,7 @@ def q_subquery_scalar(spark: SparkSession, sf_dir: str) -> DataFrame:
     groupBy on priority (5 groups).
     """
     o = load(spark, sf_dir, "orders").withColumn(
-        "cents", F.floor(F.col("o_totalprice") * 100 + 0.5).cast("long")
+        "cents", cents("o_totalprice")
     )
     # landmine (h): the ROW SET must not depend on a double AVG's
     # accumulation order — compare in exact integers instead
@@ -77,10 +78,10 @@ def q_subquery_scalar(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_subquery_correlated",
-    oracle="""
+    oracle=f"""
     WITH c AS (
       SELECT o_custkey,
-             CAST(FLOOR(o_totalprice * 100 + 0.5) AS BIGINT) AS cents
+             {cents_sql("o_totalprice")} AS cents
       FROM orders
     ),
     w AS (
@@ -109,7 +110,7 @@ def q_subquery_correlated(spark: SparkSession, sf_dir: str) -> DataFrame:
     one value equals the value, and the comparison is strict.
     """
     o = load(spark, sf_dir, "orders").withColumn(
-        "cents", F.floor(F.col("o_totalprice") * 100 + 0.5).cast("long")
+        "cents", cents("o_totalprice")
     )
     wc = W.partitionBy("o_custkey")
     # landmine (h): integer cross-multiplication instead of a double
@@ -130,10 +131,10 @@ def q_subquery_correlated(spark: SparkSession, sf_dir: str) -> DataFrame:
 # q_sql_lateral — correlated LATERAL subquery (top-1-per-key via lateral)
 # ---------------------------------------------------------------------------
 
-LATERAL_SQL = """
+LATERAL_SQL = f"""
 SELECT c_custkey, c_mktsegment,
        t.o_orderkey AS top_orderkey,
-       CAST(FLOOR(t.o_totalprice * 100 + 0.5) AS BIGINT) AS top_price_cents
+       {cents_sql("t.o_totalprice")} AS top_price_cents
 FROM customer,
 LATERAL (
   SELECT o_orderkey, o_totalprice FROM orders

@@ -26,20 +26,13 @@ c_phone/comment columns):
   summation order; MAX does not).
 
 Every query is ONE SQL text shared verbatim by Spark and the DuckDB
-oracle, so each key also proves dialect portability. Cross-engine
-float rules (NEXT.md, plus one learned here): per-ROW double
-arithmetic is bit-identical across engines (same IEEE ops on the same
-parquet bits) but AGGREGATE sums of doubles are summation-order-
-dependent, so any rounding of a double SUM is a coin flip when a group
-lands on a half (q9 hit exactly 417321.125 at sf0.01). Money
-aggregates therefore integerize per row — CAST(FLOOR(x*100+0.5) AS
-BIGINT) cents — and SUM the integers (exact, order-independent; cast
-the sum back to BIGINT because DuckDB's integer SUM is HUGEINT), then
-divide by 100.0 at the end. Ratios divide two cents-sums. Counts come
-from COUNT/COUNT FILTER (BIGINT in both engines); every
-ORDER BY ... LIMIT carries a total-order tie-break. Cents sums stay
-exact to 2^53 ≈ 9e15 cents (~$90T per group) — comfortably above any
-TPC-H group even at 100 TB.
+oracle, so each key also proves dialect portability. Money and
+rounding compose the engine-exact pairs in neo_olap_spark.functions
+(``cents_sql``, ``money_sum_sql``, ``floor_round_sql``; NEXT.md
+landmines (a) and (e)): per-row integer cents summed as integers,
+exact to 2^53 ≈ 9e15 cents (~$90T per group). Ratios divide two
+cents-sums. Counts come from COUNT/COUNT FILTER (BIGINT in both
+engines); every ORDER BY ... LIMIT carries a total-order tie-break.
 
 Scale notes are per-query in the docstrings; the common shape: date
 and dimension filters sit directly on the scanned tables (pushed to
@@ -51,6 +44,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from neo_olap_spark.functions import cents_sql, floor_round_sql, money_sum_sql
 from neo_olap_spark.registry import query
 from neo_olap_spark.tables import register_views
 
@@ -60,7 +54,7 @@ def _sql(spark: SparkSession, sf_dir: str, text: str, names: tuple[str, ...]) ->
     return spark.sql(text)
 
 
-TPCH_Q2_SQL = """
+TPCH_Q2_SQL = f"""
 WITH offers AS (SELECT DISTINCT l_partkey, l_suppkey FROM lineitem),
 ranked AS (
   SELECT p_partkey, p_name, s_suppkey, s_name, n_name, s_acctbal,
@@ -72,7 +66,7 @@ ranked AS (
   JOIN region ON n_regionkey = r_regionkey
   WHERE p_size <= 15 AND p_type = 'STANDARD' AND r_name = 'EUROPE'
 )
-SELECT p_partkey, p_name, s_name, n_name, FLOOR(s_acctbal * 100 + 0.5) / 100 AS acctbal
+SELECT p_partkey, p_name, s_name, n_name, {floor_round_sql("s_acctbal", 2)} AS acctbal
 FROM ranked WHERE rn = 1 ORDER BY acctbal DESC, p_partkey LIMIT 100
 """
 
@@ -91,14 +85,13 @@ def q_sql_tpch_q2(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ("part", "lineitem", "supplier", "nation", "region"))
 
 
-TPCH_Q7_SQL = """
+TPCH_Q7_SQL = f"""
 SELECT supp_nation, cust_nation, l_year,
        CAST(CAST(SUM(volume_cents) AS BIGINT) AS DOUBLE) / 100.0 AS revenue,
        COUNT(*) AS n_rows
 FROM (SELECT n1.n_name AS supp_nation, n2.n_name AS cust_nation,
              CAST(EXTRACT(YEAR FROM l_shipdate) AS BIGINT) AS l_year,
-             CAST(FLOOR(l_extendedprice * (1 - l_discount) * 100 + 0.5)
-                  AS BIGINT) AS volume_cents
+             {cents_sql("l_extendedprice * (1 - l_discount)")} AS volume_cents
       FROM supplier, lineitem, orders, customer, nation n1, nation n2
       WHERE s_suppkey = l_suppkey AND o_orderkey = l_orderkey
         AND c_custkey = o_custkey AND s_nationkey = n1.n_nationkey
@@ -126,15 +119,15 @@ def q_sql_tpch_q7(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ("supplier", "lineitem", "orders", "customer", "nation"))
 
 
-TPCH_Q8_SQL = """
+TPCH_Q8_SQL = f"""
 SELECT o_year,
-       FLOOR(CAST(SUM(CASE WHEN nation = 'NATION_3' THEN volume_cents
-                          ELSE 0 END) AS BIGINT)
-             / CAST(SUM(volume_cents) AS BIGINT) * 10000 + 0.5) / 10000
-         AS mkt_share
+       {floor_round_sql(
+           "CAST(SUM(CASE WHEN nation = 'NATION_3' THEN volume_cents ELSE 0 END) AS BIGINT)"
+           " / CAST(SUM(volume_cents) AS BIGINT)",
+           4,
+       )} AS mkt_share
 FROM (SELECT CAST(EXTRACT(YEAR FROM o_orderdate) AS BIGINT) AS o_year,
-             CAST(FLOOR(l_extendedprice * (1 - l_discount) * 100 + 0.5)
-                  AS BIGINT) AS volume_cents,
+             {cents_sql("l_extendedprice * (1 - l_discount)")} AS volume_cents,
              n2.n_name AS nation
       FROM part, supplier, lineitem, orders, customer, nation n1, nation n2, region
       WHERE p_partkey = l_partkey AND s_suppkey = l_suppkey
@@ -151,7 +144,7 @@ GROUP BY o_year ORDER BY o_year
 def q_sql_tpch_q8(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q8 (national market share). 8-way join where everything
     but lineitem⋈orders broadcasts; the share is a conditional-sum /
-    sum ratio per year. The ratio rounds via FLOOR(x*1e4+0.5)/1e4 —
+    sum ratio per year. The ratio rounds via floor_round_sql(x, 4) —
     NOT ROUND(x, 4) — because the two engines' round-half rules differ
     and a ratio can land exactly on a half (NEXT.md landmine (a));
     floor-shift is identical in both."""
@@ -160,13 +153,13 @@ def q_sql_tpch_q8(spark: SparkSession, sf_dir: str) -> DataFrame:
                  "nation", "region"))
 
 
-TPCH_Q9_SQL = """
+TPCH_Q9_SQL = f"""
 SELECT nation, o_year, CAST(CAST(SUM(amount_cents) AS BIGINT) AS DOUBLE) / 100.0 AS sum_profit
 FROM (SELECT n_name AS nation,
              CAST(EXTRACT(YEAR FROM o_orderdate) AS BIGINT) AS o_year,
-             CAST(FLOOR((l_extendedprice * (1 - l_discount)
-                          - 0.6 * p_retailprice * l_quantity) * 100 + 0.5)
-                  AS BIGINT) AS amount_cents
+             {cents_sql(
+                 "(l_extendedprice * (1 - l_discount) - 0.6 * p_retailprice * l_quantity)"
+             )} AS amount_cents
       FROM part, supplier, lineitem, orders, nation
       WHERE s_suppkey = l_suppkey AND p_partkey = l_partkey
         AND o_orderkey = l_orderkey AND s_nationkey = n_nationkey
@@ -188,11 +181,10 @@ def q_sql_tpch_q9(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ("part", "supplier", "lineitem", "orders", "nation"))
 
 
-TPCH_Q11_SQL = """
+TPCH_Q11_SQL = f"""
 WITH partvalue AS (
   SELECT l_partkey,
-         CAST(SUM(CAST(FLOOR(l_extendedprice * (1 - l_discount) * 100 + 0.5)
-                       AS BIGINT)) AS BIGINT) AS value_cents
+         CAST(SUM({cents_sql("l_extendedprice * (1 - l_discount)")}) AS BIGINT) AS value_cents
   FROM lineitem, supplier, nation
   WHERE l_suppkey = s_suppkey AND s_nationkey = n_nationkey
     AND n_name = 'NATION_3'
@@ -266,11 +258,10 @@ def q_sql_tpch_q13(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _sql(spark, sf_dir, TPCH_Q13_SQL, ("customer", "orders"))
 
 
-TPCH_Q15_SQL = """
+TPCH_Q15_SQL = f"""
 WITH revenue AS (
   SELECT l_suppkey AS supplier_no,
-         CAST(SUM(CAST(FLOOR(l_extendedprice * (1 - l_discount) * 100 + 0.5)
-                       AS BIGINT)) AS BIGINT) AS revenue_cents
+         CAST(SUM({cents_sql("l_extendedprice * (1 - l_discount)")}) AS BIGINT) AS revenue_cents
   FROM lineitem
   WHERE l_shipdate >= '1996-01-01' AND l_shipdate < '1996-04-01'
   GROUP BY l_suppkey)
@@ -315,8 +306,8 @@ def q_sql_tpch_q16(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _sql(spark, sf_dir, TPCH_Q16_SQL, ("part", "lineitem"))
 
 
-TPCH_Q17_SQL = """
-SELECT CAST(FLOOR(CAST(SUM(CAST(FLOOR(l_extendedprice * 100 + 0.5) AS BIGINT))
+TPCH_Q17_SQL = f"""
+SELECT CAST(FLOOR(CAST(SUM({cents_sql("l_extendedprice")})
                       AS DOUBLE) / 7.0 + 0.5) AS DOUBLE) / 100.0 AS avg_yearly,
        COUNT(*) AS n_rows
 FROM lineitem, part
@@ -338,9 +329,9 @@ def q_sql_tpch_q17(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _sql(spark, sf_dir, TPCH_Q17_SQL, ("lineitem", "part"))
 
 
-TPCH_Q18_SQL = """
-SELECT c_name, c_custkey, o_orderkey, FLOOR(o_totalprice * 100 + 0.5) / 100 AS totalprice,
-       FLOOR(SUM(l_quantity) * 100 + 0.5) / 100 AS total_qty
+TPCH_Q18_SQL = f"""
+SELECT c_name, c_custkey, o_orderkey, {floor_round_sql("o_totalprice", 2)} AS totalprice,
+       {floor_round_sql("SUM(l_quantity)", 2)} AS total_qty
 FROM customer, orders, lineitem
 WHERE o_orderkey IN (SELECT l_orderkey FROM lineitem
                      GROUP BY l_orderkey HAVING SUM(l_quantity) > 300)
@@ -421,10 +412,9 @@ def q_sql_tpch_q21(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ("supplier", "lineitem", "orders", "nation"))
 
 
-TPCH_Q22_SQL = """
+TPCH_Q22_SQL = f"""
 SELECT cntrycode, COUNT(*) AS numcust,
-       CAST(SUM(CAST(FLOOR(c_acctbal * 100 + 0.5) AS BIGINT)) AS DOUBLE)
-         / 100.0 AS totacctbal
+       {money_sum_sql("c_acctbal")} AS totacctbal
 FROM (SELECT MOD(c_nationkey, 10) AS cntrycode, c_acctbal, c_custkey
       FROM customer
       WHERE c_acctbal > (SELECT 0.5 * MAX(c2.c_acctbal) FROM customer c2

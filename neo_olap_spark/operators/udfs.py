@@ -16,6 +16,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
+from neo_olap_spark.functions import cents, cents_sql, floor_round_sql
 from neo_olap_spark.registry import query
 from neo_olap_spark.tables import load
 
@@ -66,7 +67,7 @@ OLS_SCALE = 1_000_000  # slope emitted at 1e-6 precision via floor-shift
     WITH ev AS (
       SELECT event_type,
              epoch_us(ts) // 3600000000 AS hr,
-             CAST(FLOOR(value * 100 + 0.5) AS BIGINT) AS cents
+             {cents_sql("value")} AS cents
       FROM events
     ),
     based AS (
@@ -83,9 +84,9 @@ OLS_SCALE = 1_000_000  # slope emitted at 1e-6 precision via floor-shift
       FROM based GROUP BY event_type
     )
     SELECT event_type, n AS n_rows,
-           FLOOR(CAST(n * sxy - sx * sy AS DOUBLE)
-                 / CAST(n * sxx - sx * sx AS DOUBLE)
-                 * {OLS_SCALE} + 0.5) / {OLS_SCALE} AS slope_cents_per_hour
+           {floor_round_sql(
+               "CAST(n * sxy - sx * sy AS DOUBLE) / CAST(n * sxx - sx * sx AS DOUBLE)", 6
+           )} AS slope_cents_per_hour
     FROM s
     """,
 )
@@ -114,7 +115,7 @@ def q_udf_grouped_ols(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load(spark, sf_dir, "events").select(
         "event_type",
         (F.unix_micros("ts") / F.lit(3_600_000_000)).cast("long").alias("hr"),
-        F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long").alias("cents"),
+        cents("value").alias("cents"),
     )
 
     def fit(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -171,7 +172,7 @@ def installment_rows(cents: int):
     oracle=f"""
     WITH o AS (
       SELECT o_orderkey,
-             CAST(FLOOR(o_totalprice * 100 + 0.5) AS BIGINT) AS cents
+             {cents_sql("o_totalprice")} AS cents
       FROM orders WHERE o_orderkey < 2000
     ),
     n AS (
@@ -239,7 +240,7 @@ def q_udf_udtf(spark: SparkSession, sf_dir: str) -> DataFrame:
             .where(F.col("o_orderkey") < 2000)
             .select(
                 "o_orderkey",
-                F.floor(F.col("o_totalprice") * 100 + 0.5).cast("long").alias("cents"),
+                cents("o_totalprice").alias("cents"),
             )
         )
         o.createOrReplaceTempView(view_name)

@@ -13,6 +13,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
+from neo_olap_spark.functions import cents, cents_sql, money_sum_sql
 from neo_olap_spark.registry import query
 from neo_olap_spark.tables import load
 
@@ -159,7 +160,7 @@ _US_PER_DAY = 86_400_000_000
       SELECT CASE WHEN click_us IS NOT NULL
                    AND us - click_us <= {ATTRIBUTION_HORIZON_US}
                   THEN click_us // {_US_PER_DAY} ELSE -1 END AS attr_day,
-             CAST(FLOOR(value * 100 + 0.5) AS BIGINT) AS cents
+             {cents_sql("value")} AS cents
       FROM w WHERE event_type = 'purchase'
     )
     SELECT attr_day,
@@ -219,7 +220,7 @@ def q_events_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .otherwise(F.lit(-1))
         .alias("attr_day"),
-        F.floor(F.col("value") * 100 + 0.5).cast("long").alias("cents"),
+        cents("value").alias("cents"),
     )
     return attributed.groupBy("attr_day").agg(
         F.count(F.lit(1)).alias("n_purchases"),
@@ -234,12 +235,11 @@ INCR_SPLIT_DATE = "1997-01-01"
 
 @query(
     "q_incremental_agg",
-    oracle="""
+    oracle=f"""
     SELECT l_returnflag, l_linestatus,
            COUNT(*) AS n_rows,
            ROUND(SUM(l_quantity), 2) AS sum_qty,
-           CAST(CAST(SUM(CAST(FLOOR(l_extendedprice * 100 + 0.5) AS BIGINT))
-                AS BIGINT) AS DOUBLE) / 100.0 AS sum_price
+           {money_sum_sql("l_extendedprice")} AS sum_price
     FROM lineitem
     GROUP BY l_returnflag, l_linestatus
     """,
@@ -265,9 +265,7 @@ def q_incremental_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("l_quantity").alias("p_qty"),
             # partials carry exact integer CENTS so the base+delta
             # merge is order-independent (repo money rule)
-            F.sum(
-                F.floor(F.col("l_extendedprice") * 100 + 0.5).cast("long")
-            ).alias("p_cents"),
+            F.sum(cents("l_extendedprice")).alias("p_cents"),
         )
 
     base = partial(li.where(F.col("l_shipdate") < INCR_SPLIT_DATE))
@@ -290,17 +288,18 @@ def q_incremental_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_snapshot_diff",
-    oracle="""
+    oracle=f"""
     WITH old_snap AS (
       SELECT o_orderkey, o_orderstatus,
-             CAST(FLOOR(o_totalprice * 100 + 0.5) AS BIGINT) AS cents
+             {cents_sql("o_totalprice")} AS cents
       FROM orders WHERE o_orderkey % 7 <> 0
     ),
     new_snap AS (
       SELECT o_orderkey, o_orderstatus,
-             CAST(FLOOR((CASE WHEN o_orderkey % 3 = 0
-                         THEN o_totalprice * 1.1 ELSE o_totalprice END) * 100 + 0.5)
-                  AS BIGINT) AS cents
+             {cents_sql(
+                 "(CASE WHEN o_orderkey % 3 = 0"
+                 " THEN o_totalprice * 1.1 ELSE o_totalprice END)"
+             )} AS cents
       FROM orders WHERE o_orderkey % 5 <> 0
     )
     SELECT COALESCE(o.o_orderkey, n.o_orderkey) AS o_orderkey,
@@ -329,12 +328,12 @@ def q_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     zero-exchange merge; unchanged rows (the overwhelming majority)
     are filtered before anything is emitted."""
     o = load(spark, sf_dir, "orders")
-    # money-cents integerization (repo float rule): floor(x*100 + .5)
-    # is deterministic cross-engine where round-half is not
+    # money-cents integerization (functions.cents): deterministic
+    # cross-engine where round-half is not
     old_snap = o.where(F.col("o_orderkey") % 7 != 0).select(
         "o_orderkey",
         F.col("o_orderstatus").alias("old_status"),
-        F.floor(F.col("o_totalprice") * 100 + 0.5).cast("long").alias("old_cents"),
+        cents("o_totalprice").alias("old_cents"),
     )
     bumped = F.when(
         F.col("o_orderkey") % 3 == 0, F.col("o_totalprice") * 1.1
@@ -342,7 +341,7 @@ def q_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     new_snap = o.where(F.col("o_orderkey") % 5 != 0).select(
         "o_orderkey",
         F.col("o_orderstatus").alias("new_status"),
-        F.floor(bumped * 100 + 0.5).cast("long").alias("new_cents"),
+        cents(bumped).alias("new_cents"),
     )
     joined = old_snap.join(new_snap, "o_orderkey", "full_outer")
     change = (
@@ -378,7 +377,7 @@ SCD2_ASOF_EPOCH = 820540800  # 1996-01-02 00:00 UTC — mid-history probe instan
              CAST(epoch(LEAD(o_orderdate) OVER
                (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey)) AS BIGINT)
                AS valid_to,
-             CAST(FLOOR(o_totalprice * 100 + 0.5) AS BIGINT) AS price_cents
+             {cents_sql("o_totalprice")} AS price_cents
       FROM orders
     )
     SELECT o_custkey, valid_from, price_cents
@@ -413,7 +412,7 @@ def q_scd2_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("timestamp")
         .cast("long")
         .alias("valid_to"),
-        F.floor(F.col("o_totalprice") * 100 + 0.5).cast("long").alias("price_cents"),
+        cents("o_totalprice").alias("price_cents"),
     )
     return (
         hist.where(
@@ -432,14 +431,14 @@ def q_scd2_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_scd2_join",
-    oracle="""
+    oracle=f"""
     WITH hist AS (
       SELECT o_custkey,
              CAST(epoch(o_orderdate) AS BIGINT) AS valid_from,
              CAST(epoch(LEAD(o_orderdate) OVER
                (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey)) AS BIGINT)
                AS valid_to,
-             CAST(FLOOR(o_totalprice * 100 + 0.5) AS BIGINT) AS price_cents
+             {cents_sql("o_totalprice")} AS price_cents
       FROM orders
     ),
     ev AS (
@@ -486,9 +485,7 @@ def q_scd2_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("o_orderdate").cast("timestamp").cast("long").alias("t"),
         F.lit(0).alias("kind"),
         F.col("o_orderkey").alias("ord"),
-        F.floor(F.col("o_totalprice") * 100 + 0.5)
-        .cast("long")
-        .alias("price_cents"),
+        cents("o_totalprice").alias("price_cents"),
         F.lit(None).cast("long").alias("event_id"),
     )
     evu = ev.select(
@@ -533,7 +530,7 @@ def q_scd2_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     "q_incremental_join_view",
     oracle=f"""
     SELECT l.l_orderkey, l.l_linenumber, o.o_custkey,
-           CAST(FLOOR(l.l_extendedprice * 100 + 0.5) AS BIGINT) AS price_cents,
+           {cents_sql("l.l_extendedprice")} AS price_cents,
            (o.o_orderdate < DATE '{INCR_SPLIT_DATE}') AS order_is_base,
            (l.l_shipdate  < DATE '{INCR_SPLIT_DATE}') AS line_is_base
     FROM orders o JOIN lineitem l ON o.o_orderkey = l.l_orderkey
@@ -564,7 +561,7 @@ def q_incremental_join_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     li = load(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_linenumber",
-        F.floor(F.col("l_extendedprice") * 100 + 0.5).cast("long").alias("price_cents"),
+        cents("l_extendedprice").alias("price_cents"),
         (F.col("l_shipdate") < INCR_SPLIT_DATE).alias("line_is_base"),
     )
     o_base, o_delta = o.where("order_is_base"), o.where("NOT order_is_base")

@@ -8,6 +8,9 @@ regression fails here even while results stay correct.
 
 from __future__ import annotations
 
+import importlib.util
+import os
+
 import pytest
 
 from neo_olap_spark.plans import (
@@ -78,6 +81,25 @@ def test_udf_is_arrow_vectorized(q):
     assert_not_in_plan(df, "BatchEvalPython")
     # and the filter still pushes through it to the scan
     assert_pushed_filter(df, "LessThan(l_orderkey,2000)")
+
+
+@pytest.mark.parametrize("key", ["q_sql_tpch_q1", "q_star_join"])
+def test_normalized_plan_is_stable_in_one_session(q, key):
+    """tools/profile_key.py's plan dumps diff clean when the plan is
+    unchanged: the same key built twice in one session normalizes to
+    the same text. Spark 4 numbers exchanges with a JVM-global
+    ``plan_id=N`` counter, so the raw texts differ."""
+    path = os.path.join(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        "tools",
+        "profile_key.py",
+    )
+    spec = importlib.util.spec_from_file_location("profile_key", path)
+    profile_key = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(profile_key)
+    a, b = plan_str(q(key)), plan_str(q(key))
+    assert "plan_id=" in a and a != b
+    assert profile_key.normalize_plan(a) == profile_key.normalize_plan(b)
 
 
 def test_star_join_broadcasts_all_dims(q):
