@@ -2181,7 +2181,7 @@ def q_agg_freq_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "o_orderstatus",
             "exact_cnt",
-            F.col("o_orderstatus").isin(list(found_items)).alias("found"),
+            F.col("o_orderstatus").isin(sorted(found_items)).alias("found"),
         )
     )
 

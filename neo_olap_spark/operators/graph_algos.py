@@ -8,11 +8,11 @@ LPA, k-core, sssp and HITS — runs on one round driver, ``_iterate``
 (the analog of the reference's round loop, Runner.java:67-88,107-129):
 it lazily checkpoints each round's state through ``loop_checkpoint``
 (a non-durable ``localCheckpoint``: a lost block fails the loop
-loudly), runs the convergence action every ``check_every`` rounds (or
-one materializing count for fixed-round loops), and, given a
-``ckpt_dir`` (the one durable policy; PageRank and the walk take
-one), snapshots every round to parquet, continues from the snapshot
-and resumes from it.
+loudly), runs the loop's one convergence predicate every
+``check_every`` rounds (or one materializing count for fixed-round
+loops), and, given a ``ckpt_dir`` (the one durable policy; PageRank
+and the walk take one), snapshots every round to parquet, continues
+from the snapshot and resumes from it.
 ``_graph_loop`` sets each loop's shuffle width and AQE and owns its
 edge cache: the one src-partitioned, persisted edge relation every
 round joins against, released on exit. Every loop key hands it a
@@ -21,7 +21,9 @@ frame built in neo_olap_spark.graph (``sym_edges``,
 after a single src shuffle. All randomness is ``xxhash64(…, seed)`` on
 stable keys, so runs are deterministic and retry-stable (SURVEY.md
 §7.3). The DuckDB oracles compose the derived
-graph's SQL from neo_olap_spark.graph's ``ORACLE_*`` fragments.
+graph's SQL from neo_olap_spark.graph's ``ORACLE_*`` fragments, and
+every loop twin (PageRank, CC, LPA, k-core, sssp, closeness, HITS)
+is one ``_unroll`` of a head, a per-round CTE body and a tail.
 
 Scale notes: each BFS/walk step is one shuffle keyed on node/walker
 id; the edge list is partitioned and persisted once and reused;
@@ -159,9 +161,9 @@ def _iterate(
     rounds computes inside a single action.
 
     Actions: with ``done``, ``done(state, r)`` runs after every
-    ``check_every``-th round and after round ``n``; it runs the
-    convergence action, may replace frames in ``state`` (sssp drops
-    finished sources) and returns True when the loop has converged.
+    ``check_every``-th round and after round ``n``; it is a predicate
+    that runs the convergence action and returns True when the loop
+    has converged.
     Without ``done``, ONE ``count()`` of the round's last-yielded frame
     materializes the chain when the loop ends — before the caller
     unpersists the caches the chain reads.
@@ -206,6 +208,15 @@ def _iterate(
     if done is None and name is not None:
         state[name].count()
     return state, rounds, converged
+
+
+def _unroll(head: str, round_body, n: int, tail: str) -> str:
+    """The text of a loop's DuckDB twin: the loop unrolled into one
+    CTE group per round. ``head`` holds the graph and round-0 CTEs,
+    ``round_body(r)`` the CTEs of round ``r`` (1..n, each reading
+    round r-1), and ``tail`` follows the last round — the final
+    SELECT, or further CTEs that lead to one."""
+    return "WITH " + ",".join([head, *map(round_body, range(1, n + 1))]) + tail
 
 
 # ---------------------------------------------------------------------------
@@ -1050,8 +1061,7 @@ def _pagerank_oracle(
             f"(SELECT CAST(COUNT(*) AS DOUBLE) FROM nodes) / {n_seeds} "
             "ELSE CAST(0.0 AS DOUBLE) END"
         )
-    parts = [
-        f"""
+    head = f"""
     e AS ({ORACLE_EDGES}),
     sym AS ({ORACLE_SYM}),
     nodes AS ({ORACLE_NODES}),{seeds_cte}
@@ -1062,10 +1072,7 @@ def _pagerank_oracle(
            UNION ALL SELECT node AS src, node AS dst FROM base WHERE d = 0),
     st AS (SELECT node, GREATEST(d, 1) AS deg, {tele_sql} AS tele FROM base),
     r0 AS (SELECT node, deg, tele, tele AS rank FROM st)"""
-    ]
-    for k in range(1, n_iters + 1):
-        parts.append(
-            f"""
+    return _unroll(head, lambda k: f"""
     r{k} AS (
       SELECT s.node, s.deg, s.tele,
              {1 - damping} * s.tele + {damping} * COALESCE(m.mass, 0) AS rank
@@ -1073,13 +1080,7 @@ def _pagerank_oracle(
         SELECT e2.dst AS node, SUM(r.rank / r.deg) AS mass
         FROM r{k - 1} r JOIN e2 ON r.node = e2.src GROUP BY e2.dst
       ) m ON s.node = m.node
-    )"""
-        )
-    return (
-        "WITH "
-        + ",".join(parts)
-        + f"\n    SELECT node AS node_id, ROUND(rank, 6) AS rank FROM r{n_iters}"
-    )
+    )""", n_iters, f"\n    SELECT node AS node_id, ROUND(rank, 6) AS rank FROM r{n_iters}")
 
 
 @query("q_pagerank", oracle=_pagerank_oracle(8, 0.85))
@@ -1205,6 +1206,14 @@ def connected_components(
         )
 
 
+# Head of the CC and LPA twins: every node starts labeled with its own id.
+_LABELS_HEAD = f"""
+    e AS ({ORACLE_EDGES}),
+    sym AS MATERIALIZED ({ORACLE_SYM}),
+    nodes AS ({ORACLE_NODES}),
+    l0 AS MATERIALIZED (SELECT node, node AS label FROM nodes)"""
+
+
 def _cc_oracle(n_rounds: int) -> str:
     """DuckDB twin of min-label propagation, unrolled to the SAME
     round ceiling as the Spark implementation's max_iters: full
@@ -1216,29 +1225,15 @@ def _cc_oracle(n_rounds: int) -> str:
     depth: 7/8/10 rounds at sf0.001/0.01/0.1. AS MATERIALIZED on
     every round — DuckDB inlines plain CTEs at each reference and the
     expansion would otherwise be exponential."""
-    parts = [
-        f"""
-    e AS ({ORACLE_EDGES}),
-    sym AS MATERIALIZED ({ORACLE_SYM}),
-    nodes AS ({ORACLE_NODES}),
-    l0 AS MATERIALIZED (SELECT node, node AS label FROM nodes)"""
-    ]
-    for r in range(1, n_rounds + 1):
-        parts.append(
-            f"""
+    return _unroll(_LABELS_HEAD, lambda r: f"""
     l{r} AS MATERIALIZED (
       SELECT n.node, LEAST(n.label, COALESCE(m.cand, n.label)) AS label
       FROM l{r - 1} n LEFT JOIN (
         SELECT sym.dst AS node, MIN(l.label) AS cand
         FROM l{r - 1} l JOIN sym ON l.node = sym.src GROUP BY sym.dst
       ) m ON n.node = m.node
-    )"""
-        )
-    return (
-        "WITH "
-        + ",".join(parts)
-        + f"\n    SELECT node AS node_id, CAST(label AS BIGINT) AS component FROM l{n_rounds}"
-    )
+    )""", n_rounds,
+        f"\n    SELECT node AS node_id, CAST(label AS BIGINT) AS component FROM l{n_rounds}")
 
 
 @query("q_connected_components", oracle=_cc_oracle(20))
@@ -1312,25 +1307,10 @@ def label_propagation(
         )
 
 
-def _lpa_oracle(n_rounds: int) -> str:
-    """DuckDB twin of synchronous LPA by FIXED unroll — same round
-    count as the Spark loop, so the engines compute the identical
-    deterministic sequence (no fixpoint argument needed: the round
-    count IS the semantics). ROW_NUMBER over (count DESC, label)
-    implements the same total-ordered tie-break as Spark's max_by on
-    (cnt, -label). AS MATERIALIZED per round — DuckDB inlines plain
-    CTEs at every reference and each round reads the previous one
-    twice (votes + keep-old fallback)."""
-    parts = [
-        f"""
-    e AS ({ORACLE_EDGES}),
-    sym AS MATERIALIZED ({ORACLE_SYM}),
-    nodes AS ({ORACLE_NODES}),
-    l0 AS MATERIALIZED (SELECT node, node AS label FROM nodes)"""
-    ]
-    for r in range(1, n_rounds + 1):
-        parts.append(
-            f"""
+def _lpa_round(r: int) -> str:
+    """Round ``r`` of the LPA twin: p{r} holds each voted node's
+    winning label, l{r} every node's label after the round."""
+    return f"""
     p{r} AS MATERIALIZED (
       SELECT node, label FROM (
         SELECT sym.dst AS node, l.label, COUNT(*) AS cnt,
@@ -1344,13 +1324,21 @@ def _lpa_oracle(n_rounds: int) -> str:
       SELECT n.node, COALESCE(p.label, n.label) AS label
       FROM l{r - 1} n LEFT JOIN p{r} p ON n.node = p.node
     )"""
-        )
-    return (
-        "WITH "
-        + ",".join(parts)
-        + f"\n    SELECT node AS node_id, CAST(label AS BIGINT) AS community"
+
+
+def _lpa_oracle(n_rounds: int) -> str:
+    """DuckDB twin of synchronous LPA by FIXED unroll — same round
+    count as the Spark loop, so the engines compute the identical
+    deterministic sequence (no fixpoint argument needed: the round
+    count IS the semantics). ROW_NUMBER over (count DESC, label)
+    implements the same total-ordered tie-break as Spark's max_by on
+    (cnt, -label). AS MATERIALIZED per round — DuckDB inlines plain
+    CTEs at every reference and each round reads the previous one
+    twice (votes + keep-old fallback)."""
+    return _unroll(_LABELS_HEAD, _lpa_round, n_rounds, (
+        f"\n    SELECT node AS node_id, CAST(label AS BIGINT) AS community"
         f" FROM l{n_rounds}"
-    )
+    ))
 
 
 def _modularity_oracle(n_rounds: int) -> str:
@@ -1360,11 +1348,7 @@ def _modularity_oracle(n_rounds: int) -> str:
     e_c = intra-community edges, d_c = total community degree.
     HUGEINT sums keep the numerator exact; both engines convert the
     same two integers to double and divide once."""
-    lpa = _lpa_oracle(n_rounds)
-    final = lpa.rindex("\n    SELECT node AS node_id")
-    return (
-        lpa[:final]
-        + f""",
+    return _unroll(_LABELS_HEAD, _lpa_round, n_rounds, f""",
     labels AS MATERIALIZED (SELECT node, label FROM l{n_rounds}),
     m_cnt AS (SELECT CAST(COUNT(*) AS BIGINT) AS m FROM e),
     ec AS (
@@ -1392,8 +1376,7 @@ def _modularity_oracle(n_rounds: int) -> str:
                6,
            )} AS modularity
     FROM terms
-    """
-    )
+    """)
 
 
 @query("q_graph_modularity", oracle=_modularity_oracle(LPA_ROUNDS))
@@ -1749,27 +1732,21 @@ def _kcore_oracle(k: int, n_rounds: int) -> str:
     Spark (which iterates to the true fixpoint and raises past 100
     rounds) would hash-mismatch this oracle loudly rather than agree
     quietly."""
-    parts = [
-        f"""
+    head = f"""
     e AS ({ORACLE_EDGES}),
     sym AS MATERIALIZED ({ORACLE_SYM}),
     s0 AS MATERIALIZED (SELECT DISTINCT src AS node FROM sym)"""
-    ]
     # AS MATERIALIZED is load-bearing: DuckDB inlines plain CTEs at
     # every reference, and each round references the previous one
     # TWICE — unmaterialized, the expansion is 2^n_rounds copies of
     # the base scan ("too many open files" long before any result)
-    for r in range(1, n_rounds + 1):
-        parts.append(
-            f"""
+    return _unroll(head, lambda r: f"""
     s{r} AS MATERIALIZED (
       SELECT src AS node FROM sym
       WHERE src IN (SELECT node FROM s{r - 1})
         AND dst IN (SELECT node FROM s{r - 1})
       GROUP BY src HAVING COUNT(*) >= {k}
-    )"""
-        )
-    return "WITH " + ",".join(parts) + f"\n    SELECT node AS node_id FROM s{n_rounds}"
+    )""", n_rounds, f"\n    SELECT node AS node_id FROM s{n_rounds}")
 
 
 @query("q_graph_kcore", oracle=_kcore_oracle(2, 12))
@@ -2058,20 +2035,6 @@ SSSP_MAX_ROUNDS = 40  # measured depth 26 at sf0.1; headroom for larger SFs
 _SSSP_INF = 1 << 60
 
 
-# Per-source early exit appends one lazily-filtered frozen frame (and
-# pins that round's checkpointed state) per DISTINCT exit round. At
-# the current k=4 closeness batch that is ≤ 4 frames and noise, but a
-# large batched source group with spread-out exit rounds would grow a
-# deep chained unionByName plan plus up-to-k retained checkpoints
-# (ADVICE r12 #2). At this cap the frozen frames are UNIONED and
-# EAGERLY re-checkpointed into one frame: plan depth and retained
-# per-round checkpoints stay ≤ cap, at the cost of one extra
-# materialization job over already-final (shrunken) state per cap
-# crossings — O(k/cap) extra jobs worst case, each touching only
-# frozen rows.
-SSSP_FROZEN_COALESCE_CAP = 8
-
-
 def sssp(
     wsym: DataFrame,
     sources: list[int],
@@ -2088,25 +2051,6 @@ def sssp(
     answer can never be returned — the same safety contract as
     connected_components. Returns (source, node, dist).
 
-    Per-source EARLY EXIT (VERDICT r11 item 2): sources are
-    independent (a (source, node) entry improves only via its own
-    source's pushes), so a source whose boundary improvement set is
-    empty is final and its state drops out of the live loop — the
-    per-round merge/checkpoint cost tracks the ACTIVE sources'
-    shrinking state, not k × |nodes| for the slowest source's full
-    depth. At 100 TB with batched source groups this is the
-    difference between every batch paying its slowest member's tail
-    and each source paying its own depth. Memory accounting: each
-    frozen frame is a lazy filter over the round's checkpointed
-    state, so the checkpoint RDD at each exit event stays referenced
-    until the caller's final action — bounded by (number of DISTINCT
-    exit rounds) × state size; once that count reaches
-    SSSP_FROZEN_COALESCE_CAP the frames are unioned and eagerly
-    re-checkpointed (ADVICE r12 #2), so retained checkpoints and
-    final-union plan depth stay ≤ cap regardless of batch size (at
-    the test SFs coalescing never triggers — exit events cluster in
-    the tail where state has already shrunk).
-
     Each relaxation merges by aggregating only the (frontier-sized)
     pushes, then FULL-OUTER joining them against the standing
     distances. The standing state is already hash-partitioned on
@@ -2117,7 +2061,14 @@ def sssp(
     ran within noise of it at sf0.1 (SCALING.md, "sssp: one merge
     path").
 
-    Convergence is checked every HOPS_PER_CHECK relaxations: each
+    Convergence is the one rule BFS and CC stop on: no (source, node)
+    entry improved. Sources never interact (a push carries its source
+    key through the join), so a source that finishes early adds no
+    frontier rows to the rounds its batch still runs; only its
+    settled state rides along in the merge (SCALING.md, "sssp: one
+    convergence check").
+
+    The check runs every HOPS_PER_CHECK relaxations: each
     hop's lazy checkpoint makes the one check job compute every hop's
     state exactly once. Convergence after the LAST hop of a check is
     exact regardless of earlier hops: hop k+1 pushes from exactly hop
@@ -2168,54 +2119,10 @@ def sssp(
                 )
             )
 
-        frozen: list[DataFrame] = []
-        active: set[int] = set(sources)
-
-        def drop_finished(s, r) -> bool:
-            # Per-source convergence check (VERDICT r11 item 2). The
-            # (source, node) states never interact across sources — pushes
-            # carry their source key through the join, so a source whose
-            # frontier emptied can never improve again and is FINAL. Its
-            # rows leave the live state immediately (frozen for the final
-            # union), so every later round's merge aggregate / checkpoint
-            # touches only the still-active sources' shrinking state. The
-            # distinct() is the materializing action: partial aggregation
-            # collapses it to ≤ k rows map-side.
-            nonlocal frozen, active
-            m = s["merged"]
-            still = {
-                int(row[0])
-                for row in m.where(improved).select("source").distinct().collect()
-            }
-            finished = active - still
-            if finished:
-                if stats is not None:
-                    stats.setdefault("source_exit_rounds", {}).update(
-                        {int(src): r for src in sorted(finished)}
-                    )
-                done_col = F.col("source").isin([int(src) for src in finished])
-                frozen.append(m.where(done_col).select("source", "node", "dist"))
-                s["merged"] = m.where(~done_col)
-                active -= finished
-                if len(frozen) >= SSSP_FROZEN_COALESCE_CAP:
-                    # Bound plan depth + retained checkpoints (ADVICE r12
-                    # #2): collapse the chained frozen frames into one
-                    # EAGER checkpoint so the per-round states they pinned
-                    # become collectable and the final union stays shallow.
-                    # Eager is load-bearing — a lazy checkpoint would keep
-                    # every upstream frame referenced until the caller's
-                    # action, defeating the bound.
-                    combined = frozen[0]
-                    for fz in frozen[1:]:
-                        combined = combined.unionByName(fz)
-                    frozen = [loop_checkpoint(combined)]
-                    if stats is not None:
-                        stats["frozen_coalesces"] = stats.get("frozen_coalesces", 0) + 1
-            return not active
-
         state, rounds, converged = _iterate(
             {"merged": merged}, relax, max_rounds,
-            check_every=HOPS_PER_CHECK, done=drop_finished,
+            check_every=HOPS_PER_CHECK,
+            done=lambda s, _: s["merged"].where(improved).count() == 0,
         )
     if stats is not None:
         stats["rounds"] = rounds
@@ -2225,10 +2132,7 @@ def sssp(
             "SSSP_MAX_ROUNDS; returning partial distances would be "
             "silently wrong"
         )
-    out = state["merged"].select("source", "node", "dist")
-    for fz in frozen:
-        out = out.unionByName(fz)
-    return out
+    return state["merged"].select("source", "node", "dist")
 
 
 def _sssp_oracle(n_rounds: int) -> str:
@@ -2239,17 +2143,13 @@ def _sssp_oracle(n_rounds: int) -> str:
     _cc_oracle contract). AS MATERIALIZED is load-bearing: each round
     references the previous one twice (FULL OUTER left side + push
     source) and plain CTEs would expand exponentially."""
-    parts = [
-        f"""
+    head = f"""
     e AS ({ORACLE_WEIGHTED_EDGES}),
     sym AS MATERIALIZED ({ORACLE_WEIGHTED_SYM}),
     d0 AS MATERIALIZED (
       SELECT CAST((SELECT MIN(c_custkey) FROM customer) AS BIGINT) AS node,
              CAST(0 AS BIGINT) AS dist)"""
-    ]
-    for r in range(1, n_rounds + 1):
-        parts.append(
-            f"""
+    return _unroll(head, lambda r: f"""
     d{r} AS MATERIALIZED (
       SELECT COALESCE(d.node, m.node) AS node,
              LEAST(COALESCE(d.dist, {_SSSP_INF}), COALESCE(m.cand, {_SSSP_INF}))
@@ -2258,13 +2158,8 @@ def _sssp_oracle(n_rounds: int) -> str:
         SELECT s.dst AS node, MIN(p.dist + s.w) AS cand
         FROM d{r - 1} p JOIN sym s ON p.node = s.src GROUP BY s.dst
       ) m ON d.node = m.node
-    )"""
-        )
-    return (
-        "WITH "
-        + ",".join(parts)
-        + f"\n    SELECT node AS node_id, CAST(dist AS BIGINT) AS dist FROM d{n_rounds}"
-    )
+    )""", n_rounds,
+        f"\n    SELECT node AS node_id, CAST(dist AS BIGINT) AS dist FROM d{n_rounds}")
 
 
 @query("q_graph_sssp", oracle=_sssp_oracle(SSSP_MAX_ROUNDS))
@@ -2309,8 +2204,7 @@ def _closeness_oracle(n_rounds: int) -> str:
     """Unrolled multi-source Bellman-Ford on (source, node) keys,
     same ceiling/idempotence contract as _sssp_oracle. DuckDB SUM of
     BIGINT is HUGEINT — CAST back (float-landmine (c))."""
-    parts = [
-        f"""
+    head = f"""
     e AS ({ORACLE_WEIGHTED_EDGES}),
     sym AS MATERIALIZED ({ORACLE_WEIGHTED_SYM}),
     srcs AS MATERIALIZED (
@@ -2318,10 +2212,7 @@ def _closeness_oracle(n_rounds: int) -> str:
       ORDER BY c_custkey LIMIT {CLOSENESS_SOURCES}),
     d0 AS MATERIALIZED (
       SELECT source, source AS node, CAST(0 AS BIGINT) AS dist FROM srcs)"""
-    ]
-    for r in range(1, n_rounds + 1):
-        parts.append(
-            f"""
+    return _unroll(head, lambda r: f"""
     d{r} AS MATERIALIZED (
       SELECT COALESCE(d.source, m.source) AS source,
              COALESCE(d.node, m.node) AS node,
@@ -2332,20 +2223,14 @@ def _closeness_oracle(n_rounds: int) -> str:
         FROM d{r - 1} p JOIN sym s ON p.node = s.src
         GROUP BY p.source, s.dst
       ) m ON d.source = m.source AND d.node = m.node
-    )"""
-        )
-    return (
-        "WITH "
-        + ",".join(parts)
-        + f"""
+    )""", n_rounds, f"""
     SELECT source,
            COUNT(*) AS n_reached,
            CAST(SUM(dist) AS BIGINT) AS sum_dist,
            CASE WHEN SUM(dist) > 0 THEN
              CAST(FLOOR((COUNT(*) - 1) * 1000000.0 / SUM(dist) + 0.5) AS BIGINT)
            ELSE NULL END AS closeness_micro
-    FROM d{n_rounds} GROUP BY source ORDER BY source"""
-    )
+    FROM d{n_rounds} GROUP BY source ORDER BY source""")
 
 
 @query("q_graph_closeness", oracle=_closeness_oracle(SSSP_MAX_ROUNDS))
@@ -2359,9 +2244,10 @@ def q_graph_closeness(spark: SparkSession, sf_dir: str) -> DataFrame:
     With the walk counts (degree centrality's cousin, R1) and sampled
     betweenness (R2), this completes the classical centrality trio
     the reference's workload family approximates. Same per-round
-    accounting and converge-or-raise contract as q_graph_sssp; the
-    (source, node) key multiplies state, not rounds — at 100 TB,
-    sources batch in groups sized to executor memory. (r14 A/B:
+    accounting, convergence check and converge-or-raise contract as
+    q_graph_sssp; the (source, node) key multiplies state, not
+    rounds, and the loop stops when no source's distances improve.
+    (r14 A/B:
     running the sources as concurrent single-source loops was tried
     and REJECTED — see sssp's docstring — the batched loop's
     one-edge-scan-per-round amortization wins at every tested
@@ -2417,16 +2303,12 @@ def _hits_oracle(n_iters: int) -> str:
     scores per node. Every per-iteration CTE is MATERIALIZED: a{k} is
     referenced twice (h{k}raw + the next/final round) and plain CTEs
     would expand exponentially (the _cc_oracle lesson)."""
-    parts = [
-        f"""
+    head = f"""
     de AS MATERIALIZED ({ORACLE_EDGES}),
     allnodes AS MATERIALIZED ({ORACLE_NODES}),
     nd AS MATERIALIZED (SELECT CAST(COUNT(*) AS DOUBLE) AS nn FROM allnodes),
     h0 AS MATERIALIZED (SELECT node, CAST(1.0 AS DOUBLE) AS hub FROM allnodes)"""
-    ]
-    for k in range(1, n_iters + 1):
-        parts.append(
-            f"""
+    return _unroll(head, lambda k: f"""
     a{k}raw AS MATERIALIZED (
       SELECT e.dst AS node, SUM(h.hub) AS raw
       FROM h{k - 1} h JOIN de e ON h.node = e.src GROUP BY e.dst
@@ -2448,17 +2330,11 @@ def _hits_oracle(n_iters: int) -> str:
              COALESCE(r.raw, 0) * ((SELECT nn FROM nd) / (SELECT s FROM sh{k}))
                AS hub
       FROM allnodes b LEFT JOIN h{k}raw r ON b.node = r.node
-    )"""
-        )
-    return (
-        "WITH "
-        + ",".join(parts)
-        + f"""
+    )""", n_iters, f"""
     SELECT h.node AS node_id,
            {floor_round_sql("h.hub", 5)} AS hub,
            {floor_round_sql("a.auth", 5)} AS auth
-    FROM h{n_iters} h JOIN a{n_iters} a ON h.node = a.node"""
-    )
+    FROM h{n_iters} h JOIN a{n_iters} a ON h.node = a.node""")
 
 
 def hits(

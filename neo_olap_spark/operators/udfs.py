@@ -210,13 +210,11 @@ def q_udf_udtf(spark: SparkSession, sf_dir: str) -> DataFrame:
     (pythonUDTF.arrow.enabled) and plan-asserted in tests — the row
     stream never funnels through the driver, and the lateral
     correlation adds no shuffle."""
-    import uuid
-
     from pyspark.sql.functions import udtf
 
-    # pin Arrow evaluation for THIS plan only — the conf is read at
-    # analysis time, so it can be restored immediately after spark.sql
-    # returns the (lazy) DataFrame; leaving it flipped would silently
+    # pin Arrow evaluation for THIS plan only — the conf is read when
+    # the lateral join is analyzed, so it can be restored as soon as
+    # the (lazy) DataFrame exists; leaving it flipped would silently
     # override a session that chose otherwise
     conf_key = "spark.sql.execution.pythonUDTF.arrow.enabled"
     prev = spark.conf.get(conf_key, None)
@@ -228,13 +226,8 @@ def q_udf_udtf(spark: SparkSession, sf_dir: str) -> DataFrame:
             def eval(self, cents: int):
                 yield from installment_rows(cents)
 
-        # per-call unique names: session-global registrations must not
-        # collide with (or clobber) another caller's 'installments' /
-        # view in the same shared SparkSession
-        tag = uuid.uuid4().hex[:12]
-        fn_name = f"installments_{tag}"
-        view_name = f"udtf_orders_v_{tag}"
-        spark.udtf.register(fn_name, Installments)
+        # a DataFrame lateral join: nothing is registered in the
+        # session, so repeated builds leave its catalog unchanged
         o = (
             load(spark, sf_dir, "orders")
             .where(F.col("o_orderkey") < 2000)
@@ -243,12 +236,8 @@ def q_udf_udtf(spark: SparkSession, sf_dir: str) -> DataFrame:
                 cents("o_totalprice").alias("cents"),
             )
         )
-        o.createOrReplaceTempView(view_name)
-        return spark.sql(
-            f"""
-            SELECT o.o_orderkey, t.installment_no, t.amount_cents
-            FROM {view_name} o, LATERAL {fn_name}(o.cents) t
-            """
+        return o.lateralJoin(Installments(F.col("cents").outer())).select(
+            "o_orderkey", "installment_no", "amount_cents"
         )
     finally:
         if prev is None:

@@ -395,13 +395,12 @@ def test_sssp_raises_when_ceiling_too_low(spark):
         sssp(sym, [0], max_rounds=3)
 
 
-def test_sssp_per_source_early_exit(spark):
-    """r12: sources with different depths must each exit at their own
-    depth (the frozen state drops out of the live loop), and the
-    multi-source answer must be row-identical to running each source
-    alone — the independence claim the early exit rests on. Source 0
-    sits on a deep chain; source 100 is a 1-hop star that converges
-    rounds earlier."""
+def test_sssp_multi_source_matches_single_sources(spark):
+    """The multi-source answer must be row-identical to running each
+    source alone: sources never interact, which is what makes one
+    batched loop exact. Source 0 sits on a deep chain; source 100 is
+    a 1-hop star that converges rounds earlier and rides the batch's
+    remaining rounds."""
     from neo_olap_spark.operators.graph_algos import sssp
 
     chain = [(i, i + 1, 1) for i in range(8)]          # depth-8 from 0
@@ -410,14 +409,10 @@ def test_sssp_per_source_early_exit(spark):
         chain + star, "src long, dst long, w long"
     )
     sym = edges.unionAll(edges.selectExpr("dst as src", "src as dst", "w"))
-    stats: dict = {}
     multi = {
         (r.source, r.node): r.dist
-        for r in sssp(sym, [0, 100], max_rounds=20, stats=stats).collect()
+        for r in sssp(sym, [0, 100], max_rounds=20).collect()
     }
-    exits = stats["source_exit_rounds"]
-    assert set(exits) == {0, 100}
-    assert exits[100] < exits[0], exits  # star exits before the chain
     singles: dict = {}
     for s in (0, 100):
         singles.update({
@@ -427,44 +422,7 @@ def test_sssp_per_source_early_exit(spark):
     assert multi == singles
 
 
-def test_sssp_frozen_coalesce_bounds_plan_depth(spark, monkeypatch):
-    """r13 (ADVICE r12 #2): a source batch with many DISTINCT exit
-    rounds must coalesce its frozen frames once the cap is crossed —
-    values identical to the uncoalesced run, and the coalesce path
-    actually exercised (stats counter). Chains of staggered depths
-    force one exit event per depth; cap=2 forces repeated coalescing
-    at toy scale."""
-    import neo_olap_spark.operators.graph_algos as ga
-
-    # six chains of depths 1, 3, ..., 11 rooted at 100, 200, ..., 600:
-    # source s goes quiet at relaxation depth+1, and the depths are
-    # spread HOPS_PER_CHECK apart, so each exit lands on its own check
-    edges = []
-    depths = [1 + ga.HOPS_PER_CHECK * i for i in range(6)]
-    roots = [100 * (i + 1) for i in range(6)]
-    for d, root in zip(depths, roots):
-        edges += [(root + i, root + i + 1, 1) for i in range(d)]
-    sym_edges = spark.createDataFrame(edges, "src long, dst long, w long")
-    sym = sym_edges.unionAll(
-        sym_edges.selectExpr("dst as src", "src as dst", "w")
-    )
-    stats: dict = {}
-    baseline = {
-        (r.source, r.node): r.dist
-        for r in ga.sssp(sym, roots, max_rounds=20, stats=stats).collect()
-    }
-    assert len(set(stats["source_exit_rounds"].values())) == 6, stats
-    monkeypatch.setattr(ga, "SSSP_FROZEN_COALESCE_CAP", 2)
-    stats = {}
-    coalesced = {
-        (r.source, r.node): r.dist
-        for r in ga.sssp(sym, roots, max_rounds=20, stats=stats).collect()
-    }
-    assert stats.get("frozen_coalesces", 0) >= 2, stats
-    assert coalesced == baseline
-
-
-def test_reliable_loop_checkpoint_mode_matches_default(
+def test_ckpt_dir_snapshots_survive_lost_blocks(
     spark, sf_dir, tmp_path, lose_blocks, monkeypatch
 ):
     """The one durable checkpoint policy is the loop driver's
@@ -515,20 +473,23 @@ def test_reliable_loop_checkpoint_mode_matches_default(
 
 
 def test_sssp_two_hop_raises_when_ceiling_too_low(spark):
-    """The raise contract holds under multi-hop checks: the ceiling is
-    a RELAXATION count, and the last relaxation forces a convergence
-    check, so a too-short ceiling raises even when max_rounds is odd
-    and not a multiple of HOPS_PER_CHECK."""
+    """The raise contract holds under multi-hop checks when the
+    ceiling lands on a scheduled check: max_rounds is a multiple of
+    HOPS_PER_CHECK, so the last relaxation's check is also a regular
+    one, and a chain deeper than the ceiling still raises.
+    (test_sssp_raises_when_ceiling_too_low covers an odd ceiling,
+    where the last relaxation forces an off-schedule check.)"""
     import pytest as _pytest
 
-    from neo_olap_spark.operators.graph_algos import sssp
+    from neo_olap_spark.operators.graph_algos import HOPS_PER_CHECK, sssp
 
     chain = spark.createDataFrame(
         [(i, i + 1, 1) for i in range(6)], "src long, dst long, w long"
     )
     sym = chain.unionAll(chain.selectExpr("dst as src", "src as dst", "w"))
+    assert 4 % HOPS_PER_CHECK == 0
     with _pytest.raises(RuntimeError, match="did not converge"):
-        sssp(sym, [0], max_rounds=3)
+        sssp(sym, [0], max_rounds=4)
 
 
 def test_hits_role_separation(spark, sf_dir):

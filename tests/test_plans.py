@@ -564,6 +564,21 @@ def test_udtf_arrow_evaluated(q):
     assert_pushed_filter(df, "LessThan(o_orderkey,2000)")
 
 
+def test_udtf_builds_leave_the_catalog_unchanged(spark, q):
+    # a long-lived session builds the key again and again (bench warm
+    # passes, the driver): no build may register a function or a view
+    def catalog():
+        return (
+            sorted(f.name for f in spark.catalog.listFunctions()),
+            sorted(t.name for t in spark.catalog.listTables()),
+        )
+
+    before = catalog()
+    for _ in range(2):
+        q("q_udf_udtf")
+    assert catalog() == before
+
+
 def test_sink_partitioned_returns_lazy_pruned_read(q):
     # the partitioned-sink key must return the LAZY read of the sink:
     # a parquet FileScan with the partition filter at directory level

@@ -47,16 +47,13 @@ def normalize_plan(text: str) -> str:
     """Strip run-varying tokens so identical physical plans diff empty:
     plan node ids `(12)`, codegen stage ids, exchange/subquery ids,
     the JVM-global counters (Spark 4's `plan_id=N`, RDD ids of
-    checkpointed scans), per-build function names (`<name>_<12 hex>`,
-    as q_udf_udtf registers its UDTF), file paths, statistics, and
-    pointer-ish hex. Run with a fixed PYTHONHASHSEED: a plan that
-    lists a Python set (an isin() over set items) follows its order."""
+    checkpointed scans), file paths, statistics, and pointer-ish
+    hex."""
     text = re.sub(r"\(\d+\)", "(#)", text)
     text = re.sub(r"\[codegen id : \d+\]", "[codegen id : #]", text)
     text = re.sub(r"\[id=#?\d+\]", "[id=#]", text)
     text = re.sub(r"plan_id=\d+", "plan_id=#", text)
     text = re.sub(r"RDD\[\d+\]", "RDD[#]", text)
-    text = re.sub(r"\b(\w+)_[0-9a-f]{12}\(", r"\1_#(", text)
     text = re.sub(r"#\d+L?", "#x", text)  # attribute exprIds
     text = re.sub(r"file:[^\],\s]+", "file:PATH", text)
     text = re.sub(r"0x[0-9a-f]+", "0xHEX", text)
