@@ -46,7 +46,6 @@ from neo_olap_spark.functions import (
     floor_round_sql,
     local_rows_frame,
     loop_checkpoint,
-    prefix_sum,
 )
 from neo_olap_spark.functions import numbered_sample as _numbered_sample
 from neo_olap_spark import graph
@@ -338,12 +337,10 @@ def _teleport_address_space(spark: SparkSession, sf_dir: str):
     are dense 0..n-1 — the same density assumption the reference makes
     when it rejection-samples node ids (OlapRunner.java:60-69). One
     metadata-cheap aggregate verifies it, and the map becomes a CLOSED-
-    FORM expression: no node table, no join, no cache. If a table ever
-    arrives non-dense, callers fall back to
-    functions.prefix_sum (the distributed rank path).
+    FORM expression: no node table, no join, no cache.
 
-    Returns (n_nodes, node_of_idx: Column -> Column) or (None, None)
-    when the density check fails."""
+    Returns (n_nodes, node_of_idx: Column -> Column); raises ValueError
+    naming the table whose keys are not 0..n-1."""
     tagged = None
     for t, key in (("customer", "c_custkey"), ("orders", "o_orderkey"), ("part", "p_partkey")):
         part = load(spark, sf_dir, t).select(F.lit(t).alias("t"), F.col(key).alias("k"))
@@ -354,8 +351,12 @@ def _teleport_address_space(spark: SparkSession, sf_dir: str):
         .agg(F.count("*").alias("n"), F.max("k").alias("mx"), F.min("k").alias("mn"))
         .collect()
     }
-    if any(r.mn != 0 or r.mx != r.n - 1 for r in stats.values()):
-        return None, None
+    for t, r in sorted(stats.items()):
+        if r.mn != 0 or r.mx != r.n - 1:
+            raise ValueError(
+                f"random walk needs dense keys: {t} keys span [{r.mn}, {r.mx}]"
+                f" over {r.n} rows, not 0..{r.n - 1}"
+            )
     nc, no, np_ = (stats[t].n for t in ("customer", "orders", "part"))
 
     def node_of_idx(ix):
@@ -401,16 +402,6 @@ def _walk_setup(spark: SparkSession, sf_dir: str, n_walkers: int, seed: int):
         .persist()
     )
     n_nodes, node_of_idx = _teleport_address_space(spark, sf_dir)
-    if n_nodes is None:
-        # non-dense keys: distributed-rank index, join-backed teleport
-        tele_nodes = (
-            prefix_sum(nodes_all, ["node"], "idx")
-            .select("node", (F.col("idx") - 1).alias("idx"))
-            .persist()
-        )
-        n_nodes = tele_nodes.count()
-    else:
-        tele_nodes = None
     walkers = (
         _numbered_sample(
             nodes_all.withColumn("h", F.xxhash64(F.col("node"), F.lit(seed))),
@@ -421,65 +412,52 @@ def _walk_setup(spark: SparkSession, sf_dir: str, n_walkers: int, seed: int):
         .select("walker_id", "node", F.lit(0).alias("step"))
         .transform(loop_checkpoint)
     )
-    return adj, (tele_nodes, node_of_idx), n_nodes, walkers
+    return adj, node_of_idx, n_nodes, walkers
 
 
-def _walk_step_cols(n_nodes: int, seed: int, node_of_idx=None):
+def _walk_step_cols(n_nodes: int, seed: int, node_of_idx):
     """The columns of one walk step over (walker_id, step, nbrs) rows:
-    (next step, neighbor pick, teleport index). The pick hashes
-    (walker, step, seed) into the sorted neighbor array; given the
-    dense ``node_of_idx``, a dead end (empty nbrs) picks its teleport
-    node instead."""
+    (next step, next node). The pick hashes (walker, step, seed) into
+    the sorted neighbor array; a dead end (empty nbrs) picks its
+    teleport node ``node_of_idx(pmod(h, n_nodes))`` instead."""
     nstep = F.col("step") + 1
     h = F.xxhash64(F.col("walker_id"), nstep, F.lit(seed))
     pick = F.element_at("nbrs", (F.pmod(h, F.size("nbrs")) + 1).cast("int"))
-    tele_idx = F.pmod(h, F.lit(n_nodes))
-    if node_of_idx is not None:
-        pick = F.when(F.size("nbrs") > 0, pick).otherwise(node_of_idx(tele_idx))
-    return nstep, pick, tele_idx
+    tele = node_of_idx(F.pmod(h, F.lit(n_nodes)))
+    return nstep, F.when(F.size("nbrs") > 0, pick).otherwise(tele)
 
 
 def _advance_walkers(
     frontier: DataFrame,
     adj: DataFrame,
-    tele,
+    node_of_idx,
     n_nodes: int,
     seed: int,
 ) -> DataFrame:
     """One walk step for every walker: uniform neighbor pick by hashing
     (walker, step, seed) into the node's sorted neighbor array; dead
     ends teleport to a hash-chosen node (RandomWalkingRunner
-    .java:24,31). The tiny frontier is the broadcast build side against
-    the persisted adjacency/node tables — zero shuffles per step.
+    .java:24,31) through the closed-form address map, a pure
+    expression. The tiny frontier is the broadcast build side against
+    the persisted adjacency table: one broadcast join, one scan, zero
+    shuffles per step.
 
     The step counter is a COLUMN on the frontier, not a Python literal:
     every step therefore compiles to the identical plan and Spark's
     codegen cache is hit 15 of 16 times. The pick depends only on
     (walker_id, step, seed), so any resumption replays identically."""
-    tele_nodes, node_of_idx = tele
-    nstep, pick, tele_idx = _walk_step_cols(n_nodes, seed, node_of_idx)
-    joined = adj.join(F.broadcast(frontier), adj.src == frontier.node, "inner")
-    if node_of_idx is not None:
-        # dense keys: dead ends (empty nbrs) teleport via a pure
-        # expression — the whole step is ONE broadcast join, one scan
-        return joined.select("walker_id", pick.alias("node"), nstep.alias("step"))
-    # non-dense fallback: teleport needs the index join
-    stepped = joined.where(F.size("nbrs") > 0).select(
+    nstep, pick = _walk_step_cols(n_nodes, seed, node_of_idx)
+    return adj.join(F.broadcast(frontier), adj.src == frontier.node, "inner").select(
         "walker_id", pick.alias("node"), nstep.alias("step")
     )
-    dead = joined.where(F.size("nbrs") == 0).select(
-        "walker_id", tele_idx.alias("tele_idx"), nstep.alias("step")
-    )
-    teleported = tele_nodes.join(
-        F.broadcast(dead), F.col("idx") == F.col("tele_idx"), "inner"
-    ).select("walker_id", "node", "step")
-    return stepped.unionByName(teleported)
 
 
 # Estimated broadcast footprint of the adjacency table (r14): one
 # neighbor long per symmetrized edge plus per-row overhead for the
 # (src, nbrs) rows. Deliberately generous so the gate flips to the
-# streamed-adjacency loop well before a broadcast could hurt.
+# streamed-adjacency loop well before a broadcast could hurt. The A/B
+# that keeps the gate is SCALING.md "Broadcast gates: walk and k-core,
+# sf0.1 and 5×" (the streamed loop forced at sf0.1 ran 1.4× warm).
 _ADJ_EDGE_BYTES = 16
 _ADJ_NODE_BYTES = 64
 
@@ -500,16 +478,15 @@ def _advance_walkers_bcast(
     seed: int,
 ) -> DataFrame:
     """One walk step with the ADJACENCY table as the broadcast build
-    side (dense-key path only): the same _walk_step_cols columns as
-    _advance_walkers, but the streamed side is the walker frontier
-    (n_walkers rows) instead of the full adjacency table — so a step
-    touches n_walkers rows, not |V|. The walked node is appended to a
-    carried ``path`` array, which keeps every frontier referenced
-    exactly ONCE (linear plan, no per-step checkpoint or branch): the
-    whole n_steps walk plus the final explode+count runs as a single
-    job in which Spark's exchange reuse builds the adjacency broadcast
-    once."""
-    nstep, new_node, _ = _walk_step_cols(n_nodes, seed, node_of_idx)
+    side: the same _walk_step_cols columns as _advance_walkers, but
+    the streamed side is the walker frontier (n_walkers rows) instead
+    of the full adjacency table — so a step touches n_walkers rows,
+    not |V|. The walked node is appended to a carried ``path`` array,
+    which keeps every frontier referenced exactly ONCE (linear plan,
+    no per-step checkpoint or branch): the whole n_steps walk plus the
+    final explode+count runs as a single job in which Spark's exchange
+    reuse builds the adjacency broadcast once."""
+    nstep, new_node = _walk_step_cols(n_nodes, seed, node_of_idx)
     return (
         frontier.join(F.broadcast(adj), frontier.node == adj.src, "inner")
         .select(
@@ -561,13 +538,9 @@ def random_walk_counts(
     """
     n_edges = graph.edge_count_estimate(spark, sf_dir)
     with _graph_loop(spark, n_edges, aqe=False):
-        adj, tele, n_nodes, walkers = _walk_setup(spark, sf_dir, n_walkers, seed)
+        adj, node_of_idx, n_nodes, walkers = _walk_setup(spark, sf_dir, n_walkers, seed)
 
-        if (
-            ckpt_dir is None
-            and tele[1] is not None
-            and _adj_fits_broadcast(spark, n_edges, n_nodes)
-        ):
+        if ckpt_dir is None and _adj_fits_broadcast(spark, n_edges, n_nodes):
             # r14 (guide §3.1/§2.4): the walker state is n_walkers rows
             # — a query parameter, not data — while the adjacency table
             # grows with the graph. When the WHOLE adjacency fits the
@@ -578,28 +551,27 @@ def random_walk_counts(
             # explode + count executes as ONE job with ONE adjacency
             # broadcast (exchange reuse) — no per-step checkpoint
             # actions, no per-step scans of the cached adjacency.
-            # Above the threshold (or with non-dense keys, or
-            # snapshots to take) the streamed-adjacency loop below is
-            # the scale shape: walker state broadcasts, adjacency stays
-            # distributed. Identical picks/teleports — value-pinned in
-            # tests.
+            # Above the threshold (or with snapshots to take) the
+            # streamed-adjacency loop below is the scale shape: walker
+            # state broadcasts, adjacency stays distributed. Identical
+            # picks/teleports — value-pinned in tests.
             adj.unpersist()  # built once inside the broadcast exchange
             frontier = walkers.withColumn("path", F.array("node"))
             for _ in range(n_steps):
                 frontier = _advance_walkers_bcast(
-                    frontier, adj, tele[1], n_nodes, seed
+                    frontier, adj, node_of_idx, n_nodes, seed
                 )
             return _visit_counts(frontier.select(F.explode("path").alias("node")))
 
         def walk(s, _):
-            # the per-step checkpoint is load-bearing: _advance_walkers
-            # references the frontier twice (step + dead-end join), so
-            # an uncheckpointed chain recomputes exponentially.
-            # coalesce(4): a 256-row frontier checkpointed as ~35
-            # micro-partitions per step would hand the final job
-            # n_steps×35 near-empty tasks
+            # the per-step checkpoint is load-bearing: each step's
+            # frontier feeds both the next step and the visit counts,
+            # so an uncheckpointed chain recomputes every earlier step
+            # once per branch. coalesce(4): a 256-row frontier
+            # checkpointed as ~35 micro-partitions per step would hand
+            # the final job n_steps×35 near-empty tasks
             yield "frontier", _advance_walkers(
-                s["frontier"], adj, tele, n_nodes, seed
+                s["frontier"], adj, node_of_idx, n_nodes, seed
             ).coalesce(4)
             yield "counts", (
                 s["counts"].unionByName(_visit_counts(s["frontier"]))
@@ -612,8 +584,6 @@ def random_walk_counts(
             walk, n_steps, ckpt_dir=ckpt_dir,
         )
         adj.unpersist()
-        if tele[0] is not None:
-            tele[0].unpersist()
         return state["counts"]
 
 
@@ -1686,9 +1656,10 @@ def k_core(
     spark = sym_edges.sparkSession
     # Broadcast the survivor set only while its estimated BYTES fit the
     # session's autoBroadcastJoinThreshold (one long + row overhead per
-    # survivor) — a row-count gate ages badly if the schema widens, and
-    # the byte gate keeps the decision consistent with what AQE would
-    # pick for a statistics-visible relation.
+    # survivor) — a row-count gate ages badly if the schema widens.
+    # Spark's own size statistic for the checkpointed set reads ~90-100
+    # B/row, so without the hint the 5× fixture plans sort-merge joins
+    # (SCALING.md "Broadcast gates: walk and k-core, sf0.1 and 5×").
     bcast_limit = _broadcast_threshold_bytes(spark)
     # n_edges=None: the width is the caller's (q_graph_kcore sizes it)
     with _graph_loop(spark, None, sym_edges, aqe=True) as edges_p:
@@ -2348,9 +2319,8 @@ def hits(
     total n_nodes each half-step. Returns (node_id, hub, auth)
     quantized at 1e-5 (the normalizer is an order-dependent double sum
     — see _hits_oracle's drift budget). Extracted from q_graph_hits so
-    the 10× planted-graph soak (tools/soak_graph.py) runs the exact
-    production loop; the query key is a thin wrapper over the derived
-    customer→order→part graph.
+    planted-graph tests run the exact production loop; the query key is
+    a thin wrapper over the derived customer→order→part graph.
 
     Each half-step's raw push aggregate feeds TWO consumers — the L1
     normalizer sum and the state join — so it is checkpointed like

@@ -623,95 +623,10 @@ def streaming_user_stats(spark: SparkSession, events_path: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Custom stateful operator: transformWithStateInPandas (Spark 4.x API)
+# Custom stateful operator on a composite key
 # ---------------------------------------------------------------------------
 
 TWS_OUTPUT_SCHEMA = "user_id long, event_type string, n_events long"
-
-
-def _make_type_count_processor():
-    """Build the StatefulProcessor subclass lazily (module import must
-    not require a live session; the class itself only needs pyspark)."""
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    class TypeCountProcessor(StatefulProcessor):
-        """Per-(user, event_type) running counts held in a per-user
-        MapState keyed by event_type — multi-valued per-key state that
-        applyInPandasWithState's single state tuple can't hold without
-        serializing a whole map into one value. State size is bounded
-        by (users x event types), not stream length."""
-
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._counts = handle.getMapState("counts", "event_type string", "n long")
-
-        def handleInputRows(self, key, rows, timerValues):
-            import pandas as pd  # executor-side import
-
-            batch: dict[str, int] = {}
-            for pdf in rows:
-                for t, c in pdf["event_type"].value_counts().items():
-                    batch[t] = batch.get(t, 0) + int(c)
-            out_types: list[str] = []
-            out_counts: list[int] = []
-            for t, c in sorted(batch.items()):
-                prev = (
-                    self._counts.getValue((t,))[0]
-                    if self._counts.containsKey((t,))
-                    else 0
-                )
-                total = prev + c
-                self._counts.updateValue((t,), (total,))
-                out_types.append(t)
-                out_counts.append(total)
-            yield pd.DataFrame(
-                {
-                    "user_id": [key[0]] * len(out_types),
-                    "event_type": out_types,
-                    "n_events": out_counts,
-                }
-            )
-
-        def close(self) -> None:
-            pass
-
-    return TypeCountProcessor()
-
-
-def streaming_type_counts(spark: SparkSession, events_path: str) -> DataFrame:
-    """Running per-(user, event_type) counts via transformWithState —
-    the Spark 4.x arbitrary-stateful API (successor of
-    applyInPandasWithState): typed composite state (Value/List/Map),
-    timers, and TTL. Requires the RocksDB state store provider."""
-    ev = stream_events(spark, events_path)
-    return ev.groupBy("user_id").transformWithStateInPandas(
-        _make_type_count_processor(),
-        outputStructType=TWS_OUTPUT_SCHEMA,
-        outputMode="Update",
-        timeMode="None",
-    )
-
-
-ROCKSDB_PROVIDER = (
-    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-)
-
-
-def has_transform_with_state_runtime() -> bool:
-    """transformWithState's state-server protocol is protobuf-based;
-    the pyspark driver worker imports google.protobuf at query start.
-    Gate the PREFERRED branch on that import; environments without
-    protobuf take the applyInPandasWithState fallback, which expresses
-    the same running counts without the state-server protocol — so the
-    key registers everywhere (SURVEY §2.3: 209/209)."""
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
 
 
 def _type_count_fn(key, pdfs, state):
@@ -729,18 +644,11 @@ def _type_count_fn(key, pdfs, state):
     )
 
 
-def streaming_type_counts_fallback(spark: SparkSession, events_path: str) -> DataFrame:
-    """Running per-(user, event_type) counts on the PROTOBUF-FREE
-    arbitrary-stateful API (applyInPandasWithState): grouping on the
-    COMPOSITE (user_id, event_type) key flattens the TypeCountProcessor's
-    per-user map-of-type-counts into one scalar count per state key —
-    identical semantics, no transformWithState state-server protocol.
-    State stays bounded by (users × event types), exactly like the
-    MapState formulation; the trade is that per-user multi-valued
-    operations (e.g. emitting a user's full type distribution on every
-    input row) would need a map serialized into the single state tuple,
-    which is why transformWithState remains the preferred branch where
-    its runtime exists."""
+def streaming_type_counts(spark: SparkSession, events_path: str) -> DataFrame:
+    """Running per-(user, event_type) counts via applyInPandasWithState
+    grouped on the COMPOSITE (user_id, event_type) key: one scalar
+    count per state key instead of a per-user map of type counts, so
+    state stays bounded by (users × event types), not stream length."""
     from pyspark.sql.streaming.state import GroupStateTimeout
 
     ev = stream_events(spark, events_path)
@@ -763,40 +671,21 @@ def streaming_type_counts_fallback(spark: SparkSession, events_path: str) -> Dat
 def q_stream_transform_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Drives a REAL arbitrary-stateful streaming operator: events
     replay as a file stream; per-(user, type) running counts accumulate
-    in the state store in update mode; the maximal (= final) emission
-    per (user, type) must equal the batch group-by — the oracle.
-
-    Two branches, one semantics: where google.protobuf exists, the
-    Spark 4.x transformWithStateInPandas operator (per-user MapState
-    keyed by event_type, RocksDB provider); otherwise the
-    applyInPandasWithState fallback on the composite key — so the key
-    is registered in EVERY environment. Update-mode emissions land in
-    the foreachBatch parquet sink and the final-state extraction is a
-    distributed window over the LAZY sink read: (user × type) state is
-    fact-sized at scale, so nothing funnels through the driver (same
-    sink rule as q_stream_stateful)."""
+    in the state store in update mode (applyInPandasWithState on the
+    composite key); the maximal (= final) emission per (user, type)
+    must equal the batch group-by — the oracle. Update-mode emissions
+    land in the foreachBatch parquet sink and the final-state
+    extraction is a distributed window over the LAZY sink read:
+    (user × type) state is fact-sized at scale, so nothing funnels
+    through the driver (same sink rule as q_stream_stateful)."""
     events_path = f"{sf_dir}/events.parquet"
     base, promote = generational_sink_dir(spark, "stream_transform_state")
     sink_dir = f"{base}/sink"
-    provider_key = "spark.sql.streaming.stateStore.providerClass"
-    prev_provider = spark.conf.get(provider_key, None)
-    use_tws = has_transform_with_state_runtime()
-    try:
-        if use_tws:
-            spark.conf.set(provider_key, ROCKSDB_PROVIDER)
-            stream = streaming_type_counts(spark, events_path)
-        else:
-            stream = streaming_type_counts_fallback(spark, events_path)
-        with _replay_state_partitions(spark, sf_dir, PY_STATE_ROWS_PER_PARTITION):
-            run_foreach_batch_to_parquet(
-                stream, sink_dir, f"{base}/ckpt", output_mode="update"
-            )
-    finally:
-        if use_tws:
-            if prev_provider is None:
-                spark.conf.unset(provider_key)
-            else:
-                spark.conf.set(provider_key, prev_provider)
+    stream = streaming_type_counts(spark, events_path)
+    with _replay_state_partitions(spark, sf_dir, PY_STATE_ROWS_PER_PARTITION):
+        run_foreach_batch_to_parquet(
+            stream, sink_dir, f"{base}/ckpt", output_mode="update"
+        )
     return _final_emission(
         finalize_generational_sink(spark, sink_dir, promote, TWS_OUTPUT_SCHEMA),
         "user_id",

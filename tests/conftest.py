@@ -42,3 +42,28 @@ def lose_blocks(spark):
         return len(new)
 
     return lose
+
+
+@pytest.fixture()
+def non_dense_sf_dir(sf_dir, tmp_path) -> str:
+    """A copy of the suite's fixture whose customer keys run 1..n
+    instead of 0..n-1 (every other table unchanged)."""
+    import shutil
+
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    from neo_olap_spark.tables import TABLES
+
+    d = tmp_path / "non_dense"
+    d.mkdir()
+    for t in TABLES:
+        shutil.copyfile(f"{sf_dir}/{t}.parquet", d / f"{t}.parquet")
+    cust = pq.read_table(f"{sf_dir}/customer.parquet")
+    i = cust.schema.get_field_index("c_custkey")
+    field = cust.schema.field(i)
+    pq.write_table(
+        cust.set_column(i, field, pc.add(cust.column(i), 1).cast(field.type)),
+        d / "customer.parquet",
+    )
+    return str(d)

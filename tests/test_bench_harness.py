@@ -79,7 +79,10 @@ def test_ab_alternates_variants_and_summarizes(ab, tmp_path, monkeypatch):
             return subprocess.CompletedProcess(argv, 1, "", "worker died")
         cold = {"q_join_inner": 2.0 + n, "q_udf_pandas": 1.0}
         warm = {"q_join_inner": 1.0 + n, "q_udf_pandas": 0.5}
-        rec = {"cold": cold, "warm": warm, "errors": {}, "key_probes": {},
+        jobs = {phase: {"q_join_inner": {"build": n, "exec": 1},
+                        "q_udf_pandas": {"build": 0, "exec": 2}}
+                for phase in ("cold", "warm")}
+        rec = {"cold": cold, "warm": warm, "jobs": jobs, "errors": {}, "key_probes": {},
                "host_probe_start": quiet,
                "host_probe_end": loaded if n == 2 else quiet}
         return subprocess.CompletedProcess(argv, 0, "noise\nRESULT " + json.dumps(rec), "")
@@ -100,11 +103,52 @@ def test_ab_alternates_variants_and_summarizes(ab, tmp_path, monkeypatch):
     # A ran as calls 0, 3, 4: warm 1, 4, 5 -> median 4, quartiles 2.5/4.5
     assert a["keys"]["q_join_inner"]["warm"] == {"median": 4.0, "q1": 2.5, "q3": 4.5, "n": 3}
     assert a["warm_sums"] == [1.5, 4.5, 5.5]
+    # job counts: A's builds ran 0, 3 and 4 jobs -> median 3
+    assert a["keys"]["q_join_inner"]["jobs"]["cold"] == {"build": 3, "exec": 1}
+    assert a["keys"]["q_udf_pandas"]["jobs"]["warm"] == {"build": 0, "exec": 2}
+    # B's jobs come from its two live processes (calls 1 and 2)
+    assert b["keys"]["q_join_inner"]["jobs"]["warm"] == {"build": 1.5, "exec": 1}
     assert b["keys"]["q_join_inner"]["cold"] == {"median": 3.5, "q1": 3.25, "q3": 3.75, "n": 2}
     assert b["keys_quiet"]["q_join_inner"]["cold"]["n"] == 1
     failed = [r for r in doc["records"] if "failed" in r]
     assert len(failed) == 1 and "worker died" in failed[0]["failed"]
     assert len(doc["records"]) == 6
+
+
+def test_ab_counts_jobs_per_key_phase_and_part(ab):
+    """The worker's job tagging: a key's first call is ``cold``, its
+    second ``warm``; jobs the builder runs count as build, jobs after
+    it returns (bench's noop write) as exec."""
+    from types import SimpleNamespace as NS
+
+    ran = []  # the job group of every job, in order
+
+    class FakeContext:
+        group = None
+        _jsc = NS(sc=lambda: NS(listenerBus=lambda: NS(waitUntilEmpty=lambda: None)))
+
+        def setJobGroup(self, group, description):
+            self.group = group
+
+        def statusTracker(self):
+            return NS(getJobIdsForGroup=lambda g: [i for i, x in enumerate(ran) if x == g])
+
+    sc = FakeContext()
+    spark = NS(sparkContext=sc)
+
+    def builder(spark, sf_dir):
+        ran.extend([sc.group] * 2)
+        return "df"
+
+    groups = []
+    tagged = ab._job_tagged(spark, {"q_a": builder, "q_b": builder}, groups)
+    for key in ("q_a", "q_a", "q_b"):
+        assert tagged[key](spark, "sf") == "df"
+        ran.append(sc.group)  # the write
+    assert ab._job_counts(spark, groups) == {
+        "cold": {"q_a": {"build": 2, "exec": 1}, "q_b": {"build": 2, "exec": 1}},
+        "warm": {"q_a": {"build": 2, "exec": 1}},
+    }
 
 
 @pytest.mark.parametrize("bad", ["key", "wave", "tree", "label"])

@@ -96,12 +96,11 @@ def _isolated_fixture(src: str, dst) -> str:
 
 
 def test_walk_broadcast_path_matches_loop_path(spark, sf_dir, monkeypatch, tmp_path):
-    """The three walk paths agree with each other and with the DuckDB
+    """The two walk paths agree with each other and with the DuckDB
     walk oracle on a graph where walkers teleport: the broadcast-
-    adjacency walk (one job), the streamed-adjacency loop (the at-scale
-    shape) and the streamed loop with the non-dense teleport fallback
-    (distributed node index + join). Only the join direction, the
-    logging mechanism and the teleport address map differ."""
+    adjacency walk (one job) and the streamed-adjacency loop (the
+    at-scale shape). Only the join direction and the logging mechanism
+    differ."""
     import neo_olap_spark.operators.graph_algos as ga
     from neo_olap_spark.testing import assert_parity
 
@@ -114,16 +113,22 @@ def test_walk_broadcast_path_matches_loop_path(spark, sf_dir, monkeypatch, tmp_p
 
     arms = {"broadcast": random_walk_counts(spark, d, **args)}
     monkeypatch.setattr(ga, "_adj_fits_broadcast", lambda *a, **k: False)
-    arms["streamed_dense"] = random_walk_counts(spark, d, **args)
-    monkeypatch.setattr(ga, "_teleport_address_space", lambda *a, **k: (None, None))
-    arms["streamed_non_dense"] = random_walk_counts(spark, d, **args)
+    arms["streamed"] = random_walk_counts(spark, d, **args)
 
     oracle = ga._random_walk_oracle(args["n_walkers"], args["n_steps"], args["seed"])
     rows = {}
     for name, df in arms.items():
         assert_parity(df, oracle, d)
         rows[name] = sorted(map(tuple, df.collect()))
-    assert rows["broadcast"] == rows["streamed_dense"] == rows["streamed_non_dense"]
+    assert rows["broadcast"] == rows["streamed"]
+
+
+def test_walk_rejects_non_dense_keys(spark, non_dense_sf_dir):
+    """The walk's teleport address map is a closed form over dense
+    0..n-1 keys; a fixture whose customer keys are shifted by one
+    raises ValueError naming the table instead of walking."""
+    with pytest.raises(ValueError, match="customer"):
+        random_walk_counts(spark, non_dense_sf_dir, n_walkers=4, n_steps=2)
 
 
 def test_betweenness_runs_and_deterministic(spark, sf_dir):

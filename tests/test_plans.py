@@ -668,8 +668,8 @@ def test_skew_strategy_defaults(spark):
     skew is handled by AQE's runtime skew-split and group skew by
     map-side partial aggregation — both must stay pinned ON in the
     session defaults, because hand-salting measured 1.5-2.7x SLOWER
-    under a planted 30%-hot-key at the 10x fixture
-    (tools/aqe_vs_salting.py)."""
+    under a planted 30%-hot-key at the 10x fixture (SCALING.md
+    "Round-5: AQE skew-join vs hand-salting")."""
     assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
     assert spark.conf.get("spark.sql.adaptive.skewJoin.enabled") == "true"
     # partial aggregation below the exchange (the group-skew answer):

@@ -143,18 +143,13 @@ def test_foreach_batch_sink_matches_batch(spark, sf_dir):
 
 
 def test_transform_state_registered_in_every_environment(spark, sf_dir):
-    """q_stream_transform_state must register unconditionally: where
-    google.protobuf exists it drives transformWithStateInPandas, and
-    everywhere else the applyInPandasWithState fallback expresses the
-    same running per-(user, type) counts — so the surface is complete
-    regardless of container packaging. The driven result must match
-    the batch group-by (the oracle) on whichever branch runs; parity
-    is also covered by the registry-wide suite, so here we assert the
-    branch selection + the batch-twin row invariant directly."""
-    from neo_olap_spark.operators.streaming import (
-        has_transform_with_state_runtime,
-        q_stream_transform_state,
-    )
+    """q_stream_transform_state registers unconditionally: it runs on
+    applyInPandasWithState over the composite (user, type) key, which
+    needs nothing beyond pyspark, so the surface is complete regardless
+    of container packaging. The driven result must match the batch
+    group-by (the oracle); parity is also covered by the registry-wide
+    suite, so here the batch-twin row invariant is asserted directly."""
+    from neo_olap_spark.operators.streaming import q_stream_transform_state
     from neo_olap_spark.registry import REGISTRY, queries
 
     queries()  # populate
@@ -172,9 +167,6 @@ def test_transform_state_registered_in_every_environment(spark, sf_dir):
         .collect()
     }
     assert got == want
-    # the preferred branch is protobuf-gated; this container lacks it,
-    # so the fallback path is what the assertion above just exercised
-    assert has_transform_with_state_runtime() in (True, False)
 
 
 def test_parquet_sink_exactly_once_across_restart(spark, sf_dir):

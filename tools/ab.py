@@ -12,11 +12,23 @@ so every variant is timed the same way:
   ``key_contention_probe_start``/``_end`` bracket;
 - ``bench.host_load_probe`` before and after the keys.
 
+Each key's cold and warm run is tagged with Spark job groups,
+``key:cold:build`` and ``key:cold:exec`` (the operator call, then the
+noop write), and the same for ``warm``; the worker returns each
+group's job count beside the seconds, and the summary gives their
+medians. ``bench.py``'s timing points are unchanged; the tags add two
+``setJobGroup`` calls to each timed run, and the counts are read after
+the last key. Jobs a key starts from another thread are not
+attributed: a streaming query runs its micro-batch jobs on its own
+thread under its own job group, so they are missing from the key's
+counts.
+
 Variant order alternates every rep (A,B then B,A), so host drift loads
 every variant equally. The output is one JSON document: per variant,
 per-key cold/warm medians and quartiles over all processes and over
 quiet-probe processes only, the per-process warm sums, and every raw
 record; failed worker processes are counted and kept, never dropped.
+A single variant runs the keys once per rep with nothing to compare.
 
 Keys, wave names, tree paths and the output directory are checked
 (ValueError) before any process starts or the output file opens.
@@ -79,8 +91,8 @@ def validate(keys: list[str], variants: list[dict], sf_dir: str, registry) -> No
     if unknown:
         raise ValueError(f"keys not in the registry: {unknown}")
     labels = [v["label"] for v in variants]
-    if len(variants) < 2 or len(set(labels)) != len(labels):
-        raise ValueError(f"need two or more distinct variant labels, got {labels}")
+    if not variants or len(set(labels)) != len(labels):
+        raise ValueError(f"need one or more distinct variant labels, got {labels}")
     for v in variants:
         if not os.path.isdir(os.path.join(v["tree"], "neo_olap_spark")):
             raise ValueError(
@@ -88,6 +100,44 @@ def validate(keys: list[str], variants: list[dict], sf_dir: str, registry) -> No
             )
     if not os.path.isdir(sf_dir):
         raise ValueError(f"sf dir {sf_dir} does not exist")
+
+
+def _job_tagged(spark, qs: dict, groups: list) -> dict:
+    """``qs`` with each builder call running under the job group
+    ``key:phase:build`` and the write that follows it under
+    ``key:phase:exec`` (phase ``cold`` on a key's first call, ``warm``
+    on its second); each call appends its ``(key, phase)`` to
+    ``groups``. Inside the timed run this costs two ``setJobGroup``
+    calls; the counting waits for ``_job_counts``."""
+    sc = spark.sparkContext
+
+    def tagged(key, fn):
+        def call(spark, sf_dir):
+            phase = "warm" if (key, "cold") in groups else "cold"
+            groups.append((key, phase))
+            sc.setJobGroup(f"{key}:{phase}:build", key)
+            df = fn(spark, sf_dir)
+            sc.setJobGroup(f"{key}:{phase}:exec", key)
+            return df
+        return call
+
+    return {k: tagged(k, fn) for k, fn in qs.items()}
+
+
+def _job_counts(spark, groups: list) -> dict:
+    """``{phase: {key: {"build": n, "exec": m}}}`` for the tagged runs,
+    from Spark's status store. It keeps the last
+    ``spark.ui.retainedJobs`` jobs (1000 by default), so a worker whose
+    keys run more jobs than that undercounts its first keys."""
+    sc = spark.sparkContext
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    jobs: dict[str, dict] = {"cold": {}, "warm": {}}
+    for key, phase in groups:
+        jobs[phase][key] = {
+            part: len(sc.statusTracker().getJobIdsForGroup(f"{key}:{phase}:{part}"))
+            for part in ("build", "exec")
+        }
+    return jobs
 
 
 def worker(spec: dict) -> dict:
@@ -104,12 +154,15 @@ def worker(spec: dict) -> dict:
     bench._warm_python_workers(spark, spec["cpus"])
     errors: dict[str, str] = {}
     probes: dict[str, dict] = {}
+    groups: list[tuple[str, str]] = []
+    tagged = _job_tagged(spark, qs, groups)
     probe_start = bench.host_load_probe()
-    cold, warm = bench.run_set(spark, qs, spec["sf_dir"], spec["keys"], errors, probes)
+    cold, warm = bench.run_set(spark, tagged, spec["sf_dir"], spec["keys"], errors, probes)
     probe_end = bench.host_load_probe()
+    jobs = _job_counts(spark, groups)
     spark.stop()
     return {
-        "cold": cold, "warm": warm, "errors": errors, "key_probes": probes,
+        "cold": cold, "warm": warm, "jobs": jobs, "errors": errors, "key_probes": probes,
         "host_probe_start": probe_start, "host_probe_end": probe_end,
     }
 
@@ -146,13 +199,16 @@ def _is_quiet(rec: dict) -> bool:
 
 
 def _per_key(records: list[dict], keys: list[str]) -> dict:
-    return {
-        key: {
-            phase: _spread([r[phase][key] for r in records if key in r[phase]])
-            for phase in ("cold", "warm")
-        }
-        for key in keys
-    }
+    out = {}
+    for key in keys:
+        out[key] = {"jobs": {}}
+        for phase in ("cold", "warm"):
+            out[key][phase] = _spread([r[phase][key] for r in records if key in r[phase]])
+            runs = [r["jobs"][phase][key] for r in records if key in r["jobs"][phase]]
+            out[key]["jobs"][phase] = {
+                part: statistics.median(j[part] for j in runs) for part in ("build", "exec")
+            } if runs else None
+    return out
 
 
 def summarize(keys: list[str], variants: list[dict], records: list[dict]) -> dict:
