@@ -13,10 +13,11 @@ loudly), runs the loop's one convergence predicate every
 loops), and, given a ``ckpt_dir`` (the one durable policy; PageRank
 and the walk take one), snapshots every round to parquet, continues
 from the snapshot and resumes from it.
-``_graph_loop`` sets each loop's shuffle width and AQE and owns its
-edge cache: the one src-partitioned, persisted edge relation every
-round joins against, released on exit. Every loop key hands it a
-frame built in neo_olap_spark.graph (``sym_edges``,
+``_graph_loop`` is the one loop policy: AQE off, a shuffle width
+sized to the loop's estimated edge count (1 partition on small
+graphs), and the edge cache — the one src-partitioned, persisted
+edge relation every round joins against, released on exit. Every
+loop key hands it a frame built in neo_olap_spark.graph (``sym_edges``,
 ``weighted_sym_edges``, ``directed_edges``): raw rows deduped in place
 after a single src shuffle. All randomness is ``xxhash64(…, seed)`` on
 stable keys, so runs are deterministic and retry-stable (SURVEY.md
@@ -71,29 +72,32 @@ def _graph_loop(
     spark: SparkSession,
     n_edges: int | None,
     edge_frame: DataFrame | None = None,
-    *,
-    aqe: bool,
 ):
-    """Session settings and the edge cache of one graph loop.
+    """Session settings and the edge cache of one graph loop — the one
+    loop policy every graph loop runs under.
 
-    Shuffle partitions are sized to the loop's ACTUAL data volume:
-    iterative loops shuffle the same (known-size) tables dozens of
-    times, and the session-wide shuffle.partitions (sized for
-    arbitrary queries) makes every micro-iteration pay full
-    task-scheduling overhead — measured 1.6× on PageRank/CC at sf0.1.
-    ~2M rows per partition keeps partitions ∝ data, so a 1e12-edge
-    graph still fans out to thousands of reducers. ``n_edges`` is the
-    cheap metadata estimate (graph.edge_count_estimate) on every
-    registered query key; ``n_edges=None`` keeps the session's width
-    and runs no job.
+    AQE is off for the loop. A loop's state is small and its step
+    plans are joins over it, where AQE's re-planning costs more than
+    it saves: AQE runs each shuffle stage as its own job, lazy
+    ``localCheckpoint`` included. With AQE on, q_shortest_path_len ran
+    26 build jobs at sf0.001 against 9 with it off (and the 16-step
+    walk ran 3× slower). The one case measured the other way is
+    betweenness on the 5× fixture, 11% slower warm without AQE.
 
-    ``aqe=False`` disables AQE for the loop: its per-stage re-plan
-    round-trips dominate when each step touches a few hundred rows
-    (measured 3× on the 16-step walk), and the step plans are joins
-    whose shape AQE could never improve. BFS-shaped loops (BFS,
-    betweenness, k-core) pass ``aqe=True`` and keep the session's
-    setting: with AQE off, ``q_shortest_path_len`` ran fewer jobs but
-    2.4× the tasks and was slower warm.
+    Shuffle partitions are sized to the loop's data volume: 1 per
+    200k estimated edges up to 8, then 1 per 2M, capped at 10,000.
+    Loops shuffle the same small tables dozens of times, and the
+    session-wide width (sized for arbitrary queries) makes every step
+    pay full task-scheduling overhead — measured 1.6× on PageRank/CC
+    at sf0.1. Below 1.6M edges even 8 is too wide (every stage ran 8
+    tasks over a few hundred rows): sf0.001 (15,000 estimated edges)
+    runs width 1, and with AQE off BFS's warm CPU there went 8.4 →
+    5.8 s (SCALING.md "Loop policy: AQE off in every loop, width 1 on
+    small graphs"). sf0.1 (1.5M) keeps 8, and a 1e12-edge graph still
+    fans out to thousands of reducers.
+    ``n_edges`` is the cheap metadata estimate
+    (graph.edge_count_estimate) on every registered query key;
+    ``n_edges=None`` keeps the session's width and runs no job.
 
     Given ``edge_frame``, yields it hash-partitioned on src and
     persisted — the one partitioned edge relation every round joins
@@ -104,13 +108,15 @@ def _graph_loop(
     a planted frame. On exit, the error path included, the cache is
     released and both settings are restored, so large one-shot
     queries keep AQE's skew/coalesce benefits."""
-    confs = {}
+    confs = {"spark.sql.adaptive.enabled": "false"}
     if n_edges is not None:
         confs["spark.sql.shuffle.partitions"] = str(
-            max(8, min(10_000, (n_edges + 2_000_000 - 1) // 2_000_000))
+            max(
+                1,
+                min(8, (n_edges + 200_000 - 1) // 200_000),
+                min(10_000, (n_edges + 2_000_000 - 1) // 2_000_000),
+            )
         )
-    if not aqe:
-        confs["spark.sql.adaptive.enabled"] = "false"
     prev = {k: spark.conf.get(k) for k in confs}
     for k, v in confs.items():
         spark.conf.set(k, v)
@@ -157,7 +163,11 @@ def _iterate(
     frame of the same round reads the checkpointed one. A lazy
     checkpoint cuts lineage and caches its RDD on first compute: every
     in-plan reference reads one materialization, and a whole chain of
-    rounds computes inside a single action.
+    rounds computes inside a single action. That holds because every
+    loop runs under ``_graph_loop``, with AQE off: under AQE a lazy
+    checkpoint still runs each of its shuffle stages as a job. A
+    broadcast join still collects its build side in a job of its own
+    when the checkpoint is planned.
 
     Actions: with ``done``, ``done(state, r)`` runs after every
     ``check_every``-th round and after round ``n``; it is a predicate
@@ -243,7 +253,12 @@ def bfs_distances(
     """
     frontier = loop_checkpoint(sources.select(
         "tag", "node", F.lit(0).alias("dist"), F.lit(1).cast("long").alias("npaths")
-    ))
+    ), eager=False)
+    # rows in `visited`, for its broadcast gate: the sources' count
+    # (the job that materializes their checkpoint), plus each level's
+    # emptiness count
+    n_seen = frontier.count()
+    bcast_limit = _broadcast_threshold_bytes(sources.sparkSession)
 
     def level(s, depth):
         # `visited` lags one level: level d first folds level d-1's
@@ -263,19 +278,29 @@ def bfs_distances(
             .withColumn("dist", F.lit(depth))
         )
         seen = s["visited"].select(F.col("tag").alias("vtag"), F.col("node").alias("vnode"))
+        # Spark's size statistic for the checkpointed `visited` over-reads
+        # (k_core's gate), so unhinted it plans a sort-merge anti-join
+        # that shuffles `visited` every level: 2.5 s slower warm on
+        # betweenness at sf0.1, where the broadcast's own job per level
+        # costs less (SCALING.md "Loop policy: AQE off in every loop")
+        if _fits_broadcast(n_seen, bcast_limit):
+            seen = seen.hint("broadcast")
         yield "frontier", expanded.join(
             seen,
             (expanded.tag == seen.vtag) & (expanded.node == seen.vnode),
             "left_anti",
         ).select("tag", "node", "dist", "npaths")
 
-    # The emptiness count is the level's ONE job: it materializes the
-    # level's lazily checkpointed frontier, and the previous `visited`
-    # persists inside it too (the anti-join consumes it); the final
-    # action covers the last union.
+    def exhausted(s, _) -> bool:
+        # the emptiness count materializes the level's lazily
+        # checkpointed frontier
+        nonlocal n_seen
+        n = s["frontier"].count()
+        n_seen += n
+        return n == 0
+
     state, rounds, converged = _iterate(
-        {"frontier": frontier, "visited": frontier}, level, max_depth,
-        done=lambda s, _: s["frontier"].count() == 0,
+        {"frontier": frontier, "visited": frontier}, level, max_depth, done=exhausted
     )
     visited = state["visited"]
     if rounds and not converged:
@@ -311,7 +336,7 @@ def q_shortest_path_len(spark: SparkSession, sf_dir: str) -> DataFrame:
     the levels are checkpointed, so the cache is released on return."""
     with _graph_loop(
         spark, graph.edge_count_estimate(spark, sf_dir),
-        graph.sym_edges(spark, sf_dir), aqe=True,
+        graph.sym_edges(spark, sf_dir),
     ) as sym:
         sources = (
             load(spark, sf_dir, "customer")
@@ -537,7 +562,7 @@ def random_walk_counts(
     to an uninterrupted one. Returns (node_id, visits).
     """
     n_edges = graph.edge_count_estimate(spark, sf_dir)
-    with _graph_loop(spark, n_edges, aqe=False):
+    with _graph_loop(spark, n_edges):
         adj, node_of_idx, n_nodes, walkers = _walk_setup(spark, sf_dir, n_walkers, seed)
 
         if ckpt_dir is None and _adj_fits_broadcast(spark, n_edges, n_nodes):
@@ -707,7 +732,7 @@ def betweenness_sample(
     """
     with _graph_loop(
         spark, graph.edge_count_estimate(spark, sf_dir),
-        graph.sym_edges(spark, sf_dir), aqe=True,
+        graph.sym_edges(spark, sf_dir),
     ) as sym:
         nodes = all_nodes(spark, sf_dir)
 
@@ -768,9 +793,14 @@ def betweenness_pair_counts(
 
     from concurrent.futures import ThreadPoolExecutor
 
+    from pyspark.util import inheritable_thread_target
+
+    # a pool thread starts without the caller's local properties (its
+    # job group among them): each BFS runs on a copy of the caller's
+    spark = sym.sparkSession
     with ThreadPoolExecutor(max_workers=2) as pool:
-        fwd_f = pool.submit(_bfs, "a")
-        bwd_f = pool.submit(_bfs, "b")
+        fwd_f = pool.submit(inheritable_thread_target(spark)(_bfs), "a")
+        bwd_f = pool.submit(inheritable_thread_target(spark)(_bfs), "b")
         fwd = fwd_f.result()
         bwd = bwd_f.result()
 
@@ -940,7 +970,7 @@ def pagerank(
     one.
     """
     spark = sym_edges.sparkSession
-    with _graph_loop(spark, n_edges, sym_edges, aqe=False) as edges_p:
+    with _graph_loop(spark, n_edges, sym_edges) as edges_p:
         deg0 = edges_p.groupBy("src").agg(F.count("*").alias("deg"))
         base = (
             nodes.join(deg0, nodes.node == deg0.src, "left")
@@ -1127,7 +1157,7 @@ def connected_components(
     counted every HOPS_PER_CHECK rounds.
     """
     spark = sym_edges.sparkSession
-    with _graph_loop(spark, n_edges, sym_edges, aqe=False) as edges_p:
+    with _graph_loop(spark, n_edges, sym_edges) as edges_p:
         labels = nodes.select("node", F.col("node").alias("label")).transform(
             loop_checkpoint
         )
@@ -1243,7 +1273,7 @@ def label_propagation(
     synchronous updates + total-ordered tie-break (count DESC, label
     ASC via max_by on a (cnt, -label) struct)."""
     spark = sym_edges.sparkSession
-    with _graph_loop(spark, n_edges, sym_edges, aqe=False) as edges_p:
+    with _graph_loop(spark, n_edges, sym_edges) as edges_p:
         labels = nodes.select("node", F.col("node").alias("label")).transform(
             loop_checkpoint
         )
@@ -1588,9 +1618,10 @@ def q_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Estimated in-memory bytes per broadcast survivor row: one long (8)
-# plus UnsafeRow/oop overhead — deliberately conservative.
-_SURVIVOR_ROW_BYTES = 32
+# Estimated in-memory bytes per broadcast loop-state row (k_core's
+# survivors, one long; BFS's visited keys, two): the longs plus
+# UnsafeRow/oop overhead — deliberately conservative.
+_STATE_ROW_BYTES = 32
 
 
 def _broadcast_threshold_bytes(spark: SparkSession) -> int:
@@ -1601,10 +1632,11 @@ def _broadcast_threshold_bytes(spark: SparkSession) -> int:
 
 
 def _fits_broadcast(n_rows: int, limit_bytes: int) -> bool:
-    """The k_core loop's broadcast decision: does the survivor set's
-    estimated footprint fit the threshold? One shared expression so
-    the plan test exercises exactly what the loop computes."""
-    return n_rows * _SURVIVOR_ROW_BYTES <= limit_bytes
+    """The broadcast decision of a loop's state (k_core's survivors,
+    bfs_distances' visited set): does its estimated footprint fit the
+    threshold? One shared expression so the plan test exercises
+    exactly what the loops compute."""
+    return n_rows * _STATE_ROW_BYTES <= limit_bytes
 
 
 def _kcore_round(
@@ -1662,7 +1694,7 @@ def k_core(
     # (SCALING.md "Broadcast gates: walk and k-core, sf0.1 and 5×").
     bcast_limit = _broadcast_threshold_bytes(spark)
     # n_edges=None: the width is the caller's (q_graph_kcore sizes it)
-    with _graph_loop(spark, None, sym_edges, aqe=True) as edges_p:
+    with _graph_loop(spark, None, sym_edges) as edges_p:
         survivors = loop_checkpoint(edges_p.select(F.col("src").alias("node")).distinct())
         n_prev = survivors.count()
 
@@ -1730,7 +1762,7 @@ def q_graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     fall off. Reference analog: whole-graph structural analytics
     (R1/R2 family)."""
     sym = graph.sym_edges(spark, sf_dir)
-    with _graph_loop(spark, graph.edge_count_estimate(spark, sf_dir), aqe=True):
+    with _graph_loop(spark, graph.edge_count_estimate(spark, sf_dir)):
         return k_core(sym, k=2)
 
 
@@ -2057,7 +2089,7 @@ def sssp(
     sources — k concurrent loops paid it k times (closeness warm
     13.8 → 18.4 s, jobs 29 → 71)."""
     spark = wsym.sparkSession
-    with _graph_loop(spark, n_edges, wsym, aqe=False) as edges_p:
+    with _graph_loop(spark, n_edges, wsym) as edges_p:
         # State is the last relaxation's ``merged`` frame (source, node,
         # dist, old): dist and the improved frontier are views of it.
         improved = F.col("dist") < F.coalesce("old", F.lit(_SSSP_INF))
@@ -2328,7 +2360,7 @@ def hits(
     per half-step (landmine 4's double-reference rule; round 8's plan
     audit found 32 edge joins per run instead of 16)."""
     spark = directed_edges.sparkSession
-    with _graph_loop(spark, n_edges, directed_edges, aqe=False) as e_src:
+    with _graph_loop(spark, n_edges, directed_edges) as e_src:
         # derive the dst-partitioned copy FROM the persisted src copy:
         # the upstream edge build (a full fact shuffle) runs once,
         # not once per direction (self-review r7 finding)

@@ -559,17 +559,23 @@ def test_hits_planted_numpy_pinned(spark):
 def test_edge_count_hint_releases_cache_on_failure(spark):
     """_graph_loop owns the loop's edge cache: the src-partitioned,
     persisted frame it yields is released even when the loop body
-    raises, the AQE and width settings are restored on that path, and
-    n_edges=None keeps the session's width without running a job."""
+    raises, and the AQE and width settings are restored on that path.
+    Every loop runs with AQE off; the width is 1 partition per 200k
+    estimated edges up to 8, then 1 per 2M; n_edges=None keeps the
+    session's width without running a job."""
     import pytest
 
     from neo_olap_spark.operators.graph_algos import _graph_loop
 
     aqe, width = "spark.sql.adaptive.enabled", "spark.sql.shuffle.partitions"
     before = {k: spark.conf.get(k) for k in (aqe, width)}
+    assert before[aqe] == "true"
+    for n_edges, want in ((15_000, "1"), (1_500_000, "8"), (7_500_000, "8")):
+        with _graph_loop(spark, n_edges):
+            assert (spark.conf.get(aqe), spark.conf.get(width)) == ("false", want)
     df = spark.range(100).selectExpr("id AS src", "id + 1 AS dst")
     with pytest.raises(RuntimeError, match="boom"):
-        with _graph_loop(spark, 100_000_000, df, aqe=False) as cached:
+        with _graph_loop(spark, 100_000_000, df) as cached:
             assert cached.storageLevel.useMemory  # persisted for reuse
             assert "hashpartitioning(src" in (
                 cached._jdf.queryExecution().executedPlan().toString()
@@ -584,14 +590,16 @@ def test_edge_count_hint_releases_cache_on_failure(spark):
     group = "graph_loop_no_hint"
     sc.setJobGroup(group, group)
     try:
-        with _graph_loop(spark, None, df, aqe=True) as cached:
-            assert {k: spark.conf.get(k) for k in (aqe, width)} == before
-        with _graph_loop(spark, None, aqe=False) as none:
+        with _graph_loop(spark, None, df) as cached:
+            assert spark.conf.get(aqe) == "false"
+            assert spark.conf.get(width) == before[width]
+        with _graph_loop(spark, None) as none:
             assert none is None
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
     assert not cached.storageLevel.useMemory
+    assert {k: spark.conf.get(k) for k in (aqe, width)} == before
     sc._jsc.sc().listenerBus().waitUntilEmpty()
     assert len(sc.statusTracker().getJobIdsForGroup(group)) == 0
 
@@ -606,8 +614,7 @@ def _loop_frames(spark, sf_dir):
     }
 
 
-@pytest.mark.parametrize("aqe", [True, False])
-def test_loop_edge_frames_plan_one_exchange(spark, sf_dir, aqe):
+def test_loop_edge_frames_plan_one_exchange(spark, sf_dir):
     """Every edge frame a graph loop caches is built with ONE exchange,
     _graph_loop's own repartition("src") included: the frame is
     src-partitioned before its dedupe, so the dedupe and the loop's
@@ -619,7 +626,7 @@ def test_loop_edge_frames_plan_one_exchange(spark, sf_dir, aqe):
     from neo_olap_spark.plans import plan_str
 
     for name, frame in _loop_frames(spark, sf_dir).items():
-        with _graph_loop(spark, 1_000_000, frame, aqe=aqe) as cached:
+        with _graph_loop(spark, 1_000_000, frame) as cached:
             p = plan_str(cached, "simple")
         assert len(re.findall(r"\bExchange ", p)) == 1, (name, p)
         assert "ReusedExchange" not in p, (name, p)

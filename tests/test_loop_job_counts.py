@@ -8,6 +8,8 @@ under this suite's session (cpus=8) at sf0.001 — a mid-loop eager
 action creeping back fails here. Build counts include no job for the
 edge-count hint (graph.edge_count_estimate reads parquet footers) and
 none for table loads (tables.load reads with a declared schema).
+q_betweenness_sample's build counts include the jobs of its two BFS
+driver threads, which run under the caller's job group.
 """
 
 from __future__ import annotations
@@ -18,14 +20,14 @@ from neo_olap_spark.registry import queries
 
 # key -> (build jobs, exec jobs)
 LOOP_JOBS = {
-    "q_shortest_path_len": (26, 1),
-    "q_betweenness_sample": (2, 9),
+    "q_shortest_path_len": (9, 1),
+    "q_betweenness_sample": (24, 9),
     "q_random_walk_counts": (2, 3),
     "q_pagerank": (3, 1),
     "q_pagerank_personalized": (5, 1),
     "q_connected_components": (5, 1),
     "q_graph_lpa": (2, 1),
-    "q_graph_kcore": (13, 1),
+    "q_graph_kcore": (8, 1),
     "q_graph_sssp": (11, 1),
     "q_graph_closeness": (11, 4),
     "q_graph_hits": (18, 1),
@@ -59,3 +61,60 @@ def test_loop_job_counts(spark, sf_dir, key):
     # one comparison, so a moved build pin still shows the exec count
     got = (_jobs(spark, f"{key}:build"), _jobs(spark, f"{key}:exec"))
     assert got in {(build, e) for e in range(lo, hi + 1)}
+
+
+@pytest.mark.parametrize("bcast", [False, True], ids=["no_broadcast", "broadcast"])
+def test_planted_bfs_runs_one_job_per_level(spark, monkeypatch, bcast):
+    """Under _graph_loop (AQE off) a lazy loop_checkpoint runs no
+    shuffle stage, so each BFS level runs one job, its emptiness count.
+    With broadcasts disabled no checkpoint runs a job at all; with the
+    session's threshold the `visited` side is broadcast-hinted, and the
+    only other job is that broadcast's collect, launched when the
+    level's frontier checkpoint is planned. Under AQE each checkpoint
+    ran its shuffle stages as jobs of their own."""
+    from neo_olap_spark.operators import graph_algos as ga
+
+    n = 7  # the path 0-1-…-6: levels 1..6 reach one node each, level 7 none
+    edges = spark.range(n - 1).selectExpr("id AS src", "id + 1 AS dst")
+    sym = edges.unionByName(edges.selectExpr("dst AS src", "src AS dst"))
+    sources = spark.range(1).selectExpr("0L AS tag", "0L AS node")
+
+    sc = spark.sparkContext
+    group = f"planted_bfs_{bcast}"
+
+    def jobs() -> int:
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    during = []  # jobs each loop_checkpoint call ran
+    real_checkpoint = ga.loop_checkpoint
+
+    def checkpoint(df, eager=True):
+        before = jobs()
+        out = real_checkpoint(df, eager)
+        during.append(jobs() - before)
+        return out
+
+    monkeypatch.setattr(ga, "loop_checkpoint", checkpoint)
+    threshold = "spark.sql.autoBroadcastJoinThreshold"
+    prev = spark.conf.get(threshold)
+    if not bcast:
+        spark.conf.set(threshold, "-1")
+    sc.setJobGroup(group, group)
+    try:
+        with ga._graph_loop(spark, 2 * (n - 1), sym) as sym_p:
+            out = ga.bfs_distances(sym_p, sources, max_depth=10)
+            total = jobs()
+            got = sorted((r.node, r.dist) for r in out.collect())
+    finally:
+        spark.conf.set(threshold, prev)
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert got == [(v, v) for v in range(n)]
+    # the sources, then level 1's frontier, then levels 2..7's visited
+    # and frontier; 7 levels ran, the 7th found nothing
+    levels = n
+    per_level = [0, 1] if bcast else [0, 0]
+    assert during == [0, per_level[1]] + per_level * (levels - 1)
+    # the sources' count, one emptiness count per level, the broadcasts
+    assert total == 1 + levels + sum(during)
