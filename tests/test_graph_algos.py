@@ -614,22 +614,33 @@ def _loop_frames(spark, sf_dir):
     }
 
 
-def test_loop_edge_frames_plan_one_exchange(spark, sf_dir):
+@pytest.mark.parametrize("aqe", [True, False])
+def test_loop_edge_frames_plan_one_exchange(spark, sf_dir, aqe):
     """Every edge frame a graph loop caches is built with ONE exchange,
     _graph_loop's own repartition("src") included: the frame is
     src-partitioned before its dedupe, so the dedupe and the loop's
     repartition add none (the symmetrize-then-dedupe form planned 3,
-    the directed distinct 2)."""
+    the directed distinct 2). ``aqe`` is the session's setting on
+    entry: the loop turns AQE off whatever it was, so the plan is the
+    same either way, and the setting is back on exit."""
     import re
 
     from neo_olap_spark.operators.graph_algos import _graph_loop
     from neo_olap_spark.plans import plan_str
 
-    for name, frame in _loop_frames(spark, sf_dir).items():
-        with _graph_loop(spark, 1_000_000, frame) as cached:
-            p = plan_str(cached, "simple")
-        assert len(re.findall(r"\bExchange ", p)) == 1, (name, p)
-        assert "ReusedExchange" not in p, (name, p)
+    key = "spark.sql.adaptive.enabled"
+    before = spark.conf.get(key)
+    spark.conf.set(key, str(aqe).lower())
+    try:
+        for name, frame in _loop_frames(spark, sf_dir).items():
+            with _graph_loop(spark, 1_000_000, frame) as cached:
+                assert spark.conf.get(key) == "false"
+                p = plan_str(cached, "simple")
+            assert spark.conf.get(key) == str(aqe).lower()
+            assert len(re.findall(r"\bExchange ", p)) == 1, (name, p)
+            assert "ReusedExchange" not in p, (name, p)
+    finally:
+        spark.conf.set(key, before)
 
 
 def test_loop_edge_frames_equal_edges_multisets(spark, sf_dir):
